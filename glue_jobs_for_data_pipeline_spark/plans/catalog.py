@@ -35,6 +35,7 @@ from ..sources.readers import (
     load_events,
     load_table,
     read_csv_table,
+    read_parquet,
     scratch_dir,
     write_overwrite,
 )
@@ -82,7 +83,7 @@ def s2_truncate_and_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = load_table(spark, sf_dir, "region")
     path = scratch_dir("spark_graft_s2_pq_") + "/region"
     write_overwrite(region, path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 @_q("s3_table_scan", "SELECT * FROM region")

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as tx
 from ..operators import dedup, multimodal, similarity
-from ..sources.readers import load_table, spread
+from ..sources.readers import load_table, read_parquet, spread
 from ..sources.readers import scratch_dir as _scratch_dir
 from ..streaming.events import run_stream_to_batch, sessionize_stateful
 from .catalog import _M1_DELTA_SQL, _q
@@ -386,7 +386,7 @@ def _staged_neardup_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         path = _scratch_dir("spark_graft_neardup_pairs_") + "/pairs"
         pairs.write.mode("overwrite").parquet(path)
         _NEARDUP_STAGE_CACHE[sf_dir] = path
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def _staged_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2341,7 +2341,7 @@ def x_mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     multimodal.attach_thumbnail_payload(
         load_table(spark, sf_dir, "documents")
     ).write.mode("overwrite").parquet(d)
-    return multimodal.phash_dup_pairs(spark.read.parquet(d))
+    return multimodal.phash_dup_pairs(read_parquet(spark, d))
 
 
 def _fill_cache_small_files(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -2460,7 +2460,7 @@ def x_mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     multimodal.attach_thumbnail_payload(
         load_table(spark, sf_dir, "documents")
     ).write.mode("overwrite").parquet(d)
-    return multimodal.resize_luma_grid(spark.read.parquet(d))
+    return multimodal.resize_luma_grid(read_parquet(spark, d))
 
 
 _X_MM_PIPELINE_SQL = (
@@ -3596,7 +3596,7 @@ def x_stream_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _staged_events_src(spark, sf_dir)
     cat = Catalog(f"{root}/wh")
     stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
+        spark.readStream.schema(read_parquet(spark, src).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
@@ -3672,7 +3672,7 @@ def x_stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = exactly_once_mv_sink(cat, "events_raw", "events_mv", mv_update,
                                 app_id="mv")
     q = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
+        spark.readStream.schema(read_parquet(spark, src).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .writeStream.foreachBatch(sink)
@@ -3746,7 +3746,7 @@ def x_corpus_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         app_id="ingest",
     )
     q = (
-        spark.readStream.schema(spark.read.parquet(f"{root}/src").schema)
+        spark.readStream.schema(read_parquet(spark, f"{root}/src").schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{root}/src")
         .writeStream.foreachBatch(sink)
@@ -5493,7 +5493,7 @@ def x_storage_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format(F.col("l_shipdate").cast("date"), "yyyy-MM"),
     )
     li.write.partitionBy("ship_month").mode("overwrite").parquet(d)
-    back = spark.read.parquet(d).filter(F.col("ship_month") == "1996-03")
+    back = read_parquet(spark, d).filter(F.col("ship_month") == "1996-03")
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum(F.col("l_quantity").cast("decimal(18,2)"))
@@ -5559,7 +5559,7 @@ def x_storage_dynamic_partition_pruning(
         )
         li.write.partitionBy("ship_month").mode("overwrite").parquet(d)
         _DPP_READY[sf_dir] = d
-    fact = spark.read.parquet(d)
+    fact = read_parquet(spark, d)
     months = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") == "1-URGENT")

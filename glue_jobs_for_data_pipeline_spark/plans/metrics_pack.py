@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.rank import distributed_ntile, distributed_row_number
-from ..sources.readers import load_events, load_table
+from ..sources.readers import load_events, load_table, read_parquet
 from .catalog import _q
 from .catalog_ext import _X_PHASH_SIG_BODY
 
@@ -819,7 +819,7 @@ def x_mm_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     multimodal.attach_thumbnail_payload(
         load_table(spark, sf_dir, "documents")
     ).write.mode("overwrite").parquet(d)
-    pairs = multimodal.phash_dup_pairs(spark.read.parquet(d)).select(
+    pairs = multimodal.phash_dup_pairs(read_parquet(spark, d)).select(
         "doc_a", "doc_b"
     )
     return connected_components(pairs).select(

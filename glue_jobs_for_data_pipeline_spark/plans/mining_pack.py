@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as tx
 from ..operators.rank import distributed_ntile
-from ..sources.readers import load_events, load_table, spread
+from ..sources.readers import load_events, load_table, read_parquet, spread
 from .catalog import _q
 
 # --------------------------------------------------------------------------
@@ -100,7 +100,7 @@ def _staged_pair_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         path = scratch_dir("spark_graft_copurchase_edges_") + "/pair_weights"
         pw.write.mode("overwrite").parquet(path)
         _EDGE_STAGE_CACHE[sf_dir] = path
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 _X_EDGE_STAGE_SQL = """

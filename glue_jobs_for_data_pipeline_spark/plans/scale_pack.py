@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..operators.skew import replicated_skew_join
-from ..sources.readers import load_table
+from ..sources.readers import load_table, read_parquet
 from .catalog import _q
 
 TABLES = (
@@ -185,7 +185,7 @@ def x_storage_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     zorder_write(li, ["l_partkey", "l_suppkey"], out, n_files=8, bits=8)
     return (
-        spark.read.parquet(out)
+        read_parquet(spark, out)
         .groupBy("l_returnflag")
         .agg(
             F.count(F.lit(1)).alias("cnt"),

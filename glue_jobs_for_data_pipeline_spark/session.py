@@ -17,6 +17,7 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 _WAREHOUSE_DIR: str | None = None
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _warehouse_dir() -> str:
@@ -45,10 +46,10 @@ def get_spark(
     On a real cluster ``master`` comes from spark-submit; locally we
     default to ``local[N]`` with N from $SPARK_GRAFT_CPUS (default 32).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
@@ -69,6 +70,27 @@ def get_spark(
         # at ~3.3 s (measured r11).
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
     )
+    if master.startswith("local"):
+        builder = (
+            builder
+            # Python workers import this package by name (UDFs pickle
+            # their functions by reference); the driver found it on its
+            # own sys.path, the workers need it on theirs whatever the
+            # process cwd is
+            .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+            # List partition directories on the driver. Above the
+            # default threshold of 32 directories Spark lists them in a
+            # job with one task per directory; in local mode those tasks
+            # run in this same JVM on the same filesystem, so the job
+            # only adds one Hadoop Configuration deserialization per
+            # task. Reading back a nightly load's 91-partition fact that
+            # way took 0.59 s, with 0.03 s of listing in its tasks and
+            # 1.31 s of CPU; listed here it takes 0.09 s (4-vCPU host).
+            .config(
+                "spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(2**31 - 1),
+            )
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -3,7 +3,8 @@
 S1  CSV bulk load with explicit schema + header skip
     (reference: validate_data.py:138-146 — Redshift COPY ... CSV IGNOREHEADER 1)
 S2  truncate-and-load -> write mode("overwrite")   (validate_data.py:139)
-S3  table scan -> spark.read.parquet               (populate_fact.py:111)
+S3  table scan -> read_parquet (schema from the footer, no inference job)
+                                                   (populate_fact.py:111)
 S6  INSERT INTO ... SELECT -> write mode("append") (dynamic_upsert.py:120-122)
 
 Scale notes: explicit schemas (no inferSchema pass over 100 TB), parquet
@@ -13,6 +14,9 @@ partitioned by their pruning key (e.g. fact by date).
 """
 
 from __future__ import annotations
+
+import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,9 +40,112 @@ def read_csv_table(
     )
 
 
+_PARQUET = "org.apache.spark.sql.execution.datasources.parquet."
+
+
+def _hidden(name: str) -> bool:
+    # Spark's listing filter (HadoopFSUtils.shouldFilterOutPathName)
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _first_data_file(path: str) -> str | None:
+    """The file Spark's schema inference reads under ``path``: the
+    first leaf by full path string. Children are visited in the order
+    of their name plus a trailing ``/`` for directories, so this
+    depth-first walk meets leaves in exactly that order."""
+    if not os.path.isdir(path):
+        return path if os.path.exists(path) else None
+    with os.scandir(path) as it:
+        children = sorted(
+            (e.name + ("/" if e.is_dir() else ""), e.path)
+            for e in it
+            if not _hidden(e.name)
+        )
+    for _, child in children:
+        found = _first_data_file(child)
+        if found is not None:
+            return found
+    return None
+
+
+def parquet_schema(spark: SparkSession, *paths: str) -> T.StructType | None:
+    """The data schema ``spark.read.parquet(*paths)`` would infer, read
+    from one parquet footer on the driver with Spark's own converter
+    over the session conf (so ``nanosAsLong`` and the NTZ inference
+    setting apply exactly as in inference). Partition columns are not
+    included: Spark still discovers and appends them.
+
+    Inference without a schema submits a one-task job per read; this
+    is ~2 ms of driver work and no job. Returns None, and the caller
+    lets Spark infer, where one local footer is not the answer: globs,
+    non-local filesystems, ``spark.sql.parquet.mergeSchema``, or no
+    readable data file (Spark then raises its usual error). Summary
+    files (``_metadata``) are not consulted; Spark writes none by
+    default.
+    """
+    from py4j.java_gateway import JavaClass
+    from py4j.protocol import Py4JJavaError
+
+    if any(c in p for p in paths for c in "*?[{"):
+        return None
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false") == "true":
+        return None
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    local = conf.get("fs.defaultFS", "file:///").startswith("file:")
+    files = []
+    for p in paths:
+        if p.startswith("file:"):
+            p = "/" + p[len("file:"):].lstrip("/")
+        elif "://" in p or not local:
+            return None
+        f = _first_data_file(os.path.abspath(p))
+        if f is not None:
+            files.append(f)
+    if not files:
+        return None
+    client = spark.sparkContext._gateway._gateway_client
+
+    def jclass(name: str) -> JavaClass:
+        # a direct handle: ``jvm.org.apache...`` resolves the name one
+        # package at a time, each step a failed class lookup in every jar
+        return JavaClass(name, client)
+
+    path = jclass("org.apache.hadoop.fs.Path")("file://" + min(files))
+    try:
+        footer = jclass("org.apache.parquet.hadoop.ParquetFileReader").readFooter(
+            conf,
+            path,
+            jclass(
+                "org.apache.parquet.format.converter.ParquetMetadataConverter"
+            ).SKIP_ROW_GROUPS,
+        )
+        jschema = jclass(_PARQUET + "ParquetFileFormat").readSchemaFromFooter(
+            jclass("org.apache.parquet.hadoop.Footer")(path, footer),
+            jclass(_PARQUET + "ParquetToSparkSchemaConverter")(
+                spark._jsparkSession.sessionState().conf()
+            ),
+        )
+    except Py4JJavaError:
+        return None
+    return T.StructType.fromJson(json.loads(jschema.json()))
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet`` with the schema taken from a footer
+    (:func:`parquet_schema`) instead of an inference job. Every parquet
+    read in the package goes through here."""
+    schema = parquet_schema(spark, *paths)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """S3: scan one driver testdata parquet table."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -142,7 +249,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a no-op for µs fixtures.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = read_parquet(spark, f"{sf_dir}/events.parquet")
     return normalize_event_ts(df)
 
 

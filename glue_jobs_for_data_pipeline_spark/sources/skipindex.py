@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .readers import read_parquet
+
 DEFAULT_BUCKETS = 4096
 
 
@@ -54,7 +56,7 @@ def build_hash_bucket_index(
     (caller chooses the path) and rebuild per ingest batch — the build
     is incremental by construction (new files only, union the rest).
     """
-    raw = spark.read.parquet(table_path)
+    raw = read_parquet(spark, table_path)
     col_dtype = dict(raw.dtypes)[col]
     df = raw.select(
         F.input_file_name().alias("file"),
@@ -124,9 +126,9 @@ def indexed_equality_scan(
         # derive the schema without reading data rows
         any_file = index.select("file").first()
         if any_file is not None:
-            base = spark.read.parquet(any_file["file"])
+            base = read_parquet(spark, any_file["file"])
         elif table_path is not None:
-            base = spark.read.parquet(table_path)
+            base = read_parquet(spark, table_path)
         else:
             raise ValueError(
                 "indexed_equality_scan: the skipping index is empty (zero "
@@ -135,6 +137,6 @@ def indexed_equality_scan(
                 "fallback"
             )
         return base.filter(F.lit(False))
-    return spark.read.parquet(*files).filter(
+    return read_parquet(spark, *files).filter(
         F.col(col) == F.lit(value).cast(dtype)
     )

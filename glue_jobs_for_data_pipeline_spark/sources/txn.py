@@ -43,6 +43,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .readers import read_parquet
+
 _POINTER = "_CURRENT"
 
 # lossless type-widening lattice for the "widen" schema op (r18):
@@ -562,7 +564,7 @@ def _read_version_df(spark: SparkSession, vdir: str) -> DataFrame:
         with open(schema_path) as f:
             schema = StructType.fromJson(json.loads(f.read()))
         return spark.read.schema(schema).parquet(vdir)
-    return spark.read.parquet(vdir)
+    return read_parquet(spark, vdir)
 
 
 def publish_version(table_dir: str, version: int) -> None:
@@ -1969,7 +1971,7 @@ class Catalog:
             # col=value path (the partition values live in the path,
             # exactly as partitionBy laid them out)
             for rel, n_files in offenders:
-                part_df = spark.read.parquet(os.path.join(vdir, rel))
+                part_df = read_parquet(spark, os.path.join(vdir, rel))
                 dst_root = (
                     new_vdir if rel == "." else os.path.join(new_vdir, rel)
                 )

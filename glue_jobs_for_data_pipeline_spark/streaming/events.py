@@ -21,7 +21,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.readers import load_events, normalize_event_ts, scratch_dir
+from ..sources.readers import (
+    load_events,
+    normalize_event_ts,
+    read_parquet,
+    scratch_dir,
+)
 
 # symlink-dir per sf_dir, reused within a process (read_events_stream)
 _STREAM_DIR_CACHE: dict[str, str] = {}
@@ -99,7 +104,7 @@ def drain_stream(
     finally:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.read.parquet(out_dir)
+    return read_parquet(spark, out_dir)
 
 
 # Back-compat name (pre-r08 the drain went through the memory sink).
@@ -134,7 +139,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     link = f"{stream_dir}/events.parquet"
     if not os.path.exists(link):
         os.symlink(f"{sf_dir}/events.parquet", link)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     raw = (
         spark.readStream.schema(raw_schema)
         .format("parquet")

@@ -155,13 +155,20 @@ def _exactly_once_sink(
                                 ]
                             else:
                                 # footers couldn't answer: Spark read,
-                                # still driver-rewritten (the r19 path)
-                                rows = [
-                                    (r["app_id"], int(r["batch_id"]))
-                                    for r in t.read_committed(
-                                        spark, ledger_name
-                                    ).collect()
-                                ]
+                                # bounded by the same guard, and still
+                                # driver-rewritten when under it
+                                got = (
+                                    t.read_committed(spark, ledger_name)
+                                    .limit(LEDGER_GUARD_ROWS + 1)
+                                    .collect()
+                                )
+                                if len(got) > LEDGER_GUARD_ROWS:
+                                    big = True
+                                else:
+                                    rows = [
+                                        (r["app_id"], int(r["batch_id"]))
+                                        for r in got
+                                    ]
                     except FileNotFoundError:
                         rows = []
                     # replay test is MAX-based (r18): batch ids are

@@ -322,6 +322,52 @@ def test_ledger_growth_guard_falls_back_and_warns(
     assert ledger == [("app", 3)]
 
 
+def test_ledger_guard_bounds_the_scan_when_footers_cannot_answer(
+    spark, cat, monkeypatch
+):
+    """With committed_rows and committed_values both None the sink reads
+    the ledger through Spark. That read is bounded by the guard as
+    well: past it the sink warns and takes the distributed path instead
+    of collecting and rewriting the whole ledger on the driver."""
+    import warnings as w
+
+    monkeypatch.setattr(xo, "LEDGER_GUARD_ROWS", 2)
+    monkeypatch.setattr(
+        txn.CatalogTransaction, "committed_rows", lambda self, name: None
+    )
+    monkeypatch.setattr(
+        txn.CatalogTransaction,
+        "committed_values",
+        lambda self, name, max_rows=None: None,
+    )
+    rewrites = []
+    overwrite_small = txn.CatalogTransaction.overwrite_small
+
+    def spy(self, spark, rows, schema_ddl, name):
+        rewrites.append(len(rows))
+        return overwrite_small(self, spark, rows, schema_ddl, name)
+
+    monkeypatch.setattr(txn.CatalogTransaction, "overwrite_small", spy)
+    sink = xo.exactly_once_batch_sink(cat, "t", "app")
+    for b in range(3):  # rows 0..2: under the guard, driver-rewritten
+        sink(spark.createDataFrame([(b,)], "k long"), b)
+    assert rewrites == [1, 2, 3]
+    with w.catch_warnings(record=True) as caught:
+        w.simplefilter("always")
+        sink(spark.createDataFrame([(3,)], "k long"), 3)
+    assert any("retention fold" in str(c.message) for c in caught)
+    assert rewrites == [1, 2, 3]  # no whole-ledger rewrite past the guard
+    assert _rows(cat, spark, "t") == [0, 1, 2, 3]
+    ledger = sorted(
+        (r["app_id"], r["batch_id"])
+        for r in cat.read(spark, xo.ledger_table("t")).collect()
+    )
+    assert ledger == [("app", 0), ("app", 1), ("app", 2), ("app", 3)]
+    head = cat.head()
+    sink(spark.createDataFrame([(99,)], "k long"), 3)  # replay: no-op
+    assert cat.head() == head
+
+
 def test_ledger_writes_are_driver_side_without_a_spark_job(spark, cat):
     """The happy-path ledger commit stages a DRIVER-WRITTEN parquet
     file (stage_small_version), not a Spark write: one part file, no

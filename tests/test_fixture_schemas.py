@@ -15,8 +15,13 @@ normalize — while every other column is pinned exactly.
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import types as T
+
+from glue_jobs_for_data_pipeline_spark.sources import readers
 
 # column -> simpleString type; "TS" = any timestamp flavor (see above)
 _CONTRACT = {
@@ -113,3 +118,97 @@ def test_fixture_schema_contract(spark, sf_dir, table):
                 f"(expected {typ}) — fixture regenerated; audit queries "
                 f"reading this column"
             )
+
+
+# -- read path: schemas from footers, no Spark job ----------------------
+
+_SFS = ("sf0.001", "sf0.01", "sf0.1")
+
+
+@pytest.fixture()
+def nanos_as_long(spark):
+    """Restore the session's nanosAsLong setting after a test flips it."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key, "false")
+    yield lambda v: spark.conf.set(key, v)
+    spark.conf.set(key, prev)
+
+
+@pytest.mark.parametrize(
+    "sf,table,nanos",
+    [(sf, t, "true") for sf in _SFS for t in sorted(_CONTRACT)]
+    + [(sf, "events", "false") for sf in _SFS],
+)
+def test_footer_schema_equals_inferred(spark, nanos_as_long, sf, table, nanos):
+    """The footer-derived schema is exactly what inference resolves,
+    for every fixture table at every scale, and for events under both
+    nanosAsLong settings (the setting changes how TIMESTAMP(NANOS)
+    resolves, so the footer path must read it from the session)."""
+    nanos_as_long(nanos)
+    path = f"/root/testdata/{sf}/{table}.parquet"
+    assert readers.parquet_schema(spark, path) == spark.read.parquet(path).schema
+    assert readers.read_parquet(spark, path).schema == spark.read.parquet(path).schema
+
+
+def test_footer_schema_of_partitioned_dir(spark, tmp_path):
+    """A partitioned directory: the footer gives the data columns and
+    Spark still appends the discovered partition column, as inference
+    does; hidden files and directories are skipped."""
+    d = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(i, i % 3, f"s{i}") for i in range(9)], "k long, p int, s string"
+    ).write.partitionBy("p").parquet(d)
+    (tmp_path / "t" / "_SCHEMA.json").write_text("{}")
+    got = readers.read_parquet(spark, d)
+    assert got.schema == spark.read.parquet(d).schema
+    assert sorted(r["k"] for r in got.collect()) == list(range(9))
+
+
+def test_footer_schema_falls_back_to_inference(spark, tmp_path):
+    """Where one footer is not the answer the reader lets Spark infer:
+    globs, and no data file (Spark then raises its usual error)."""
+    d = str(tmp_path / "t")
+    spark.range(3).write.parquet(d)
+    assert readers.parquet_schema(spark, f"{d}/*.parquet") is None
+    assert readers.read_parquet(spark, f"{d}/*.parquet").count() == 3
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert readers.parquet_schema(spark, str(empty)) is None
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        readers.read_parquet(spark, str(empty))
+
+
+def _jobs(spark, fn):
+    """Number of Spark jobs ``fn`` submits, counted by job group."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_source_reads_submit_no_job(spark, sf_dir):
+    assert _jobs(spark, lambda: readers.load_table(spark, sf_dir, "orders")) == 0
+    assert _jobs(spark, lambda: readers.load_events(spark, sf_dir)) == 0
+
+
+def test_catalog_read_of_many_partitions_submits_no_job(spark, tmp_path):
+    """Reading back a version with more partition directories than
+    Spark's parallel-discovery threshold (32) lists them on the driver:
+    no listing job, and no schema-inference job either."""
+    from glue_jobs_for_data_pipeline_spark.sources.txn import Catalog
+
+    cat = Catalog(str(tmp_path / "wh"))
+    with cat.transaction() as t:
+        t.overwrite(
+            spark.range(120).selectExpr("id AS k", "CAST(id % 40 AS INT) AS p"),
+            "t",
+            partition_by=("p",),
+        )
+    assert _jobs(spark, lambda: cat.read(spark, "t").schema) == 0
+    df = cat.read(spark, "t")
+    assert df.schema.simpleString() == "struct<k:bigint,p:int>"
+    assert df.filter("p = 7").count() == 3

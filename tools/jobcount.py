@@ -7,8 +7,10 @@ text (guide §1.5: job groups make per-query jobs attributable).
 
 Each key runs TWICE: the first invocation pays per-process staging
 side effects (stage caches, fixture writes) outside the probe; the
-second runs inside a job group and the group's job-id count is
-reported — the steady-state per-invocation job bill.
+second runs inside a job group and the group's jobs are reported — the
+steady-state per-invocation job bill — as succeeded jobs, with failed
+jobs counted apart. The session retains every job and stage, so a long
+query's count is never truncated.
 
 Usage: python tools/jobcount.py [--sf DIR] key ...
 """
@@ -17,6 +19,7 @@ from __future__ import annotations
 
 import os
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -33,7 +36,13 @@ def main() -> None:
 
     import __spark_entry__ as e
 
-    spark = get_spark("jobcount")
+    spark = get_spark(
+        "jobcount",
+        extra_conf={
+            "spark.ui.retainedJobs": "100000",
+            "spark.ui.retainedStages": "100000",
+        },
+    )
     qs = e.queries()
     from glue_jobs_for_data_pipeline_spark.operators.dedup import release_caches
 
@@ -48,11 +57,18 @@ def main() -> None:
             qs[k](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
-            n = len(sc.statusTracker().getJobIdsForGroup(group))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        status = Counter(
+            tracker.getJobInfo(j).status
+            for j in tracker.getJobIdsForGroup(group)
+        )
         release_caches()
-        print(f"{k}: {n} jobs", flush=True)
+        print(
+            f"{k}: {status['SUCCEEDED']} jobs, {status['FAILED']} failed",
+            flush=True,
+        )
 
 
 if __name__ == "__main__":
