@@ -21,13 +21,26 @@ DataFrame -> DataFrame expression with a single terminal write — the
 transaction bracket (M5) becomes write-last atomicity, and Spark's lazy
 evaluation removes the physical staging table (S4/S7) entirely.
 
-Scale posture: the source-key set is broadcast into the expire step
-(dims are small next to facts; for a billion-row dim swap the broadcast
-for a shuffle semi-join by passing broadcast_keys=False). Surrogate-key
+Plan shape. A dim-sized batch is bound by fixed per-job cost, not by
+rows, so the plan is built for the fewest query stages. A delta write
+onto a committed dim runs five jobs: the broadcast of the current rows
+(change detection), the broadcast of the changed keys (the expire
+step's IN-subquery, planned as an existence join, so it needs no
+distinct), one single-partition exchange that deduplicates and ranks
+the new versions, the one-row max-key aggregate (joined as a
+cartesian product over that shuffled row, not broadcast), and the
+write. An initial load runs two: the ranking exchange and the write.
+``mode="reference"`` has no change detection, so one job fewer.
+
+Scale posture: the changed-key set is broadcast into the expire step
+(dims are small next to facts; for a billion-row dim pass
+broadcast_keys=False and the optimizer picks the join). Surrogate-key
 assignment offers ``key_mode="hash"`` (xxhash64 — fully parallel,
 deterministic, non-contiguous) for huge dims, and
 ``key_mode="rownum"`` (max+row_number — contiguous like the
-reference's IDENTITY, single-partition window, fine for dim-sized data).
+reference's IDENTITY). A rownum batch above
+``spark.graft.sk.kernelMinBytes`` takes a distributed distinct and the
+exact-rank kernel instead of the single-partition funnel.
 """
 
 from __future__ import annotations
@@ -41,25 +54,13 @@ from pyspark.sql import functions as F
 from ..schemas import CURRENT_ROW_SENTINEL, SCD2_END, SCD2_START
 from ..functions.datefns import run_date_col
 
-
 def _sentinel() -> F.Column:
     return F.lit(CURRENT_ROW_SENTINEL).cast("date")
 
 
-def stage_source(
-    source: DataFrame,
-    columns: Sequence[str],
-    run_date: dt.date | str | None = None,
-) -> DataFrame:
-    """(a) ``SELECT DISTINCT <cols>`` + LoadDate audit column.
-
-    Reference: dynamic_upsert.py:120-122 with the staging DDL's
-    ``LoadDate DATE DEFAULT current_date`` (dynamic_upsert.py:22-26);
-    run_date is injectable for determinism (F10).
-    """
-    return source.select(*columns).distinct().withColumn(
-        "LoadDate", run_date_col(run_date)
-    )
+def _check(name: str, value: str, allowed: tuple[str, ...]) -> None:
+    if value not in allowed:
+        raise ValueError(f"{name} must be one of {allowed}, got {value!r}")
 
 
 def expire_current_rows(
@@ -73,27 +74,71 @@ def expire_current_rows(
 
     ``UPDATE ... SET EndDate = run_date - 1 WHERE key IN (source) AND
     EndDate = '9999-12-31'`` (dynamic_upsert.py:128-131). Spark has no
-    in-place UPDATE, so: mark keys via a (broadcast) join, rewrite
-    EndDate with when/otherwise, and let the caller overwrite the dim.
-    Keys present in dim but absent from source are NOT touched (the
-    IN-subquery semantics, P7/J3).
+    in-place UPDATE, so EndDate is rewritten with when/otherwise over
+    the same IN-subquery, and the caller overwrites the dim. Spark
+    plans the IN as an existence join: duplicate source keys add no
+    rows, so the keys need no distinct. Keys present in dim but absent
+    from source are NOT touched (P7/J3), and a NULL key never matches.
     """
-    keys = source_keys.select(business_key).distinct().withColumn(
-        "_in_source", F.lit(True)
-    )
+    keys = source_keys.select(business_key)
     if broadcast_keys:
         keys = F.broadcast(keys)
-    is_current = F.col(SCD2_END) == _sentinel()
-    return (
-        dim.join(keys, on=business_key, how="left")
-        .withColumn(
-            SCD2_END,
-            F.when(
-                is_current & F.col("_in_source").isNotNull(),
-                F.date_sub(run_date_col(run_date), 1),
-            ).otherwise(F.col(SCD2_END)),
+    expire = (F.col(SCD2_END) == _sentinel()) & F.col(business_key).isin(keys)
+    return dim.withColumn(
+        SCD2_END,
+        F.when(expire, F.date_sub(run_date_col(run_date), 1)).otherwise(
+            F.col(SCD2_END)
+        ),
+    )
+
+
+def _rownum_keys(
+    rows: DataFrame,
+    dim: DataFrame | None,
+    business_key: str,
+    surrogate_key: str,
+    dedup: bool,
+) -> DataFrame:
+    """The rownum keys of assign_surrogate_keys, dropping exact duplicate
+    rows first when ``dedup`` is set. On the window path the dedup runs
+    inside the one ranking partition: the single-partition exchange
+    already satisfies the aggregate's distribution, so the distinct
+    costs no exchange of its own."""
+    min_bytes = int(
+        rows.sparkSession.conf.get(
+            "spark.graft.sk.kernelMinBytes", str(256 << 20)
         )
-        .drop("_in_source")
+    )
+    plan_bytes = int(
+        rows._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    )
+    if plan_bytes <= min_bytes:
+        if dedup:
+            rows = rows.repartition(1).distinct()
+        ranked = rows.withColumn(
+            "__sk_rn",
+            F.row_number().over(Window.orderBy(business_key)).cast("long"),
+        )
+    else:
+        from .rank import distributed_row_number
+
+        ranked, _total = distributed_row_number(
+            rows.distinct() if dedup else rows,
+            [(business_key, True)],
+            out_col="__sk_rn",
+        )
+    base = F.lit(0)
+    if dim is not None:
+        max_key = dim.agg(
+            F.coalesce(F.max(surrogate_key), F.lit(0)).alias("_max_key")
+        )
+        # a cartesian product with the one shuffled row: a broadcast
+        # would cost a job of its own
+        ranked = ranked.crossJoin(max_key.hint("shuffle_replicate_nl"))
+        base = F.col("_max_key")
+    return (
+        ranked.withColumn(surrogate_key, (base + F.col("__sk_rn")).cast("long"))
+        .drop("_max_key", "__sk_rn")
     )
 
 
@@ -108,66 +153,37 @@ def assign_surrogate_keys(
     dynamic_upsert.py:17-19).
 
     rownum: max(existing)+row_number over business-key order —
-    contiguous + deterministic (oracle-reproducible). Size-gated since
-    r11: below `spark.graft.sk.kernelMinBytes` (default 256 MiB of
-    staged batch, by optimizer plan statistics) the row_number is the
-    classic single-partition ordered window — bounded by the gate's own
+    contiguous + deterministic (oracle-reproducible). Size-gated:
+    below `spark.graft.sk.kernelMinBytes` (default 256 MiB of staged
+    batch, by optimizer plan statistics) the row_number is the classic
+    single-partition ordered window — bounded by the gate's own
     measurement, so the funnel task is small by construction; above it,
     the distributed exact-rank kernel (operators/rank.py) computes the
     identical ranks with no single-task sort, so a billion-row dim load
     never collapses onto one executor. Both paths produce the same key
     values — ROW_NUMBER() OVER (ORDER BY business_key) — because keys
     are unique at the staged grain (the reference's source contract;
-    with duplicate keys the old window was tie-nondeterministic
-    anyway), so the gate can never cause value drift, only plan choice.
-    Plan-stats overestimation (cached/joined inputs) errs toward the
-    kernel — the scale-safe direction.
+    with duplicate keys the window is tie-nondeterministic anyway), so
+    the gate can never cause value drift, only plan choice.
+    Plan-stats overestimation (cached/joined inputs, or rows built from
+    Python objects, which carry no size statistics) errs toward the
+    kernel — the scale-safe direction. The existing max key joins as a
+    one-row cartesian product.
     hash: xxhash64(business_key, StartDate) — join-free and
     non-contiguous; still available where contiguity is not required.
+    Any other key_mode raises ValueError.
     """
-    if key_mode == "hash":
-        # staged carries the run date as LoadDate at this point (it becomes
-        # StartDate downstream, dynamic_upsert.py:137-139 column-positional).
-        # KEY-GRAIN writers (scd1_overwrite / scd3_update) stage no
-        # version date at all — their rows are one-per-key, so the
-        # business key alone is the hash input.
-        if "LoadDate" in staged.columns:
-            key = F.xxhash64(F.col(business_key), F.col("LoadDate"))
-        elif SCD2_START in staged.columns:
-            key = F.xxhash64(F.col(business_key), F.col(SCD2_START))
-        else:
-            key = F.xxhash64(F.col(business_key))
-        return staged.withColumn(surrogate_key, key)
-    min_bytes = int(
-        staged.sparkSession.conf.get(
-            "spark.graft.sk.kernelMinBytes", str(256 << 20)
-        )
-    )
-    plan_bytes = int(
-        staged._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    if plan_bytes <= min_bytes:
-        ranked = staged.withColumn(
-            "__sk_rn",
-            F.row_number().over(Window.orderBy(business_key)).cast("long"),
-        )
+    _check("key_mode", key_mode, ("rownum", "hash"))
+    if key_mode == "rownum":
+        return _rownum_keys(staged, dim, business_key, surrogate_key, False)
+    # KEY-GRAIN writers (scd1_overwrite / scd3_update) stage no version
+    # date at all — their rows are one-per-key, so the business key
+    # alone is the hash input.
+    if SCD2_START in staged.columns:
+        key = F.xxhash64(F.col(business_key), F.col(SCD2_START))
     else:
-        from .rank import distributed_row_number
-
-        ranked, _total = distributed_row_number(
-            staged, [(business_key, True)], out_col="__sk_rn"
-        )
-    base = F.lit(0)
-    if dim is not None:
-        max_key = dim.agg(
-            F.coalesce(F.max(surrogate_key), F.lit(0)).alias("_max_key")
-        )
-        ranked = ranked.crossJoin(F.broadcast(max_key))
-        base = F.col("_max_key")
-    return (
-        ranked.withColumn(surrogate_key, (base + F.col("__sk_rn")).cast("long"))
-        .drop("_max_key", "__sk_rn")
-    )
+        key = F.xxhash64(F.col(business_key))
+    return staged.withColumn(surrogate_key, key)
 
 
 def scd2_upsert(
@@ -190,34 +206,47 @@ def scd2_upsert(
     re-versioned each run (dynamic_upsert.py:128-139), byte-for-byte the
     reference behavior.
     mode="delta": expire/re-version only rows whose compared columns
-    changed (left-anti join of staged vs current dim rows) — the scale
-    extension (SURVEY §7.4).
-    """
-    out_cols = [surrogate_key, *columns, SCD2_START, SCD2_END]
-    staged = stage_source(source, columns, run_date)
+    changed (left-anti join of the source vs current dim rows,
+    null-unsafe: a row with a NULL attribute is re-versioned every run)
+    — the scale extension (SURVEY §7.4).
+    Any other mode or key_mode raises ValueError.
 
+    The staged rows are never deduplicated on their own: the expire
+    step's IN-subquery ignores duplicates, and the new versions are
+    deduplicated where they are ranked (see _rownum_keys), which is what
+    brings a delta write to five jobs and an initial load to two.
+    """
+    _check("mode", mode, ("reference", "delta"))
+    _check("key_mode", key_mode, ("rownum", "hash"))
+    out_cols = [surrogate_key, *columns, SCD2_START, SCD2_END]
+    # the staging DDL's ``LoadDate DATE DEFAULT current_date``
+    # (dynamic_upsert.py:22-26) becomes StartDate column-positionally
+    # (dynamic_upsert.py:137-139); run_date is injectable for
+    # determinism (F10)
+    load_date = run_date_col(run_date)
+    staged = source.select(*columns)
     if mode == "delta" and dim is not None:
         current = dim.filter(F.col(SCD2_END) == _sentinel()).select(*columns)
         staged = staged.join(current, on=list(columns), how="left_anti")
 
-    if dim is None:
-        new_rows = (
-            assign_surrogate_keys(staged, None, business_key, surrogate_key, key_mode)
-            .withColumn(SCD2_START, F.col("LoadDate"))
-            .withColumn(SCD2_END, _sentinel())
+    if key_mode == "hash":
+        new_rows = assign_surrogate_keys(
+            staged.distinct().withColumn(SCD2_START, load_date),
+            dim, business_key, surrogate_key, key_mode,
         )
-        return new_rows.select(*out_cols)
-
+    else:
+        # stamped after ranking: the date literal stays out of the
+        # dedup aggregate's generated code, which would otherwise
+        # compile anew for every run date
+        new_rows = _rownum_keys(
+            staged, dim, business_key, surrogate_key, True
+        ).withColumn(SCD2_START, load_date)
+    new_rows = new_rows.withColumn(SCD2_END, _sentinel()).select(*out_cols)
+    if dim is None:
+        return new_rows
     expired = expire_current_rows(
         dim, staged, business_key, run_date, broadcast_keys
     ).select(*out_cols)
-    new_rows = (
-        assign_surrogate_keys(staged, dim, business_key, surrogate_key, key_mode)
-        # column-positional LoadDate -> StartDate (dynamic_upsert.py:137-139)
-        .withColumn(SCD2_START, F.col("LoadDate"))
-        .withColumn(SCD2_END, _sentinel())
-        .select(*out_cols)
-    )
     return expired.unionByName(new_rows)
 
 

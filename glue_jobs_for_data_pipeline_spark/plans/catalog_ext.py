@@ -5425,7 +5425,7 @@ def _x_scd2_hash_sql() -> str:
 
 @_q("x_scd2_hash_keys", _x_scd2_hash_sql())
 def x_scd2_hash_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD-2 upsert with ``key_mode="hash"`` (operators/scd2.py:116-121),
+    """SCD-2 upsert with ``key_mode="hash"`` (operators/scd2.py),
     the 100 TB-safe surrogate assignment: xxhash64(business_key,
     version_date) is fully parallel — no single-partition ROW_NUMBER
     window, no max-key broadcast — at the cost of non-contiguous keys.

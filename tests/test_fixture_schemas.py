@@ -15,8 +15,6 @@ normalize — while every other column is pinned exactly.
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import types as T
@@ -178,24 +176,14 @@ def test_footer_schema_falls_back_to_inference(spark, tmp_path):
         readers.read_parquet(spark, str(empty))
 
 
-def _jobs(spark, fn):
-    """Number of Spark jobs ``fn`` submits, counted by job group."""
-    sc = spark.sparkContext
-    group = f"probe-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+def test_source_reads_submit_no_job(spark, sf_dir, count_jobs):
+    assert count_jobs(lambda: readers.load_table(spark, sf_dir, "orders")) == 0
+    assert count_jobs(lambda: readers.load_events(spark, sf_dir)) == 0
 
 
-def test_source_reads_submit_no_job(spark, sf_dir):
-    assert _jobs(spark, lambda: readers.load_table(spark, sf_dir, "orders")) == 0
-    assert _jobs(spark, lambda: readers.load_events(spark, sf_dir)) == 0
-
-
-def test_catalog_read_of_many_partitions_submits_no_job(spark, tmp_path):
+def test_catalog_read_of_many_partitions_submits_no_job(
+    spark, tmp_path, count_jobs
+):
     """Reading back a version with more partition directories than
     Spark's parallel-discovery threshold (32) lists them on the driver:
     no listing job, and no schema-inference job either."""
@@ -208,7 +196,7 @@ def test_catalog_read_of_many_partitions_submits_no_job(spark, tmp_path):
             "t",
             partition_by=("p",),
         )
-    assert _jobs(spark, lambda: cat.read(spark, "t").schema) == 0
+    assert count_jobs(lambda: cat.read(spark, "t").schema) == 0
     df = cat.read(spark, "t")
     assert df.schema.simpleString() == "struct<k:bigint,p:int>"
     assert df.filter("p = 7").count() == 3

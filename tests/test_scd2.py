@@ -92,13 +92,21 @@ def test_delta_mode_skips_unchanged(spark, initial):
 
 
 def test_hash_key_mode(spark, initial):
-    batch = spark.createDataFrame([(9, "zed")], "CustomerID int, Name string")
+    batch = spark.createDataFrame(
+        [(9, "zed"), (3, "cyd2")], "CustomerID int, Name string"
+    )
     out = scd2_upsert(
         initial, batch, "CustomerID", COLS, "CustomerKey", run_date=D1,
         key_mode="hash",
     )
+    # every new version is keyed by xxhash64(business key, StartDate)
+    new_versions = out.filter(F.col("StartDate") == D1).select(
+        "CustomerID",
+        (F.col("CustomerKey") == F.xxhash64("CustomerID", "StartDate")).alias("ok"),
+    ).collect()
+    assert sorted(r["CustomerID"] for r in new_versions) == [3, 9]
+    assert all(r["ok"] for r in new_versions)
     new = out.filter(F.col("CustomerID") == 9).collect()[0]
-    assert new["CustomerKey"] is not None
     # deterministic across runs
     again = scd2_upsert(
         initial, batch, "CustomerID", COLS, "CustomerKey", run_date=D1,
@@ -322,28 +330,42 @@ def test_infer_late_members_preserves_persisted_flag(spark):
     assert flagged == {3}  # placeholder stays flagged, no clobber to False
 
 
-def test_surrogate_key_gate_paths_agree(spark):
+def test_surrogate_key_gate_paths_agree(spark, tmp_path, count_jobs):
     """The r11 size gate on assign_surrogate_keys switches PLAN only:
     forcing the kernel path (threshold 0) must yield byte-identical
     keys to the small-dim window path, with and without an existing
-    dim's max-key base."""
+    dim's max-key base. The inputs are parquet-backed: a frame built
+    from Python rows has no size statistics and would take the kernel
+    path under any threshold."""
     from glue_jobs_for_data_pipeline_spark.operators.scd2 import (
         assign_surrogate_keys,
     )
+    from glue_jobs_for_data_pipeline_spark.sources.readers import read_parquet
 
-    staged = spark.createDataFrame(
-        [(k, f"name{k}") for k in (7, 3, 11, 1, 9, 5)], "bk long, name string"
+    def parquet(name, rows, ddl):
+        spark.createDataFrame(rows, ddl).write.parquet(str(tmp_path / name))
+        return read_parquet(spark, str(tmp_path / name))
+
+    staged = parquet(
+        "staged",
+        [(k, f"name{k}") for k in (7, 3, 11, 1, 9, 5)],
+        "bk long, name string",
     )
-    dim = spark.createDataFrame([(1, 40)], "bk long, sk long").select(
-        "bk", "sk"
-    )
+    dim = parquet("dim", [(1, 40)], "bk long, sk long")
 
     def keys(threshold: str, base_dim):
         old = spark.conf.get("spark.graft.sk.kernelMinBytes", None)
         spark.conf.set("spark.graft.sk.kernelMinBytes", threshold)
         try:
-            out = assign_surrogate_keys(staged, base_dim, "bk", "sk")
-            return {(r["bk"], r["sk"]) for r in out.collect()}
+            out = []
+            jobs = count_jobs(
+                lambda: out.append(
+                    assign_surrogate_keys(staged, base_dim, "bk", "sk")
+                )
+            )
+            # only the kernel runs jobs while the plan is built
+            assert (jobs > 0) == (threshold == "0")
+            return {(r["bk"], r["sk"]) for r in out[0].collect()}
         finally:
             if old is None:
                 spark.conf.unset("spark.graft.sk.kernelMinBytes")
