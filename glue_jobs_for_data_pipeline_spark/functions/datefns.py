@@ -1,4 +1,5 @@
-"""Scalar date/decimal kernel (SURVEY §2.8, F1-F11).
+"""Scalar date helpers (SURVEY §2.8, F5 and F8): the two date
+semantics that differ from the plain ``pyspark.sql.functions`` call.
 
 All built-in JVM expressions — zero Python UDFs — so every use stays
 inside whole-stage codegen.
@@ -21,37 +22,10 @@ import datetime as dt
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# F1-F6: EXTRACT(part FROM d) (datespopulation.py:30-35)
-def year_(d: Column) -> Column:
-    return F.year(d)
-
-
-def quarter_(d: Column) -> Column:
-    return F.quarter(d)
-
-
-def month_(d: Column) -> Column:
-    return F.month(d)
-
-
-def day_(d: Column) -> Column:
-    return F.dayofmonth(d)
-
 
 def weekday_redshift(d: Column) -> Column:
     """F5: weekday with Redshift numbering, 0=Sunday..6=Saturday."""
     return (F.dayofweek(d) - F.lit(1)).alias("Weekday")
-
-
-def week_iso(d: Column) -> Column:
-    """F6: ISO-8601 week of year (both Redshift EXTRACT(WEEK) and Spark
-    weekofyear are ISO)."""
-    return F.weekofyear(d)
-
-
-# F7: date + int arithmetic ('2023-01-01'::DATE + n - 1, datespopulation.py:21)
-def date_plus(d: Column, n: Column | int) -> Column:
-    return F.date_add(d, n)
 
 
 # F8: current_date - INTERVAL '1 day' (dynamic_upsert.py:129), run-date injectable
@@ -63,15 +37,3 @@ def run_date_col(run_date: dt.date | str | None) -> Column:
 
 def yesterday(run_date: dt.date | str | None = None) -> Column:
     return F.date_sub(run_date_col(run_date), 1)
-
-
-# F9: cast string -> DATE
-def to_date_(c: Column) -> Column:
-    return c.cast("date")
-
-
-# F11: DECIMAL multiply with the reference's declared result type.
-# Spark widens DECIMAL(8,2)*INT; the reference declares TotalPrice
-# DECIMAL(8,2) (populate_fact.py:101) -> cast back down.
-def decimal_mul(price: Column, qty: Column, scale: str = "decimal(18,2)") -> Column:
-    return (price * qty).cast(scale)

@@ -548,7 +548,8 @@ def minhash_md5_pairs(
     add the same broadcast-anti-join cap as minhash_lsh_pairs.
     """
     r = num_hashes // bands
-    assert bands * r == num_hashes, "bands must divide num_hashes"
+    if bands * r != num_hashes:
+        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
     posts = doc_shingles(spread(df), id_col, text_col, k)
     hx = (
         F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10)
@@ -787,12 +788,13 @@ def hamming_band_pairs(
     sig_col: str = "sig",
     max_hamming: int = 3,
     n_bands: int = 4,
+    bits: int = 64,
 ) -> DataFrame:
-    """All pairs of 64-bit signatures within ``max_hamming`` — the
-    shared banding engine behind SimHash text near-dup and perceptual-
-    hash image near-dup.
+    """All pairs of ``bits``-wide signatures within ``max_hamming`` —
+    the one banding engine behind SimHash text near-dup (xxhash64 and
+    md5 signatures) and perceptual-hash image near-dup.
 
-    Pigeonhole banding: split 64 bits into ``n_bands`` equal chunks; a
+    Pigeonhole banding: split the bits into ``n_bands`` equal chunks; a
     pair within hamming ``max_hamming`` < n_bands differs in at most
     max_hamming chunks, so it must AGREE on >= 1 chunk -> equi-join per
     chunk (co-located, no all-pairs), exact hamming verify via
@@ -803,7 +805,10 @@ def hamming_band_pairs(
 
     Output: (doc_a, doc_b, hamming), doc_a < doc_b.
     """
-    assert 64 % n_bands == 0, "bands must evenly split the 64-bit signature"
+    if bits % n_bands:
+        raise ValueError(
+            f"n_bands={n_bands} must evenly split the {bits}-bit signature"
+        )
     if max_hamming >= n_bands:
         # the pigeonhole guarantee needs max_hamming < n_bands: a pair
         # can then differ in EVERY chunk and never collide on a band —
@@ -818,7 +823,7 @@ def hamming_band_pairs(
             "raise n_bands for an exact result",
             stacklevel=2,
         )
-    width = 64 // n_bands
+    width = bits // n_bands
     mask = (1 << width) - 1
     chunks = sigs.select(
         F.col(id_col).alias("doc"),
@@ -1137,37 +1142,33 @@ def simhash_md5_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    bits: int = 16,
-    bands: int = 4,
     max_hamming: int = 3,
 ) -> DataFrame:
     """Near-dup candidate pairs via SimHash built ENTIRELY from
-    cross-engine-stateable primitives — the hash-verifiable twin of
-    simhash_pairs (whose xxhash64 kernel no SQL engine can replay),
-    exactly as minhash_md5_pairs twins minhash_lsh_pairs.
+    cross-engine-stateable primitives — the hash-verifiable counterpart
+    of simhash_pairs (whose xxhash64 kernel no SQL engine can replay).
 
-    Per doc: a ``bits``-wide signature where bit b is the sign of
+    Per doc: a 16-bit signature where bit b is the sign of
     sum(+1/-1 over distinct shingles by their md5 bit b) — computed as
-    ``bits`` map-side-combined conditional SUMs in ONE aggregation over
-    the posting list (the same single-shuffle shape as the minhash
-    MINs; no row multiplication per bit). Candidates come from a
-    co-located (band, band_value) self-join — pigeonhole: hamming <=
-    bands-1 guarantees some band matches, so with 4 bands every pair
-    at hamming <= 3 is found — then the EXACT hamming distance
-    (bit_count of xor, identical integer ops both engines) filters to
+    16 map-side-combined conditional SUMs in ONE aggregation over the
+    posting list (no row multiplication per bit). The 4-hex-digit md5
+    prefix fixes the width at 16 bits, and the DuckDB oracle states the
+    same 4 bands. hamming_band_pairs then joins the signatures on their
+    4 bands (pigeonhole: every pair at hamming <= 3 shares a band) and
+    keeps the pairs whose exact hamming distance is within
     ``max_hamming``. Returns (doc_a, doc_b, hamming).
 
     Ties (bit-sum exactly 0) map to bit 0 in both engines.
     """
-    assert bits % bands == 0
+    bits, bands = 16, 4
     # pigeonhole completeness only holds up to bands-1 differing bits;
     # a larger budget would SILENTLY miss pairs whose differing bits
     # spread across all bands — refuse loudly instead
-    assert max_hamming <= bands - 1, (
-        f"max_hamming={max_hamming} needs >= {max_hamming + 1} bands "
-        f"for pigeonhole-complete banding (got {bands})"
-    )
-    r = bits // bands
+    if max_hamming > bands - 1:
+        raise ValueError(
+            f"max_hamming={max_hamming} needs >= {max_hamming + 1} bands "
+            f"for pigeonhole-complete banding (got {bands})"
+        )
     posts = doc_shingles(spread(df), id_col, text_col, 3)
     hx = F.conv(F.substring(F.md5(F.col("shingle")), 1, 4), 16, 10).cast("int")
     hashed = posts.select("doc", hx.alias("hx"))
@@ -1187,34 +1188,8 @@ def simhash_md5_pairs(
         term = F.when(F.col(f"s{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
         sig = term if sig is None else sig + term
     sigs = sums.select("doc", sig.cast("int").alias("sig"))
-    band_rows = sigs.select(
-        "doc",
-        "sig",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
-    ).withColumn(
-        # shiftright()'s Python signature only takes a literal shift
-        # count; the SQL form accepts a column expression
-        "bv",
-        F.expr(f"shiftright(sig, band * {r}) & {(1 << r) - 1}"),
-    )
-    a = band_rows.select(
-        F.col("doc").alias("doc_a"), F.col("sig").alias("sig_a"), "band", "bv"
-    )
-    b2 = band_rows.select(
-        F.col("doc").alias("doc_b"), F.col("sig").alias("sig_b"), "band", "bv"
-    )
-    return (
-        a.join(b2, ["band", "bv"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .withColumn(
-            "hamming",
-            F.bit_count(
-                F.col("sig_a").bitwiseXOR(F.col("sig_b"))
-            ).cast("int"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-        .distinct()
+    return hamming_band_pairs(
+        sigs, max_hamming=max_hamming, n_bands=bands, bits=bits
     )
 
 

@@ -48,7 +48,9 @@ exactly like the pair generators already do).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from typing import Callable, NamedTuple
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -221,66 +223,41 @@ def dedup_by_clusters_best(
     return survivors.unionByName(untouched)
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 10,
-    damping: float = 0.85,
+class _RankDomain(NamedTuple):
+    """The four things a PageRank numeric domain decides; everything
+    else is the shared loop in _power_iterate."""
+
+    init: Callable[[int], Column]  # n -> every node's starting rank
+    contrib: Column  # one edge's share, from ``rank`` and ``deg``
+    dangling: Column  # aggregate of ``rank`` over the dangling nodes
+    update: Callable[[int], Column]  # n -> new rank, from _dm and contrib
+
+
+def _power_iterate(
+    edges: DataFrame, src: str, dst: str, iterations: int, dom: _RankDomain
 ) -> DataFrame:
-    """(node, rank) after ``iterations`` of damped power iteration over
-    a DIRECTED edge list — the second iterative-graph kernel next to
-    connected_components (no counterpart in the reference; LLM-pipeline
-    scope, e.g. ranking documents by citation/co-occurrence graphs to
-    pick canonical cluster representatives or weight training mixtures).
+    """(node, rank) after ``iterations`` damped power-iteration rounds in
+    the numeric domain ``dom``.
 
-    r_{t+1}(v) = (1-d)/n + d * [ sum_{(u,v) in E} r_t(u)/deg(u)
-                                 + dangling_mass / n ]
+    The node table carries a dangling flag (no out-edges) from the
+    start, so each round's dangling mass is a filter-aggregate over the
+    ranks, broadcast into the update as a one-row cross join. A round
+    is one contribution shuffle grouped by dst, joined against the
+    degree-annotated edges checkpointed once. Every round's ranks are
+    checkpointed eagerly except the last, which is lazy: the caller's
+    first action materializes it. The blocks that lazy plan reads (the
+    nodes, the edges, the previous round's ranks) are registered for
+    release_checkpoints() rather than freed, so callers must act on the
+    result before releasing."""
+    from . import ckpt
 
-    Dangling nodes (no out-edges) redistribute their mass uniformly —
-    the standard stochastic-matrix completion, so sum(rank) stays 1 at
-    every iteration (the property tests assert it to 1e-9).
-
-    Scale shape per iteration: ONE fact-sized shuffle (contributions
-    grouped by dst; the ranks->edges join is a join on src against a
-    node-sized table, sharing the edges' src layout cached once). The
-    dangling mass rides the SAME job as a broadcast 1-row aggregate
-    cross-joined into the update expression — since r10 there is NO
-    per-iteration driver collect, and since r19 no per-iteration JOIN
-    either: the node table is annotated ONCE with an is-dangling flag
-    that the rank table carries forward, so the mass is a plain
-    filter-aggregate over the already-checkpointed ranks (the old
-    anti-join against ``deg`` re-derived the degree table from its
-    source — a full edge rescan + exchange + broadcast build EVERY
-    round; guide §2.4). The only per-round action is the
-    localCheckpoint that truncates the otherwise linearly-growing
-    lineage, exactly as in connected_components — except the FINAL
-    round's checkpoint, which is LAZY (r20, guide §1.2): the caller's
-    own first action materializes it, so the last iteration never pays
-    a separate materialization job whose output would be read exactly
-    once. Everything the lazy plan reads (nodes, ed, the second-to-
-    last ranks) is registered for release_checkpoints() instead of
-    freed eagerly — the caller contract (materialize, then release)
-    already guarantees the blocks outlive the plan. No convergence
-    check — fixed iteration count, the common production contract. Ranks
-    are doubles; per-node sums depend on partial-agg order, so
-    PageRank is rows-only under the driver's value-hash gate — its
-    numerics are pinned by the pure-Python differential test instead
-    (tests/test_graph.py).
-    """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-    )
-    from . import ckpt
-
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # node table carries the dangling flag from birth (no out-edges):
-    # every iteration's rank table inherits it through the update join
-    nodes = (
-        nodes.join(
+        .join(
             deg.select(F.col("src").alias("node"), "deg"),
             "node",
             "left_outer",
@@ -290,71 +267,84 @@ def pagerank(
     )
     n = nodes.count()
     if n == 0:
-        # empty edge list -> empty ranking (not a ZeroDivisionError at
-        # plan-build time)
+        # init(0) would divide by zero; with no rows, any rank of the
+        # domain's type will do
         ckpt.register(nodes)
-        return nodes.select("node", F.lit(0.0).alias("rank"))
-    # edges annotated with out-degree once, cached partitioned on src —
-    # every iteration's join reuses this layout instead of recomputing
+        return nodes.select("node", dom.init(1).alias("rank"))
     ed = e.join(deg, "src").localCheckpoint(eager=True)
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"), "_dang")
+    ranks = nodes.select("node", dom.init(n).alias("rank"), "_dang")
     prev_ranks = None
     for it in range(iterations):
         last = it == iterations - 1
-        out = ranks.select(F.col("node").alias("src"), "rank")
         contribs = (
-            ed.join(out, "src")
-            .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
+            ed.join(ranks.select(F.col("node").alias("src"), "rank"), "src")
+            .select("dst", dom.contrib.alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("contrib"))
         )
-        # dangling mass = rank held by nodes with NO out-edges: a
-        # filter-aggregate over the checkpointed ranks (the flag rode
-        # in), broadcast into the update as a 1-row cross join — no
-        # join, no rescan, no driver round-trip. Arithmetic order
-        # matches the previous driver-side fold ((1-d)/n + (d*m)/n,
-        # then + d*contrib) so the pure-Python differential stays
-        # bit-tight.
-        dangling_df = ranks.filter(F.col("_dang")).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
-        )
+        dangling = ranks.filter(F.col("_dang")).agg(dom.dangling.alias("_dm"))
         ranks = (
             nodes.join(
                 contribs.withColumnRenamed("dst", "node"), "node", "left_outer"
             )
-            .crossJoin(F.broadcast(dangling_df))
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.col("_dm") / F.lit(float(n))
-                    + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("rank"),
-                "_dang",
-            )
-            # final round LAZY: the caller's first action materializes
-            # it (docstring; one fewer full-pass job per call)
+            .crossJoin(F.broadcast(dangling))
+            .select("node", dom.update(n).alias("rank"), "_dang")
             .localCheckpoint(eager=not last)
         )
         if prev_ranks is not None:
-            if not last:
-                # the new eager checkpoint no longer reads last
-                # round's blocks
-                ckpt.free(prev_ranks)
-            else:
-                # the final LAZY plan still reads them — keep alive
-                # until the caller materializes, then release
-                ckpt.register(prev_ranks)
+            # an eager checkpoint no longer reads the previous round;
+            # the lazy final one does until the caller's action
+            (ckpt.register if last else ckpt.free)(prev_ranks)
         prev_ranks = ranks
-    if prev_ranks is not None:  # iterations >= 1: ranks is a checkpoint
-        # nodes and ed feed the final lazy plan: release, don't free
-        ckpt.register(nodes)
+    ckpt.register(nodes)
+    if prev_ranks is None:  # no rounds: the initial ranks read only nodes
+        ckpt.free(ed)
+    else:
         ckpt.register(ed)
         ckpt.register(ranks)
-    else:  # iterations == 0: ranks still reads nodes' blocks
-        ckpt.register(nodes)
-        ckpt.free(ed)
     return ranks.select("node", "rank")
+
+
+def pagerank(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    iterations: int = 10,
+    damping: float = 0.85,
+) -> DataFrame:
+    """(node, rank) after ``iterations`` of damped power iteration over
+    a DIRECTED edge list, in doubles:
+
+    r_{t+1}(v) = (1-d)/n + d * dangling_mass / n
+                 + d * sum_{(u,v) in E} r_t(u)/deg(u)
+
+    Dangling nodes (no out-edges) redistribute their mass uniformly —
+    the standard stochastic-matrix completion, so sum(rank) stays 1 at
+    every iteration. The update keeps that term order so the
+    pure-Python differential in tests/test_analytics_pack.py holds to
+    1e-9.
+    No convergence check — a fixed iteration count. Per-node double
+    sums depend on partial-aggregation order, so the float ranks are
+    checked against Python, not hashed; pagerank_int_grid is the
+    hash-checkable domain. Job shape and checkpoint lifecycle:
+    _power_iterate.
+    """
+    return _power_iterate(
+        edges,
+        src,
+        dst,
+        iterations,
+        _RankDomain(
+            init=lambda n: F.lit(1.0 / n),
+            contrib=F.col("rank") / F.col("deg"),
+            dangling=F.coalesce(F.sum("rank"), F.lit(0.0)),
+            update=lambda n: (
+                F.lit((1.0 - damping) / n)
+                + F.lit(damping) * F.col("_dm") / F.lit(float(n))
+                + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
+            ),
+        ),
+    )
 
 
 def pagerank_int_grid(
@@ -364,114 +354,47 @@ def pagerank_int_grid(
     iterations: int = 8,
     scale: int = 1 << 40,
 ) -> DataFrame:
-    """PageRank whose EVERY intermediate is exact 64-bit integer
-    arithmetic — the determinization that makes the fixed-iteration
-    chain SQL-statable and therefore value-hash checkable (the same
-    grid trick as similarity.kmeans_fit_int_grid, r14).
+    """PageRank whose every intermediate is exact 64-bit integer
+    arithmetic, so the fixed-iteration chain is SQL-statable and its
+    output hash-checkable (the grid idea of
+    similarity.kmeans_fit_int_grid).
 
-    Ranks are scaled integers R = rank * 2^40; the damped update uses
-    only nonnegative integer division (floor == trunc, so Spark's
-    ``div`` and DuckDB's ``//`` agree bit-for-bit):
+    Ranks are scaled integers R = rank * ``scale``; the damped update
+    (d = 0.85 = 17/20) uses only nonnegative integer division (floor ==
+    trunc, so Spark's ``div`` and DuckDB's ``//`` agree bit-for-bit):
 
         tele    = (3 * S) div (20 * n)              -- 0.15/n
         R'(v)   = tele + (17 * (dm div n + contrib(v))) div 20
         contrib = sum over in-edges (u,v) of R(u) div outdeg(u)
         dm      = sum of R over dangling nodes
 
-    Each floor drops < 1 unit of 2^-40 mass per term — total mass
-    decays by < (|E| + n) * 2^-40 per round, immaterial for ranking
-    and EXACTLY reproduced by any engine (the point). vs the float
-    tier (pagerank): per-node double sums there depend on partial-agg
-    merge order, which is why it is rows-only forever; this tier's
-    integer sums are order-insensitive. Iteration/shuffle shape is
-    identical to the float tier: one fact-sized contribution shuffle
-    per round, the dangling scalar rides a broadcast 1-row cross join,
-    no per-round driver collect beyond the localCheckpoint — and the
-    final round's checkpoint is LAZY, materialized by the caller's
-    first action (r20; see pagerank).
+    Each floor drops < 1 unit of 1/scale mass per term, so total mass
+    decays by < (|E| + n) / scale per round — immaterial for ranking,
+    and reproduced exactly by any engine because integer sums do not
+    depend on aggregation order. Job shape and checkpoint lifecycle:
+    _power_iterate.
 
-    Returns (node, rank_scaled BIGINT); divide by 2^40 for the float
-    rank. Ordering agreement with the float tier is asserted in
+    Returns (node, rank_scaled BIGINT); divide by ``scale`` for the
+    float rank. Agreement with pagerank is asserted in
     tests/test_graph.py.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    from . import ckpt
-
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # dangling flag attached once, carried through every rank table —
-    # the per-iteration mass becomes a filter-aggregate over the
-    # checkpointed ranks instead of an anti-join that re-derived deg
-    # from a full edge rescan each round (r19; see pagerank)
-    nodes = (
-        nodes.join(
-            deg.select(F.col("src").alias("node"), "deg"),
-            "node",
-            "left_outer",
-        )
-        .select("node", F.col("deg").isNull().alias("_dang"))
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    if n == 0:
-        ckpt.register(nodes)
-        return nodes.select(
-            "node", F.lit(0).cast("long").alias("rank_scaled")
-        )
-    ed = e.join(deg, "src").localCheckpoint(eager=True)
-    tele = (3 * scale) // (20 * n)
-    ranks = nodes.select(
-        "node", F.lit(scale // n).cast("long").alias("r"), "_dang"
-    )
-    prev_ranks = None
-    for it in range(iterations):
-        last = it == iterations - 1
-        out = ranks.select(F.col("node").alias("src"), "r")
-        contribs = (
-            ed.join(out, "src")
-            .select("dst", F.expr("r div deg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        dangling_df = ranks.filter(F.col("_dang")).agg(
-            F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("_dm")
-        )
-        ranks = (
-            nodes.join(
-                contribs.withColumnRenamed("dst", "node"), "node", "left_outer"
-            )
-            .crossJoin(F.broadcast(dangling_df))
-            .select(
-                "node",
-                (
-                    F.lit(tele).cast("long")
-                    + F.expr(
-                        f"(17 * ((_dm div {n}) + coalesce(contrib, 0L))) div 20"
-                    )
-                ).alias("r"),
-                "_dang",
-            )
-            # final round LAZY — caller's first action materializes
-            .localCheckpoint(eager=not last)
-        )
-        if prev_ranks is not None:
-            if not last:
-                ckpt.free(prev_ranks)
-            else:  # the final lazy plan reads them (see pagerank)
-                ckpt.register(prev_ranks)
-        prev_ranks = ranks
-    if prev_ranks is not None:
-        ckpt.register(nodes)
-        ckpt.register(ed)
-        ckpt.register(ranks)
-    else:
-        ckpt.register(nodes)
-        ckpt.free(ed)
-    return ranks.select("node", F.col("r").alias("rank_scaled"))
+    return _power_iterate(
+        edges,
+        src,
+        dst,
+        iterations,
+        _RankDomain(
+            init=lambda n: F.lit(scale // n).cast("long"),
+            contrib=F.expr("`rank` div `deg`"),
+            dangling=F.coalesce(F.sum("rank"), F.lit(0)).cast("long"),
+            update=lambda n: (
+                F.lit((3 * scale) // (20 * n)).cast("long")
+                + F.expr(
+                    f"(17 * ((_dm div {n}) + coalesce(contrib, 0L))) div 20"
+                )
+            ),
+        ),
+    ).withColumnRenamed("rank", "rank_scaled")
 
 
 def triangle_counts(edges: DataFrame, canonical: bool = False) -> DataFrame:

@@ -50,10 +50,9 @@ Correctness preconditions (documented, not silent):
 - `order_by` must be a TOTAL order (append a unique tiebreaker such as
   the business key). Equal keys compare equal to at most one boundary
   and land in one pid, so no tie straddles a partition boundary.
-- Order columns must be NON-NULL: the boundary comparator uses plain
-  `>`/`<`/`==`, and a null key would collapse to pid 0 regardless of
-  sort direction. Every production caller ranks aggregate outputs of
-  non-null keys.
+- NULL keys rank like `ROW_NUMBER() OVER (ORDER BY ...)`: first for
+  an ascending column, last for a descending one, in the boundary
+  sample sort, the boundary comparison and the local window alike.
 
 Skew note: like Spark's own RangePartitioner, an equal-key mass all
 lands in one pid; the tiebreaker column (always unique here) restores
@@ -88,11 +87,16 @@ def _sort_cols(order_by: list[OrderSpec]) -> list[Column]:
 
 def _py_sort(rows: list[tuple], order_by: list[OrderSpec]) -> list[tuple]:
     """Sort collected key tuples driver-side under the same total order
-    the kernel ranks by: repeated stable sorts, last key first."""
+    the kernel ranks by (_sort_cols): repeated stable sorts, last key
+    first. NULL sorts first ascending and last descending — the key
+    (is not None, value) puts None lowest, and ``reverse`` flips it to
+    the end for a descending column."""
     out = list(rows)
     for i in range(len(order_by) - 1, -1, -1):
         _, asc = order_by[i]
-        out.sort(key=lambda t, i=i: t[i], reverse=not asc)
+        out.sort(
+            key=lambda t, i=i: (t[i] is not None, t[i]), reverse=not asc
+        )
     return out
 
 
@@ -140,15 +144,25 @@ def _sql_lit(v) -> str:
 
 
 def _gt_boundary_sql(order_by: list[OrderSpec], bvals: tuple) -> str:
-    """key > boundary (lexicographic under the per-column directions) as
-    SQL text, built innermost-last-column-first:
+    """key sorts after boundary (lexicographic under the per-column
+    directions) as SQL text, built innermost-last-column-first:
         gt_i OR (eq_i AND <comparison of the remaining suffix>)
-    `desc` flips the strict comparison; equality is direction-free."""
+    `desc` flips the strict comparison; equality is direction-free.
+    NULL sorts first ascending and last descending, as in _sort_cols.
+    A NULL key against a non-NULL boundary leaves ``>`` / ``=`` NULL,
+    which the enclosing CASE WHEN reads as false — the right answer
+    wherever the explicit IS NULL terms do not decide."""
     cond = "FALSE"
     for (name, asc), bv in zip(reversed(order_by), reversed(bvals)):
-        lit = _sql_lit(bv)
-        op = ">" if asc else "<"
-        cond = f"(`{name}` {op} {lit} OR (`{name}` = {lit} AND {cond}))"
+        col = f"`{name}`"
+        if bv is None:
+            gt = f"{col} IS NOT NULL" if asc else "FALSE"
+            eq = f"{col} IS NULL"
+        else:
+            lit = _sql_lit(bv)
+            gt = f"{col} > {lit}" if asc else f"({col} < {lit} OR {col} IS NULL)"
+            eq = f"{col} = {lit}"
+        cond = f"({gt} OR ({eq} AND {cond}))"
     return cond
 
 
@@ -181,9 +195,9 @@ def distributed_row_number(
     deterministic across re-executions.
 
     `order_by` is a list of `(column_name, ascending)` pairs that MUST
-    form a total order over non-null columns — append a unique
-    tiebreaker. Returns `(df_with_rank, total_rows)`; the rank column
-    `out_col` is LongType, 1-based, identical to
+    form a total order — append a unique tiebreaker. NULLs sort first
+    ascending and last descending. Returns `(df_with_rank, total_rows)`;
+    the rank column `out_col` is LongType, 1-based, identical to
     `ROW_NUMBER() OVER (ORDER BY ...)`.
 
     The total row count comes free as the pid-count sum and is returned

@@ -1,16 +1,20 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
-Two tiers (BASELINE north-star: similarity search at 100 TB):
+Every search is candidate generation followed by one exact re-rank
+(_exact_rerank: cosine, then the top k per query). The generators
+(BASELINE north-star: similarity search at 100 TB):
 
-- brute_force_topk: exact cosine top-k via broadcast cross join — the
+- brute_force_topk: every corpus vector, via broadcast cross join — the
   correctness baseline and the right tool when |queries| is small
   (queries broadcast; the corpus streams map-side, no shuffle until the
   tiny per-query top-k).
-- hyperplane-LSH tier: deterministic random-hyperplane signatures bucket
-  the corpus; candidates = signature collisions (multi-table), verified
-  by exact cosine. Sublinear probe cost; recall tunable by
-  (n_tables, n_bits). An IVF variant would replace the signature with a
-  nearest-centroid id — same plumbing.
+- lsh_topk: deterministic random-hyperplane signatures bucket the
+  corpus; candidates = signature collisions (multi-table). Sublinear
+  probe cost; recall tunable by (n_tables, n_bits).
+- IVF (ivf_topk, ivf_kmeans_topk, ivf_kmeans_topk_grid): the vectors in
+  the query's n_probe nearest cells (_cell_probe_topk).
+- PQ (pq_adc_topk, ivf_pq_topk): the k*refine best by asymmetric
+  distance over product-quantized codes (_adc_shortlist).
 
 Determinism: hyperplane weights come from xxhash64(table, plane, dim)
 mapped to +-[0,1), so every run and every engine derives the same
@@ -23,6 +27,22 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine, dot
+
+
+def _exact_rerank(cand: DataFrame, k: int) -> DataFrame:
+    """The exact re-rank every search here ends in: cosine of each
+    (query_id, qvec, neighbor_id, cvec) candidate, then the top ``k``
+    per query by cos DESC, ties to the lower neighbor id.
+    Output: (query_id, neighbor_id, rank, cos)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("neighbor_id")
+    )
+    return (
+        cand.withColumn("cos", cosine(F.col("qvec"), F.col("cvec")))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cos")
+    )
 
 
 def brute_force_topk(
@@ -44,18 +64,8 @@ def brute_force_topk(
         )
     )
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"))
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", cosine(F.col("qvec"), F.col("cvec")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
+    return _exact_rerank(
+        q.crossJoin(c).filter(F.col("query_id") != F.col("neighbor_id")), k
     )
 
 
@@ -97,15 +107,7 @@ def lsh_topk(
         .select("query_id", "qvec", "neighbor_id", "cvec")
         .distinct()
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("cos", cosine(F.col("qvec"), F.col("cvec")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _exact_rerank(cand, k)
 
 
 def _with_signatures(
@@ -287,11 +289,9 @@ def _ivf_probe_topk(
     k: int,
     n_probe: int,
 ) -> DataFrame:
-    """Shared IVF probe plumbing: corpus vectors live in their 1 nearest
-    cell, queries probe their n_probe nearest cells, candidates re-rank
-    by exact cosine. No distinct is needed (unlike the LSH multi-table
-    path): each corpus vector lives in exactly ONE cell, so a
-    (query, neighbor) pair can only arise once."""
+    """IVF search over float centroids: corpus vectors live in their 1
+    nearest cell by cosine, queries probe their n_probe nearest cells
+    (_cell_probe_topk)."""
     cents = _collect_centroids(centroids, vec_col)  # one job, two uses
     corpus_cells = assign_ivf_cells(corpus, cents, id_col, vec_col, 1).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"), "cell"
@@ -299,21 +299,24 @@ def _ivf_probe_topk(
     query_cells = assign_ivf_cells(queries, cents, id_col, vec_col, n_probe).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"), "cell"
     )
+    return _cell_probe_topk(query_cells, corpus_cells, k)
+
+
+def _cell_probe_topk(
+    query_cells: DataFrame, corpus_cells: DataFrame, k: int
+) -> DataFrame:
+    """The IVF probe: broadcast the (query_id, qvec, cell) probes, join
+    the (neighbor_id, cvec, cell) corpus on cell, then _exact_rerank.
+    No distinct is needed (unlike the LSH multi-table path): each
+    corpus vector lives in exactly ONE cell, so a (query, neighbor)
+    pair can only arise once."""
     cand = (
         F.broadcast(query_cells)
         .join(corpus_cells, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "qvec", "neighbor_id", "cvec")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("cos", cosine(F.col("qvec"), F.col("cvec")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _exact_rerank(cand, k)
 
 
 def ivf_topk(
@@ -749,15 +752,14 @@ def ivf_kmeans_topk_grid(
     centroids: list[tuple[int, list[int]]] | None = None,
 ) -> DataFrame:
     """IVF ANN over kmeans_fit_int_grid cells: integer-exact cell
-    boundaries + probe membership, exact double cosine re-rank on the
-    ORIGINAL float vectors (the proven fold that hash-matches across
-    engines — see x_sim_ivf_topk). The fully SQL-statable refined-cells
-    ANN tier; same probe plumbing shape as _ivf_probe_topk.
+    boundaries + probe membership, then the shared probe join and exact
+    double cosine re-rank on the ORIGINAL float vectors
+    (_cell_probe_topk). The fully SQL-statable refined-cells ANN tier.
 
-    ``centroids`` (r15): a pre-trained kmeans_fit_int_grid result —
-    index builds share one training per corpus (the catalog stages it
-    once per process; see catalog_ext._staged_grid_centroids) instead
-    of re-running Lloyd per consumer."""
+    ``centroids``: a pre-trained kmeans_fit_int_grid result — index
+    builds share one training per corpus (the catalog stages it once
+    per process; see catalog_ext._staged_grid_centroids) instead of
+    re-running Lloyd per consumer."""
     cents = centroids if centroids is not None else kmeans_fit_int_grid(
         corpus, id_col, vec_col, n_cells, n_iters, scale
     )
@@ -782,21 +784,7 @@ def ivf_kmeans_topk_grid(
         "__qv",
         n_probe,
     ).select("query_id", "qvec", "cell")
-    cand = (
-        F.broadcast(query_cells)
-        .join(corpus_cells, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "qvec", "neighbor_id", "cvec")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("cos", cosine(F.col("qvec"), F.col("cvec")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _cell_probe_topk(query_cells, corpus_cells, k)
 
 
 def ivf_kmeans_topk(
@@ -1030,6 +1018,31 @@ def pq_encode(
     )
 
 
+def _lut_cols(vec_col: str, codebooks: list[list[list[float]]]) -> list:
+    """One ADC lookup-table column ``_lut{i}`` per codebook."""
+    return [
+        F.expr(_lut_sql(vec_col, i, b)).alias(f"_lut{i}")
+        for i, b in enumerate(codebooks)
+    ]
+
+
+def _adc_shortlist(cand: DataFrame, n_books: int, keep: int) -> DataFrame:
+    """The ``keep`` best candidates per query by ADC distance (the sum
+    of each code's lookup-table entry), ties to the lower neighbor id.
+    ``cand`` carries query_id, neighbor_id, pq_code and the
+    ``_lut{i}`` columns."""
+    adc = sum(
+        F.element_at(F.col(f"_lut{i}"), F.col("pq_code")[i] + 1)
+        for i in range(n_books)
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("adc"), F.col("neighbor_id"))
+    return (
+        cand.withColumn("adc", adc)
+        .withColumn("adc_rank", F.row_number().over(w))
+        .filter(F.col("adc_rank") <= keep)
+    )
+
+
 def pq_adc_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1061,31 +1074,11 @@ def pq_adc_topk(
         queries.select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("qvec"),
-            *[
-                F.expr(_lut_sql(vec_col, i, b)).alias(f"_lut{i}")
-                for i, b in enumerate(codebooks)
-            ],
+            *_lut_cols(vec_col, codebooks),
         )
     )
-    adc = sum(
-        F.element_at(F.col(f"_lut{i}"), F.col("pq_code")[i] + 1)
-        for i in range(len(codebooks))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc"), F.col("neighbor_id"))
-    cand = (
-        q.crossJoin(enc)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("adc", adc)
-        .withColumn("adc_rank", F.row_number().over(w))
-        .filter(F.col("adc_rank") <= k * refine)
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        cand.withColumn("cos", cosine(F.col("qvec"), F.col("cvec")))
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    cand = q.crossJoin(enc).filter(F.col("query_id") != F.col("neighbor_id"))
+    return _exact_rerank(_adc_shortlist(cand, len(codebooks), k * refine), k)
 
 
 def ivf_pq_topk(
@@ -1147,33 +1140,14 @@ def ivf_pq_topk(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
         "cell",
-        *[
-            F.expr(_lut_sql(vec_col, i, b)).alias(f"_lut{i}")
-            for i, b in enumerate(codebooks)
-        ],
+        *_lut_cols(vec_col, codebooks),
     )
-    adc = sum(
-        F.element_at(F.col(f"_lut{i}"), F.col("pq_code")[i] + 1)
-        for i in range(len(codebooks))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc"), F.col("neighbor_id"))
     cand = (
         F.broadcast(query_cells)
         .join(enc, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("adc", adc)
-        .withColumn("adc_rank", F.row_number().over(w))
-        .filter(F.col("adc_rank") <= k * refine)
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("cos", cosine(F.col("qvec"), F.col("cvec")))
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _exact_rerank(_adc_shortlist(cand, len(codebooks), k * refine), k)
 
 
 def scatter_matrix_int(

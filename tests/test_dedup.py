@@ -264,6 +264,33 @@ def test_simhash_md5_pairs_complete_within_hamming(spark, sf_dir):
     assert seen == want
 
 
+def test_simhash_md5_pairs_job_count(spark, sf_dir, count_jobs):
+    """Building the pair set runs no job; collecting it runs a fixed
+    number (one per shuffle stage under adaptive execution)."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(120)
+    out = []
+    assert count_jobs(
+        lambda: out.append(dedup.simhash_md5_pairs(docs, "doc_id", "text"))
+    ) == 0
+    assert count_jobs(lambda: out[0].collect()) == 5
+    assert out[0].dtypes == [
+        ("doc_a", "bigint"), ("doc_b", "bigint"), ("hamming", "int")
+    ]
+
+
+def test_band_arguments_refused_with_value_error(docs):
+    """Argument checks are ValueErrors, so they survive ``python -O``."""
+    sigs = docs.select(F.col("doc_id").alias("doc"), F.lit(0).alias("sig"))
+    with pytest.raises(ValueError, match="evenly split the 64-bit"):
+        dedup.hamming_band_pairs(sigs, n_bands=5)
+    with pytest.raises(ValueError, match="evenly split the 16-bit"):
+        dedup.hamming_band_pairs(sigs, n_bands=3, bits=16)
+    with pytest.raises(ValueError, match="max_hamming=4 needs >= 5 bands"):
+        dedup.simhash_md5_pairs(docs, "doc_id", "text", max_hamming=4)
+    with pytest.raises(ValueError, match="must divide num_hashes"):
+        dedup.minhash_md5_pairs(docs, "doc_id", "text", num_hashes=16, bands=5)
+
+
 def test_blocked_fuzzy_pairs_known_distances(spark):
     """Hand fixture with known edit distances: same-block pairs within
     max_dist surface exactly once with correct distance and per-name

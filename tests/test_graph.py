@@ -430,3 +430,33 @@ def test_pagerank_single_iteration_survives_two_actions(spark):
     grid = {r["node"]: r["rank_scaled"] / float(1 << 40) for r in g.collect()}
     for u in got:
         assert abs(grid[u] - got[u]) <= 8 * 2**-40 + 1e-9
+
+
+# Spark jobs for building a ranking and running one action on it, by
+# iteration count: the eager node and edge checkpoints, the node count,
+# one eager checkpoint per round but the last, and the caller's action,
+# which also materializes the lazy final round. Adaptive execution runs
+# each shuffle and broadcast stage as a job of its own, so a round costs
+# nine jobs on this graph.
+PAGERANK_JOBS = {1: 19, 3: 37}
+
+
+@pytest.mark.parametrize("fn", ["pagerank", "pagerank_int_grid"])
+@pytest.mark.parametrize("iterations", sorted(PAGERANK_JOBS))
+def test_pagerank_job_count(spark, count_jobs, fn, iterations):
+    from glue_jobs_for_data_pipeline_spark.operators import graph
+    from glue_jobs_for_data_pipeline_spark.operators.ckpt import (
+        release_checkpoints,
+    )
+
+    e = spark.createDataFrame(
+        [(1, 2), (2, 1), (3, 1), (2, 4)], "src long, dst long"
+    )
+    jobs = count_jobs(
+        lambda: getattr(graph, fn)(e, iterations=iterations)
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    release_checkpoints()
+    assert jobs == PAGERANK_JOBS[iterations]

@@ -128,11 +128,19 @@ def test_rank_deterministic_across_runs_on_skewed_input(spark):
 
 
 def test_boundary_helpers_pure_python():
-    """Driver-side helpers: multi-key mixed-direction sort and strictly
-    increasing evenly spaced boundary selection."""
+    """Driver-side helpers: multi-key mixed-direction sort with NULL
+    keys and strictly increasing evenly spaced boundary selection."""
     rows = [(1, "b"), (2, "a"), (1, "a"), (2, "b"), (1, "a")]
     got = _py_sort(rows, [("x", False), ("y", True)])
     assert got == [(2, "a"), (2, "b"), (1, "a"), (1, "a"), (1, "b")]
+    # NULL first ascending, last descending (Spark's default order)
+    rows = [(None, 2), (1, 1), (None, 1), (0, 3)]
+    assert _py_sort(rows, [("v", True), ("k", True)]) == [
+        (None, 1), (None, 2), (0, 3), (1, 1)
+    ]
+    assert _py_sort(rows, [("v", False), ("k", True)]) == [
+        (1, 1), (0, 3), (None, 1), (None, 2)
+    ]
     sample = [(i // 3,) for i in range(30)]  # 0..9 each thrice
     bounds = _pick_boundaries(sample, 5)
     assert bounds == sorted(set(bounds)) and len(bounds) <= 4
@@ -158,6 +166,30 @@ def test_rank_on_decimal_and_date_keys(spark):
     assert total == 500
     w = Window.orderBy(F.col("rev").desc(), F.col("d").asc(), F.col("k").asc())
     want = df.withColumn("i", F.row_number().over(w).cast("long"))
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+@pytest.mark.parametrize("asc", [True, False])
+def test_row_number_on_null_keys_matches_window(spark, asc):
+    """NULL order keys rank like ROW_NUMBER(): first ascending, last
+    descending. A third of the rows are NULL and the kernel's sample
+    (8 x 32 rows) takes every row, so the boundaries computed here are
+    the kernel's, and some are NULL under either direction."""
+    df = spark.range(240).select(
+        F.col("id").alias("k"),
+        F.when(F.col("id") % 3 == 0, F.lit(None))
+        .otherwise(F.col("id") % 7)
+        .alias("v"),
+    )
+    order = [("v", asc), ("k", True)]
+    sample = _py_sort([tuple(r) for r in df.select("v", "k").collect()], order)
+    assert any(b[0] is None for b in _pick_boundaries(sample, 8))
+    got, total = distributed_row_number(df, order, out_col="i", num_partitions=8)
+    assert total == 240
+    v = F.col("v").asc() if asc else F.col("v").desc()
+    want = df.withColumn(
+        "i", F.row_number().over(Window.orderBy(v, F.col("k"))).cast("long")
+    )
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 

@@ -149,13 +149,7 @@ KEY_PATHS = {
     "kernel": ("rownum", "0"),
     "hash": ("hash", str(1 << 40)),
 }
-# the rank kernel raises on a NULL order key (operators/rank.py _py_sort)
-CASES = [
-    (batch, path)
-    for batch in sorted(BATCHES)
-    for path in KEY_PATHS
-    if (batch, path) != ("null_business_key", "kernel")
-]
+CASES = [(batch, path) for batch in sorted(BATCHES) for path in KEY_PATHS]
 
 
 @pytest.fixture
