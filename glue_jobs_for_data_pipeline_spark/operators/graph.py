@@ -69,6 +69,11 @@ def connected_components(
     loud beats silently-partial clusters; with path halving the bound is
     O(log(longest chain)), so 50 covers any graph whose chains fit in
     2^50 hops.
+
+    The result reads a local checkpoint registered with
+    ``ckpt.release_checkpoints()``: act on it (collect, write, or
+    checkpoint what is kept) before releasing, or the plan reads blocks
+    that are gone.
     """
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -326,8 +331,12 @@ def pagerank(
     No convergence check — a fixed iteration count. Per-node double
     sums depend on partial-aggregation order, so the float ranks are
     checked against Python, not hashed; pagerank_int_grid is the
-    hash-checkable domain. Job shape and checkpoint lifecycle:
-    _power_iterate.
+    hash-checkable domain. Job shape: _power_iterate.
+
+    The result is a lazy checkpoint over blocks registered with
+    ``ckpt.release_checkpoints()``: act on it (collect, write, or
+    checkpoint what is kept) before releasing, or the plan reads blocks
+    that are gone.
     """
     return _power_iterate(
         edges,
@@ -371,8 +380,12 @@ def pagerank_int_grid(
     Each floor drops < 1 unit of 1/scale mass per term, so total mass
     decays by < (|E| + n) / scale per round — immaterial for ranking,
     and reproduced exactly by any engine because integer sums do not
-    depend on aggregation order. Job shape and checkpoint lifecycle:
-    _power_iterate.
+    depend on aggregation order. Job shape: _power_iterate.
+
+    The result is a lazy checkpoint over blocks registered with
+    ``ckpt.release_checkpoints()``: act on it (collect, write, or
+    checkpoint what is kept) before releasing, or the plan reads blocks
+    that are gone.
 
     Returns (node, rank_scaled BIGINT); divide by ``scale`` for the
     float rank. Agreement with pagerank is asserted in

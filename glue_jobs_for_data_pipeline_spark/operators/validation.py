@@ -9,12 +9,16 @@ full scans per table (one COUNT(*) per column at validate_data.py:68-76
 plus one GROUP BY at :78-86). Here the null checks collapse into ONE
 pass of conditional aggregation — at 100 TB that is the difference
 between N+1 table scans and a single scan with a tiny agg, and Catalyst
-still prunes the scan to exactly the checked columns.
+still prunes the scan to exactly the checked columns. The gate
+(validate_or_raise) goes further: it observes the null counts on the
+same scan that feeds the PK group-by, so a table costs one scan and two
+Spark jobs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -26,6 +30,35 @@ class ValidationError(Exception):
     """
 
 
+def _col(name: str) -> Column:
+    """A column by its exact name. Quoted, so a dot is not a struct
+    field and no character of the name is parsed; a backtick doubles,
+    the one escape Spark's attribute parser defines."""
+    return F.col("`{}`".format(name.replace("`", "``")))
+
+
+def _pk_columns(pk: str | list[str]) -> list[str]:
+    return [pk] if isinstance(pk, str) else list(pk)
+
+
+def _null_count(name: str) -> Column:
+    return F.count(F.when(_col(name).isNull(), F.lit(1)))
+
+
+def _null_metrics(df: DataFrame) -> list[Column]:
+    """One NULL count per column of ``df``, aliased by position
+    (``n0``, ``n1``, ...) so no column name is ever an alias."""
+    return [_null_count(c).alias(f"n{i}") for i, c in enumerate(df.columns)]
+
+
+def _check_names(df: DataFrame, pk: str | list[str]) -> list[str]:
+    """The checks in report order: ``not_null_<col>`` in column order,
+    then ``pk_unique_<keys>``."""
+    return [f"not_null_{c}" for c in df.columns] + [
+        "pk_unique_" + "_".join(_pk_columns(pk))
+    ]
+
+
 def null_counts(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """V1: per-column NULL counts in one scan.
 
@@ -34,9 +67,7 @@ def null_counts(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     identical counts with one scan.
     """
     cols = columns or df.columns
-    return df.agg(
-        *[F.count(F.when(F.col(c).isNull(), F.lit(1))).alias(c) for c in cols]
-    )
+    return df.agg(*[_null_count(c).alias(c) for c in cols])
 
 
 def pk_duplicates(df: DataFrame, pk: str | list[str]) -> DataFrame:
@@ -49,9 +80,8 @@ def pk_duplicates(df: DataFrame, pk: str | list[str]) -> DataFrame:
     FIXTURES.md §A1). Hash aggregation with map-side partial agg;
     shuffles only the (already reduced) per-key counts.
     """
-    keys = [pk] if isinstance(pk, str) else list(pk)
     return (
-        df.groupBy(*keys)
+        df.groupBy(*[_col(k) for k in _pk_columns(pk)])
         .agg(F.count(F.lit(1)).alias("dup_count"))
         .filter(F.col("dup_count") > 1)
     )
@@ -62,40 +92,82 @@ def validation_report(df: DataFrame, table: str, pk: str | list[str]) -> DataFra
 
     Columns: table_name, check_name, violation_count — the relational
     rendering of the reference's raise-on-violation gate so the result is
-    oracle-checkable as a query.
+    oracle-checkable as a query. Rows come in :func:`validation_counts`
+    order.
     """
-    nulls = null_counts(df)
-    # melt the single row of per-column null counts into (check, count) rows
-    stack_expr = ", ".join(f"'not_null_{c}', `{c}`" for c in nulls.columns)
-    null_rows = nulls.selectExpr(
-        f"stack({len(nulls.columns)}, {stack_expr}) AS (check_name, violation_count)"
-    )
-    pk_label = pk if isinstance(pk, str) else "_".join(pk)
+    names = _check_names(df, pk)
+    nulls = df.agg(*_null_metrics(df))
+    # explode(array(struct...)) melts the one row of counts into
+    # (check, count) rows without parsing any name as SQL
+    null_rows = nulls.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(name).alias("check_name"),
+                        F.col(f"n{i}").alias("violation_count"),
+                    )
+                    for i, name in enumerate(names[:-1])
+                ]
+            )
+        ).alias("r")
+    ).select("r.*")
     dup_rows = pk_duplicates(df, pk).agg(
-        F.lit(f"pk_unique_{pk_label}").alias("check_name"),
-        F.count(F.lit(1)).cast("long").alias("violation_count"),
+        F.lit(names[-1]).alias("check_name"),
+        F.count(F.lit(1)).alias("violation_count"),
     )
-    return (
-        null_rows.unionByName(dup_rows)
-        .select(
-            F.lit(table).alias("table_name"),
-            "check_name",
-            F.col("violation_count").cast("long").alias("violation_count"),
-        )
+    return null_rows.unionByName(dup_rows).select(
+        F.lit(table).alias("table_name"),
+        "check_name",
+        F.col("violation_count").cast("long").alias("violation_count"),
     )
+
+
+def _observed(obs: Observation, recount: DataFrame) -> dict[str, int]:
+    """The metrics ``obs`` observed, or ``recount``'s one row when the
+    executed plan no longer held the observer. Spark drops an observer
+    that sits under an aggregate it proves empty (an empty relation
+    propagates through it, statically or after the shuffle stage ran);
+    the observation then completes with an empty row, which classic
+    PySpark fails to convert."""
+    try:
+        got = obs.get
+    except Py4JJavaError:
+        got = {}
+    return got or recount.first().asDict()
+
+
+def validation_counts(df: DataFrame, pk: str | list[str]) -> list[tuple[str, int]]:
+    """The violation count of every check, in :func:`validation_report`
+    order, from one scan and one shuffle.
+
+    The per-column NULL counts are observed on the scan and the number
+    of duplicate keys on the output of :func:`pk_duplicates`, and one
+    ``noop`` write drives the plan: the shuffle's map stage and the
+    result stage are the only two Spark jobs. Both observers are plain
+    ``count`` aggregates, so the counts are exact — they equal the
+    report's rows.
+    """
+    null_metrics = _null_metrics(df)
+    dup_metric = F.count(F.lit(1)).alias("n")
+    nulls, dups = Observation(), Observation()
+    pk_duplicates(df.observe(nulls, *null_metrics), pk).observe(
+        dups, dup_metric
+    ).write.format("noop").mode("overwrite").save()
+    null_row = _observed(nulls, df.agg(*null_metrics))
+    dup_row = _observed(dups, pk_duplicates(df, pk).agg(dup_metric))
+    counts = [int(null_row[f"n{i}"]) for i in range(len(df.columns))]
+    return list(zip(_check_names(df, pk), counts + [int(dup_row["n"])]))
 
 
 def validate_or_raise(df: DataFrame, table: str, pk: str | list[str]) -> None:
     """V4: the load-then-validate gate (validate_data.py:148-171).
 
-    Single action: collects the (tiny) report and raises ValidationError
-    listing every failed check, aborting the pipeline like the reference.
+    Runs :func:`validation_counts` (one scan, two Spark jobs) and raises
+    ValidationError listing every failed check, aborting the pipeline
+    like the reference.
     """
-    failed = [
-        (r["check_name"], r["violation_count"])
-        for r in validation_report(df, table, pk).collect()
-        if r["violation_count"] > 0
-    ]
+    failed = [(name, n) for name, n in validation_counts(df, pk) if n > 0]
     if failed:
         detail = ", ".join(f"{name}={n}" for name, n in failed)
         raise ValidationError(f"validation failed for {table}: {detail}")
@@ -281,17 +353,13 @@ def observed_write(
     Returns {"row_count": n, "null_<col>": n...,
     "pk_distinct_approx": n}.
     """
-    from pyspark.sql import Observation
-
     cols = null_check_cols or []
     metrics = [F.count(F.lit(1)).alias("row_count")]
-    metrics += [
-        F.count(F.when(F.col(c).isNull(), F.lit(1))).alias(f"null_{c}")
-        for c in cols
-    ]
+    metrics += [_null_count(c).alias(f"null_{c}") for c in cols]
     if pk is not None:
-        keys = [pk] if isinstance(pk, str) else list(pk)
-        key = F.concat_ws("\x1f", *[F.col(k).cast("string") for k in keys])
+        key = F.concat_ws(
+            "\x1f", *[_col(k).cast("string") for k in _pk_columns(pk)]
+        )
         metrics.append(
             F.approx_count_distinct(key, rsd=0.02).alias("pk_distinct_approx")
         )
@@ -324,8 +392,8 @@ def varchar_enforce(
     The report is ONE conditional-aggregation pass over exactly the
     declared columns (the V1 single-scan rule; Catalyst prunes the
     scan to ``limits.keys()``), pivoted to per-column rows with
-    ``stack`` — no per-column scans, no shuffle beyond the final
-    1-row agg. Lengths are in characters (``length``), matching
+    ``explode(array(struct))`` — no per-column scans, no shuffle beyond
+    the final 1-row agg. Lengths are in characters (``length``), matching
     Redshift's VARCHAR semantics for the ASCII fixtures; a multibyte
     deployment would swap in ``octet_length`` to match byte-bounded
     DDL. Report schema: (col_name string, declared_len int,
@@ -338,17 +406,11 @@ def varchar_enforce(
         raise ValueError(f"varchar_enforce: unknown columns {missing}")
 
     # aliases are indexed (__over_0, not __over_<name>) and every
-    # column reference is backtick-quoted with doubled inner backticks
-    # — the one escape Spark's attribute parser defines — so a column
-    # name containing quotes or backticks can never break a parsed
-    # string (ADVICE r15: the previous stack()/selectExpr build broke
-    # on such names even though they passed the membership check)
-    def _ref(c: str):
-        return df["`{}`".format(c.replace("`", "``"))]
-
+    # column reference is quoted (_col), so a column name containing
+    # quotes or backticks can never break a parsed string
     aggs = []
     for i, (c, n) in enumerate(limits.items()):
-        ln = F.length(_ref(c))
+        ln = F.length(_col(c))
         # counts coalesce to 0 on an empty input (SUM over zero rows is
         # NULL in SQL) so consumers can gate on `n_overlength == 0`
         # without a null check; max_observed stays NULL when there is
@@ -382,5 +444,5 @@ def varchar_enforce(
     report = one.select(rows.alias("r")).select("r.*")
     conformed = df
     for c, n in limits.items():
-        conformed = conformed.withColumn(c, F.substring(_ref(c), 1, n))
+        conformed = conformed.withColumn(c, F.substring(_col(c), 1, n))
     return conformed, report

@@ -356,3 +356,170 @@ def test_varchar_enforce_hostile_column_names(spark):
     assert r["chars_truncated"] == 3
     vals = sorted(row[0] for row in conformed.collect())
     assert vals == ["abc", "xy"]
+
+
+# --- column quoting ---------------------------------------------------------
+
+# a dot is a struct-field separator and a quote ends a SQL string when a
+# name is parsed; both are legal column names in a parquet source
+HOSTILE = ["a.b", "it's", "x`y"]
+
+
+@pytest.fixture(scope="module")
+def hostile(spark):
+    cols = ", ".join(f"`{c.replace('`', '``')}` int" for c in HOSTILE)
+    df = spark.createDataFrame([(1, None, 5), (1, 2, None), (2, None, 7)], cols)
+    assert df.columns == HOSTILE
+    return df
+
+
+def test_null_counts_quote_column_names(hostile):
+    row = null_counts(hostile).collect()[0]
+    assert [row[c] for c in HOSTILE] == [0, 2, 1]
+
+
+def test_pk_duplicates_quote_key_names(hostile):
+    dups = pk_duplicates(hostile, "a.b").collect()
+    assert [(r["a.b"], r["dup_count"]) for r in dups] == [(1, 2)]
+
+
+def test_validation_report_quotes_column_names(hostile):
+    rows = validation_report(hostile, "t", ["a.b", "it's"]).collect()
+    assert [(r["check_name"], r["violation_count"]) for r in rows] == [
+        ("not_null_a.b", 0),
+        ("not_null_it's", 2),
+        ("not_null_x`y", 1),
+        ("pk_unique_a.b_it's", 0),
+    ]
+
+
+def test_validate_or_raise_quotes_column_names(hostile):
+    with pytest.raises(ValidationError) as err:
+        validate_or_raise(hostile, "t", "a.b")
+    assert str(err.value) == (
+        "validation failed for t: not_null_it's=2, not_null_x`y=1, "
+        "pk_unique_a.b=1"
+    )
+
+
+# --- the gate and the report agree -----------------------------------------
+
+from glue_jobs_for_data_pipeline_spark.schemas import TESTDATA_TABLES  # noqa: E402
+
+
+def _report_counts(df, pk) -> list[tuple[str, int]]:
+    return [
+        (r["check_name"], r["violation_count"])
+        for r in validation_report(df, "t", pk).collect()
+    ]
+
+
+def _gate_counts(df, pk) -> list[tuple[str, int]]:
+    # imported here so the tests above still run against a tree
+    # without it
+    from glue_jobs_for_data_pipeline_spark.operators.validation import (
+        validation_counts,
+    )
+
+    return validation_counts(df, pk)
+
+
+def _fixture_table(spark, sf_dir, name):
+    from glue_jobs_for_data_pipeline_spark.sources.readers import (
+        load_events,
+        load_table,
+    )
+
+    if name == "events":
+        return load_events(spark, sf_dir)
+    return load_table(spark, sf_dir, name)
+
+
+@pytest.mark.parametrize("name", TESTDATA_TABLES)
+def test_gate_counts_match_report_on_fixture_tables(spark, sf_dir, name):
+    df = _fixture_table(spark, sf_dir, name)
+    pk = df.columns[0]
+    assert _gate_counts(df, pk) == _report_counts(df, pk)
+
+
+EDGE_FRAMES = {
+    # (rows, schema, pk)
+    "all_null_column": (
+        [(1, None), (2, None), (3, None)], "id int, v string", "id",
+    ),
+    "empty": ([], "id int, v string", "id"),
+    "composite_key_null_part": (
+        [(1, None, "a"), (1, None, "b"), (1, 2, "c"), (None, 2, "d")],
+        "k1 int, k2 int, v string",
+        ["k1", "k2"],
+    ),
+    "duplicate_rows": (
+        [(1, "a"), (1, "a"), (2, "b"), (2, "b"), (2, "b"), (3, "c")],
+        "id int, v string",
+        "id",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(EDGE_FRAMES))
+def test_gate_counts_match_report_on_edge_frames(spark, case):
+    import threading
+
+    rows, schema, pk = EDGE_FRAMES[case]
+    df = spark.createDataFrame(rows, schema)
+    got: list = []
+
+    def gate():
+        try:
+            got.append(_gate_counts(df, pk))
+        except Exception as e:  # noqa: BLE001 - shown by the assert below
+            got.append(e)
+
+    # Observation.get blocks until the observed action reports its
+    # metrics; a plan that drops an observer must not leave it waiting
+    t = threading.Thread(target=gate, daemon=True)
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "validation_counts did not return"
+    assert got[0] == _report_counts(df, pk)
+    if case == "empty":
+        assert got[0] == [("not_null_id", 0), ("not_null_v", 0),
+                          ("pk_unique_id", 0)]
+
+
+def test_empty_parquet_source_reports_zeros(spark, tmp_path):
+    from glue_jobs_for_data_pipeline_spark.sources.readers import read_parquet
+
+    path = str(tmp_path / "empty")
+    spark.createDataFrame([], "id int, v string").write.parquet(path)
+    df = read_parquet(spark, path)
+    assert _gate_counts(df, "id") == [
+        ("not_null_id", 0), ("not_null_v", 0), ("pk_unique_id", 0),
+    ]
+    validate_or_raise(df, "t", "id")
+
+
+# --- job shape --------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "table,pk,raises",
+    [("supplier", "s_suppkey", False), ("lineitem", "l_orderkey", True)],
+)
+def test_validate_or_raise_job_shape(spark, sf_dir, count_jobs, table, pk, raises):
+    """One scan and one shuffle: the map stage that observes the null
+    counts and the result stage that observes the duplicate keys, two
+    jobs whether the gate passes or raises."""
+    from glue_jobs_for_data_pipeline_spark.sources.readers import load_table
+
+    df = load_table(spark, sf_dir, table)
+    outcome: list = []
+
+    def gate():
+        try:
+            validate_or_raise(df, table, pk)
+        except ValidationError as e:
+            outcome.append(str(e))
+
+    assert count_jobs(gate) <= 2
+    assert bool(outcome) == raises
