@@ -17,9 +17,10 @@ merge); exact DISTINCT and percentiles are NOT algebraic and need their
 own structures (the catalog's count-distinct / percentile queries are
 full-recompute by design).
 
-Storage: each refresh commits through sources/txn.py's atomic pointer
-swap, so readers always see a complete rollup — never a half-merged
-one — and a failed refresh is a free rollback.
+Storage: each refresh is one catalog transaction (sources/txn.py)
+over the directory the caller passes as the catalog root, so readers
+always see a complete state — never a half-merged one — and a failed
+refresh is a free rollback.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources import txn
+from ..sources.txn import Catalog
 
 
 def cdc_apply(
@@ -81,7 +82,8 @@ def dedup_ingest(
 
     Per batch: collapse within the batch (min id per fingerprint — a
     batch can self-duplicate), LEFT ANTI against the stored fingerprint
-    set, append the admitted fingerprints through the atomic txn commit.
+    set, append the admitted fingerprints in one catalog commit (table
+    ``fp`` under the ``store_dir`` catalog root).
     Cost is O(batch + matching store partitions): the anti-join shuffles
     16-byte fingerprints, never documents, and the store holds one row
     per distinct fingerprint ever admitted — the same
@@ -99,17 +101,18 @@ def dedup_ingest(
         .groupBy("fp")
         .agg(F.min(id_col).alias(id_col))
     )
-    if txn.current_version(store_dir) is None:
-        admitted = collapsed
-        new_store = collapsed.select("fp")
-    else:
-        stored = txn.read_committed(spark, store_dir)
-        admitted = collapsed.join(stored, "fp", "left_anti")
-        new_store = stored.unionByName(admitted.select("fp"))
-    txn.txn_overwrite(new_store, store_dir)
+    with Catalog(store_dir).transaction() as t:
+        if t.has_committed("fp"):
+            stored = t.read_committed(spark, "fp")
+            admitted = collapsed.join(stored, "fp", "left_anti")
+            new_store = stored.unionByName(admitted.select("fp"))
+        else:
+            admitted = collapsed
+            new_store = collapsed.select("fp")
+        t.overwrite(new_store, "fp")
     # NOTE: the returned frame lazily reads the PRE-commit store version;
-    # txn keeps old versions on disk so this stays valid until vacuum()
-    # — collect/write it before vacuuming the store.
+    # it stays on disk while a manifest references it, so this stays
+    # valid until expire_snapshots() — collect/write it before expiring.
     return admitted.select(id_col, "fp")
 
 
@@ -153,18 +156,21 @@ def refresh_rollup(
     keys: list[str],
     sum_cols: dict[str, str],
 ) -> DataFrame:
-    """Apply one batch to the stored rollup and commit atomically.
-    First call bootstraps the rollup from the batch alone. Returns the
-    newly committed state."""
+    """Apply one batch to the stored rollup (table ``rollup`` under the
+    ``rollup_dir`` catalog root) and commit atomically. First call
+    bootstraps the rollup from the batch alone. Returns the newly
+    committed state."""
     delta = partial_aggs(batch, keys, sum_cols)
     measures = list(sum_cols.values())
-    if txn.current_version(rollup_dir) is None:
-        merged = delta
-    else:
-        stored = txn.read_committed(spark, rollup_dir)
-        merged = merge_aggs(stored, delta, keys, measures)
-    txn.txn_overwrite(merged, rollup_dir)
-    return txn.read_committed(spark, rollup_dir)
+    cat = Catalog(rollup_dir)
+    with cat.transaction() as t:
+        merged = (
+            merge_aggs(t.read_committed(spark, "rollup"), delta, keys, measures)
+            if t.has_committed("rollup")
+            else delta
+        )
+        t.overwrite(merged, "rollup")
+    return cat.read(spark, "rollup")
 
 
 def refresh_join(
@@ -185,37 +191,32 @@ def refresh_join(
     probe side — never O(A ⋈ B) over history; J_old is appended to,
     not recomputed. At scale, store A and B bucketed on the key so the
     three delta joins are shuffle-free on the stored side, and swap
-    the J_old union for a partition-append (txn.stage_version of only
-    ΔJ under a partition scheme) once J outgrows rewrite-per-refresh —
-    the delta ALGEBRA is the part that carries to 100 TB.
+    the J_old union for an append of only ΔJ (``CatalogTransaction.append``)
+    once J outgrows rewrite-per-refresh — the delta ALGEBRA is the part
+    that carries to 100 TB.
 
-    All three tables (A, B, J) commit in ONE multi-table transaction:
-    a reader never observes A containing a batch whose join
+    All three tables (A, B, J, named ``a``/``b``/``j`` under the
+    ``store_dir`` catalog root) commit in ONE catalog transaction: a
+    reader never observes A containing a batch whose join
     contributions are missing from J. First call bootstraps the store.
     Returns the newly committed J.
     """
-    a_dir, b_dir, j_dir = (
-        f"{store_dir}/a",
-        f"{store_dir}/b",
-        f"{store_dir}/j",
-    )
-    if txn.current_version(j_dir) is None:
-        new_a, new_b = a_batch, b_batch
-        new_j = a_batch.join(b_batch, key)
-    else:
-        a_old = txn.read_committed(spark, a_dir)
-        b_old = txn.read_committed(spark, b_dir)
-        j_old = txn.read_committed(spark, j_dir)
-        delta_j = (
-            a_batch.join(b_old, key)
-            .unionByName(a_old.join(b_batch, key))
-            .unionByName(a_batch.join(b_batch, key))
-        )
-        new_a = a_old.unionByName(a_batch)
-        new_b = b_old.unionByName(b_batch)
-        new_j = j_old.unionByName(delta_j)
-    with txn.Transaction() as t:
-        t.overwrite(new_a, a_dir)
-        t.overwrite(new_b, b_dir)
-        t.overwrite(new_j, j_dir)
-    return txn.read_committed(spark, j_dir)
+    cat = Catalog(store_dir)
+    with cat.transaction() as t:
+        if t.has_committed("j"):
+            a_old, b_old, j_old = (t.read_committed(spark, n) for n in "abj")
+            delta_j = (
+                a_batch.join(b_old, key)
+                .unionByName(a_old.join(b_batch, key))
+                .unionByName(a_batch.join(b_batch, key))
+            )
+            new_a = a_old.unionByName(a_batch)
+            new_b = b_old.unionByName(b_batch)
+            new_j = j_old.unionByName(delta_j)
+        else:
+            new_a, new_b = a_batch, b_batch
+            new_j = a_batch.join(b_batch, key)
+        t.overwrite(new_a, "a")
+        t.overwrite(new_b, "b")
+        t.overwrite(new_j, "j")
+    return cat.read(spark, "j")

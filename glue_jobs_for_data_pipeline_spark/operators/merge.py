@@ -15,8 +15,8 @@ arbitrary clause conditions and a delete branch, so a user porting a
 Shape: ONE full outer join on the key (broadcast when the source is a
 small changeset — the common case — else shuffle on the key), then a
 row-level CASE over the three clause predicates. No second pass, no
-driver loop; the result is a new snapshot to publish via
-sources/txn.py's atomic pointer swap (same write-last discipline as
+driver loop; the result is a new snapshot to publish through a
+sources/txn.py catalog transaction (same write-last discipline as
 SCD-2). Rows touched once each => MERGE's "each target row matches at
 most one action" rule holds structurally; the source side must be
 key-unique (enforced: duplicate source keys make MERGE ill-defined, so

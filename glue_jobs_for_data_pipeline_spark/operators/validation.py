@@ -12,7 +12,7 @@ between N+1 table scans and a single scan with a tiny agg, and Catalyst
 still prunes the scan to exactly the checked columns. The gate
 (validate_or_raise) goes further: it observes the null counts on the
 same scan that feeds the PK group-by, so a table costs one scan and two
-Spark jobs.
+Spark jobs; the report (validation_report) renders those same counts.
 """
 
 from __future__ import annotations
@@ -92,34 +92,22 @@ def validation_report(df: DataFrame, table: str, pk: str | list[str]) -> DataFra
 
     Columns: table_name, check_name, violation_count — the relational
     rendering of the reference's raise-on-violation gate so the result is
-    oracle-checkable as a query. Rows come in :func:`validation_counts`
-    order.
+    oracle-checkable as a query. The counts are :func:`validation_counts`
+    (one scan, two Spark jobs, run when this is called), in its order,
+    returned as a local ``VALUES`` relation whose collect runs no job.
+    Every value is a bound parameter, so no name is parsed as SQL.
     """
-    names = _check_names(df, pk)
-    nulls = df.agg(*_null_metrics(df))
-    # explode(array(struct...)) melts the one row of counts into
-    # (check, count) rows without parsing any name as SQL
-    null_rows = nulls.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(name).alias("check_name"),
-                        F.col(f"n{i}").alias("violation_count"),
-                    )
-                    for i, name in enumerate(names[:-1])
-                ]
-            )
-        ).alias("r")
-    ).select("r.*")
-    dup_rows = pk_duplicates(df, pk).agg(
-        F.lit(names[-1]).alias("check_name"),
-        F.count(F.lit(1)).alias("violation_count"),
+    counts = validation_counts(df, pk)
+    args: dict[str, object] = {"t": table}
+    for i, (name, n) in enumerate(counts):
+        args[f"c{i}"], args[f"n{i}"] = name, n
+    rows = ", ".join(
+        f"(:t, :c{i}, CAST(:n{i} AS BIGINT))" for i in range(len(counts))
     )
-    return null_rows.unionByName(dup_rows).select(
-        F.lit(table).alias("table_name"),
-        "check_name",
-        F.col("violation_count").cast("long").alias("violation_count"),
+    return df.sparkSession.sql(
+        f"SELECT * FROM VALUES {rows} "
+        "AS r(table_name, check_name, violation_count)",
+        args=args,
     )
 
 
@@ -138,15 +126,15 @@ def _observed(obs: Observation, recount: DataFrame) -> dict[str, int]:
 
 
 def validation_counts(df: DataFrame, pk: str | list[str]) -> list[tuple[str, int]]:
-    """The violation count of every check, in :func:`validation_report`
-    order, from one scan and one shuffle.
+    """The violation count of every check — ``not_null_<col>`` in column
+    order, then ``pk_unique_<keys>`` — from one scan and one shuffle.
 
     The per-column NULL counts are observed on the scan and the number
     of duplicate keys on the output of :func:`pk_duplicates`, and one
     ``noop`` write drives the plan: the shuffle's map stage and the
     result stage are the only two Spark jobs. Both observers are plain
-    ``count`` aggregates, so the counts are exact — they equal the
-    report's rows.
+    ``count`` aggregates, so the counts are exact — they equal
+    :func:`null_counts` and the row count of :func:`pk_duplicates`.
     """
     null_metrics = _null_metrics(df)
     dup_metric = F.count(F.lit(1)).alias("n")
@@ -346,9 +334,9 @@ def observed_write(
       the key is badly broken NOW, during the load). The exact V2
       gate (pk_duplicates) still runs where exactness matters;
     - the dict returns AFTER the write action; a caller that wants
-      validate-THEN-publish semantics writes to a staged version dir
-      and publishes the pointer only if the metrics pass (compose with
-      sources/txn.py, same bracket m5 uses).
+      validate-THEN-publish semantics writes to a scratch path and
+      commits the table through a catalog transaction only if the
+      metrics pass (sources/txn.py, the bracket m5 uses).
 
     Returns {"row_count": n, "null_<col>": n...,
     "pk_distinct_approx": n}.

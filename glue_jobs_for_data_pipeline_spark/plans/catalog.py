@@ -39,7 +39,7 @@ from ..sources.readers import (
     scratch_dir,
     write_overwrite,
 )
-from ..sources.txn import read_committed, txn_overwrite
+from ..sources.txn import Catalog
 from . import tpch_fixtures as fx
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -837,13 +837,14 @@ def m5_transactional_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROLLBACK dynamic_upsert.py:159-161).
 
     Spark equivalent: every transform is lazy; the full new table version
-    lands under a staging directory and an atomic pointer swap publishes
-    it (sources/txn.py) — a crash anywhere before the swap leaves the
-    previously committed version untouched, and readers resolve the
-    pointer so they never see partial data. Same rows as m2 by
-    construction; the committed version is scanned back.
+    lands in the catalog's staging area and one manifest commit (a single
+    ``_HEAD`` swap, sources/txn.py) publishes it — a crash anywhere before
+    the swap leaves the previously committed state untouched, and readers
+    resolve ``_HEAD`` so they never see partial data. Same rows as m2 by
+    construction; the committed table is scanned back.
     """
     fact = m2_j2_fact_population(spark, sf_dir)
-    path = scratch_dir("spark_graft_m5_fact_") + "/fact_orders"
-    txn_overwrite(fact, path)
-    return read_committed(spark, path)
+    cat = Catalog(scratch_dir("spark_graft_m5_fact_"))
+    with cat.transaction() as t:
+        t.overwrite(fact, "fact_orders")
+    return cat.read(spark, "fact_orders")

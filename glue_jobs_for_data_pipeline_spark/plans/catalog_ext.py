@@ -3492,13 +3492,14 @@ def x_stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming SCD-2 ingestion end-to-end: the m1b delta fixture's two
     source batches arrive as files on a streaming source; each
     trigger(availableNow) drain applies one micro-batch through the
-    scd2_upsert kernel and commits a txn version (effectively-once via
-    the in-version batch id). The final committed dim state equals the
+    scd2_upsert kernel and commits it as one catalog transaction
+    (effectively-once via the batch id staged inside the dim's
+    version). The final committed dim state equals the
     batch delta upsert over the same data — the oracle is m1b's SQL,
     verbatim. Per-invocation scratch via _scratch_dir: concurrent runs
     against the same sf_dir cannot race, and the copy is reclaimed at
     interpreter exit."""
-    from ..sources import txn
+    from ..sources.txn import Catalog
     from ..streaming.events import scd2_stream_apply
     from . import tpch_fixtures as fx
 
@@ -3532,7 +3533,7 @@ def x_stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain(fx.INITIAL_LOAD_DATE)
     batch.coalesce(1).write.mode("append").parquet(src_dir)
     drain(fx.SECOND_BATCH_DATE)
-    return txn.read_committed(spark, dim_dir)
+    return Catalog(dim_dir).read(spark, "dim")
 
 
 _X_STREAM_XO_SQL = """
@@ -5154,23 +5155,26 @@ FROM orders GROUP BY o_orderstatus
 
 @_q("x_storage_time_travel", _X_TIME_TRAVEL_SQL)
 def x_storage_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot time travel over the versioned-commit store: two
-    overwrites leave two immutable versions; read_version(1) still sees
-    the first snapshot after version 2 commits (the Delta/Iceberg
-    `VERSION AS OF` semantics on the pointer-swap core). The oracle
+    """Snapshot time travel over the catalog: two commits leave two
+    immutable manifests; ``read_asof`` the first still sees the first
+    snapshot after the second commits (the Delta/Iceberg
+    `VERSION AS OF` semantics on the manifest core). The oracle
     recomputes both snapshots from the source."""
-    from ..sources import txn
+    from ..sources.txn import Catalog
 
     # per-invocation scratch, atexit-reclaimed (see _scratch_dir)
-    d = _scratch_dir("spark_graft_ttravel_")
+    cat = Catalog(_scratch_dir("spark_graft_ttravel_"))
     o = load_table(spark, sf_dir, "orders")
     agg = lambda df: df.groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n"))  # noqa: E731
-    txn.txn_overwrite(agg(o.filter(F.col("o_orderkey") % 2 == 0)), d)
-    txn.txn_overwrite(agg(o), d)
-    v1 = txn.read_version(spark, d, 1).select(
+    with cat.transaction() as t:
+        t.overwrite(agg(o.filter(F.col("o_orderkey") % 2 == 0)), "t")
+    first = t.committed_manifest
+    with cat.transaction() as t:
+        t.overwrite(agg(o), "t")
+    v1 = cat.read_asof(spark, "t", first).select(
         F.lit(1).alias("version"), "o_orderstatus", "n"
     )
-    v2 = txn.read_committed(spark, d).select(
+    v2 = cat.read(spark, "t").select(
         F.lit(2).alias("version"), "o_orderstatus", "n"
     )
     return v1.unionByName(v2)

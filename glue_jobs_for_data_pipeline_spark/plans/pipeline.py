@@ -15,7 +15,8 @@ Here the control plane is one ``PipelineContext`` dict-like dataclass and
       -> populate fact (M2)
       -> single terminal write per table (M5 write-last atomicity)
 
-Scale posture: every transform stays lazy until its one terminal write;
+Scale posture: apart from the validation counts each source is checked
+with up front, every transform stays lazy until its one terminal write;
 the fact output partitions by OrderDateKey so downstream scans prune by
 date; dims are written unpartitioned (they are small and broadcast).
 """

@@ -353,7 +353,8 @@ def scd2_stream_apply(
     order_col: str | None = None,
 ) -> None:
     """Streaming SCD-2 ingestion: apply each micro-batch of source rows
-    to a versioned dimension table via foreachBatch.
+    to a versioned dimension table via foreachBatch. ``dim_dir`` is a
+    catalog root (sources/txn.py); the dimension is its table ``dim``.
 
     Per batch: collapse the batch to ONE row per business key (a drained
     backlog can deliver several versions of a key in one availableNow
@@ -362,15 +363,16 @@ def scd2_stream_apply(
     attribute tuple wins, deterministic either way), read the committed
     dim snapshot, run the same scd2_upsert kernel the batch pipeline
     uses (delta mode by default — only changed rows re-version), and
-    publish atomically through the txn pointer swap.
+    commit the new dim version as one catalog transaction.
 
     Effectively-once: the batch id is recorded INSIDE the staged version
-    (``_BATCH`` file) before the pointer swap, so both commit together.
-    foreachBatch alone is at-least-once — a crash between the pointer
-    swap and the streaming checkpoint commit replays the batch — but the
-    replay sees its own batch id already committed and becomes a no-op,
-    so dim history never double-applies. Dim versions accumulate one
-    per non-empty batch; vacuum() bounds history.
+    (``_BATCH`` file) before the transaction's ``_HEAD`` swap, so both
+    commit together. foreachBatch alone is at-least-once — a crash
+    between the commit and the streaming checkpoint commit replays the
+    batch — but the replay sees its own batch id already committed and
+    becomes a no-op, so dim history never double-applies. Each
+    non-empty batch adds one manifest; ``Catalog.expire_snapshots``
+    bounds history.
 
     Runs with trigger(availableNow) and BLOCKS until the source drains
     (the semantics a scheduled incremental ingest wants). For a
@@ -379,20 +381,20 @@ def scd2_stream_apply(
     import os
 
     from ..operators.scd2 import scd2_upsert
-    from ..sources.txn import (
-        _version_dir,
-        current_version,
-        publish_version,
-        read_committed,
-        stage_version,
-    )
+    from ..sources.txn import Catalog, _version_dir
+
+    cat = Catalog(dim_dir)
+
+    def _batch_file(version: int) -> str:
+        vdir = _version_dir(cat.table_dir("dim"), version)
+        return os.path.join(vdir, "_BATCH")
 
     def _committed_batch_id() -> int | None:
-        v = current_version(dim_dir)
+        v = cat.manifest().get("dim")
         if v is None:
             return None
         try:
-            with open(os.path.join(_version_dir(dim_dir, v), "_BATCH")) as f:
+            with open(_batch_file(v)) as f:
                 return int(f.read().strip())
         except (FileNotFoundError, ValueError):
             return None
@@ -414,24 +416,22 @@ def scd2_stream_apply(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        dim = (
-            read_committed(spark, dim_dir)
-            if current_version(dim_dir) is not None
-            else None
-        )
-        new_dim = scd2_upsert(
-            dim,
-            latest,
-            business_key,
-            list(columns),
-            surrogate_key,
-            run_date=run_date,
-            mode=mode,
-        )
-        v = stage_version(new_dim, dim_dir)
-        with open(os.path.join(_version_dir(dim_dir, v), "_BATCH"), "w") as f:
-            f.write(str(batch_id))
-        publish_version(dim_dir, v)
+        with cat.transaction() as t:
+            dim = (
+                t.read_committed(spark, "dim") if t.has_committed("dim") else None
+            )
+            new_dim = scd2_upsert(
+                dim,
+                latest,
+                business_key,
+                list(columns),
+                surrogate_key,
+                run_date=run_date,
+                mode=mode,
+            )
+            v = t.overwrite(new_dim, "dim")
+            with open(_batch_file(v), "w") as f:
+                f.write(str(batch_id))
 
     q = (
         source_stream.writeStream.foreachBatch(apply_batch)

@@ -3,8 +3,8 @@
 ``foreachBatch`` is at-least-once: a crash between the sink's side
 effect and the streaming checkpoint commit replays the micro-batch on
 restart. ``scd2_stream_apply`` (events.py) closes that for ONE
-pointer-swap table; this module closes it for the CATALOG — the
-streaming analog of the reference's batch transaction bracket
+rewritten dim table; this module closes it for appends to any catalog
+table — the streaming analog of the reference's batch transaction bracket
 (dynamic_upsert.py:108,151 BEGIN/COMMIT): each micro-batch lands as ONE
 atomic manifest commit that covers BOTH the appended data and a
 recorded batch id, so a replayed batch observes its own id already

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from glue_jobs_for_data_pipeline_spark.operators import incremental
-from glue_jobs_for_data_pipeline_spark.sources import txn
+from glue_jobs_for_data_pipeline_spark.sources.txn import Catalog
 from glue_jobs_for_data_pipeline_spark.sources.readers import load_table
 
 
@@ -31,13 +31,15 @@ def test_incremental_equals_full_recompute_any_batch_order(spark, sf_dir, tmp_pa
     for b in reversed(batches):
         incremental.refresh_rollup(spark, d2, b, keys, sums)
 
+    c1, c2 = Catalog(d1), Catalog(d2)
     assert (
-        _final(txn.read_committed(spark, d1))
-        == _final(txn.read_committed(spark, d2))
+        _final(c1.read(spark, "rollup"))
+        == _final(c2.read(spark, "rollup"))
         == _final(full)
     )
-    # one committed version per refresh: every merge was an atomic commit
-    assert txn.current_version(d1) == 3
+    # one commit per refresh: every merge was an atomic commit
+    assert [e["manifest"] for e in c1.log()] == [1, 2, 3]
+    assert c1.manifest() == {"rollup": 3}
 
 
 def test_merge_passes_through_one_sided_keys(spark):
@@ -163,3 +165,51 @@ def test_refresh_join_equals_full_recompute(spark, sf_dir, tmp_path):
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+
+
+def test_refresh_join_crash_at_commit_point_keeps_previous_refresh(
+    spark, tmp_path, monkeypatch
+):
+    """A crash at refresh_join's commit point leaves readers on A, B and
+    J all from the previous refresh, never a mix; a retry converges."""
+    import os
+
+    import pytest
+
+    from glue_jobs_for_data_pipeline_spark.sources import txn as txn_mod
+
+    store = str(tmp_path / "ivm")
+
+    def batch(rows, side):
+        return spark.createDataFrame(rows, f"k long, {side} string")
+
+    def committed():
+        return {
+            t: sorted(map(tuple, Catalog(store).read(spark, t).collect()))
+            for t in "abj"
+        }
+
+    incremental.refresh_join(
+        spark, store, batch([(1, "a1"), (2, "a2")], "av"),
+        batch([(1, "b1")], "bv"), "k",
+    )
+    before = committed()
+    a2, b2 = batch([(3, "a3")], "av"), batch([(2, "b2"), (3, "b3")], "bv")
+
+    real_replace = os.replace
+
+    def crash_at_commit_point(src, dst):
+        if os.path.basename(dst) == txn_mod._HEAD:
+            raise OSError("simulated crash at the commit point")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(txn_mod.os, "replace", crash_at_commit_point)
+    with pytest.raises(OSError, match="simulated crash"):
+        incremental.refresh_join(spark, store, a2, b2, "k")
+    monkeypatch.undo()
+    assert committed() == before
+
+    incremental.refresh_join(spark, store, a2, b2, "k")
+    assert committed()["j"] == [
+        (1, "a1", "b1"), (2, "a2", "b2"), (3, "a3", "b3")
+    ]

@@ -165,13 +165,13 @@ def test_scd2_stream_apply_two_batches(spark, tmp_path):
     """Streaming SCD-2: batch 1 initial-loads the dim; batch 2 (one
     changed row, one new row) expires and re-versions only the changed
     key (delta mode) and appends the new one — matching the batch
-    kernel's semantics, with one committed txn version per batch."""
+    kernel's semantics, with one catalog commit per batch."""
     import datetime as dt
 
     from glue_jobs_for_data_pipeline_spark.schemas import (
         CURRENT_ROW_SENTINEL,
     )
-    from glue_jobs_for_data_pipeline_spark.sources import txn
+    from glue_jobs_for_data_pipeline_spark.sources.txn import Catalog
     from glue_jobs_for_data_pipeline_spark.streaming.events import (
         scd2_stream_apply,
     )
@@ -193,8 +193,9 @@ def test_scd2_stream_apply_two_batches(spark, tmp_path):
         stream(), dim_dir, "CustomerID", ("CustomerID", "Name", "City"),
         "CustomerKey", ckpt, run_date=dt.date(2024, 1, 1),
     )
-    v1 = txn.current_version(dim_dir)
-    d1 = txn.read_committed(spark, dim_dir).collect()
+    cat = Catalog(dim_dir)
+    m1 = cat.head()
+    d1 = cat.read(spark, "dim").collect()
     assert len(d1) == 3 and all(r["EndDate"] == sentinel for r in d1)
 
     # batch 2: bob moves, dan arrives (ann/cat untouched)
@@ -205,8 +206,8 @@ def test_scd2_stream_apply_two_batches(spark, tmp_path):
         stream(), dim_dir, "CustomerID", ("CustomerID", "Name", "City"),
         "CustomerKey", ckpt, run_date=dt.date(2024, 2, 1),
     )
-    assert txn.current_version(dim_dir) == v1 + 1
-    d2 = txn.read_committed(spark, dim_dir).collect()
+    assert cat.head() == m1 + 1
+    d2 = cat.read(spark, "dim").collect()
     by_key = {}
     for r in d2:
         by_key.setdefault(r["CustomerID"], []).append(r)
@@ -219,12 +220,12 @@ def test_scd2_stream_apply_two_batches(spark, tmp_path):
     assert len(by_key[4]) == 1 and by_key[4][0]["EndDate"] == sentinel
     assert len(by_key[1]) == 1 and len(by_key[3]) == 1
 
-    # idempotent re-run: checkpoint drained, no new version
+    # idempotent re-run: checkpoint drained, no new commit
     scd2_stream_apply(
         stream(), dim_dir, "CustomerID", ("CustomerID", "Name", "City"),
         "CustomerKey", ckpt, run_date=dt.date(2024, 3, 1),
     )
-    assert txn.current_version(dim_dir) == v1 + 1
+    assert cat.head() == m1 + 1
 
 
 def test_scd2_stream_multi_version_batch_collapses(spark, tmp_path):
@@ -234,7 +235,7 @@ def test_scd2_stream_multi_version_batch_collapses(spark, tmp_path):
     import datetime as dt
 
     from glue_jobs_for_data_pipeline_spark.schemas import CURRENT_ROW_SENTINEL
-    from glue_jobs_for_data_pipeline_spark.sources import txn
+    from glue_jobs_for_data_pipeline_spark.sources.txn import Catalog
     from glue_jobs_for_data_pipeline_spark.streaming.events import (
         scd2_stream_apply,
     )
@@ -257,18 +258,18 @@ def test_scd2_stream_multi_version_batch_collapses(spark, tmp_path):
         str(tmp_path / "ckpt"), run_date=dt.date(2024, 1, 1),
         order_col="seq",
     )
-    rows = txn.read_committed(spark, dim_dir).collect()
+    rows = Catalog(dim_dir).read(spark, "dim").collect()
     current = [r for r in rows if r["EndDate"] == sentinel]
     assert len(current) == 1 and current[0]["City"] == "kyiv"
 
 
 def test_scd2_stream_replay_is_noop(spark, tmp_path):
-    """A replayed batch (crash between pointer swap and checkpoint
-    commit) must not double-apply: the committed _BATCH id makes the
-    replay a no-op."""
+    """A replayed batch (crash between the catalog commit and the
+    checkpoint commit) must not double-apply: the committed _BATCH id
+    makes the replay a no-op."""
     import datetime as dt
 
-    from glue_jobs_for_data_pipeline_spark.sources import txn
+    from glue_jobs_for_data_pipeline_spark.sources.txn import Catalog
     from glue_jobs_for_data_pipeline_spark.streaming.events import (
         scd2_stream_apply,
     )
@@ -287,8 +288,9 @@ def test_scd2_stream_replay_is_noop(spark, tmp_path):
         str(tmp_path / "ckpt1"), run_date=dt.date(2024, 1, 1),
         mode="reference",
     )
-    v1 = txn.current_version(dim_dir)
-    rows1 = sorted(map(tuple, txn.read_committed(spark, dim_dir).collect()))
+    cat = Catalog(dim_dir)
+    m1 = cat.head()
+    rows1 = sorted(map(tuple, cat.read(spark, "dim").collect()))
 
     # simulate the crash window: a FRESH checkpoint replays batch 0
     # against the already-committed dim — reference mode would expire
@@ -299,8 +301,8 @@ def test_scd2_stream_replay_is_noop(spark, tmp_path):
         str(tmp_path / "ckpt2"), run_date=dt.date(2024, 2, 1),
         mode="reference",
     )
-    assert txn.current_version(dim_dir) == v1
-    rows2 = sorted(map(tuple, txn.read_committed(spark, dim_dir).collect()))
+    assert cat.head() == m1
+    rows2 = sorted(map(tuple, cat.read(spark, "dim").collect()))
     assert rows2 == rows1
 
 

@@ -414,6 +414,16 @@ def _report_counts(df, pk) -> list[tuple[str, int]]:
     ]
 
 
+def _reference_counts(df, pk) -> list[tuple[str, int]]:
+    """The counts from the separate V1 and V2 operators: the one
+    null_counts row, then the number of pk_duplicates rows."""
+    nulls = null_counts(df).first()
+    keys = [pk] if isinstance(pk, str) else pk
+    return [(f"not_null_{c}", nulls[i]) for i, c in enumerate(df.columns)] + [
+        ("pk_unique_" + "_".join(keys), pk_duplicates(df, pk).count())
+    ]
+
+
 def _gate_counts(df, pk) -> list[tuple[str, int]]:
     # imported here so the tests above still run against a tree
     # without it
@@ -439,7 +449,9 @@ def _fixture_table(spark, sf_dir, name):
 def test_gate_counts_match_report_on_fixture_tables(spark, sf_dir, name):
     df = _fixture_table(spark, sf_dir, name)
     pk = df.columns[0]
-    assert _gate_counts(df, pk) == _report_counts(df, pk)
+    gate = _gate_counts(df, pk)
+    assert gate == _reference_counts(df, pk)
+    assert _report_counts(df, pk) == gate
 
 
 EDGE_FRAMES = {
@@ -481,7 +493,8 @@ def test_gate_counts_match_report_on_edge_frames(spark, case):
     t.start()
     t.join(timeout=120)
     assert not t.is_alive(), "validation_counts did not return"
-    assert got[0] == _report_counts(df, pk)
+    assert got[0] == _reference_counts(df, pk)
+    assert _report_counts(df, pk) == got[0]
     if case == "empty":
         assert got[0] == [("not_null_id", 0), ("not_null_v", 0),
                           ("pk_unique_id", 0)]
@@ -523,3 +536,22 @@ def test_validate_or_raise_job_shape(spark, sf_dir, count_jobs, table, pk, raise
 
     assert count_jobs(gate) <= 2
     assert bool(outcome) == raises
+
+
+def test_validation_report_job_shape(spark, sf_dir, count_jobs):
+    """The report spends the gate's two jobs when it is built; it is a
+    local relation, so collecting it runs none."""
+    from glue_jobs_for_data_pipeline_spark.sources.readers import load_table
+
+    df = load_table(spark, sf_dir, "supplier")
+    built: list = []
+    assert count_jobs(
+        lambda: built.append(validation_report(df, "supplier", "s_suppkey"))
+    ) <= 2
+    report = built[0]
+    assert count_jobs(report.collect) == 0
+    assert report.dtypes == [
+        ("table_name", "string"),
+        ("check_name", "string"),
+        ("violation_count", "bigint"),
+    ]

@@ -20,10 +20,11 @@ heaviest queries, for the decade where the full sweep is expensive).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from glue_jobs_for_data_pipeline_spark.operators.dedup import release_caches  # noqa: E402
 from glue_jobs_for_data_pipeline_spark.session import get_spark  # noqa: E402
