@@ -30,68 +30,26 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["m2_j2_fact_population"](spark, "/root/testdata/sf0.001")
 
 
-# The driver's correctness gate consumes exactly the FIRST 50 keys of
-# queries(), so registration order is the coverage knob. Round 18
-# priority order (the r17 verdict's task #1: seat the carried r15
-# cohort + the oldest parity tranche; all 50 oracle-able, target
-# 50/50 hash-green with zero no_oracle rows):
-# (a) keys NEW in r18: x_storage_positional_deletes ((file,row_index)
-#     merge-on-read deletes, Iceberg v2 positional delete files),
-#     x_storage_schema_widening (lossless type-promotion "widen" op),
-#     x_storage_retention_policy (size-triggered fold of
-#     delta/dv/ledger debt + base file compaction);
-# (b) keys whose PLAN or GATE changed in r18:
-#     x_storage_mor_upsert (upsert now purges its keys from the dv —
-#     resurrection semantics, ADVICE r17 — and delete_where evaluates
-#     over the merged logical state; oracle updated accordingly),
-#     x_storage_deletion_vectors (delete_where merged-state read;
-#     empty-side compaction guards),
-#     x_olap_approx_distinct / x_olap_approx_percentiles /
-#     x_olap_hll_partial_merge (upgraded from rows-only to
-#     QUANTITATIVE hash gates: exact counts + deterministic
-#     error/rank/merge-consistency booleans — VERDICT r17 task #5),
-#     x_stream_exactly_once / x_stream_incremental_mv /
-#     x_corpus_stream_ingest_dedup (replay test is now MAX-based so
-#     the ledger can fold under retention),
-#     x_dedup_minhash_lsh / x_dedup_simhash / x_corpus_prep_neardup
-#     (late r18: upgraded from rows-only to quantitative contract
-#     gates — exact-count anchors from the staged scored pair table
-#     plus deterministic recall/completeness/consistency booleans;
-#     x_dedup_pairs_stage itself now hash-checks (inter, jaccard)
-#     scores too but is NOT re-seated, same carry rule as r17's
-#     bound tightening);
-# (c) always-on m1/m2 core + m5;
-# (d) the carried r15 cohort (driver evidence r15 — the verdict's
-#     named leftovers first, then the rest of the cohort in its r15
-#     window order; x_storage_branch_isolation,
-#     x_emb_centroids_stage and x_split_group_kfold yielded their
-#     slots to the three late-r18 keys in (a), and
-#     x_emb_cluster_quality, x_olap_countmin_sketch and
-#     x_emb_scatter_matrix to the three upgraded sketch gates in
-#     (b) — all six carry to r19);
-# (e) the OLDEST parity tranche s1..p5 (driver evidence r14).
-# Carried to r19 (sweep-green at both SFs every round): parity
-# p6..l1 + f1..f11 + v1..v4 + m3/m1b/m4 (r17 evidence), the
-# r16-seated x_* cohort (r16 evidence), and the r17-refreshed
-# x_dedup_fuzzy_match..x_storage_zorder_roundtrip tranche (r17
-# evidence). x_dedup_pairs_stage's candidate-mass bound tightened in
-# r18 (per-doc ceil(len/2) sum) but the switch is output-identical
-# and it was driver-seated r17 — carried, not re-seated.
-# Rows-only keys: NONE as of late r18 — the last four
-# (x_dedup_minhash_lsh, x_dedup_simhash, x_corpus_prep_neardup,
-# x_olap_freq_items) all moved to quantitative hash gates, so every
-# registered key is oracle-checked.
-_WINDOW_ROWS_ONLY_OK: set[str] = set()  # r18: no rows-only keys seated
+# The driver's correctness gate checks exactly the FIRST 50 keys of
+# queries(), so registration order decides what it covers. _WINDOW_FIRST
+# seats those keys in groups listed in priority order: keys whose plan,
+# operator or gate changed most recently first, then the always-on core,
+# then the keys with the oldest driver evidence. Every seated key must be
+# oracle-able: a rows-only key in the window wastes a hash-check slot
+# (tests/test_entry_window.py), and _WINDOW_ROWS_ONLY_OK lists the
+# rows-only keys allowed there anyway (none).
+_WINDOW_ROWS_ONLY_OK: set[str] = set()
 
 _WINDOW_FIRST = [
-    # (a) new in r18 (6)
+    # newest storage operators (6)
     "x_storage_positional_deletes",
     "x_storage_schema_widening",
     "x_storage_retention_policy",
     "x_storage_rollback_expire",
     "x_storage_check_constraints",
     "x_storage_partition_compaction",
-    # (b) plan/gate changed in r18 (11)
+    # changed plans or gates: merge-on-read, sketches, exactly-once
+    # streams, sketch contract gates (11)
     "x_storage_mor_upsert",
     "x_storage_deletion_vectors",
     "x_olap_approx_distinct",
@@ -103,11 +61,11 @@ _WINDOW_FIRST = [
     "x_dedup_minhash_lsh",
     "x_dedup_simhash",
     "x_corpus_prep_neardup",
-    # (c) always-on core (3)
+    # always-on core (3)
     "m1_scd2_upsert",
     "m2_j2_fact_population",
     "m5_transactional_pipeline",
-    # (d) carried r15 cohort, r15 evidence (16)
+    # staged-table consumers, time series, retrieval (16)
     "x_text_boilerplate_removal",
     "x_text_string_kernels",
     "x_ts_asof_forward",
@@ -124,7 +82,7 @@ _WINDOW_FIRST = [
     "x_market_basket_lift",
     "x_graph_pagerank",
     "x_text_dsir_weights",
-    # (e) oldest parity tranche, r14 evidence (14)
+    # oldest parity keys (14)
     "s1_csv_bulk_load",
     "s2_truncate_and_load",
     "s3_table_scan",

@@ -15,16 +15,15 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from glue_jobs_for_data_pipeline_spark import lifecycle, runner  # noqa: E402
 from glue_jobs_for_data_pipeline_spark.session import get_spark  # noqa: E402
 
-# The exact r01 headline set (git 28a9e27): cross-round comparisons use
-# this subtotal — the full-suite total is incomparable round-over-round
-# because the cohort grows (37 -> 46 -> ...); the driver's 2x perf gate
-# is judged on this like-for-like number.
+# The first headline set: cross-version comparisons use this subtotal.
+# The full total is not comparable across versions whose cohorts differ,
+# so the like-for-like perf gate is judged on this number.
 R01_BASELINE_QUERIES = [
     "m2_j2_fact_population",
     "m1_scd2_upsert",
@@ -40,7 +39,13 @@ R01_BASELINE_QUERIES = [
     "x_stream_window_agg",
 ]
 
+# The cohort: the load-bearing paths plus every query that takes more
+# than ~0.7 s warm at sf0.1. Membership and order are fixed so totals
+# compare across versions. A stage line (x_*_stage) runs before its
+# consumers, so its build cost lands on its own line and not on the
+# first consumer's.
 BENCH_QUERIES = [
+    # star join, SCD-2, validation, aggregation, joins, dim build
     "m2_j2_fact_population",
     "m1_scd2_upsert",
     "v1_null_counts",
@@ -48,11 +53,9 @@ BENCH_QUERIES = [
     "a2_groupby_count",
     "j1_inner_equijoin",
     "m3_dim_dates",
+    # dedup: exact, the staged near-dup pair table (the sketch gates
+    # below read its exact scores), LSH and n-gram Jaccard
     "x_dedup_exact",
-    # r18: the pair-table stage moved UP here — the sketch contract
-    # gates (minhash/simhash/prep-neardup) consume its exact scores,
-    # and stage lines must run before their consumers so the build
-    # cost lands on the stage line, not the first consumer's
     "x_dedup_pairs_stage",
     "x_dedup_minhash_lsh",
     "x_dedup_ngram_jaccard",
@@ -61,237 +64,114 @@ BENCH_QUERIES = [
     "x_stream_window_agg",
     "x_olap_q1_style",
     "x_corpus_prep",
-    # r03 additions: PII scrub + chunking (map-only passes), substring
-    # spans (linear posting pipeline), int8 quantization (array kernel)
+    # map-only text passes, linear posting pipeline, array kernel
     "x_text_pii_redact",
     "x_text_chunking",
     "x_dedup_substring_spans",
     "x_emb_quantize_int8",
-    # r04 additions: decontamination (gram explode + broadcast join),
-    # RANGE-frame window, sharded shuffle (hash + per-shard window)
+    # gram explode + broadcast join, RANGE frame, hash + per-shard window
     "x_decontam_report",
     "x_olap_range_frame",
     "x_sample_shard_positions",
-    # (r15's near-dup pair-table stage line moved up next to
-    # x_dedup_minhash_lsh in r18 — see above)
-    # r06 additions: iterative connected-component clustering (the
-    # pairs->clusters closure), token-budget fill (domain window),
-    # CDC changelog apply (key window + tombstone filter)
+    # iterative connected components, domain window, key window +
+    # tombstone filter
     "x_dedup_cc_clusters",
     "x_sample_token_budget",
     "x_ingest_cdc_apply",
-    # r07 additions: TF-IDF top terms (two-level count + top-k window),
-    # bigram LM counts (zip_with fan-out, join-free)
+    # two-level count + top-k window, join-free zip_with fan-out
     "x_text_tfidf",
     "x_text_bigram_lm",
-    # r07 TPC-H completion pack representatives: Q9 (profit: fact ⋈ 3
-    # broadcast dims, two decimal sums, one keyed shuffle) and Q21
-    # (waiting orders: decorrelated EXISTS/NOT-EXISTS, heaviest
-    # multi-shuffle shape in the pack)
+    # TPC-H Q9 (fact x 3 broadcast dims) and Q21 (EXISTS / NOT EXISTS,
+    # the heaviest multi-shuffle shape in the pack)
     "x_olap_q9_style",
     "x_olap_q21_style",
-    # r14: the co-purchase pair-weight staging itself — the one-time
-    # quadratic self-join every graph consumer (triangles, coreness,
-    # pagerank, degree-hist, basket-lift pairs) now reads instead of
-    # rebuilding. The per-pass cache reset below makes each pass pay
-    # the build exactly once, HERE, so the bench total still contains
-    # the real cost rather than hiding it in a process-lifetime cache.
+    # the staged co-purchase edge table every graph consumer reads;
+    # each pass resets the stages, so the build is paid here once per
+    # pass instead of hiding in a process-lifetime cache
     "x_graph_edges_stage",
-    # r08 mining-pack representatives: triangle counting (wedge join,
-    # the pack's heaviest graph shape), LM coverage (bigram df build +
-    # Zipf-skewed scoring join), market-basket lift (per-basket pair
-    # fan-out + support joins)
     "x_graph_triangles",
     "x_text_lm_coverage",
     "x_market_basket_lift",
-    # r08 late additions: PMI collocations (double corpus explode into
-    # materialized count partials + dictionary joins), first-touch
-    # attribution (one user-key exchange reused across three window
-    # passes + two rollups)
     "x_text_pmi_collocations",
     "x_events_attribution",
-    # r09 additions: perceptual-hash image dedup (Arrow render+hash
-    # stages + banded Hamming self-join), whole-schema FK cascade
-    # (7 join-count passes incl. the lineitem->orders exchange), Gini
-    # (customer-grain agg + global-rank window + scalar fold)
     "x_mm_phash_dedup",
     "x_validate_fk_cascade",
     "x_olap_gini",
-    # r10 additions: full coreness decomposition (h-index fixpoint, the
-    # heaviest iterative shape), IVF-PQ ANN (map-only cell assignment +
-    # ADC probe, this round's constant-cost fix), revenue-concentration
-    # deciles (the distributed exact-rank kernel's NTILE path)
-    # r10 late batch: accumulating snapshot (conditional milestone agg
-    # + 1:1 order-grain join), periodic snapshot (two-phase agg +
-    # calendar-bounded per-part window), golden-record survivorship
-    # (one groupBy of struct-ordered rule aggregates)
     "x_fact_accumulating_snapshot",
     "x_fact_periodic_snapshot",
     "x_dedup_golden_record",
-    # r10 close-out: RFM (three distributed-NTILE rank-kernel passes),
-    # order-part bridge (co-keyed agg+join chain), drill-across
-    # (two-fact conformed-grain merge)
     "x_olap_rfm_scores",
     "x_fact_order_part_bridge",
     "x_olap_drill_across",
     "x_graph_coreness",
     "x_sim_ivfpq_topk",
     "x_olap_revenue_concentration",
-    # r11 additions: winnowing fingerprint digest (map-side array
-    # kernel), winnowing clone pairs (capped inverted-index self-join),
-    # temperature mixture plan (integer-exact, one corpus scan)
     "x_text_winnow_stats",
     "x_dedup_winnow_pairs",
     "x_corpus_temperature_mix",
-    # r11 media tier: audio frame features (map-only Arrow decode) and
-    # scene cuts (UDF-free higher-order luma reduce + per-doc lag)
     "x_mm_audio_features",
     "x_mm_video_scene_cuts",
-    # r11 tokenizer tier: BPE merge counting + greedy subword encode
-    # (both distinct-word-table shaped)
     "x_text_bpe_merges",
     "x_text_subword_encode",
-    # r15: the k-means centroid staging itself — BOTH trainings (8-cell
-    # ANN/sampling model + 32-cell SemDeDup model) run here once per
-    # pass; the three consumers below read the staged model
+    # the staged k-means centroids (both trainings), then the three
+    # consumers that read them
     "x_emb_centroids_stage",
-    # r14 addition: IVF ANN with distributed integer-grid Lloyd
-    # training (3 assign/re-center rounds + probe — the
-    # train-then-search shape, newly oracle-checked); training staged
-    # since r15
     "x_sim_ivf_kmeans_topk",
-    # r15: the six r14 post-bench additions join the bill (the r14
-    # verdict's task #2 — a bench list that excludes the catalog's most
-    # expensive query is not a headline number)
     "x_dedup_semantic_semdedup",
     "x_corpus_cluster_balance",
     "x_storage_bucketed_join",
     "x_olap_grid_quantile_sketch",
     "x_storage_dynamic_partition_pruning",
     "x_validate_observed_load",
-    # r15 off-bench sweep: the three heaviest queries found off the
-    # bill after the r14 additions — PageRank (8 damped power
-    # iterations over the staged symmetric edge table, the heaviest
-    # iterative query in the catalog), the end-to-end multimodal
-    # ingest (file stage + Arrow decode/resize + banded dHash), and
-    # the brute-cosine verification tier (now the broadcast-corpus
-    # Arrow kernel; 55 s -> ~1.4 s at sf0.1)
     "x_graph_pagerank",
     "x_mm_ingest_pipeline",
     "x_dedup_embedding_cosine",
-    # r15 new-operator batch: only the two above the ~0.7 s warm
-    # billing threshold — DSIR importance weights (gram explode +
-    # bucket-model broadcast join) and the count-min sketch (4-row
-    # probe explode + sketch merge agg). The other three r15 additions
-    # (VARCHAR enforcement 0.33 s, cluster quality 0.44 s, scatter
-    # matrix 0.35 s warm at sf0.1) stay off the bill.
     "x_text_dsir_weights",
     "x_olap_countmin_sketch",
-    # r15 late pair: group-aware k-fold (CC consumer of the staged
-    # pair table, 1.25 s warm) and the runtime bloom-filter join
-    # (eager conf-bracketed materialization, 0.81 s) — both above the
-    # billing threshold
     "x_split_group_kfold",
     "x_storage_runtime_bloom_filter",
-    # r15 close: catalog branch fork -> isolated rewrite -> FF merge
-    # (three catalog commits + three digest reads per invocation)
+    # catalog commit machinery: branches, deletion vectors, MMR / BM25 /
+    # RRF retrieval, prefix Jaccard, commit log, exactly-once streams,
+    # schema evolution, merge-on-read, positional deletes, retention
     "x_storage_branch_isolation",
-    # r16 batch, everything >0.7 s warm at sf0.1: divergent-branch
-    # rebase (five catalog commits + conflict fork), merge-on-read
-    # deletion vectors (two delete commits + merged read + compaction),
-    # MMR re-rank (brute candidates + Arrow greedy), BM25 (two corpus
-    # scans + query-term postings), RRF fusion (BM25 at depth 20 + the
-    # vector ranker + fusion), and prefix-filtered Jaccard (the full
-    # index/rank/verify pipeline; its crossover economics are in
-    # SCALE.md). k-anonymity (0.37 s) stays off the bill.
     "x_storage_branch_rebase",
     "x_storage_deletion_vectors",
     "x_sim_mmr_rerank",
     "x_text_bm25",
     "x_sim_rrf_fusion",
     "x_dedup_jaccard_prefix",
-    # r16 close: catalog commit log (4 scripted commits + 8 as-of
-    # filtered counts; 1.3 s warm)
     "x_storage_commit_log",
-    # r17 batch, everything >0.7 s warm at sf0.1: exactly-once stream
-    # ingest (availableNow drain, 3+ micro-batch manifest commits with
-    # add-files appends + replay injection; ~4.4 s warm), exactly-once
-    # incremental view maintenance (raw append + mv refold + ledger
-    # per batch, atomicity walk over the commit log; ~4.9 s), schema
-    # evolution (two data commits + two metadata-only ALTERs + two
-    # conformed digests; ~0.9 s). Snapshot diff (0.55 s warm — one
-    # full-outer join over two committed snapshots) stays off the
-    # bill per the threshold.
     "x_stream_exactly_once",
     "x_stream_incremental_mv",
     "x_storage_schema_evolution",
-    # r17: streaming corpus intake with cross-batch exact dedup — the
-    # doubled documents feed over 4 micro-batches, per-batch fp
-    # anti-join + two add-files appends per commit (~5.7 s warm)
     "x_corpus_stream_ingest_dedup",
-    # r17: merge-on-read upsert — three delta commits + a dv commit +
-    # merged read + atomic compaction (~2.7 s warm)
     "x_storage_mor_upsert",
-    # r18 batch, everything >0.7 s warm at sf0.1: positional deletes
-    # (two (file,pos) delete commits + an add-files append + merged
-    # reads + atomic compaction; ~3.9 s), the retention policy
-    # end-to-end (4 exactly-once micro-batch commits + upsert + delete
-    # debt, then ONE enforce_retention folding delta/dv/ledger and
-    # compacting base files — commit-machinery dominated like the
-    # stream lines; ~11.5 s), schema widening (two data commits + a
-    # metadata ALTER + conformed digests; ~0.9 s), and the two sketch
-    # keys whose r18 quantitative gates added an exact-count pass:
-    # approx percentiles (GK sketch + broadcast rank-check join;
-    # ~1.1 s) and approx distinct (HLL + exact count_distinct; ~2.0 s).
-    # x_olap_hll_partial_merge (0.59 s) and x_olap_freq_items (0.61 s)
-    # stay off the bill per the threshold.
     "x_storage_positional_deletes",
     "x_storage_retention_policy",
     "x_storage_schema_widening",
     "x_olap_approx_percentiles",
     "x_olap_approx_distinct",
-    # r18 late pair: snapshot rollback + history expiry (four commits,
-    # a CAS rollback, expire + reachability gc; ~2.3 s warm) and CHECK
-    # constraints (declare + conforming load + three rejected writes;
-    # ~2.0 s warm)
     "x_storage_rollback_expire",
     "x_storage_check_constraints",
-    # r18: partition-scoped compaction (partitioned load + 5 hot-
-    # partition appends + offender-only rewrite with inode asserts;
-    # ~2.3 s warm)
     "x_storage_partition_compaction",
-    # r18 late pair: the last two rows-only keys upgraded to
-    # quantitative contract gates, which now cross exact ground truth
-    # (staged scored pairs / a second prepared-corpus pass) with the
-    # sketch output: simhash recall+completeness gate (~2.6 s warm,
-    # ONE cached signature pass for 4 consumers), corpus-prep near-dup
-    # survivor audit (~4.2 s warm — the audited pipeline plus its
-    # independent prepared-corpus recompute). x_dedup_minhash_lsh's
-    # gate rides its existing bill line (+0.3 s for the trues join).
+    # sketch contract gates checked against the staged exact pairs
     "x_dedup_simhash",
     "x_corpus_prep_neardup",
 ]
 
-# The host's recurring noise mode concentrates on the winnowing pair
-# join (byte-identical plan, 2.08->2.58 s swings four rounds running —
-# r14 verdict nit): these queries get EXTRA_SAMPLES additional timed
-# runs per pass so their min-of-N estimator sits on 3x the samples and
-# round-over-round deltas reflect the plan, not the noisiest draw.
+# The winnowing pair join swings most on this host with a byte-identical
+# plan, so these queries get EXTRA_SAMPLES more timed runs per pass and
+# their min-of-N sits on 3x the samples.
 NOISY_QUERIES = {"x_dedup_winnow_pairs", "x_text_winnow_stats"}
 EXTRA_SAMPLES = 2
 
-# Per-query visibility for the DRIVER (r20; VERDICT r19 task #2): the
-# stdout JSON line carries a per-query map so PERF.per_query is no
-# longer empty. The driver's tail capture keeps the LAST 2000 CHARS of
-# stdout (measured: BENCH_r08.json's tail is exactly len 2000 with the
-# line's head cut off — that was the r08 overflow), so the full
-# 93-entry map (~2.7 KB) CANNOT fit; this FIXED subset — every query
-# that measured >= 1.2 s at the r20 baseline, ~80% of total seconds,
-# every line where a regression is resolvable above host noise — plus
-# the residual sum keeps the line under ~1.9 KB even with worst-case
-# digits. Membership is hard-coded (never derived from timings) so the
-# driver's round-over-round per-query comparison sees a stable cohort;
-# the full 93-query map stays in the BENCH_LOCAL_LATEST.json sidecar.
+# The stdout line carries a per-query map, but the driver keeps only the
+# last 2000 characters of stdout, so the full 93-entry map (~2.7 KB)
+# cannot fit. This FIXED subset (every query at >= 1.2 s on the
+# reference run, ~80% of the total seconds) plus the residual sum keeps
+# the line under ~1.9 KB with worst-case digits. Membership is
+# hard-coded, never derived from timings, so per-query comparisons see
+# a stable cohort; the full map is in the sidecar.
 STDOUT_QUERIES = [
     "x_graph_pagerank", "x_dedup_jaccard_prefix", "x_storage_retention_policy",
     "x_corpus_stream_ingest_dedup", "x_mm_ingest_pipeline", "x_corpus_prep_neardup",
@@ -311,12 +191,10 @@ STDOUT_QUERIES = [
     "x_storage_rollback_expire",
 ]
 
-# 3-query calibration set (r20; VERDICT r19 task #3): a single
-# constant-work line made every cross-round normalization hang on one
-# 0.06-0.13 s query's wobble. The set spans three independent constant-
-# work shapes (731-row dim build / single-pass null counts / hash
-# aggregate); BENCH_COMPARE normalizes by the MEDIAN of their mins.
-# Additive: calib.query/min/median keep their historical meaning.
+# Calibration: three independent constant-work shapes (731-row dim
+# build, single-pass null counts, hash aggregate). Comparisons normalize
+# by the MEDIAN of their mins, so one query's wobble cannot move it.
+# calib.query/min/median keep the single-query calibration.
 CALIB_QUERIES = ["m3_dim_dates", "v1_null_counts", "a2_groupby_count"]
 
 
@@ -328,56 +206,23 @@ def main() -> None:
 
     spark = get_spark("bench")
     qs = e.queries()
+    runner.warm_up(spark, qs)
 
-    # Warmup outside the timed region: JIT/codegen/broadcast machinery
-    # spin-up, exercised on the smallest SF so the timings below measure
-    # the engine at the target SF, not first-query compilation.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    # x_storage_mor_upsert joined the warmup set in r20 (VERDICT r19
-    # task #7): it exercises the catalog commit machinery and the
-    # pyarrow footer/metadata paths, so pass 1 of min-of-4 on the
-    # storage/stream lines no longer pays the pyarrow import.
-    for warm in ("m2_j2_fact_population", "x_dedup_minhash_lsh",
-                 "x_stream_window_agg", "x_storage_mor_upsert"):
-        try:
-            qs[warm](spark, "/root/testdata/sf0.001").write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception:  # noqa: BLE001 — warmup must never fail the bench
-            pass
-    from glue_jobs_for_data_pipeline_spark.operators.dedup import release_caches
-
-    # Min-of-4 per query: the host shows multi-second noise spikes on
-    # single samples (same query swings 2.4s..15s run-to-run while
-    # neighbors stay flat; r06->r07 showed a UNIFORM 1.25x shift across
-    # unrelated plans under min-of-2 — pure host noise). min-of-N is the
-    # estimator for the engine's actual cost under external
-    # interference; the median is reported alongside so a cross-round
-    # reader can see the noise floor, and m3_dim_dates (constant work,
-    # 731 rows, no scan) doubles as a calibration query: normalize
-    # cross-round comparisons by its ratio before calling regressions.
+    # Min-of-N per query: the host throws multi-second noise spikes on
+    # single samples while neighbors stay flat, so the min estimates the
+    # engine's cost under interference; the median is reported beside it
+    # to show the noise floor.
     n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "4"))
-    from glue_jobs_for_data_pipeline_spark.plans.staging import (
-        reset_stage_caches,
-    )
-
     samples: dict[str, list[float]] = {name: [] for name in BENCH_QUERIES}
     for _ in range(n_passes):
-        # each pass rebuilds every staged table once (edge weights,
-        # near-dup pairs, k-means centroids — attributed to their
-        # x_*_stage lines, which run before their consumers), so the
-        # min-of-N estimator keeps the real staging cost in the total;
-        # the reset also DELETES the previous pass's staged parquet
-        # (ADVICE r14: clear() alone abandoned one copy per pass)
-        reset_stage_caches()
+        # each pass rebuilds every staged table once, on its x_*_stage
+        # line, so the min keeps the real staging cost in the total
+        lifecycle.reset_stages()
         for name in BENCH_QUERIES:
             runs = 1 + (EXTRA_SAMPLES if name in NOISY_QUERIES else 0)
             for _rep in range(runs):
-                t0 = time.time()
-                df = qs[name](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                samples[name].append(round(time.time() - t0, 3))
-                release_caches()  # dedup signature caches are per-query scratch
+                r = runner.run(spark, qs[name], sf_dir)
+                samples[name].append(round(r.seconds, 3))
 
     def _median(xs: list[float]) -> float:
         s = sorted(xs)
@@ -391,7 +236,7 @@ def main() -> None:
         "metric": "headline_queries_total",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
-        # like-for-like cross-round number (see R01_BASELINE_QUERIES)
+        # like-for-like number (see R01_BASELINE_QUERIES)
         "r01_baseline_total": round(
             sum(timings[q] for q in R01_BASELINE_QUERIES if q in timings), 3
         ),
@@ -399,8 +244,6 @@ def main() -> None:
             "query": "m3_dim_dates",
             "min": timings["m3_dim_dates"],
             "median": medians["m3_dim_dates"],
-            # r20: median-of-mins over the 3-query constant-work set
-            # (CALIB_QUERIES) — robust to a single line's wobble
             "set": {q: timings[q] for q in CALIB_QUERIES},
             "med3": calib_mins[1],
         },
@@ -419,10 +262,8 @@ def main() -> None:
     )
 
     # Per-query detail (min + median + raw samples) goes to a sidecar
-    # file: round 8's all-on-one-line output (~2.3 KB) overflowed the
-    # driver's tail capture and left BENCH_r08 unparseable. The
-    # driver-facing stdout line below stays compact (<~400 B) by
-    # construction — totals + calibration only.
+    # file: everything on one line (~2.3 KB) overflows the driver's
+    # 2000-character tail capture.
     detail_path = os.environ.get(
         "SPARK_GRAFT_BENCH_DETAIL",
         os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL_LATEST.json"),

@@ -23,6 +23,7 @@ from ..functions.text import (
     token_count,
     tokens,
 )
+from ..lifecycle import cached
 from ..sources.readers import spread
 from .dedup import minhash_lsh_pairs
 
@@ -441,8 +442,6 @@ def _dsir_sufficient_stats(
            executes once;
     - tot: 1-row (tt, rt) totals over st.
     """
-    from .dedup import _cached
-
     g = _hashed_grams(
         docs.select(id_col, text_col, target_pred.alias("__is_t")),
         id_col,
@@ -453,9 +452,8 @@ def _dsir_sufficient_stats(
     # and tot through st); Catalyst does not reuse the exchange across
     # them, so without the cache the gram explode — the expensive
     # stage — executes three times. The cache is a performance hint
-    # only (recompute reproduces identical values) and is released via
-    # dedup.release_caches() like every operator scratch cache.
-    dc = _cached(
+    # only (recompute reproduces identical values).
+    dc = cached(
         g.groupBy(id_col, "bucket").agg(
             F.count(F.lit(1)).alias("n"),
             # target_pred is constant per doc; first() under that
@@ -463,7 +461,7 @@ def _dsir_sufficient_stats(
             F.first("__is_t").alias("is_t"),
         )
     )
-    st = _cached(
+    st = cached(
         dc.groupBy("bucket").agg(
             F.sum(F.when(F.col("is_t"), F.col("n")).otherwise(0)).alias("t"),
             F.sum("n").alias("r"),

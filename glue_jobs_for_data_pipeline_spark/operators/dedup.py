@@ -28,31 +28,9 @@ from pyspark.sql import functions as F
 
 from ..functions.text import content_fingerprint, tokens
 from ..functions.vectors import cosine
+from ..lifecycle import cached
 from ..sources.readers import spread
 
-# DataFrames cached by operators in this module (the MinHash signature
-# stage feeds three consumers). Long-lived sessions that run dedup plans
-# repeatedly (bench loops, oracle sweeps) should call release_caches()
-# after materializing each result; otherwise old blocks linger until
-# Spark's storage-memory LRU evicts them.
-_CACHED: list[DataFrame] = []
-
-
-def _cached(df: DataFrame) -> DataFrame:
-    df = df.cache()
-    _CACHED.append(df)
-    return df
-
-
-def release_caches() -> None:
-    """Unpersist every DataFrame cached by this module's operators,
-    plus every registered localCheckpoint (operators/ckpt.py) — one
-    call site cleans both pools."""
-    while _CACHED:
-        _CACHED.pop().unpersist()
-    from .ckpt import release_checkpoints
-
-    release_checkpoints()
 
 # --------------------------------------------------------------------------
 # Exact dedup
@@ -189,7 +167,7 @@ def ngram_jaccard_pairs(
     # explode (+ anti-join) recomputes per consumer (observed: 0
     # ReusedExchange). Cache it partitioned by the join key — cached
     # partitioning is visible to the planner, so the self-join reads the
-    # cache with no further shuffle. Released via release_caches().
+    # cache with no further shuffle.
     #
     # ``_df`` (per-shingle document frequency) rides in the cache: the
     # window reuses the repartition's hashpartitioning(shingle), so it
@@ -219,7 +197,7 @@ def ngram_jaccard_pairs(
         # small/test-corpus path (see docstring).
         dfs = posts.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
         posts = posts.join(dfs, "shingle")
-    posts = _cached(posts)
+    posts = cached(posts)
     sizes = posts.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     pair_posts = posts.filter(F.col("_df") >= 2)
     a = pair_posts.select(F.col("doc").alias("doc_a"), "shingle")
@@ -310,7 +288,7 @@ def jaccard_prefix_pairs(
     posts = posts.withColumn(
         "_df", F.count(F.lit(1)).over(W.partitionBy("shingle"))
     )
-    posts = _cached(posts)
+    posts = cached(posts)
     # rarest-first rank within each doc; prefix_len = sz - ceil(t*sz) + 1.
     # sz rides the SAME hashpartitioning(doc) as the rank window (one
     # shuffle, no join): a broadcast of per-doc sizes would not survive
@@ -331,7 +309,7 @@ def jaccard_prefix_pairs(
     # each side re-runs the two doc-partitioned windows over the full
     # posting list (measured 1.7x the whole query on a boilerplate
     # corpus) — same multi-consumer rule as the posts cache above
-    ranked = _cached(ranked)
+    ranked = cached(ranked)
     a = ranked.select(
         F.col("doc").alias("doc_a"), "shingle", F.col("sz").alias("psz_a")
     )
@@ -352,7 +330,7 @@ def jaccard_prefix_pairs(
     # the tiny candidate list has TWO consumers below (the doc filter
     # and the pair join) and an expensive lineage — cache it so the
     # prefix self-join runs once
-    cand = _cached(cand)
+    cand = cached(cand)
     # exact verification scaled to the CANDIDATE count, not the corpus
     docs_involved = (
         cand.select(F.col("doc_a").alias("doc"))
@@ -375,7 +353,7 @@ def jaccard_prefix_pairs(
     # per-doc postings are DISTINCT (shingles() dedups gram strings;
     # an intra-doc xxhash64 collision — the accepted ~2^-64 risk noted
     # at the hashing step — would perturb either formulation).
-    arrs = _cached(
+    arrs = cached(
         posts_cand.groupBy("doc").agg(
             F.array_sort(F.collect_list("shingle")).alias("_sh")
         )
@@ -676,8 +654,8 @@ def minhash_lsh_pairs(
     """
     r = num_hashes // bands
     # cached: the Arrow-UDF signature stage feeds the band explode AND the
-    # two verify joins (release via release_caches())
-    sigs = _cached(minhash_signatures(df, id_col, text_col, num_hashes, k))
+    # two verify joins
+    sigs = cached(minhash_signatures(df, id_col, text_col, num_hashes, k))
     band_cols = F.array(
         *[
             F.struct(
@@ -1107,11 +1085,11 @@ def shared_window_spans(
     # groupBy reshuffles (by doc). posts_partitions sizes the pinned
     # cache layout like ngram_jaccard_pairs' knob (None inherits
     # spark.sql.shuffle.partitions — the cluster-sized default); the
-    # registered small-SF query passes 8. Released via release_caches().
+    # registered small-SF query passes 8.
     if posts_partitions is not None:
-        posts = _cached(posts.repartition(posts_partitions, "win"))
+        posts = cached(posts.repartition(posts_partitions, "win"))
     else:
-        posts = _cached(posts.repartition("win"))
+        posts = cached(posts.repartition("win"))
     sizes = posts.groupBy("doc").agg(F.count(F.lit(1)).alias("n_windows"))
     dup = (
         posts.groupBy("win")

@@ -36,8 +36,8 @@ iterations, valid because labels only decrease; no diff join). A LAZY
 iterative plans otherwise grow the DAG linearly and re-execute the
 whole history each action — and the convergence sum is the action
 that materializes it, so each round is ONE Spark job, not a
-checkpoint job followed by a sum job (r20; the kcore/coreness
-pattern, guide §1.2 — fixed per-job cost dominates the small rounds). The
+checkpoint job followed by a sum job (the kcore/coreness pattern:
+fixed per-job cost dominates the small rounds). The
 halving join's key is the label, which a giant component concentrates
 onto one value — AQE's skew-join split handles that at scale (the
 right-hand side is the full label table, so a broadcast is not an
@@ -53,6 +53,7 @@ from typing import Callable, NamedTuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import lifecycle
 
 def connected_components(
     edges: DataFrame,
@@ -70,10 +71,8 @@ def connected_components(
     O(log(longest chain)), so 50 covers any graph whose chains fit in
     2^50 hops.
 
-    The result reads a local checkpoint registered with
-    ``ckpt.release_checkpoints()``: act on it (collect, write, or
-    checkpoint what is kept) before releasing, or the plan reads blocks
-    that are gone.
+    The result reads a local checkpoint owned by the query scope
+    (``lifecycle``): act on the result inside the query scope.
     """
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -87,17 +86,18 @@ def connected_components(
     # (measured 13.7s -> 2.5s on the sf0.01 cluster query from this one
     # line). localCheckpoint also cuts the upstream lineage out of every
     # subsequent plan.
-    from . import ckpt
-
-    # LAZY checkpoints throughout (r20): the convergence sum below is
-    # the action that materializes lab (and transitively sym — its
-    # blocks persist during that same job), so the init pays one job,
-    # not three.
-    sym = sym.localCheckpoint(eager=False)
-    lab = sym.select(F.col("u").alias("node")).distinct().withColumn(
-        "label", F.col("node")
+    #
+    # LAZY checkpoints throughout: the convergence sum below is the
+    # action that materializes lab (and transitively sym — its blocks
+    # persist during that same job), so the init pays one job, not
+    # three.
+    sym = lifecycle.checkpoint(sym, eager=False)
+    lab = lifecycle.checkpoint(
+        sym.select(F.col("u").alias("node")).distinct().withColumn(
+            "label", F.col("node")
+        ),
+        eager=False,
     )
-    lab = lab.localCheckpoint(eager=False)
     # Convergence watch: labels start at self and can only DECREASE
     # (min-propagation), so the label-sum is strictly monotone across a
     # changing iteration and constant exactly at the fixpoint. Comparing
@@ -129,19 +129,15 @@ def connected_components(
         ).select("node", F.col("_ll").alias("label"))
         # lazy: the convergence sum is the materializing action — one
         # job per round instead of checkpoint + sum
-        halved = halved.localCheckpoint(eager=False)
+        halved = lifecycle.checkpoint(halved, eager=False)
         cur_sum = _sum(halved)
         # round N's labels are superseded the moment round N+1 is
-        # materialized (by the sum above) — free the blocks NOW
-        # instead of letting dead copies pile up across iterations and
-        # queries (operators/ckpt.py module doc: the r10 bench
-        # regression). The FINAL table is registered for release at
-        # release_caches() time, after the caller materializes.
-        ckpt.free(lab)
+        # materialized (by the sum above): free the blocks now instead
+        # of letting dead copies pile up across iterations
+        lifecycle.free(lab)
         lab = halved
         if cur_sum == prev_sum:
-            ckpt.free(sym)
-            ckpt.register(lab)
+            lifecycle.free(sym)
             return lab.select("node", F.col("label").alias("component"))
         prev_sum = cur_sum
     raise RuntimeError(
@@ -251,11 +247,8 @@ def _power_iterate(
     degree-annotated edges checkpointed once. Every round's ranks are
     checkpointed eagerly except the last, which is lazy: the caller's
     first action materializes it. The blocks that lazy plan reads (the
-    nodes, the edges, the previous round's ranks) are registered for
-    release_checkpoints() rather than freed, so callers must act on the
-    result before releasing."""
-    from . import ckpt
-
+    nodes, the edges, the previous round's ranks) stay with the query
+    scope; only the rounds before those are freed."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     nodes = (
@@ -268,15 +261,14 @@ def _power_iterate(
             "left_outer",
         )
         .select("node", F.col("deg").isNull().alias("_dang"))
-        .localCheckpoint(eager=True)
     )
+    nodes = lifecycle.checkpoint(nodes)
     n = nodes.count()
     if n == 0:
         # init(0) would divide by zero; with no rows, any rank of the
         # domain's type will do
-        ckpt.register(nodes)
         return nodes.select("node", dom.init(1).alias("rank"))
-    ed = e.join(deg, "src").localCheckpoint(eager=True)
+    ed = lifecycle.checkpoint(e.join(deg, "src"))
     ranks = nodes.select("node", dom.init(n).alias("rank"), "_dang")
     prev_ranks = None
     for it in range(iterations):
@@ -288,25 +280,21 @@ def _power_iterate(
             .agg(F.sum("c").alias("contrib"))
         )
         dangling = ranks.filter(F.col("_dang")).agg(dom.dangling.alias("_dm"))
-        ranks = (
+        ranks = lifecycle.checkpoint(
             nodes.join(
                 contribs.withColumnRenamed("dst", "node"), "node", "left_outer"
             )
             .crossJoin(F.broadcast(dangling))
-            .select("node", dom.update(n).alias("rank"), "_dang")
-            .localCheckpoint(eager=not last)
+            .select("node", dom.update(n).alias("rank"), "_dang"),
+            eager=not last,
         )
-        if prev_ranks is not None:
+        if prev_ranks is not None and not last:
             # an eager checkpoint no longer reads the previous round;
             # the lazy final one does until the caller's action
-            (ckpt.register if last else ckpt.free)(prev_ranks)
+            lifecycle.free(prev_ranks)
         prev_ranks = ranks
-    ckpt.register(nodes)
     if prev_ranks is None:  # no rounds: the initial ranks read only nodes
-        ckpt.free(ed)
-    else:
-        ckpt.register(ed)
-        ckpt.register(ranks)
+        lifecycle.free(ed)
     return ranks.select("node", "rank")
 
 
@@ -333,10 +321,8 @@ def pagerank(
     checked against Python, not hashed; pagerank_int_grid is the
     hash-checkable domain. Job shape: _power_iterate.
 
-    The result is a lazy checkpoint over blocks registered with
-    ``ckpt.release_checkpoints()``: act on it (collect, write, or
-    checkpoint what is kept) before releasing, or the plan reads blocks
-    that are gone.
+    The result is a lazy checkpoint over blocks owned by the query
+    scope (``lifecycle``): act on the result inside the query scope.
     """
     return _power_iterate(
         edges,
@@ -382,10 +368,8 @@ def pagerank_int_grid(
     and reproduced exactly by any engine because integer sums do not
     depend on aggregation order. Job shape: _power_iterate.
 
-    The result is a lazy checkpoint over blocks registered with
-    ``ckpt.release_checkpoints()``: act on it (collect, write, or
-    checkpoint what is kept) before releasing, or the plan reads blocks
-    that are gone.
+    The result is a lazy checkpoint over blocks owned by the query
+    scope (``lifecycle``): act on the result inside the query scope.
 
     Returns (node, rank_scaled BIGINT); divide by ``scale`` for the
     float rank. Agreement with pagerank is asserted in
@@ -464,12 +448,9 @@ def triangle_counts(edges: DataFrame, canonical: bool = False) -> DataFrame:
     lo_first = (F.col("deg_a") < F.col("deg_b")) | (
         (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
     )
-    from . import ckpt
-
-    # checkpoint() (not bare localCheckpoint): the returned lazy plan
-    # reads `oriented` three ways, so the blocks must live until the
-    # caller materializes — registered for release_caches().
-    oriented = ckpt.checkpoint(
+    # the returned lazy plan reads `oriented` three ways, so its blocks
+    # live until the query scope closes
+    oriented = lifecycle.checkpoint(
         ranked.select(
             F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("u"),
             F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("v"),
@@ -552,9 +533,7 @@ def kcore(
     No counterpart in the reference (no graph queries in the 4 Redshift
     scripts); LLM-pipeline scope.
     """
-    from . import ckpt
-
-    sym = _symmetrize(edges, canonical).localCheckpoint(eager=False)
+    sym = lifecycle.checkpoint(_symmetrize(edges, canonical), eager=False)
     prev_edges = sym.count()  # materializes the lazy checkpoint
     for _ in range(max_iterations):
         deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
@@ -564,9 +543,9 @@ def kcore(
         )
         # lazy checkpoint: the convergence COUNT is the action that
         # materializes it — one job per round, not checkpoint + count
-        pruned = pruned.localCheckpoint(eager=False)
+        pruned = lifecycle.checkpoint(pruned, eager=False)
         cur_edges = pruned.count()
-        ckpt.free(sym)  # superseded: pruned is materialized by the count
+        lifecycle.free(sym)  # superseded: pruned is materialized by the count
         sym = pruned
         if cur_edges == prev_edges:
             break
@@ -575,7 +554,6 @@ def kcore(
         raise RuntimeError(
             f"kcore did not converge in {max_iterations} iterations"
         )
-    ckpt.register(sym)  # the returned roll-up reads the final edge set
     return (
         sym.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).alias("core_degree"))
@@ -616,13 +594,9 @@ def coreness(
     Input contract as ``kcore``: undirected pair list (src, dst),
     self-loops ignored, duplicates collapsed here.
     """
-    from . import ckpt
-
-    sym = _symmetrize(edges, canonical).localCheckpoint(eager=True)
-    c = (
-        sym.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("est"))
-        .localCheckpoint(eager=False)  # materialized by the sum below
+    sym = lifecycle.checkpoint(_symmetrize(edges, canonical))
+    c = lifecycle.checkpoint(  # materialized by the sum below
+        sym.groupBy("src").agg(F.count(F.lit(1)).alias("est")), eager=False
     )
     prev_sum = c.agg(F.sum("est")).first()[0]
     w = Window.partitionBy("src").orderBy(F.col("nb_est").desc())
@@ -654,9 +628,9 @@ def coreness(
         # checkpoint is LAZY and the certificate sum is the action that
         # materializes it — one job per round instead of an eager-
         # checkpoint job followed by a sum job.
-        c_new = _h_step(_h_step(_h_step(c))).localCheckpoint(eager=False)
+        c_new = lifecycle.checkpoint(_h_step(_h_step(_h_step(c))), eager=False)
         cur_sum = c_new.agg(F.sum("est")).first()[0]
-        ckpt.free(c)  # superseded: c_new materialized by the sum action
+        lifecycle.free(c)  # superseded: c_new materialized by the sum action
         c = c_new
         if cur_sum == prev_sum:
             break
@@ -665,8 +639,7 @@ def coreness(
         raise RuntimeError(
             f"coreness did not converge in {max_iterations} iterations"
         )
-    ckpt.free(sym)
-    ckpt.register(c)
+    lifecycle.free(sym)
     return c.select(
         F.col("src").alias("node"), F.col("est").cast("long").alias("coreness")
     )

@@ -412,12 +412,12 @@ def phash_dup_pairs(
     codegen'd built-ins, cheaper to recompute than to cache), this
     signature stage decodes payloads in Python, and the band join's
     two branches would otherwise run it twice. Cached blocks are 16
-    bytes/image; bench/sweep loops release them via
-    dedup.release_caches().
+    bytes/image and belong to the query scope.
     """
-    from .dedup import _cached, hamming_band_pairs
+    from ..lifecycle import cached
+    from .dedup import hamming_band_pairs
 
-    sigs = _cached(phash_signatures(df, id_col))
+    sigs = cached(phash_signatures(df, id_col))
     return hamming_band_pairs(
         sigs, id_col="doc_id", sig_col="phash",
         max_hamming=max_hamming, n_bands=8,

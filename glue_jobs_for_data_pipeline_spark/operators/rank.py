@@ -27,22 +27,19 @@ stage consumes only literal boundaries + literal offsets + row values.
 If any upstream stage is recomputed (cache eviction, executor churn,
 shuffle-fetch order drift), the pid of every row is unchanged because
 it depends on nothing but the row itself and constants already burned
-into the plan. The previous design derived pids from
-`monotonically_increasing_id()` on a range exchange and pinned them
-with a cache; a recomputed block re-sampled the range boundaries and
-every rank past the first boundary shifted (observed as the r10 driver
-hash mismatch on x_olap_global_rank). Correctness needs NO cache now;
-the kernel still caches its input — but purely as a PERFORMANCE hint
+into the plan. Pids taken from `monotonically_increasing_id()` on a
+range exchange would need a cache to pin them: a recomputed block
+re-samples the range boundaries and shifts every rank past the first
+boundary. Correctness needs NO cache here; the kernel still caches its
+input — but purely as a PERFORMANCE hint
 (the three driver jobs would otherwise re-run a groupBy upstream's
 reduce side each; map shuffle files are reused across jobs, reduce
 aggregation is not), and eviction merely recomputes identical values.
-Released with every other operator scratch cache at
-dedup.release_caches().
+The cache belongs to the query scope (``lifecycle.cached``).
 
 Cost model: 2 driver jobs before the caller's action — the
 boundary-sample collect (a TakeOrdered of the p*samples_per_partition
-lowest-hash key tuples; no pre-count pass since r13 — the old
-rate-based sample filter needed the row count to set its threshold)
+lowest-hash key tuples; no pre-count pass)
 and the per-pid count collect (~p longs, whose SUM is the exact
 total) — all cache reads after the first materialization.
 
@@ -70,6 +67,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..lifecycle import cached
 
 # Denominator for the deterministic hash sample: pid boundaries come
 # from rows where xxhash64(key) mod _SAMPLE_DENOM < rate*_SAMPLE_DENOM.
@@ -215,14 +214,10 @@ def distributed_row_number(
     # pid-counts) plus the caller's action: the upstream is typically a
     # groupBy whose REDUCE side would otherwise re-execute per job (map
     # shuffle files are reused across jobs, reduce aggregation is not).
-    # Unlike the r10 design this cache is a pure PERFORMANCE hint —
-    # correctness no longer depends on it, because pids/offsets are
-    # literals and any eviction-triggered recompute reproduces identical
-    # values. Released via dedup.release_caches() like every operator
-    # scratch cache.
-    from .dedup import _cached
-
-    df = _cached(df)
+    # The cache is a pure PERFORMANCE hint — correctness does not
+    # depend on it, because pids/offsets are literals and any
+    # eviction-triggered recompute reproduces identical values.
+    df = cached(df)
 
     bounds: list[tuple] = []
     if num_partitions > 1:
@@ -376,9 +371,7 @@ def distributed_ntile_multi(
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     k = len(dim_cols)
 
-    from .dedup import _cached
-
-    df = _cached(df)
+    df = cached(df)
 
     # ONE deterministic row sample serves every dim: the TakeOrdered of
     # the lowest-(xxhash64(tiebreaker), tiebreaker) rows is uniform over

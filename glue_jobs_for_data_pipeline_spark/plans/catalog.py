@@ -26,6 +26,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..lifecycle import cached, scratch_dir
 from ..operators.dates_dim import generate_dim_dates
 from ..operators.fact import build_staging_fact, populate_fact
 from ..operators.scd2 import scd2_upsert
@@ -36,7 +37,6 @@ from ..sources.readers import (
     load_table,
     read_csv_table,
     read_parquet,
-    scratch_dir,
     write_overwrite,
 )
 from ..sources.txn import Catalog
@@ -116,7 +116,7 @@ def s4_s7_staging_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s5_ctas_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5: CREATE TEMPORARY TABLE AS SELECT (datespopulation.py:19-23) —
     materialized generated dates via cache + temp view."""
-    dates = generate_dim_dates(spark).select("Date").cache()
+    dates = cached(generate_dim_dates(spark).select("Date"))
     dates.createOrReplaceTempView("temp_dates")
     return spark.table("temp_dates")
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..lifecycle import cached
 from ..sources.readers import load_table, spread
 from .catalog import _q
 
@@ -127,15 +128,13 @@ def x_decontam_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-doc hash sets are map-side arrays (no corpus
     shuffle to dedup); the benchmark-sized eval hash set broadcasts;
     zero-hit docs die in the join; the per-doc count is
-    map-side-combined. The hash-set frame is cached once (released at
-    release_caches) so the corpus branch and the eval-broadcast branch
-    read one fingerprint computation instead of re-hashing the corpus
-    per branch."""
+    map-side-combined. The hash-set frame is cached once so the corpus
+    branch and the eval-broadcast branch read one fingerprint
+    computation instead of re-hashing the corpus per branch."""
     from ..operators.decontam import winnow_fingerprints, winnow_hash
-    from ..operators.dedup import _cached
 
     d = spread(load_table(spark, sf_dir, "documents"))
-    hs = _cached(
+    hs = cached(
         d.select(
             "doc_id",
             F.array_distinct(

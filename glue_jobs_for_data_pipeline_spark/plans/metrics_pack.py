@@ -813,9 +813,9 @@ def x_mm_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     all hash-verified."""
     from ..operators import multimodal
     from ..operators.graph import connected_components
-    from .catalog_ext import _scratch_dir
+    from ..lifecycle import scratch_dir
 
-    d = _scratch_dir("spark_graft_phash_") + "/thumbs_cc"
+    d = scratch_dir("spark_graft_phash_") + "/thumbs_cc"
     multimodal.attach_thumbnail_payload(
         load_table(spark, sf_dir, "documents")
     ).write.mode("overwrite").parquet(d)
@@ -1826,7 +1826,7 @@ def x_validate_observed_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pk_distinct_approx) is engine-specific and intentionally excluded
     from the hashed output; the exact V2 gate remains pk_duplicates."""
     from ..operators.validation import observed_write
-    from ..sources.readers import scratch_dir
+    from ..lifecycle import scratch_dir
 
     orders = load_table(spark, sf_dir, "orders")
     out = scratch_dir("spark_graft_observed_") + "/orders"

@@ -27,7 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import lifecycle
 from ..functions import text as tx
+from ..lifecycle import scratch_dir
 from ..operators.rank import distributed_ntile
 from ..sources.readers import load_events, load_table, read_parquet, spread
 from .catalog import _q
@@ -48,15 +50,6 @@ e AS (
 """
 
 
-# staged co-purchase pair-weight table, one per (process, sf_dir):
-# sf_dir -> parquet path (see _staged_pair_weights). Registered so
-# staging.reset_stage_caches() deletes the parquet when resetting
-# (bench passes previously abandoned one copy per pass — ADVICE r14).
-from .staging import register_stage_cache
-
-_EDGE_STAGE_CACHE: dict[str, str] = register_stage_cache({}, paths=True)
-
-
 def _staged_pair_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The co-purchase pair-weight table (src < dst, w = number of
     distinct orders containing both parts), STAGED ONCE per process
@@ -66,23 +59,21 @@ def _staged_pair_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     pagerank) and the market-basket pair stage all derive from this one
     table — support-1 edges are its projection, support-2 edges its
     ``w >= 2`` filter, the symmetric digraph its union with the flipped
-    half. Before r14 each consumer re-ran the lineitem self-join
-    (~12 s of the 62 s bench at sf0.1); at 100 TB you materialize the
+    half. Unstaged, each consumer re-runs the lineitem self-join
+    (~12 s of a 62 s bench at sf0.1); at 100 TB you materialize the
     edge list exactly once and every graph job scans the staged table —
     the same stage-then-consume shape the manifest catalog uses for
     fact tables. Registered as its own oracle-checked query
     (x_graph_edges_stage), so the staging cost is visible in the bench
     rather than hidden inside whichever consumer runs first.
 
-    Build shape (unchanged from the r11/r13 tuning): DISTINCT
-    (order, part) via repartition(ok)+dropDuplicates — ONE exchange
-    that the self-join reuses; strict src < dst halves the fan-out
+    Build shape: DISTINCT (order, part) via
+    repartition(ok)+dropDuplicates — ONE exchange that the self-join
+    reuses; strict src < dst halves the fan-out
     before the pair aggregation; per-pair COUNT(*) equals
     COUNT(DISTINCT ok) because the input is order-distinct."""
-    path = _EDGE_STAGE_CACHE.get(sf_dir)
-    if path is None:
-        from ..sources.readers import scratch_dir
 
+    def build(d: str) -> str:
         li = (
             load_table(spark, sf_dir, "lineitem")
             .select(F.col("l_orderkey").alias("ok"), "l_partkey")
@@ -97,10 +88,13 @@ def _staged_pair_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("src", "dst")
             .agg(F.count(F.lit(1)).alias("w"))
         )
-        path = scratch_dir("spark_graft_copurchase_edges_") + "/pair_weights"
-        pw.write.mode("overwrite").parquet(path)
-        _EDGE_STAGE_CACHE[sf_dir] = path
-    return read_parquet(spark, path)
+        pw.write.mode("overwrite").parquet(f"{d}/pair_weights")
+        return f"{d}/pair_weights"
+
+    return read_parquet(spark, lifecycle.stage(
+        ("pair_weights", sf_dir), build,
+        prefix="spark_graft_copurchase_edges_",
+    ))
 
 
 _X_EDGE_STAGE_SQL = """
@@ -1664,9 +1658,7 @@ def x_storage_hash_skip_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_hash_bucket_index,
         indexed_equality_scan,
     )
-    from .catalog_ext import _scratch_dir
-
-    d = _scratch_dir("spark_graft_skipidx_") + "/orders_clustered"
+    d = scratch_dir("spark_graft_skipidx_") + "/orders_clustered"
     od = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -1720,8 +1712,6 @@ def x_text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     join. Shuffles move distinct terms/pairs, never corpus rows; the
     c_ab >= 5 support floor is applied before the joins so rare-pair
     fan-out never reaches the dictionary join at scale."""
-    from ..operators.ckpt import checkpoint
-
     d = spread(load_table(spark, sf_dir, "documents"))
     t = d.select(tx.tokens(F.lower(F.col("text"))).alias("l"))
     # The two count tables are REDUCED (vocab- / distinct-bigram-sized)
@@ -1736,7 +1726,7 @@ def x_text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    uni = checkpoint(uni)  # released at release_caches()
+    uni = lifecycle.checkpoint(uni)
     bi = (
         t.select(
             F.explode(
@@ -1751,7 +1741,7 @@ def x_text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("c_ab"))
     )
-    bi = checkpoint(bi)  # released at release_caches()
+    bi = lifecycle.checkpoint(bi)
     # totals are taken over the UNFILTERED count tables (p(ab) is
     # relative to all bigrams, not just frequent ones); the support
     # floor then prunes the pair table before the dictionary joins
@@ -3125,9 +3115,7 @@ def x_storage_commit_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     one small JSON read per commit at any data scale."""
     from ..sources.txn import Catalog
 
-    from .catalog_ext import _scratch_dir
-
-    cat = Catalog(_scratch_dir("spark_graft_clog_") + "/wh")
+    cat = Catalog(scratch_dir("spark_graft_clog_") + "/wh")
     dim = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )

@@ -179,9 +179,9 @@ def x_storage_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout touches ALL files on the second column)."""
     from ..sources.readers import load_table
     from ..sources.zorder import zorder_write
-    from .catalog_ext import _scratch_dir
+    from ..lifecycle import scratch_dir
 
-    out = _scratch_dir("zorder_rt_") + "/lineitem_z"
+    out = scratch_dir("zorder_rt_") + "/lineitem_z"
     li = load_table(spark, sf_dir, "lineitem")
     zorder_write(li, ["l_partkey", "l_suppkey"], out, n_files=8, bits=8)
     return (

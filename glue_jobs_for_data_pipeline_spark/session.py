@@ -29,9 +29,9 @@ def _warehouse_dir() -> str:
     getOrCreate only honors the conf on first session construction."""
     global _WAREHOUSE_DIR
     if _WAREHOUSE_DIR is None:
-        from .sources.readers import scratch_dir
+        from .lifecycle import process_dir
 
-        _WAREHOUSE_DIR = scratch_dir("spark_graft_warehouse_")
+        _WAREHOUSE_DIR = process_dir("spark_graft_warehouse_")
     return _WAREHOUSE_DIR
 
 

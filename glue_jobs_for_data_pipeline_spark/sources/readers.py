@@ -300,30 +300,3 @@ def read_binary_dir(
         F.col("length").alias("n_bytes"),
         F.col("content"),
     )
-
-
-def scratch_dir(prefix: str) -> str:
-    """Per-invocation mkdtemp scratch registered for atexit cleanup —
-    the ONE staging-path primitive every write-then-read-back query
-    uses (a fixed literal path races: dual-SF sweeps and concurrent
-    runs rebuild it under a lazily-read frame — ADVICE r04/r14).
-
-    Root: ``SPARK_GRAFT_SCRATCH_ROOT`` env var, else the platform
-    tempdir. On a real cluster the root MUST be a filesystem shared by
-    driver and executors (see README "Scratch storage contract") —
-    executor tasks write staged files that other executors read back.
-    Cleanup defers to interpreter exit because returned DataFrames read
-    the dir lazily (the driver collects after the query function
-    returns).
-    """
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    root = os.environ.get("SPARK_GRAFT_SCRATCH_ROOT") or None
-    if root:
-        os.makedirs(root, exist_ok=True)
-    d = tempfile.mkdtemp(prefix=prefix, dir=root)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d

@@ -21,15 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.readers import (
-    load_events,
-    normalize_event_ts,
-    read_parquet,
-    scratch_dir,
-)
-
-# symlink-dir per sf_dir, reused within a process (read_events_stream)
-_STREAM_DIR_CACHE: dict[str, str] = {}
+from .. import lifecycle
+from ..sources.readers import normalize_event_ts, read_parquet
 
 
 def drain_stream(
@@ -40,16 +33,16 @@ def drain_stream(
     parquet sink (via foreachBatch) and return the result as a batch
     DataFrame backed by those files.
 
-    This replaced the r02–r07 memory-sink + ``collect()`` drain: the
-    memory sink materializes the whole result ON THE DRIVER, capping
-    drain size at driver RAM — fine for a harness, wrong as the engine's
-    stated pattern. foreachBatch keeps every batch write executor-side:
+    Not a memory sink + ``collect()`` drain: the memory sink
+    materializes the whole result ON THE DRIVER, capping drain size at
+    driver RAM — fine for a harness, wrong as the engine's stated
+    pattern. foreachBatch keeps every batch write executor-side:
     ``append`` mode appends each micro-batch's rows; ``complete`` mode
     overwrites, so the last batch IS the final result. (The plain
     ``.format("parquet")`` file sink cannot express complete mode at
     all, which is why foreachBatch does the writing.) The scratch dir
-    must outlive the call — the returned frame reads it lazily and the
-    driver collects later — so cleanup is deferred to interpreter exit.
+    must outlive the call — the returned frame reads it lazily — so it
+    belongs to the query scope (``lifecycle.scratch_dir``).
 
     ``state_partitions`` sizes the stateful operators' state-store
     count for THIS query (stateful streams lock
@@ -71,13 +64,8 @@ def drain_stream(
     isolate streams in their own sessions) rather than rely on this
     drain helper.
     """
-    import atexit
-    import shutil
-    import tempfile
-
     spark = df.sparkSession
-    out_dir = tempfile.mkdtemp(prefix=f"stream_drain_{query_name}_")
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    out_dir = lifecycle.scratch_dir(f"stream_drain_{query_name}_")
     # seed an empty file so a zero-batch stream still yields a readable,
     # correctly-schemed result
     spark.createDataFrame([], df.schema).write.mode("overwrite").parquet(out_dir)
@@ -107,10 +95,6 @@ def drain_stream(
     return read_parquet(spark, out_dir)
 
 
-# Back-compat name (pre-r08 the drain went through the memory sink).
-drain_to_memory = drain_stream
-
-
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet with ``ts`` normalized
     identically to the batch reader.
@@ -129,16 +113,16 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # per-process scratch (README "Scratch storage contract"): cached
-    # per sf_dir so repeat invocations in one process reuse the listing
-    # dir, while concurrent processes never share a path
-    stream_dir = _STREAM_DIR_CACHE.get(sf_dir)
-    if stream_dir is None:
-        stream_dir = scratch_dir("spark_graft_stream_events_")
-        _STREAM_DIR_CACHE[sf_dir] = stream_dir
-    link = f"{stream_dir}/events.parquet"
-    if not os.path.exists(link):
-        os.symlink(f"{sf_dir}/events.parquet", link)
+    # one listing dir per (process, sf_dir), reused by every invocation
+    # in the process; concurrent processes never share a path
+    def build(d: str) -> str:
+        os.symlink(f"{sf_dir}/events.parquet", f"{d}/events.parquet")
+        return d
+
+    stream_dir = lifecycle.stage(
+        ("stream_events", sf_dir), build,
+        prefix="spark_graft_stream_events_", resettable=False,
+    )
     raw_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     raw = (
         spark.readStream.schema(raw_schema)

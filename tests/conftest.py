@@ -1,9 +1,8 @@
 from __future__ import annotations
 
-import uuid
-
 import pytest
 
+from glue_jobs_for_data_pipeline_spark import runner
 from glue_jobs_for_data_pipeline_spark.session import get_spark
 
 
@@ -21,16 +20,9 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def count_jobs(spark):
     """``count_jobs(fn)``: the number of Spark jobs ``fn`` submits,
-    counted by job group."""
-    sc = spark.sparkContext
+    counted like the query runner counts them."""
 
     def count(fn) -> int:
-        group = f"probe-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return sum(runner.count_jobs(spark, fn))
 
     return count

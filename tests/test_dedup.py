@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from glue_jobs_for_data_pipeline_spark import lifecycle
 from glue_jobs_for_data_pipeline_spark.operators import dedup
 
 
@@ -161,12 +162,12 @@ def test_minhash_bucket_cap_bounds_boilerplate(spark):
     rows = [(i, boiler) for i in range(60)] + [(100, base), (101, near)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    uncapped = dedup.minhash_lsh_pairs(docs, "doc_id", "text").collect()
-    dedup.release_caches()
-    capped = dedup.minhash_lsh_pairs(
-        docs, "doc_id", "text", bucket_cap=20
-    ).collect()
-    dedup.release_caches()
+    with lifecycle.query_scope():
+        uncapped = dedup.minhash_lsh_pairs(docs, "doc_id", "text").collect()
+    with lifecycle.query_scope():
+        capped = dedup.minhash_lsh_pairs(
+            docs, "doc_id", "text", bucket_cap=20
+        ).collect()
 
     # uncapped: the 60-doc cluster alone yields 60*59/2 = 1770 pairs
     assert len(uncapped) == 1771

@@ -70,20 +70,18 @@ def test_dedup_by_clusters_keeps_min_and_untouched(spark):
 def test_cc_matches_driver_corpus_shape(spark, sf_dir):
     """On the real fixture pairs (jaccard >= 0.5) every cluster id is a
     member of its own cluster and the minimum of it."""
+    from glue_jobs_for_data_pipeline_spark import lifecycle
     from glue_jobs_for_data_pipeline_spark.operators.dedup import (
         ngram_jaccard_pairs,
-        release_caches,
     )
     from glue_jobs_for_data_pipeline_spark.sources.readers import load_table
 
-    try:
+    with lifecycle.query_scope():
         pairs = ngram_jaccard_pairs(
             load_table(spark, sf_dir, "documents"), "doc_id", "text",
             k=3, threshold=0.5, df_cap=100, posts_partitions=8,
         ).select("doc_a", "doc_b")
         cc = connected_components(pairs).collect()
-    finally:
-        release_caches()
     by_comp = {}
     for r in cc:
         by_comp.setdefault(r["component"], []).append(r["node"])
@@ -405,7 +403,7 @@ def test_pagerank_int_grid_tracks_float_on_random_graphs(spark, edges):
 
 
 def test_pagerank_single_iteration_survives_two_actions(spark):
-    """r20: the FINAL iteration's localCheckpoint is LAZY (the caller's
+    """The FINAL iteration's localCheckpoint is LAZY (the caller's
     first action materializes it). iterations=1 makes it the ONLY
     checkpoint — the boundary where prev_ranks/nodes/ed lifecycle all
     route through the lazy path — and a second action must read the
@@ -444,19 +442,17 @@ PAGERANK_JOBS = {1: 19, 3: 37}
 @pytest.mark.parametrize("fn", ["pagerank", "pagerank_int_grid"])
 @pytest.mark.parametrize("iterations", sorted(PAGERANK_JOBS))
 def test_pagerank_job_count(spark, count_jobs, fn, iterations):
+    from glue_jobs_for_data_pipeline_spark import lifecycle
     from glue_jobs_for_data_pipeline_spark.operators import graph
-    from glue_jobs_for_data_pipeline_spark.operators.ckpt import (
-        release_checkpoints,
-    )
 
     e = spark.createDataFrame(
         [(1, 2), (2, 1), (3, 1), (2, 4)], "src long, dst long"
     )
-    jobs = count_jobs(
-        lambda: getattr(graph, fn)(e, iterations=iterations)
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-    release_checkpoints()
+    with lifecycle.query_scope():
+        jobs = count_jobs(
+            lambda: getattr(graph, fn)(e, iterations=iterations)
+            .write.format("noop")
+            .mode("overwrite")
+            .save()
+        )
     assert jobs == PAGERANK_JOBS[iterations]

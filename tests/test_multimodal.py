@@ -270,28 +270,32 @@ def test_read_binary_dir_roundtrip(spark, tmp_path):
 
 
 def test_binary_ingest_scratch_root_override(spark, sf_dir, monkeypatch, tmp_path):
-    """SPARK_GRAFT_SCRATCH_ROOT reroutes every _scratch_dir under a
+    """SPARK_GRAFT_SCRATCH_ROOT reroutes every scratch_dir under a
     caller-chosen shared filesystem (the cluster contract, README
     'Scratch storage') and the binaryFile ingest query still returns
     byte-identical rows to a run under the default root."""
+    from glue_jobs_for_data_pipeline_spark import lifecycle
     from glue_jobs_for_data_pipeline_spark.plans.catalog import QUERIES
 
     q = QUERIES["x_mm_binary_ingest"]
-    base = {
-        r["file_name"]: (r["n_bytes"], r["content_hex"])
-        for r in q(spark, sf_dir).collect()
-    }
+    with lifecycle.query_scope():
+        base = {
+            r["file_name"]: (r["n_bytes"], r["content_hex"])
+            for r in q(spark, sf_dir).collect()
+        }
     root = tmp_path / "shared_scratch"
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH_ROOT", str(root))
-    over = {
-        r["file_name"]: (r["n_bytes"], r["content_hex"])
-        for r in q(spark, sf_dir).collect()
-    }
+    with lifecycle.query_scope():
+        over = {
+            r["file_name"]: (r["n_bytes"], r["content_hex"])
+            for r in q(spark, sf_dir).collect()
+        }
+        # the override root was actually used (a mkdtemp landed under it)
+        assert any(
+            d.startswith("spark_graft_binary_ingest_") for d in os.listdir(root)
+        )
     assert over == base and len(base) > 0
-    # the override root was actually used (a mkdtemp landed under it)
-    assert any(
-        d.startswith("spark_graft_binary_ingest_") for d in os.listdir(root)
-    )
+    assert os.listdir(root) == [], "closing the scope deletes its scratch"
 
 
 def test_binary_ingest_two_invocations_do_not_race(spark, sf_dir):

@@ -1,4 +1,4 @@
-"""Direct regression tests for the r18 sketch contract gates — the
+"""Direct regression tests for the sketch contract gates — the
 three former rows-only keys (MinHash-LSH, SimHash, corpus-prep
 near-dup) whose catalog output is now a one-row quantitative contract.
 
@@ -14,6 +14,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from glue_jobs_for_data_pipeline_spark import lifecycle
 from glue_jobs_for_data_pipeline_spark.operators import dedup
 from glue_jobs_for_data_pipeline_spark.plans import catalog_ext as cx
 
@@ -29,33 +30,33 @@ def trues(spark, sf_dir):
 
 
 def test_minhash_gate_contract_holds(spark, sf_dir, trues):
-    row = cx.x_dedup_minhash_lsh(spark, sf_dir).collect()[0]
-    assert row["n_true_pairs"] == trues.count() > 0
-    assert row["recall_ok"] is True
-    assert row["est_ok"] is True
-    dedup.release_caches()
+    with lifecycle.query_scope():
+        row = cx.x_dedup_minhash_lsh(spark, sf_dir).collect()[0]
+        assert row["n_true_pairs"] == trues.count() > 0
+        assert row["recall_ok"] is True
+        assert row["est_ok"] is True
 
 
 def test_minhash_gate_recall_is_actually_high(spark, sf_dir, trues):
     """The 0.9 floor is not doing the work: measured recall at J>=0.8
     should be ~1.0 on the planted fixture (16-band S-curve)."""
-    cand = dedup.minhash_lsh_pairs(
-        cx.load_table(spark, sf_dir, "documents"), "doc_id", "text",
-        bucket_cap=1000,
-    )
-    n_true = trues.count()
-    caught = trues.join(cand, ["doc_a", "doc_b"]).count()
-    assert caught == n_true  # every planted >=0.8 pair is caught
-    dedup.release_caches()
+    with lifecycle.query_scope():
+        cand = dedup.minhash_lsh_pairs(
+            cx.load_table(spark, sf_dir, "documents"), "doc_id", "text",
+            bucket_cap=1000,
+        )
+        n_true = trues.count()
+        caught = trues.join(cand, ["doc_a", "doc_b"]).count()
+        assert caught == n_true  # every planted >=0.8 pair is caught
 
 
 def test_simhash_gate_contract_holds(spark, sf_dir):
-    row = cx.x_dedup_simhash(spark, sf_dir).collect()[0]
-    assert row["n_true_pairs"] > 0
-    assert row["complete_r3_ok"] is True
-    assert row["hamming_consistent_ok"] is True
-    assert row["recall_ok"] is True
-    dedup.release_caches()
+    with lifecycle.query_scope():
+        row = cx.x_dedup_simhash(spark, sf_dir).collect()[0]
+        assert row["n_true_pairs"] > 0
+        assert row["complete_r3_ok"] is True
+        assert row["hamming_consistent_ok"] is True
+        assert row["recall_ok"] is True
 
 
 def test_simhash_radius3_completeness_is_structural(spark, sf_dir):
@@ -85,10 +86,10 @@ def test_corpus_prep_gate_contract_holds(spark, sf_dir):
         prepare_corpus,
     )
 
-    row = cx.x_corpus_prep_neardup(spark, sf_dir).collect()[0]
-    assert row["no_dup_survivors_ok"] is True
-    assert row["kept_subset_ok"] is True
-    # the n_prepared anchor equals an independent operator run
-    docs = cx.load_table(spark, sf_dir, "documents")
-    assert row["n_prepared"] == prepare_corpus(docs).count()
-    dedup.release_caches()
+    with lifecycle.query_scope():
+        row = cx.x_corpus_prep_neardup(spark, sf_dir).collect()[0]
+        assert row["no_dup_survivors_ok"] is True
+        assert row["kept_subset_ok"] is True
+        # the n_prepared anchor equals an independent operator run
+        docs = cx.load_table(spark, sf_dir, "documents")
+        assert row["n_prepared"] == prepare_corpus(docs).count()

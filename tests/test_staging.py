@@ -1,18 +1,17 @@
-"""Stage-then-consume contracts (r15): staged tables equal their
-unstaged derivations, caches are per-(process, sf_dir/params), and
-reset_stage_caches() actually deletes parquet-backed stages."""
+"""Stage-then-consume contracts: staged tables equal their unstaged
+derivations, stages are per-(process, sf_dir/params), and
+lifecycle.reset_stages() actually deletes parquet-backed stages."""
 
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import functions as F
 
+from glue_jobs_for_data_pipeline_spark import lifecycle
 from glue_jobs_for_data_pipeline_spark.operators import dedup, similarity
 from glue_jobs_for_data_pipeline_spark.plans import catalog_ext as cx
-from glue_jobs_for_data_pipeline_spark.plans.staging import (
-    reset_stage_caches,
-)
 from glue_jobs_for_data_pipeline_spark.sources.readers import load_table
 
 
@@ -59,15 +58,15 @@ def test_centroid_stage_query_covers_both_models(spark, sf_dir):
     assert len(rows) == (8 + kd) * 64
 
 
-def test_reset_stage_caches_deletes_parquet(spark, sf_dir):
-    cx._staged_neardup_pairs(spark, sf_dir)
-    path = cx._NEARDUP_STAGE_CACHE[sf_dir]
+def test_reset_stages_deletes_parquet(spark, sf_dir):
+    staged = cx._staged_neardup_pairs(spark, sf_dir)
+    path = os.path.dirname(urlparse(staged.inputFiles()[0]).path)
     assert os.path.exists(path)
     cx._staged_grid_centroids(spark, sf_dir, 8)
-    reset_stage_caches()
+    lifecycle.reset_stages()
     assert not os.path.exists(path), "staged parquet must be deleted"
-    assert cx._NEARDUP_STAGE_CACHE == {}
-    assert cx._CENTROID_STAGE_CACHE == {}
+    assert not os.path.exists(os.path.dirname(path)), "and its mkdtemp dir"
+    assert not [k for k, (_, _, reset) in lifecycle._STAGES.items() if reset]
 
 
 def test_ivf_kmeans_pretrained_centroids_match_internal(spark, sf_dir):

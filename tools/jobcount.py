@@ -3,14 +3,15 @@ optimizations that remove whole jobs (driver-side metadata I/O, lazy
 checkpoints) rather than reshaping a plan: the final explain of a
 checkpoint-returning query is `Scan ExistingRDD` before AND after, so
 the evidence lives in how many jobs the query submits, not in the plan
-text (guide §1.5: job groups make per-query jobs attributable).
+text.
 
-Each key runs TWICE: the first invocation pays per-process staging
-side effects (stage caches, fixture writes) outside the probe; the
-second runs inside a job group and the group's jobs are reported — the
-steady-state per-invocation job bill — as succeeded jobs, with failed
-jobs counted apart. The session retains every job and stage, so a long
-query's count is never truncated.
+Each key runs TWICE through the runner: the first invocation pays
+per-process staging side effects (stage builds, fixture writes); the
+second's jobs are reported — the steady-state per-invocation job bill
+— as succeeded jobs, with failed jobs counted apart. Every job started
+while the query runs counts, streaming micro-batches included. The
+session retains every job and stage, so a long query's count is never
+truncated.
 
 Usage: python tools/jobcount.py [--sf DIR] key ...
 """
@@ -19,10 +20,10 @@ from __future__ import annotations
 
 import os
 import sys
-from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from glue_jobs_for_data_pipeline_spark import runner  # noqa: E402
 from glue_jobs_for_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
@@ -44,31 +45,10 @@ def main() -> None:
         },
     )
     qs = e.queries()
-    from glue_jobs_for_data_pipeline_spark.operators.dedup import release_caches
-
-    sc = spark.sparkContext
     for k in keys:
-        # staging side effects land here, outside the probe
-        qs[k](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        release_caches()
-        group = f"probe:{k}"
-        sc.setJobGroup(group, k)
-        try:
-            qs[k](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        tracker = sc.statusTracker()
-        status = Counter(
-            tracker.getJobInfo(j).status
-            for j in tracker.getJobIdsForGroup(group)
-        )
-        release_caches()
-        print(
-            f"{k}: {status['SUCCEEDED']} jobs, {status['FAILED']} failed",
-            flush=True,
-        )
+        runner.run(spark, qs[k], sf_dir)  # staging side effects land here
+        r = runner.run(spark, qs[k], sf_dir)
+        print(f"{k}: {r.jobs} jobs, {r.failed} failed", flush=True)
 
 
 if __name__ == "__main__":

@@ -291,7 +291,7 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    from glue_jobs_for_data_pipeline_spark.operators.dedup import release_caches
+    from glue_jobs_for_data_pipeline_spark import runner
 
     qs, oracles = e.queries(), e.oracle_sql()
     failures, n_checked, n_rows_only = 0, 0, 0
@@ -300,20 +300,19 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            srows = sdf.collect()
+            first = runner.run(spark, fn, sf_dir, "collect")
+            sdf, srows = first.df, first.value
             scols = sdf.columns
             drift = None
             for rep in range(1, repeat):
                 # fresh plan, cold cache: the driver's failure mode is a
                 # LATER execution disagreeing with the first one
-                release_caches()
                 spark.catalog.clearCache()
-                rdf = fn(spark, sf_dir)
-                rrows = rdf.collect()
+                again = runner.run(spark, fn, sf_dir, "collect")
                 a = rows_canon([c.lower() for c in scols], [tuple(r) for r in srows])
                 b = rows_canon(
-                    [c.lower() for c in rdf.columns], [tuple(r) for r in rrows]
+                    [c.lower() for c in again.df.columns],
+                    [tuple(r) for r in again.value],
                 )
                 if a != b:
                     drift = rep
@@ -334,8 +333,6 @@ def main() -> int:
             report[name] = {"status": "fail", "err": f"spark: {ex}"}
             failures += 1
             continue
-        finally:
-            release_caches()  # dedup signature caches are per-query scratch
         # The driver canonicalizes EVERY query's output through pandas —
         # rows-only included — so complex-typed columns crash its gate
         # regardless of oracle availability (r06: x_olap_freq_items).

@@ -40,7 +40,7 @@ def main() -> None:
     only = set(args[1:])
 
     import __spark_entry__ as e
-    from glue_jobs_for_data_pipeline_spark.operators.dedup import release_caches
+    from glue_jobs_for_data_pipeline_spark import runner
     from glue_jobs_for_data_pipeline_spark.session import get_spark
 
     spark = get_spark("plan_audit")
@@ -60,14 +60,11 @@ def main() -> None:
             continue
         totals["queries"] += 1
         try:
-            df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = runner.run(spark, fn, sf_dir, "plan").value
         except Exception as ex:  # noqa: BLE001 — record, keep auditing
             report[name] = {"error": str(ex)[:200]}
             totals["errors"] += 1
             continue
-        finally:
-            release_caches()
         rec = {
             "exchanges": len(re.findall(r"\bExchange\b", plan)),
             "keyed_exchanges": plan.count("Exchange hashpartitioning"),

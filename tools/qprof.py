@@ -1,7 +1,7 @@
 """Per-query micro-bench: time one (or a few) registered queries with
-the bench's exact methodology (noop sink, min-of-N, staged-cache reset)
-without paying for the whole 93-query bill — the isolation tool guide
-§1 asks for. Optionally dumps .explain('formatted') to a file.
+the bench's exact methodology (warm-up set, noop sink, min-of-N, stage
+reset per pass) without paying for the whole 93-query bill. Optionally
+dumps .explain('formatted') to a file.
 
 Usage:
     python tools/qprof.py [--passes N] [--explain-dir DIR] [--sf DIR] key ...
@@ -11,10 +11,10 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from glue_jobs_for_data_pipeline_spark import lifecycle, runner  # noqa: E402
 from glue_jobs_for_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
@@ -39,36 +39,19 @@ def main() -> None:
 
     spark = get_spark("qprof")
     qs = e.queries()
-    from glue_jobs_for_data_pipeline_spark.operators.dedup import release_caches
-    from glue_jobs_for_data_pipeline_spark.plans.staging import reset_stage_caches
-
-    # warmup: codegen/broadcast machinery at the smallest SF
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for k in keys:
-        try:
-            qs[k](spark, "/root/testdata/sf0.001").write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception:  # noqa: BLE001
-            pass
-        release_caches()
+    runner.warm_up(spark, qs)
 
     samples: dict[str, list[float]] = {k: [] for k in keys}
     for p in range(passes):
-        reset_stage_caches()
+        lifecycle.reset_stages()
         for k in keys:
-            spark.sparkContext.setJobDescription(f"qprof:{k}")
-            t0 = time.time()
-            df = qs[k](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples[k].append(round(time.time() - t0, 3))
+            r = runner.run(spark, qs[k], sf_dir)
+            samples[k].append(round(r.seconds, 3))
             if explain_dir and p == 0:
                 os.makedirs(explain_dir, exist_ok=True)
                 with open(os.path.join(explain_dir, f"{k}.txt"), "w") as fh:
-                    fh.write(df._sc._jvm.PythonSQLUtils.explainString(
-                        df._jdf.queryExecution(), "formatted"))
-            release_caches()
-            spark.sparkContext.setJobDescription(None)
+                    fh.write(r.df._sc._jvm.PythonSQLUtils.explainString(
+                        r.df._jdf.queryExecution(), "formatted"))
     for k in keys:
         xs = samples[k]
         print(f"{min(xs):8.3f}  min | {sorted(xs)[len(xs)//2]:8.3f} med | "

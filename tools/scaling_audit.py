@@ -11,7 +11,7 @@ Usage: python tools/scaling_audit.py [--json OUT.json]
            [--only q1,q2,...] [passes]
 Each query runs `passes` times per SF (default 2), min taken, full
 materialization through the noop sink. --sfs overrides the default
-sf0.01/sf0.1 decade (e.g. the r15 third decade: sf0.1=/root/testdata/
+sf0.01/sf0.1 decade (e.g. the third decade: sf0.1=/root/testdata/
 sf0.1,sf1=scratch/sf1 — sf1 generated by tools/gen_sf.py because
 /root/testdata is read-only); --only restricts to a named subset (the
 heaviest queries, for the decade where the full sweep is expensive).
@@ -22,11 +22,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from glue_jobs_for_data_pipeline_spark.operators.dedup import release_caches  # noqa: E402
+from glue_jobs_for_data_pipeline_spark import lifecycle, runner  # noqa: E402
 from glue_jobs_for_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
@@ -55,13 +54,9 @@ def main() -> None:
     from bench import BENCH_QUERIES  # noqa: E402
     import __spark_entry__ as e  # noqa: E402
 
-    from glue_jobs_for_data_pipeline_spark.plans.staging import (  # noqa: E402
-        reset_stage_caches,
-    )
-
     spark = get_spark("scaling_audit")
     qs = e.queries()
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    runner.warm_up(spark, qs)
 
     names = [n for n in BENCH_QUERIES if only is None or n in only]
     if only:
@@ -72,19 +67,13 @@ def main() -> None:
         rec: dict = {}
         for key, sf_dir in ((k_small, d_small), (k_big, d_big)):
             samples = []
-            for p in range(passes):
+            for _ in range(passes):
                 # staged tables rebuild once per (query, sf) so the
                 # stage queries keep their real cost in every sample
-                reset_stage_caches()
-                t0 = time.time()
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                samples.append(round(time.time() - t0, 3))
-                release_caches()
+                lifecycle.reset_stages()
+                samples.append(round(runner.run(spark, qs[name], sf_dir).seconds, 3))
             rec[key] = min(samples)
-            rec[f"rows_{key}"] = qs[name](spark, sf_dir).count()
-            release_caches()
+            rec[f"rows_{key}"] = runner.run(spark, qs[name], sf_dir, "count").value
         rec["ratio"] = round(rec[k_big] / max(rec[k_small], 1e-9), 2)
         # Output-volume context: a time ratio tracking rows_ratio is
         # data-proportional work (honest linear scaling — e.g.
