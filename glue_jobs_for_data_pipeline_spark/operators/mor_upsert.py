@@ -1,9 +1,9 @@
-"""Merge-on-read UPSERT over the transactional catalog (r17).
+"""Merge-on-read UPSERT over the transactional catalog.
 
 The reference's UPDATE..WHERE (dynamic_upsert.py:110-127) and the
 repo's MERGE key (x_merge_into) rewrite the whole table version —
 correct, and absurd at 100 TB when a CDC batch touches 0.01% of rows.
-``operators/deletes.py`` (r16) already solved the DELETE half with a
+``operators/deletes.py`` solves the DELETE half with a
 keys-only deletion vector; this module completes the write side with
 the Hudi-MOR / Iceberg-v2 posture for UPDATE+INSERT:
 
@@ -32,21 +32,21 @@ merge instead of clobbering (proven in tests/test_mor_upsert.py).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from ..sources.txn import Catalog, ConcurrentCommitError
-from .deletes import _read_dv_asof, base_partition_cols, dv_table
-
-_DELTA_SUFFIX = "__delta"
-_COMMIT_RETRIES = 16
-
-
-def delta_table(name: str) -> str:
-    return name + _DELTA_SUFFIX
+from ..sources.txn import Catalog, CatalogTransaction, _validate_schema_ops
+from .mor_fold import (
+    DELTA,
+    DV,
+    _fold,
+    apply_delta,
+    delta_table,
+    drop_keys,
+    dv_table,
+    read_asof_or_none,
+)
 
 
 def _latest_per_key(df: DataFrame, key_cols: tuple[str, ...]) -> DataFrame:
@@ -79,65 +79,39 @@ def upsert_into(
     the existing delta; the base version directory is untouched. The
     write cost is O(touched keys), never O(table). A table with no
     committed base yet takes the batch AS the base (the first upsert
-    IS the initial load — without this the rows would commit into an
-    unreadable delta-only black hole; code-review r17). An upsert
-    RESURRECTS a previously deleted key: the same commit rewrites the
-    deletion vector as dv ANTI batch-keys — without this the
-    dv-applies-last read suppressed the fresh upsert and the logical
-    state became compaction-order-dependent (compact_deletes emptied
-    the dv and resurrected the stale row; compact_upserts-first
-    dropped the upsert forever; ADVICE r17). Returns the commit's own
-    manifest id."""
-    last: ConcurrentCommitError | None = None
-    for attempt in range(_COMMIT_RETRIES):
-        try:
-            with cat.transaction(branch=branch) as t:
-                batch = _latest_per_key(updates, key_cols)
-                # CHECK constraints declared on the BASE table bind the
-                # logical rows this upsert introduces, even though the
-                # physical write targets the __delta side table —
-                # without this the delta was a constraint bypass whose
-                # violating rows later wedged every compaction
-                # (code-review r18)
-                t._enforce_constraints(batch, name)
-                if name not in cat._manifest_tables(t._expected_head):
-                    # first write IS the initial load
-                    t.overwrite(batch, name)
-                else:
-                    try:
-                        existing = t.read_committed(spark, delta_table(name))
-                        # the batch wins over the stored delta for its
-                        # keys
-                        merged = batch.unionByName(
-                            existing.join(
-                                F.broadcast(batch.select(*key_cols)),
-                                on=list(key_cols),
-                                how="left_anti",
-                            )
-                        )
-                    except FileNotFoundError:
-                        merged = batch
-                    t.overwrite(merged, delta_table(name))
-                    # resurrect: drop the batch's keys from the dv in
-                    # the SAME atomic commit, so dv-applies-last never
-                    # hides a newer upsert (ADVICE r17)
-                    try:
-                        dv = t.read_committed(spark, dv_table(name))
-                        t.overwrite(
-                            dv.join(
-                                F.broadcast(batch.select(*key_cols)),
-                                on=list(key_cols),
-                                how="left_anti",
-                            ),
-                            dv_table(name),
-                        )
-                    except FileNotFoundError:
-                        pass
-            return t.committed_manifest
-        except ConcurrentCommitError as exc:
-            last = exc
-            time.sleep(0.02 * (attempt + 1))
-    raise last  # type: ignore[misc]
+    IS the initial load — otherwise the rows would commit into an
+    unreadable delta-only table). An upsert RESURRECTS a previously
+    deleted key: the same commit rewrites the deletion vector as dv
+    ANTI batch-keys — otherwise the dv-applies-last read would
+    suppress the fresh upsert and the logical state would depend on
+    compaction order (compact_deletes would empty the dv and resurrect
+    the stale row; compact_upserts first would drop the upsert
+    forever). Returns the commit's own manifest id."""
+
+    def body(t: CatalogTransaction) -> None:
+        batch = _latest_per_key(updates, key_cols)
+        # CHECK constraints declared on the BASE table bind the logical
+        # rows this upsert introduces, even though the physical write
+        # targets the __delta side table — otherwise the delta would
+        # bypass them and its violating rows would wedge every later
+        # compaction
+        t._enforce_constraints(batch, name)
+        if not t.has_committed(name):
+            t.overwrite(batch, name)  # first write IS the initial load
+            return
+        merged = batch
+        if t.has_committed(delta_table(name)):
+            # the batch wins over the stored delta for its keys
+            existing = t.read_committed(spark, delta_table(name))
+            merged = batch.unionByName(drop_keys(existing, batch, key_cols))
+        t.overwrite(merged, delta_table(name))
+        if t.has_committed(dv_table(name)):
+            # resurrect: drop the batch's keys from the dv in the same
+            # commit, so dv-applies-last never hides a newer upsert
+            dv = t.read_committed(spark, dv_table(name))
+            t.overwrite(drop_keys(dv, batch, key_cols), dv_table(name))
+
+    return cat.commit_retrying(body, branch)
 
 
 def read_upserted(
@@ -149,29 +123,20 @@ def read_upserted(
 ) -> DataFrame:
     """The table's LOGICAL state under merge-on-read writes:
     ((base ANTI delta-keys) ∪ delta) ANTI dv. Base, delta, and dv all
-    resolve from ONE pinned manifest snapshot (the deletes.py ADVICE
-    r16 lesson applied from birth), so a compaction or delete landing
-    mid-read can never mix generations. The dv applies LAST: a deleted
+    resolve from ONE pinned manifest snapshot (as in
+    deletes.read_merged), so a compaction or delete landing mid-read
+    can never mix generations. The dv applies LAST: a deleted
     key stays deleted even if a stale delta row for it survives until
     the next compaction."""
     h = cat.head(branch)
     if h is None:
         return cat.read(spark, name, branch)  # surfaces FileNotFoundError
     base = cat.read_asof(spark, name, h)
-    try:
-        delta = cat.read_asof(spark, delta_table(name), h)
-    except FileNotFoundError:
-        delta = None
+    delta = read_asof_or_none(cat, spark, delta_table(name), h)
     if delta is not None:
-        base = base.join(
-            F.broadcast(delta.select(*key_cols)),
-            on=list(key_cols),
-            how="left_anti",
-        ).unionByName(delta)
-    dv = _read_dv_asof(cat, spark, name, h)
-    if dv is not None:
-        base = base.join(F.broadcast(dv), on=list(key_cols), how="left_anti")
-    return base
+        base = apply_delta(base, delta, key_cols)
+    dv = read_asof_or_none(cat, spark, dv_table(name), h)
+    return base if dv is None else drop_keys(base, dv, key_cols)
 
 
 def compact_full(
@@ -193,62 +158,7 @@ def compact_full(
     ``n_files`` repartitions the rewrite (retention folds file-count
     debt in the same pass). Returns the commit's manifest id, or None
     when neither side table has rows AND no repartition was requested."""
-    last: ConcurrentCommitError | None = None
-    for attempt in range(_COMMIT_RETRIES):
-        try:
-            with cat.transaction(branch=branch) as t:
-
-                def _side(side_name: str) -> DataFrame | None:
-                    # footer-count fast path for the emptiness test
-                    # (no Spark job; falls back to a scan — r19)
-                    try:
-                        df = t.read_committed(spark, side_name)
-                        nrows = t.committed_rows(side_name)
-                    except FileNotFoundError:
-                        return None
-                    if nrows == 0 or (nrows is None and df.isEmpty()):
-                        return None
-                    return df
-
-                delta = _side(delta_table(name))
-                dv = _side(dv_table(name))
-                if delta is None and dv is None and n_files is None:
-                    return None
-                from .positional_deletes import (
-                    guard_no_pending_positional_deletes,
-                )
-
-                guard_no_pending_positional_deletes(
-                    cat, spark, name, t._expected_head
-                )
-                merged = t.read_committed(spark, name)
-                if delta is not None:
-                    merged = merged.join(
-                        F.broadcast(delta.select(*key_cols)),
-                        on=list(key_cols),
-                        how="left_anti",
-                    ).unionByName(delta)
-                if dv is not None:
-                    merged = merged.join(
-                        F.broadcast(dv.select(*key_cols)),
-                        on=list(key_cols),
-                        how="left_anti",
-                    )
-                if n_files is not None:
-                    merged = merged.repartition(max(1, n_files))
-                t.overwrite(
-                    merged, name,
-                    base_partition_cols(cat, name, t._expected_head),
-                )
-                if delta is not None:
-                    t.truncate(delta, delta_table(name))
-                if dv is not None:
-                    t.truncate(dv, dv_table(name))
-            return t.committed_manifest
-        except ConcurrentCommitError as exc:
-            last = exc
-            time.sleep(0.02 * (attempt + 1))
-    raise last  # type: ignore[misc]
+    return _fold(cat, spark, name, (DELTA, DV), key_cols, branch, n_files)
 
 
 def evolve_upserted_schema(
@@ -259,15 +169,13 @@ def evolve_upserted_schema(
 ) -> int:
     """Schema-evolve a merge-on-read table: record the op list for the
     BASE and — when they exist in the current manifest — its ``__delta``
-    and ``__dv`` side tables in ONE metadata commit (ADVICE r17:
+    and ``__dv`` side tables in ONE metadata commit.
     ``Catalog.evolve_schema`` records ops per table name, so evolving
-    only the base left a pre-evolution delta that made
-    ``read_upserted``'s unionByName fail loudly). Replay is idempotent
+    only the base would leave a pre-evolution delta that makes
+    ``read_upserted``'s unionByName fail. Replay is idempotent
     per file generation, so a keys-only dv that lacks the op's column
     is unaffected by renames of other columns and simply gains nothing
     from drops of columns it never had."""
-    from ..sources.txn import _validate_schema_ops
-
     _validate_schema_ops(ops)
     if not ops:
         raise ValueError("evolve_upserted_schema: empty op list")
@@ -294,44 +202,5 @@ def compact_upserts(
     racing upsert makes this commit lose its CAS and retry with the
     larger delta, so nothing is ever silently dropped. Returns this
     compaction's own manifest id, or None when there was no delta to
-    fold (no commit happened — a head re-read here could attribute a
-    racing writer's manifest to this no-op; code-review r17)."""
-    last: ConcurrentCommitError | None = None
-    for attempt in range(_COMMIT_RETRIES):
-        try:
-            with cat.transaction(branch=branch) as t:
-                try:
-                    delta = t.read_committed(spark, delta_table(name))
-                    nrows = t.committed_rows(delta_table(name))
-                except FileNotFoundError:
-                    return None
-                if nrows == 0 or (nrows is None and delta.isEmpty()):
-                    # nothing to fold — never rewrite the base for an
-                    # already-compacted delta (r18)
-                    return None
-                from .positional_deletes import (
-                    guard_no_pending_positional_deletes,
-                )
-
-                guard_no_pending_positional_deletes(
-                    cat, spark, name, t._expected_head
-                )
-                merged = (
-                    t.read_committed(spark, name)
-                    .join(
-                        F.broadcast(delta.select(*key_cols)),
-                        on=list(key_cols),
-                        how="left_anti",
-                    )
-                    .unionByName(delta)
-                )
-                t.overwrite(
-                    merged, name,
-                    base_partition_cols(cat, name, t._expected_head),
-                )
-                t.truncate(delta, delta_table(name))
-            return t.committed_manifest
-        except ConcurrentCommitError as exc:
-            last = exc
-            time.sleep(0.02 * (attempt + 1))
-    raise last  # type: ignore[misc]
+    fold (no commit happened)."""
+    return _fold(cat, spark, name, (DELTA,), key_cols, branch)

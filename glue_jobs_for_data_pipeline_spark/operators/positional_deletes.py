@@ -1,6 +1,6 @@
-"""POSITION-BASED merge-on-read deletes (r18).
+"""POSITION-BASED merge-on-read deletes.
 
-``operators/deletes.py`` (r16) records deleted KEYS — the Iceberg v2
+``operators/deletes.py`` records deleted KEYS — the Iceberg v2
 *equality delete* / Delta deletion-vector-by-key posture. This module
 adds the second Iceberg v2 fidelity level: POSITIONAL delete files,
 which record ``(data_file, row_position)`` pairs. The distinction
@@ -40,110 +40,25 @@ CAS-retry on racing writers.
 
 Reference parity note: the reference's only delete surface is
 UPDATE/DELETE-by-predicate in Redshift (dynamic_upsert.py:110-127);
-positional deletes are the scale-path extension the judge grades as
-first-class (VERDICT r17 task #2).
+positional deletes are the scale-path extension of it.
 """
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.txn import (
-    Catalog,
-    ConcurrentCommitError,
-    _apply_schema_ops,
-    _detect_partition_cols,
-    _read_version_df,
-    _version_dir,
+from ..sources.txn import Catalog, CatalogTransaction, pdv_table
+from ..sources.txn import has_pending_positional_deletes  # noqa: F401 re-export
+from .mor_fold import (
+    _FILE_COL,
+    _POS_COL,
+    PDV,
+    _fold,
+    drop_positions,
+    read_asof_or_none,
+    scan_with_pos,
 )
-
-_PDV_SUFFIX = "__pdv"
-_COMMIT_RETRIES = 16
-_FILE_COL = "_pd_file"
-_POS_COL = "_pd_pos"
-
-
-def pdv_table(name: str) -> str:
-    return name + _PDV_SUFFIX
-
-
-def has_pending_positional_deletes(
-    cat: Catalog, spark: SparkSession, name: str, manifest: int | None
-) -> bool:
-    """True iff ``name`` has a NON-EMPTY positional-delete table in
-    ``manifest``. Every base-rewrite primitive consults this and
-    refuses while it holds (code-review r18): a rewrite mints fresh
-    part files, the stale (file,pos) anchors then match nothing, and
-    the deletes silently resurrect — fold them first
-    (compact_positional_deletes)."""
-    versions = cat._manifest_tables(manifest)
-    if pdv_table(name) not in versions:
-        return False
-    from ..sources.txn import version_rows
-
-    # footer-count fast path — this guard runs inside EVERY rewrite
-    # primitive, so a Spark isEmpty job here taxed every compaction
-    # whether or not positional deletes were in play (r19)
-    nrows = version_rows(
-        cat.table_dir(pdv_table(name)), versions[pdv_table(name)]
-    )
-    if nrows is not None:
-        return nrows > 0
-    vdir = _version_dir(
-        cat.table_dir(pdv_table(name)), versions[pdv_table(name)]
-    )
-    return not _read_version_df(spark, vdir).isEmpty()
-
-
-def guard_no_pending_positional_deletes(
-    cat: Catalog, spark: SparkSession, name: str, manifest: int | None
-) -> None:
-    if has_pending_positional_deletes(cat, spark, name, manifest):
-        raise ValueError(
-            f"table {name!r} has pending positional deletes; "
-            "compact_positional_deletes() before rewriting the base "
-            "(a rewrite strands (file,pos) anchors and resurrects rows)"
-        )
-
-
-def _scan_with_pos(
-    cat: Catalog, spark: SparkSession, name: str, manifest: int
-) -> DataFrame:
-    """Scan ``name`` at ``manifest`` with two extra columns: the data
-    file's path RELATIVE to its version directory (stable across
-    hard-linked appends) and the row index within the file. Schema-
-    evolution ops replay AFTER the position columns attach — positions
-    are physical, the ops are logical."""
-    versions = cat._manifest_tables(manifest)
-    if name not in versions:
-        raise FileNotFoundError(f"table {name!r} not in manifest m={manifest}")
-    vdir = _version_dir(cat.table_dir(name), versions[name])
-    # one regex anchored on THE SCAN'S OWN ABSOLUTE VERSION DIRECTORY,
-    # quoted literally (\Q...\E), so the anchor is exactly the path
-    # after ".../<table>/v=<N>/" whatever the surrounding layout.
-    # History: the r18 non-greedy ``/v=\\d+/`` matched the FIRST such
-    # segment (a warehouse root like .../v=3/wh poisoned every
-    # anchor); the r19 greedy ``^.*/v=<N>/`` matched the LAST, which a
-    # partition directory literally named v=<same N> INSIDE the
-    # version dir would over-strip (ADVICE r19). Matching the known
-    # absolute vdir has neither failure mode: the absolute prefix
-    # cannot recur inside the relative remainder (partition values
-    # escape '/', and part-file names embed a writer UUID).
-    df = _read_version_df(spark, vdir).withColumns(
-        {
-            _FILE_COL: F.regexp_replace(
-                F.col("_metadata.file_path"),
-                rf"^.*\Q{vdir}\E/",
-                "",
-            ),
-            _POS_COL: F.col("_metadata.row_index"),
-        }
-    )
-    ops = cat._manifest_schemas(manifest).get(name)
-    return _apply_schema_ops(df, ops) if ops else df
 
 
 def delete_where_positional(
@@ -159,31 +74,19 @@ def delete_where_positional(
     and deletes exactly the matching physical rows (duplicates
     included, one anchor each). Returns the commit's own manifest
     id. CAS-retries like deletes.delete_where."""
-    last: ConcurrentCommitError | None = None
-    for attempt in range(_COMMIT_RETRIES):
-        try:
-            with cat.transaction(branch=branch) as t:
-                hits = (
-                    _scan_with_pos(cat, spark, name, t._expected_head)
-                    .filter(predicate)
-                    .select(
-                        F.col(_FILE_COL).alias("file"),
-                        F.col(_POS_COL).alias("pos"),
-                    )
-                )
-                try:
-                    existing = t.read_committed(spark, pdv_table(name))
-                    hits = hits.unionByName(
-                        existing.select("file", "pos")
-                    ).distinct()
-                except FileNotFoundError:
-                    pass
-                t.overwrite(hits, pdv_table(name))
-            return t.committed_manifest
-        except ConcurrentCommitError as exc:
-            last = exc
-            time.sleep(0.02 * (attempt + 1))
-    raise last  # type: ignore[misc]
+
+    def body(t: CatalogTransaction) -> None:
+        hits = (
+            scan_with_pos(cat, spark, name, t._expected_head)
+            .filter(predicate)
+            .select(F.col(_FILE_COL).alias("file"), F.col(_POS_COL).alias("pos"))
+        )
+        if t.has_committed(pdv_table(name)):
+            existing = t.read_committed(spark, pdv_table(name))
+            hits = hits.unionByName(existing.select("file", "pos")).distinct()
+        t.overwrite(hits, pdv_table(name))
+
+    return cat.commit_retrying(body, branch)
 
 
 def read_positional(
@@ -195,28 +98,16 @@ def read_positional(
     """The table's LOGICAL state: base scan minus positionally deleted
     rows, applied as a broadcast LEFT ANTI join on (file, pos) — the
     pdv is tiny by contract, the base side never shuffles. Base and
-    pdv resolve from ONE pinned manifest snapshot (the r16/r17
-    read-atomicity lesson), so a compaction landing mid-read can never
-    mix generations."""
+    pdv resolve from ONE pinned manifest snapshot, so a compaction
+    landing mid-read can never mix generations."""
     h = cat.head(branch)
     if h is None:
         return cat.read(spark, name, branch)  # surfaces FileNotFoundError
-    base = _scan_with_pos(cat, spark, name, h)
-    out_cols = [c for c in base.columns if c not in (_FILE_COL, _POS_COL)]
-    try:
-        pdv = cat.read_asof(spark, pdv_table(name), h)
-    except FileNotFoundError:
-        return base.select(*out_cols)
-    return base.join(
-        F.broadcast(
-            pdv.select(
-                F.col("file").alias(_FILE_COL),
-                F.col("pos").alias(_POS_COL),
-            )
-        ),
-        on=[_FILE_COL, _POS_COL],
-        how="left_anti",
-    ).select(*out_cols)
+    base = scan_with_pos(cat, spark, name, h)
+    pdv = read_asof_or_none(cat, spark, pdv_table(name), h)
+    if pdv is None:
+        return base.drop(_FILE_COL, _POS_COL)
+    return drop_positions(base, pdv)
 
 
 def compact_positional_deletes(
@@ -236,40 +127,4 @@ def compact_positional_deletes(
     not a no-op). A racing delete batch makes this commit lose its CAS
     and retry with the larger pdv, so nothing is silently
     resurrected."""
-    last: ConcurrentCommitError | None = None
-    for attempt in range(_COMMIT_RETRIES):
-        try:
-            with cat.transaction(branch=branch) as t:
-                try:
-                    pdv = t.read_committed(spark, pdv_table(name))
-                    nrows = t.committed_rows(pdv_table(name))
-                except FileNotFoundError:
-                    return None
-                if nrows == 0 or (nrows is None and pdv.isEmpty()):
-                    return None
-                base = _scan_with_pos(cat, spark, name, t._expected_head)
-                out_cols = [
-                    c for c in base.columns
-                    if c not in (_FILE_COL, _POS_COL)
-                ]
-                merged = base.join(
-                    F.broadcast(
-                        pdv.select(
-                            F.col("file").alias(_FILE_COL),
-                            F.col("pos").alias(_POS_COL),
-                        )
-                    ),
-                    on=[_FILE_COL, _POS_COL],
-                    how="left_anti",
-                ).select(*out_cols)
-                versions = cat._manifest_tables(t._expected_head)
-                part_by = _detect_partition_cols(
-                    _version_dir(cat.table_dir(name), versions[name])
-                )
-                t.overwrite(merged, name, part_by)
-                t.truncate(pdv, pdv_table(name))
-            return t.committed_manifest
-        except ConcurrentCommitError as exc:
-            last = exc
-            time.sleep(0.02 * (attempt + 1))
-    raise last  # type: ignore[misc]
+    return _fold(cat, spark, name, (PDV,), branch=branch)

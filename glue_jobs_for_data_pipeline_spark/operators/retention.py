@@ -1,5 +1,4 @@
-"""Size-triggered RETENTION/compaction policy for merge-on-read chains
-(r18 — VERDICT r17 task #3).
+"""Size-triggered RETENTION/compaction policy for merge-on-read chains.
 
 Every merge-on-read structure in this engine trades write cost for
 read-side debt: upserts accumulate in ``T__delta``, deletes in
@@ -38,26 +37,30 @@ Reads are IDENTICAL before and after every step (each fold's own
 invariant, proven by the compaction primitives' tests and the
 ``x_storage_retention_policy`` oracle key); the policy only changes
 the physical layout. Safe to run from a cron/maintenance thread while
-writers stream: every fold commits through the CAS-retry bracket, so
-racing batches serialize instead of losing updates.
+writers stream: every fold commits through ``Catalog.commit_retrying``,
+so racing batches serialize instead of losing updates.
 """
 
 from __future__ import annotations
 
+import math
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-import time
-
-from ..sources.txn import Catalog, ConcurrentCommitError, _version_dir
-from . import deletes as _deletes
+from ..sources.txn import (
+    Catalog,
+    CatalogTransaction,
+    _version_dir,
+    has_pending_positional_deletes,
+    pdv_table,
+)
+from ..streaming import exactly_once as _xo
 from . import mor_upsert as _mor
 from . import positional_deletes as _pdel
-
-_COMMIT_RETRIES = 16
+from .mor_fold import delta_table, dv_table
 
 
 @dataclass(frozen=True)
@@ -79,8 +82,7 @@ class RetentionPolicy:
 def table_stats(cat: Catalog, name: str, branch: str = "main") -> dict | None:
     """(files, bytes) of ``name``'s committed version directory on
     ``branch`` — pure filesystem metadata, no Spark scan. None when
-    not committed. (Branch-aware since r18 code-review: main-only
-    stats made enforce_retention's branch parameter a no-op.)"""
+    not committed."""
     versions = cat.manifest(branch)
     if name not in versions:
         return None
@@ -125,64 +127,42 @@ def fold_ledger(
     app_id carrying the MAX batch id (the complete replay test for
     monotonic Structured Streaming batch ids — the Delta txn-action
     retention). Returns the fold's manifest id, or None when the
-    ledger is absent or already minimal."""
-    from ..streaming.exactly_once import (
-        _LEDGER_SCHEMA,
-        LEDGER_GUARD_ROWS,
-        ledger_table,
-    )
+    ledger is absent or already minimal. A streaming batch landing
+    mid-fold makes the commit rerun on the new ledger, so the
+    maintenance pass serializes with live writers."""
+    lname = _xo.ledger_table(name)
 
-    lname = ledger_table(name)
-    last: ConcurrentCommitError | None = None
-    for attempt in range(_COMMIT_RETRIES):
-        try:
-            with cat.transaction(branch=branch) as t:
-                # the ledger is metadata-sized by contract (one row per
-                # micro-batch per app) — fold it driver-side with ZERO
-                # Spark jobs (direct parquet read + driver-written
-                # stage, r20; r19 had already collapsed the old three
-                # jobs to one read). A ledger past the growth guard —
-                # the very debt this fold repairs when the contract
-                # was ignored — folds through the distributed groupBy
-                # instead of materializing on the driver.
-                try:
-                    vals = t.committed_values(
-                        lname, max_rows=LEDGER_GUARD_ROWS
-                    )
-                except FileNotFoundError:
-                    return None
-                if vals is not None:
-                    folded: dict[str, int] = {}
-                    for v in vals:
-                        a, b = v["app_id"], int(v["batch_id"])
-                        folded[a] = max(folded.get(a, b), b)
-                    if len(vals) == len(folded):
-                        return None  # already one row per app
-                    t.overwrite_small(
-                        spark, sorted(folded.items()), _LEDGER_SCHEMA,
-                        lname,
-                    )
-                else:
-                    led = t.read_committed(spark, lname)
-                    napps, nrows = led.agg(
-                        F.countDistinct("app_id"), F.count(F.lit(1))
-                    ).first()
-                    if nrows == napps:
-                        return None  # already one row per app
-                    t.overwrite(
-                        led.groupBy("app_id").agg(
-                            F.max("batch_id").alias("batch_id")
-                        ),
-                        lname,
-                    )
-            return t.committed_manifest
-        except ConcurrentCommitError as exc:
-            # a streaming batch landed mid-fold: re-read, retry — the
-            # maintenance pass must serialize with live writers, not
-            # crash the cron job (code-review r18)
-            last = exc
-            time.sleep(0.02 * (attempt + 1))
-    raise last  # type: ignore[misc]
+    def body(t: CatalogTransaction) -> None:
+        # the ledger is metadata-sized by contract (one row per
+        # micro-batch per app), so it folds driver-side with no Spark
+        # job. A ledger past the growth guard — the very debt this
+        # fold repairs when the contract was ignored — folds through
+        # the distributed groupBy instead of materializing on the
+        # driver.
+        if not t.has_committed(lname):
+            return
+        vals = t.committed_values(lname, max_rows=_xo.LEDGER_GUARD_ROWS)
+        if vals is not None:
+            folded: dict[str, int] = {}
+            for v in vals:
+                a, b = v["app_id"], int(v["batch_id"])
+                folded[a] = max(folded.get(a, b), b)
+            if len(vals) > len(folded):
+                t.overwrite_small(
+                    spark, sorted(folded.items()), _xo._LEDGER_SCHEMA, lname
+                )
+            return
+        led = t.read_committed(spark, lname)
+        napps, nrows = led.agg(
+            F.countDistinct("app_id"), F.count(F.lit(1))
+        ).first()
+        if nrows > napps:
+            t.overwrite(
+                led.groupBy("app_id").agg(F.max("batch_id").alias("batch_id")),
+                lname,
+            )
+
+    return cat.commit_retrying(body, branch)
 
 
 def enforce_retention(
@@ -209,21 +189,19 @@ def enforce_retention(
         return actions
 
     # Decide what is due FIRST — the pdv fold must run before ANY
-    # rewrite-shaped fold, not only before file compaction
-    # (code-review r18: a delta-only fold with a sub-threshold pdv
-    # stranded its anchors and resurrected the deleted rows).
+    # rewrite-shaped fold, not only before file compaction: a
+    # delta-only fold with a sub-threshold pdv would strand its anchors
+    # and resurrect the deleted rows.
     delta_due = _side_due(
-        base, table_stats(cat, _mor.delta_table(name), branch), policy
+        base, table_stats(cat, delta_table(name), branch), policy
     )
-    dv_due = _side_due(
-        base, table_stats(cat, _deletes.dv_table(name), branch), policy
-    )
+    dv_due = _side_due(base, table_stats(cat, dv_table(name), branch), policy)
     files_due = (
         policy.max_base_files is not None
         and base["files"] > policy.max_base_files
     )
-    pdv_stats = table_stats(cat, _pdel.pdv_table(name), branch)
-    pdv_pending = pdv_stats is not None and _pdel.has_pending_positional_deletes(
+    pdv_stats = table_stats(cat, pdv_table(name), branch)
+    pdv_pending = pdv_stats is not None and has_pending_positional_deletes(
         cat, spark, name, cat.head(branch)
     )
     pdv_due = _side_due(base, pdv_stats, policy)
@@ -238,35 +216,34 @@ def enforce_retention(
         base = table_stats(cat, name, branch)
 
     # 2) streaming ledger (metadata-only, independent of the rewrite)
-    if policy.max_ledger_rows_per_app is not None:
-        from ..streaming.exactly_once import LEDGER_GUARD_ROWS, ledger_table
-
-        lstats = table_stats(cat, ledger_table(name), branch)
-        if lstats is not None:
-            try:
-                # due-test from a driver-side parquet read when the
-                # ledger is metadata-sized (no Spark job, r20); the
-                # Spark aggregate only runs past the growth guard —
-                # where the fold is certainly due anyway
-                vals = cat.table_values(
-                    ledger_table(name), branch, max_rows=LEDGER_GUARD_ROWS
+    lname = _xo.ledger_table(name)
+    if (
+        policy.max_ledger_rows_per_app is not None
+        and table_stats(cat, lname, branch) is not None
+    ):
+        try:
+            # due-test from a driver-side parquet read when the ledger
+            # is metadata-sized (no Spark job); the Spark aggregate only
+            # runs past the growth guard, where the fold is certainly
+            # due anyway
+            vals = cat.table_values(
+                lname, branch, max_rows=_xo.LEDGER_GUARD_ROWS
+            )
+            if vals is not None:
+                napps = len({v["app_id"] for v in vals})
+                nrows = len(vals)
+            else:
+                napps, nrows = (
+                    cat.read(spark, lname, branch)
+                    .agg(F.countDistinct("app_id"), F.count(F.lit(1)))
+                    .first()
                 )
-                if vals is not None:
-                    napps = len({v["app_id"] for v in vals})
-                    nrows = len(vals)
-                else:
-                    ledger = cat.read(spark, ledger_table(name), branch)
-                    napps, nrows = (
-                        ledger.agg(
-                            F.countDistinct("app_id"), F.count(F.lit(1))
-                        ).first()
-                    )
-                if nrows > policy.max_ledger_rows_per_app * max(napps, 1):
-                    actions["fold_ledger"] = (
-                        fold_ledger(cat, spark, name, branch) is not None
-                    )
-            except FileNotFoundError:
-                pass
+            if nrows > policy.max_ledger_rows_per_app * max(napps, 1):
+                actions["fold_ledger"] = (
+                    fold_ledger(cat, spark, name, branch) is not None
+                )
+        except FileNotFoundError:
+            pass
 
     # 3) ONE combined rewrite for everything rewrite-shaped: the upsert
     # delta fold, the key-dv fold, and the file-count compaction all
@@ -282,22 +259,18 @@ def enforce_retention(
             )
         n_files = None
         if files_due:
-            import math
-
             n_files = max(
                 1, math.ceil(base["bytes"] / policy.target_file_bytes)
             )
         # A positional delete can land BETWEEN the pdv fold above and
         # this rewrite (they are separate transactions); the rewrite
-        # primitives then refuse via guard_no_pending_positional_
-        # deletes. Re-fold the fresh pdv and retry, bounded — the
+        # then refuses. Re-fold the fresh pdv and retry, bounded — the
         # maintenance pass must serialize with live writers, not crash
-        # the cron job (ADVICE r18).
+        # the cron job. Each rewrite retries its own lost CAS races.
         _PDV_RACE_RETRIES = 4
-        if key_cols:
-            ran = False
-            for pdv_attempt in range(_PDV_RACE_RETRIES):
-                try:
+        for pdv_attempt in range(_PDV_RACE_RETRIES):
+            try:
+                if key_cols:
                     ran = (
                         _mor.compact_full(
                             cat, spark, name, key_cols, branch,
@@ -305,24 +278,7 @@ def enforce_retention(
                         )
                         is not None
                     )
-                    break
-                except ValueError as exc:
-                    if "pending positional deletes" not in str(exc) or (
-                        pdv_attempt == _PDV_RACE_RETRIES - 1
-                    ):
-                        raise
-                    if (
-                        _pdel.compact_positional_deletes(
-                            cat, spark, name, branch
-                        )
-                        is not None
-                    ):
-                        actions["fold_positional_deletes"] = True
-        else:  # files_due only, keyless table: plain sized rewrite
-            last: Exception | None = None
-            ran = False
-            for attempt in range(_COMMIT_RETRIES):
-                try:
+                else:  # files_due only, keyless table: plain sized rewrite
                     cat.compact_table(
                         spark,
                         name,
@@ -330,23 +286,17 @@ def enforce_retention(
                         branch=branch,
                     )
                     ran = True
-                    break
-                except ConcurrentCommitError as exc:
-                    last = exc
-                    time.sleep(0.02 * (attempt + 1))
-                except ValueError as exc:
-                    if "pending positional deletes" not in str(exc):
-                        raise
-                    last = exc
-                    if (
-                        _pdel.compact_positional_deletes(
-                            cat, spark, name, branch
-                        )
-                        is not None
-                    ):
-                        actions["fold_positional_deletes"] = True
-            if not ran:
-                raise last  # type: ignore[misc]
+                break
+            except ValueError as exc:
+                if "pending positional deletes" not in str(exc) or (
+                    pdv_attempt == _PDV_RACE_RETRIES - 1
+                ):
+                    raise
+                if (
+                    _pdel.compact_positional_deletes(cat, spark, name, branch)
+                    is not None
+                ):
+                    actions["fold_positional_deletes"] = True
         actions["fold_upsert_delta"] = delta_due and ran
         actions["fold_deletion_vector"] = dv_due and ran
         actions["compact_base_files"] = files_due and ran

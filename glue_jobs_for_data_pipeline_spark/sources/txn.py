@@ -22,11 +22,13 @@ crashed writer left behind.
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import time
 import uuid
 from contextlib import contextmanager
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -547,6 +549,43 @@ def _detect_partition_cols(vdir: str) -> tuple[str, ...]:
     return tuple(cols)
 
 
+def pdv_table(name: str) -> str:
+    """The positional-delete side table of ``name``. The catalog owns
+    this side-table name because its own rewrites refuse while the
+    table has rows (operators/mor_fold.py names the others)."""
+    return name + "__pdv"
+
+
+def has_pending_positional_deletes(
+    cat: "Catalog", spark: SparkSession, name: str, manifest: int | None
+) -> bool:
+    """True iff ``name`` has a NON-EMPTY positional-delete table in
+    ``manifest``. Footer count first (no Spark job; every base rewrite
+    runs this check), a Spark scan when footers cannot answer."""
+    versions = cat._manifest_tables(manifest)
+    if pdv_table(name) not in versions:
+        return False
+    tdir, version = cat.table_dir(pdv_table(name)), versions[pdv_table(name)]
+    nrows = version_rows(tdir, version)
+    if nrows is not None:
+        return nrows > 0
+    return not _read_version_df(spark, _version_dir(tdir, version)).isEmpty()
+
+
+def guard_no_pending_positional_deletes(
+    cat: "Catalog", spark: SparkSession, name: str, manifest: int | None
+) -> None:
+    """Refuse a base rewrite while positional deletes are pending: the
+    rewrite mints fresh part files, the stale (file,pos) anchors then
+    match nothing and the deleted rows come back. Fold them first."""
+    if has_pending_positional_deletes(cat, spark, name, manifest):
+        raise ValueError(
+            f"table {name!r} has pending positional deletes; "
+            "compact_positional_deletes() before rewriting the base "
+            "(a rewrite strands (file,pos) anchors and resurrects rows)"
+        )
+
+
 _MANIFEST_DIR = "_MANIFEST"
 _HEAD = "_HEAD"
 _REFS_DIR = "_REFS"
@@ -561,6 +600,10 @@ _CLAIM_MIN_AGE_SECONDS = 300.0
 # how long a commit waits for the catalog lock before raising the
 # retryable ConcurrentCommitError (see Catalog._locked)
 _LOCK_WAIT_SECONDS = 2.0
+# attempts of Catalog.commit_retrying: under N-way same-table contention
+# the last writer needs ~N attempts, and a commit-lock collision (not
+# just a moved ref) also costs one
+_COMMIT_RETRIES = 16
 
 
 # distinguishes "no CAS check requested" from "expected the catalog to
@@ -1603,6 +1646,34 @@ class Catalog:
     def transaction(self, branch: str = "main") -> "CatalogTransaction":
         return CatalogTransaction(self, branch)
 
+    def commit_retrying(
+        self,
+        body: Callable[["CatalogTransaction"], None],
+        branch: str = "main",
+    ) -> int | None:
+        """Run ``body(t)`` in a fresh transaction on ``branch`` and
+        commit what it staged. A commit that loses the compare-and-swap
+        (the ref moved, or the commit lock was contended) rolls back and
+        reruns ``body`` on a new snapshot, with linear backoff, up to
+        _COMMIT_RETRIES attempts; then the last ConcurrentCommitError is
+        raised. Any other exception propagates on the attempt that
+        raised it. ``body`` must read through ``t`` (read_committed,
+        committed_rows, ``t._expected_head``), so what it stages derives
+        from the snapshot its commit is checked against. Returns the
+        manifest this commit published — never a head re-read, which a
+        racing writer could have moved past — or None when ``body``
+        staged nothing."""
+        last: ConcurrentCommitError | None = None
+        for attempt in range(_COMMIT_RETRIES):
+            try:
+                with self.transaction(branch) as t:
+                    body(t)
+                return t.committed_manifest
+            except ConcurrentCommitError as exc:
+                last = exc
+                time.sleep(0.02 * (attempt + 1))
+        raise last  # type: ignore[misc]
+
     def snapshot_diff(
         self,
         spark: SparkSession,
@@ -1665,62 +1736,40 @@ class Catalog:
         columns are detected from the ``col=value`` directory chain when
         ``partition_by`` is None, and the rewrite shuffles on them
         before ``partitionBy`` so pruning survives; pass
-        ``partition_by=()`` to flatten. Compacts ``branch``'s table.
+        ``partition_by=()`` to flatten. Compacts ``branch``'s table,
+        reading it through the commit's own snapshot: a commit landing
+        meanwhile makes this one rerun instead of overwriting it.
         Refuses while positional deletes are pending — the rewrite
         would strand their (file,pos) anchors."""
-        import math
-
-        head = self.head(branch)
-        versions = self._manifest_tables(head)
-        if name not in versions:
-            raise FileNotFoundError(f"table {name!r} not in committed manifest")
-        if self._pdv_nonempty(spark, name, head):
-            raise ValueError(
-                f"table {name!r} has pending positional deletes; "
-                "compact_positional_deletes() before rewriting "
-                "(a rewrite strands (file,pos) anchors)"
+        def body(t: CatalogTransaction) -> None:
+            versions = self._manifest_tables(t._expected_head)
+            if name not in versions:
+                raise FileNotFoundError(
+                    f"table {name!r} not in committed manifest"
+                )
+            guard_no_pending_positional_deletes(
+                self, spark, name, t._expected_head
             )
-        vdir = _version_dir(self.table_dir(name), versions[name])
-        if partition_by is None:
-            partition_by = _detect_partition_cols(vdir)
-        total = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(vdir)
-            for f in files
-            if f.endswith(".parquet")
-        )
-        n_files = max(1, math.ceil(total / target_file_bytes))
-        # read CONFORMED (schema ops applied): the rewrite's commit
-        # resets the table's op list, so the compacted files must
-        # already embody the current schema — compacting raw would
-        # silently undo every pending evolution (code-review r17)
-        df = self._read_table(spark, name, head, f"branch {branch!r}")
-        compacted = (
-            df.repartition(n_files, *partition_by)
-            if partition_by
-            else df.repartition(n_files)
-        )
-        with self.transaction(branch=branch) as txn:
-            txn.overwrite(compacted, name, partition_by or ())
-        # this commit's own manifest id, never a racy head re-read
-        return txn.committed_manifest
+            vdir = _version_dir(self.table_dir(name), versions[name])
+            parts = (
+                _detect_partition_cols(vdir)
+                if partition_by is None
+                else partition_by
+            )
+            total = sum(
+                os.path.getsize(os.path.join(root, f))
+                for root, _, files in os.walk(vdir)
+                for f in files
+                if f.endswith(".parquet")
+            )
+            n_files = max(1, math.ceil(total / target_file_bytes))
+            # read CONFORMED (schema ops applied): the rewrite's commit
+            # resets the table's op list, so the compacted files must
+            # already embody the current schema
+            df = t.read_committed(spark, name)
+            t.overwrite(df.repartition(n_files, *parts), name, parts)
 
-    def _pdv_nonempty(
-        self, spark: SparkSession, name: str, manifest: int | None
-    ) -> bool:
-        """Non-empty positional-delete side table check shared by the
-        rewrite primitives (the ``__pdv`` naming is the
-        operators/positional_deletes.py convention)."""
-        versions = self._manifest_tables(manifest)
-        pdv_name = name + "__pdv"
-        if pdv_name not in versions:
-            return False
-        # footer-count fast path, Spark scan fallback (r19)
-        nrows = version_rows(self.table_dir(pdv_name), versions[pdv_name])
-        if nrows is not None:
-            return nrows > 0
-        pdv_dir = _version_dir(self.table_dir(pdv_name), versions[pdv_name])
-        return not _read_version_df(spark, pdv_dir).isEmpty()
+        return self.commit_retrying(body, branch)
 
     def compact_partitions(
         self,
@@ -1730,7 +1779,7 @@ class Catalog:
         target_file_bytes: int = 128 << 20,
         branch: str = "main",
     ) -> int | None:
-        """PARTITION-SCOPED file compaction (r18 — the Iceberg
+        """PARTITION-SCOPED file compaction (the Iceberg
         rewrite_data_files / Delta OPTIMIZE WHERE shape, and the only
         compaction that makes sense at 100 TB): rewrite ONLY the
         partitions whose small-file count exceeds the threshold;
@@ -1752,18 +1801,11 @@ class Catalog:
         Returns the commit's manifest id, or None when no partition is
         over the threshold (nothing staged, nothing published). CAS +
         lock semantics are the standard commit bracket's."""
-        import math
-
         head = self.head(branch)
         versions = self._manifest_tables(head)
         if name not in versions:
             raise FileNotFoundError(f"table {name!r} not in branch {branch!r}")
-        if self._pdv_nonempty(spark, name, head):
-            raise ValueError(
-                f"table {name!r} has pending positional deletes; "
-                "compact_positional_deletes() before rewriting "
-                "partitions (a rewrite strands (file,pos) anchors)"
-            )
+        guard_no_pending_positional_deletes(self, spark, name, head)
         table_dir = self.table_dir(name)
         vdir = _version_dir(table_dir, versions[name])
         part_cols = _detect_partition_cols(vdir)
@@ -1793,7 +1835,7 @@ class Catalog:
         try:
             # healthy partitions: hard-link, zero data moved (shared
             # helper with stage_version_append, incl. its
-            # never-clobber guard — code-review r18)
+            # never-clobber guard)
             os.makedirs(new_vdir, exist_ok=True)
             for rel in leaves:
                 if rel in offender_set:

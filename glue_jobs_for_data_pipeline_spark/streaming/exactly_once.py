@@ -1,4 +1,4 @@
-"""Exactly-once streaming sink into the transactional catalog (r17).
+"""Exactly-once streaming sink into the transactional catalog.
 
 ``foreachBatch`` is at-least-once: a crash between the sink's side
 effect and the streaming checkpoint commit replays the micro-batch on
@@ -28,24 +28,21 @@ stream (zombie executor after failover) cannot double-append.
 
 from __future__ import annotations
 
-import time
 import warnings
 
 from pyspark.sql import DataFrame
 
-from ..sources.txn import Catalog, ConcurrentCommitError
+from ..sources.txn import Catalog, CatalogTransaction
 
 _LEDGER_SUFFIX = "__commits"
-_COMMIT_RETRIES = 16
 _LEDGER_SCHEMA = "app_id string, batch_id long"
-# Growth guard (r20; VERDICT r19 #6): the ledger is metadata-sized BY
-# CONTRACT (one row per micro-batch per app, folded to one per app by
-# retention), which is what makes the driver-side replay test safe —
-# but nothing used to ENFORCE the contract against a caller that never
-# runs retention. Past this many rows the sink stops materializing the
-# ledger on the driver and falls back to the distributed replay test
-# (scan + max) plus a 1-row ledger APPEND — content-identical, and it
-# warns that the retention fold is overdue.
+# Growth guard: the ledger is metadata-sized BY CONTRACT (one row per
+# micro-batch per app, folded to one per app by retention), which is
+# what makes the driver-side replay test safe — but a caller that never
+# runs retention breaks the contract. Past this many rows the sink
+# stops materializing the ledger on the driver and falls back to the
+# distributed replay test (scan + max) plus a 1-row ledger APPEND —
+# content-identical, and it warns that the retention fold is overdue.
 LEDGER_GUARD_ROWS = 10_000
 
 
@@ -58,13 +55,13 @@ def committed_batch_ids(
 ) -> set[int]:
     """Batch ids present in the CURRENT committed ledger for
     (table, app_id). After a retention fold (operators/retention.py
-    fold_ledger, r18) this is {max batch id} — use
+    fold_ledger) this is {max batch id} — use
     ``latest_batch_id`` for the replay test, which is max-based and
     therefore fold-proof."""
     # driver-side parquet read — the ledger is metadata-sized by
-    # contract, so a Spark scan + collect here was ~0.3 s of fixed
-    # job cost per call (r20, guide §1.2); falls back past the growth
-    # guard or when footers cannot answer
+    # contract, so a Spark scan + collect here would cost ~0.3 s of
+    # fixed job cost per call; falls back past the growth guard or
+    # when footers cannot answer
     try:
         vals = cat.table_values(
             ledger_table(name), branch, max_rows=LEDGER_GUARD_ROWS
@@ -117,111 +114,97 @@ def _exactly_once_sink(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         empty: bool | None = None  # evaluated lazily, once
-        last: ConcurrentCommitError | None = None
-        for attempt in range(_COMMIT_RETRIES):
+
+        def body(t: CatalogTransaction) -> None:
+            nonlocal empty
+            # The ledger is metadata-sized BY CONTRACT (one row per
+            # micro-batch per app, folded to one per app by retention —
+            # module docstring), so it reads AND writes back on the
+            # driver: the replay test runs in Python over a direct
+            # parquet read, and the updated ledger stages as a
+            # driver-written file — no Spark job on the ledger path.
+            # Per micro-batch that saves ~0.3 s (collect) + ~0.5 s
+            # (staged write job) of fixed cost on the commit-dominated
+            # stream queries (the driver does metadata work, executors
+            # data work — Delta's _delta_log entries are equally
+            # driver-written). Past LEDGER_GUARD_ROWS the contract is
+            # broken: fall back to the distributed replay test + a
+            # 1-row append (content-identical) and warn.
+            big = False
+            rows: list[tuple[str, int]] | None
             try:
-                with cat.transaction(branch=branch) as t:
-                    # The ledger is metadata-sized BY CONTRACT (one row
-                    # per micro-batch per app, folded to one per app by
-                    # retention — module docstring), so it reads AND
-                    # writes back on the driver: the replay test runs
-                    # in Python over a direct parquet read, and the
-                    # updated ledger stages as a driver-written file —
-                    # ZERO Spark jobs on the ledger path (r20; r19 had
-                    # already collapsed it to one). Per micro-batch
-                    # that removes ~0.3 s (collect) + ~0.5 s (staged
-                    # write job) of fixed cost on the commit-dominated
-                    # stream queries (guide §1.2/§5: driver does
-                    # metadata work, executors data work — Delta's
-                    # _delta_log entries are equally driver-written).
-                    # Past LEDGER_GUARD_ROWS the contract is broken:
-                    # fall back to the distributed replay test + a
-                    # 1-row append (content-identical) and warn.
-                    big = False
-                    rows: list[tuple[str, int]] | None
-                    try:
-                        nrows = t.committed_rows(ledger_name)
-                        if nrows is not None and nrows > LEDGER_GUARD_ROWS:
+                nrows = t.committed_rows(ledger_name)
+                if nrows is not None and nrows > LEDGER_GUARD_ROWS:
+                    big = True
+                    rows = None
+                else:
+                    rows = t.committed_values(
+                        ledger_name, max_rows=LEDGER_GUARD_ROWS
+                    )
+                    if rows is not None:
+                        rows = [
+                            (v["app_id"], int(v["batch_id"])) for v in rows
+                        ]
+                    else:
+                        # footers couldn't answer: Spark read, bounded
+                        # by the same guard, and still driver-rewritten
+                        # when under it
+                        got = (
+                            t.read_committed(spark, ledger_name)
+                            .limit(LEDGER_GUARD_ROWS + 1)
+                            .collect()
+                        )
+                        if len(got) > LEDGER_GUARD_ROWS:
                             big = True
-                            rows = None
                         else:
-                            rows = t.committed_values(
-                                ledger_name, max_rows=LEDGER_GUARD_ROWS
-                            )
-                            if rows is not None:
-                                rows = [
-                                    (v["app_id"], int(v["batch_id"]))
-                                    for v in rows
-                                ]
-                            else:
-                                # footers couldn't answer: Spark read,
-                                # bounded by the same guard, and still
-                                # driver-rewritten when under it
-                                got = (
-                                    t.read_committed(spark, ledger_name)
-                                    .limit(LEDGER_GUARD_ROWS + 1)
-                                    .collect()
-                                )
-                                if len(got) > LEDGER_GUARD_ROWS:
-                                    big = True
-                                else:
-                                    rows = [
-                                        (r["app_id"], int(r["batch_id"]))
-                                        for r in got
-                                    ]
-                    except FileNotFoundError:
-                        rows = []
-                    # replay test is MAX-based (r18): batch ids are
-                    # strictly increasing per checkpoint and committed
-                    # in order, so <= max means already committed —
-                    # and the test stays complete after a retention
-                    # fold keeps only the per-app max row. It runs
-                    # BEFORE the emptiness probe (r20): a replayed
-                    # batch then publishes nothing without paying any
-                    # Spark job at all.
-                    if big:
-                        led = t.read_committed(spark, ledger_name)
-                        row = led.filter(led["app_id"] == app_id).agg(
-                            {"batch_id": "max"}
-                        ).first()
-                        latest = None if row[0] is None else int(row[0])
-                    else:
-                        mine = [b for a, b in rows if a == app_id]
-                        latest = max(mine) if mine else None
-                    if latest is not None and batch_id <= latest:
-                        return  # replayed batch: the bracket exits
-                        # empty and publishes nothing
-                    if empty is None:
-                        empty = batch_df.isEmpty()
-                    if empty:
-                        return  # an empty fresh batch is equally a no-op
-                    stage(t, spark, batch_df)
-                    if big:
-                        warnings.warn(
-                            f"exactly-once ledger {ledger_name!r} exceeds "
-                            f"{LEDGER_GUARD_ROWS} rows — the retention "
-                            "fold (operators/retention.py fold_ledger) "
-                            "is overdue; committing via the distributed "
-                            "path",
-                            RuntimeWarning,
-                            stacklevel=2,
-                        )
-                        t.append(
-                            spark.createDataFrame(
-                                [(app_id, int(batch_id))], _LEDGER_SCHEMA
-                            ),
-                            ledger_name,
-                        )
-                    else:
-                        rows.append((app_id, int(batch_id)))
-                        t.overwrite_small(
-                            spark, rows, _LEDGER_SCHEMA, ledger_name
-                        )
-                return
-            except ConcurrentCommitError as exc:
-                last = exc  # snapshot moved: re-check the ledger, retry
-                time.sleep(0.02 * (attempt + 1))
-        raise last  # type: ignore[misc]
+                            rows = [
+                                (r["app_id"], int(r["batch_id"])) for r in got
+                            ]
+            except FileNotFoundError:
+                rows = []
+            # the replay test is MAX-based: batch ids are strictly
+            # increasing per checkpoint and committed in order, so
+            # <= max means already committed — and the test stays
+            # complete after a retention fold keeps only the per-app
+            # max row. It runs BEFORE the emptiness probe, so a
+            # replayed batch publishes nothing without any Spark job.
+            if big:
+                led = t.read_committed(spark, ledger_name)
+                row = led.filter(led["app_id"] == app_id).agg(
+                    {"batch_id": "max"}
+                ).first()
+                latest = None if row[0] is None else int(row[0])
+            else:
+                mine = [b for a, b in rows if a == app_id]
+                latest = max(mine) if mine else None
+            if latest is not None and batch_id <= latest:
+                return  # replayed batch: the bracket publishes nothing
+            if empty is None:
+                empty = batch_df.isEmpty()
+            if empty:
+                return  # an empty fresh batch is equally a no-op
+            stage(t, spark, batch_df)
+            if big:
+                warnings.warn(
+                    f"exactly-once ledger {ledger_name!r} exceeds "
+                    f"{LEDGER_GUARD_ROWS} rows — the retention "
+                    "fold (operators/retention.py fold_ledger) "
+                    "is overdue; committing via the distributed "
+                    "path",
+                    RuntimeWarning,
+                    stacklevel=4,
+                )
+                t.append(
+                    spark.createDataFrame(
+                        [(app_id, int(batch_id))], _LEDGER_SCHEMA
+                    ),
+                    ledger_name,
+                )
+            else:
+                rows.append((app_id, int(batch_id)))
+                t.overwrite_small(spark, rows, _LEDGER_SCHEMA, ledger_name)
+
+        cat.commit_retrying(body, branch)
 
     return sink
 
@@ -250,7 +233,7 @@ def exactly_once_mv_sink(
     branch: str = "main",
 ):
     """foreachBatch sink that maintains a raw table AND a derived
-    MATERIALIZED VIEW in the same exactly-once commit (r17): per
+    MATERIALIZED VIEW in the same exactly-once commit: per
     micro-batch, ONE manifest atomically carries (raw add-files
     append, rewritten mv, ledger row) — a reader can never observe
     raw data whose aggregate hasn't landed, or vice versa, and a
@@ -285,8 +268,8 @@ def exactly_once_dedup_sink(
     app_id: str,
     branch: str = "main",
 ):
-    """Streaming CORPUS INGESTION with cross-batch exact dedup (r17 —
-    the incremental training-data intake loop): per micro-batch, keep
+    """Streaming CORPUS INGESTION with cross-batch exact dedup (the
+    incremental training-data intake loop): per micro-batch, keep
     one row per fingerprint within the batch (min ``id_col``,
     deterministic), drop fingerprints already committed by EARLIER
     batches via a left-anti join against the fingerprint table, then
@@ -318,11 +301,10 @@ def exactly_once_dedup_sink(
             survivors = survivors.join(seen, on="_fp", how="left_anti")
         except FileNotFoundError:
             pass
-        # NOTE (r19): the two consumers below (corpus rows, fingerprint
-        # rows) re-run the window + anti-join plan once each; a persist
-        # across the pair was tried and measured SLOWER at micro-batch
-        # sizes (cache write + manager overhead exceeds the recompute)
-        # — deliberately left as two lazy reads.
+        # the two consumers below (corpus rows, fingerprint rows)
+        # re-run the window + anti-join plan once each; a persist
+        # across the pair measured SLOWER at micro-batch sizes (cache
+        # write + manager overhead exceeds the recompute)
         new_fp = survivors.select("_fp")
         t.append(survivors.drop("_fp"), corpus_name)
         t.append(new_fp, fp_name)

@@ -5,6 +5,8 @@ commits publish atomically."""
 from __future__ import annotations
 
 import os
+import time
+import types
 
 import pytest
 
@@ -1801,3 +1803,118 @@ def test_small_version_roundtrip_and_fallbacks(spark, tmp_path):
         with cat.transaction() as t:
             t.overwrite_small(spark, [(-1,)], "x long", "cons")
     assert [r["x"] for r in cat.read(spark, "cons").collect()] == [5]
+
+
+def _racing_body(cat, spark, losses, heads):
+    """A commit_retrying body that stages a write to ``t`` and, on its
+    first ``losses`` attempts, lets a rival commit move the head first
+    so the CAS fails."""
+
+    def body(t):
+        heads.append(t._expected_head)
+        t.overwrite(spark.range(3).selectExpr("id AS v"), "t")
+        if len(heads) <= losses:
+            with cat.transaction() as rival:
+                rival.overwrite(spark.range(1).selectExpr("id AS v"), "r")
+
+    return body
+
+
+def _version_dirs(cat, name):
+    return sorted(
+        d for d in os.listdir(cat.table_dir(name)) if d.startswith("v=")
+    )
+
+
+def test_commit_retrying_commits_after_lost_races(spark, tmp_path, monkeypatch):
+    cat = txn.Catalog(str(tmp_path / "wh"))
+    sleeps = []
+    monkeypatch.setattr(
+        txn, "time", types.SimpleNamespace(time=time.time, sleep=sleeps.append)
+    )
+    heads = []
+    m = cat.commit_retrying(_racing_body(cat, spark, 3, heads))
+    assert len(heads) == 4
+    assert sleeps == pytest.approx([0.02, 0.04, 0.06])
+    assert m == cat.head() and m == heads[-1] + 1
+    assert _vals(spark, cat) == [0, 1, 2]
+    # the three losing attempts' staged versions were rolled back
+    assert _version_dirs(cat, "t") == [f"v={cat.manifest()['t']}"]
+
+
+def test_commit_retrying_reraises_the_last_lost_race(
+    spark, tmp_path, monkeypatch
+):
+    cat = txn.Catalog(str(tmp_path / "wh"))
+    monkeypatch.setattr(
+        txn, "time", types.SimpleNamespace(time=time.time, sleep=lambda s: None)
+    )
+    heads = []
+    with pytest.raises(txn.ConcurrentCommitError) as exc:
+        cat.commit_retrying(_racing_body(cat, spark, 99, heads))
+    assert len(heads) == 16
+    assert f"moved {heads[-1]} -> {heads[-1] + 1}" in str(exc.value)
+    assert "t" not in cat.manifest()
+    assert not os.path.exists(cat.table_dir("t")) or not _version_dirs(
+        cat, "t"
+    )
+
+
+def test_commit_retrying_empty_body_publishes_nothing(spark, tmp_path):
+    cat = txn.Catalog(str(tmp_path / "wh"))
+    _commit(cat, spark.range(2).selectExpr("id AS v"))
+    head = cat.head()
+    seen = []
+    assert cat.commit_retrying(lambda t: seen.append(t._expected_head)) is None
+    assert seen == [head] and cat.head() == head
+
+
+def test_commit_retrying_propagates_body_errors_without_retry(spark, tmp_path):
+    cat = txn.Catalog(str(tmp_path / "wh"))
+    _commit(cat, spark.range(2).selectExpr("id AS v"))
+    cat.add_constraint(spark, "t", "v_nonneg", "v >= 0")
+    head = cat.head()
+    calls = []
+
+    def bad_value(t):
+        calls.append(1)
+        raise ValueError("boom")
+
+    def violates(t):
+        calls.append(1)
+        t.overwrite(spark.range(1).selectExpr("-1L AS v"), "t")
+
+    with pytest.raises(ValueError, match="boom"):
+        cat.commit_retrying(bad_value)
+    assert calls == [1]
+    with pytest.raises(txn.ConstraintViolationError, match="v_nonneg"):
+        cat.commit_retrying(violates)
+    assert calls == [1, 1]
+    assert cat.head() == head
+
+
+def test_compact_table_retries_when_an_append_races_its_read(
+    spark, tmp_path, monkeypatch
+):
+    """A commit landing between compact_table's read and its commit must
+    make the compaction retry, not overwrite the table with the rows it
+    read before the commit."""
+    cat = txn.Catalog(str(tmp_path / "wh"))
+    _commit(cat, spark.range(10).selectExpr("id AS v").repartition(4))
+    real_read_table = txn.Catalog._read_table
+    fired = []
+
+    def racy_read_table(self, *args, **kwargs):
+        df = real_read_table(self, *args, **kwargs)
+        if not fired:
+            fired.append(1)
+            with cat.transaction() as t:
+                t.append(spark.range(10, 15).selectExpr("id AS v"), "t")
+        return df
+
+    monkeypatch.setattr(txn.Catalog, "_read_table", racy_read_table)
+    m = cat.compact_table(spark, "t")
+    monkeypatch.undo()
+    assert fired
+    assert m is not None and m == cat.head()
+    assert _vals(spark, cat) == list(range(15))
