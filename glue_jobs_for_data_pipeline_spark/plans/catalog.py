@@ -49,7 +49,13 @@ ORACLE: dict[str, str] = {}
 
 
 def _q(name: str, oracle: str | None = None):
+    """Register ``fn`` (and its oracle SQL) under ``name``. A second
+    registration of a name raises: a later pack would otherwise replace
+    the first function and oracle silently."""
+
     def deco(fn: QueryFn) -> QueryFn:
+        if name in QUERIES:
+            raise ValueError(f"query key {name!r} is already registered")
         QUERIES[name] = fn
         if oracle is not None:
             ORACLE[name] = oracle

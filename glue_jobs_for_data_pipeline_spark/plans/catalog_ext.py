@@ -22,40 +22,15 @@ from .. import lifecycle
 from ..functions import text as tx
 from ..lifecycle import cached, scratch_dir
 from ..operators import dedup, multimodal, similarity
-from ..sources.readers import load_table, read_parquet, spread
+from ..sources.readers import footer_rows, load_table, read_parquet, spread
 from ..streaming.events import run_stream_to_batch, sessionize_stateful
 from .catalog import _M1_DELTA_SQL, _q
 
 
 def _pq_rows(sf_dir: str, table: str) -> int | None:
-    """EXACT row count of a source fixture parquet from its footer(s) —
-    driver-side metadata, no Spark job (~0.3 s of collect-path overhead
-    saved per .count(); r19). None on any failure — callers fall back
-    to a Spark count."""
-    import os
-
-    try:
-        import pyarrow.parquet as pq
-
-        path = os.path.join(sf_dir, f"{table}.parquet")
-        if os.path.isfile(path):
-            return pq.ParquetFile(path).metadata.num_rows
-        if not os.path.isdir(path):
-            # a missing fixture must be None (unknown), not a
-            # confident 0 — os.walk on a missing path yields nothing
-            # and a wrong 0 would corrupt k / row-count assertions
-            # (ADVICE r19)
-            return None
-        n = 0
-        for root, _, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    n += pq.ParquetFile(
-                        os.path.join(root, f)
-                    ).metadata.num_rows
-        return n
-    except Exception:  # noqa: BLE001 — optional fast path only
-        return None
+    """Footer row count of a source fixture (see readers.footer_rows):
+    None for a missing fixture, never a confident 0."""
+    return footer_rows(f"{sf_dir}/{table}.parquet")
 
 
 def _cat_rows(cat, spark, name: str) -> int:
@@ -6242,62 +6217,6 @@ def x_storage_mor_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         mor.read_upserted(cat, spark, "dim_seg", key), "compacted"
     )
     return merged.unionByName(compacted)
-
-
-# --------------------------------------------------------------------------
-# Round-17 addition: snapshot diff (the lakehouse CDC surface)
-# --------------------------------------------------------------------------
-
-_X_SNAPSHOT_DIFF_SQL = """
-SELECT o_orderkey,
-       CASE WHEN o_orderkey % 5 = 0 THEN 'X-CHANGED'
-            ELSE o_orderpriority END AS o_orderpriority,
-       'added' AS change
-FROM orders WHERE o_orderkey % 2 <> 0 AND o_orderkey % 3 = 0
-UNION ALL
-SELECT o_orderkey, CAST(NULL AS VARCHAR) AS o_orderpriority,
-       'removed' AS change
-FROM orders WHERE o_orderkey % 3 <> 0 AND o_orderkey % 2 = 0
-UNION ALL
-SELECT o_orderkey, 'X-CHANGED' AS o_orderpriority, 'changed' AS change
-FROM orders
-WHERE o_orderkey % 2 <> 0 AND o_orderkey % 3 <> 0 AND o_orderkey % 5 = 0
-"""
-
-
-@_q("x_storage_snapshot_diff", _X_SNAPSHOT_DIFF_SQL)
-def x_storage_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-level CDC between two catalog snapshots
-    (Catalog.snapshot_diff, r17 — the Delta CDF / Iceberg
-    changelog-scan surface): commit v1 (orders keys not divisible by
-    3), commit v2 (keys not divisible by 2, priorities rewritten on
-    multiples of 5), then diff the two manifests by key. ONE
-    full-outer hash join classifies every row as added / removed /
-    changed — unchanged rows never emit, nothing data-sized touches
-    the driver. The oracle states the exact same row set from the
-    modular predicates alone, so the key pins keys, new-side values
-    (NULL for removals), and classification."""
-    from ..sources.txn import Catalog
-
-    cat = Catalog(scratch_dir("spark_graft_snapdiff_") + "/wh")
-    base = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority"
-    )
-    with cat.transaction() as t:
-        t.overwrite(base.filter(F.col("o_orderkey") % 3 != 0), "orders_cdc")
-    m_old = cat.head()
-    v2 = base.filter(F.col("o_orderkey") % 2 != 0).withColumn(
-        "o_orderpriority",
-        F.when(F.col("o_orderkey") % 5 == 0, F.lit("X-CHANGED")).otherwise(
-            F.col("o_orderpriority")
-        ),
-    )
-    with cat.transaction() as t:
-        t.overwrite(v2, "orders_cdc")
-    return cat.snapshot_diff(
-        spark, "orders_cdc", m_old, cat.head(),
-        key_cols=("o_orderkey",), compare_cols=("o_orderpriority",),
-    )
 
 
 # --------------------------------------------------------------------------

@@ -134,6 +134,29 @@ def parquet_schema(spark: SparkSession, *paths: str) -> T.StructType | None:
     return T.StructType.fromJson(json.loads(jschema.json()))
 
 
+def footer_rows(path: str) -> int | None:
+    """EXACT row count of a parquet file or directory tree from its
+    footers — driver-side metadata (~0.1 ms per file), no Spark job
+    (a Spark count pays ~0.3 s of fixed collect-path overhead). None when pyarrow is unavailable, any footer is unreadable, or the
+    path does not exist (a wrong 0 would corrupt row-count checks);
+    callers fall back to a Spark count."""
+    try:
+        import pyarrow.parquet as pq
+
+        if os.path.isfile(path):
+            return pq.ParquetFile(path).metadata.num_rows
+        if not os.path.isdir(path):
+            return None
+        return sum(
+            pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+            for root, _, files in os.walk(path)
+            for f in files
+            if f.endswith(".parquet")
+        )
+    except Exception:  # noqa: BLE001 — optional fast path only
+        return None
+
+
 def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     """``spark.read.parquet`` with the schema taken from a footer
     (:func:`parquet_schema`) instead of an inference job. Every parquet

@@ -32,9 +32,9 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .readers import read_parquet
+from .readers import footer_rows, read_parquet
 
-# lossless type-widening lattice for the "widen" schema op (r18):
+# lossless type-widening lattice for the "widen" schema op:
 # source simpleString -> simpleStrings it may widen to. DECIMAL
 # handled structurally (precision may grow, scale must not shrink
 # and integer digits must not shrink). Everything else is rejected —
@@ -88,7 +88,7 @@ def _is_widening(src_simple: str, dst_simple: str) -> bool:
 
 def _apply_schema_ops(df: DataFrame, ops: list[dict]) -> DataFrame:
     """Replay a table's recorded schema-evolution ops over a version
-    scan (r17 — the Iceberg schema-evolution posture: metadata maps
+    scan (the Iceberg schema-evolution posture: metadata maps
     old data files into the CURRENT schema; no file is rewritten).
 
     Each op is applied only where it is still needed, which makes the
@@ -116,7 +116,7 @@ def _apply_schema_ops(df: DataFrame, ops: list[dict]) -> DataFrame:
             if op["col"] in df.columns:
                 df = df.drop(op["col"])
         elif op["op"] == "widen":
-            # metadata-only TYPE WIDENING (r18 — Iceberg/Delta type
+            # metadata-only TYPE WIDENING (Iceberg/Delta type
             # promotion): files written before the widen carry the
             # narrow type and are cast up here; files written after
             # already match and are skipped (idempotent per file
@@ -170,21 +170,25 @@ def _version_dir(table_dir: str, version: int) -> str:
     return os.path.join(table_dir, f"v={version}")
 
 
-def _next_version(table_dir: str) -> int:
-    """Next unused version number (scans v=* dirs AND v=*.claim
-    reservation markers, so neither an orphaned staging directory nor a
-    concurrent writer's just-reserved number is ever reused)."""
-    existing = []
+def _version_entries(table_dir: str) -> list[tuple[str, int, bool]]:
+    """``(entry name, version, is_claim)`` for every ``v=<N>`` version
+    directory and ``v=<N>.claim`` reservation marker in ``table_dir``."""
+    out = []
     if os.path.isdir(table_dir):
         for d in os.listdir(table_dir):
-            if not d.startswith("v="):
-                continue
-            tail = d.split("=", 1)[1]
-            if tail.endswith(".claim"):
-                tail = tail[: -len(".claim")]
-            if tail.isdigit():
-                existing.append(int(tail))
-    return max(existing, default=0) + 1
+            tail = d[len("v="):] if d.startswith("v=") else ""
+            claim = tail.endswith(".claim")
+            num = tail[: -len(".claim")] if claim else tail
+            if num.isdigit():
+                out.append((d, int(num), claim))
+    return out
+
+
+def _next_version(table_dir: str) -> int:
+    """Next unused version number. Counts claim markers too, so neither
+    an orphaned staging directory nor a concurrent writer's
+    just-reserved number is ever reused."""
+    return max((v for _, v, _ in _version_entries(table_dir)), default=0) + 1
 
 
 def _reserve_version(table_dir: str) -> int:
@@ -192,10 +196,9 @@ def _reserve_version(table_dir: str) -> int:
     O_CREAT|O_EXCL claim file — without this, two writers staging the
     same table concurrently both scan max+1, pick the same number, and
     their parquet writes collide (mode('overwrite') deletes the
-    rival's half-written data). The loser of the O_EXCL race rescans;
-    the claim is removed once the version directory itself exists (the
-    directory then blocks reuse). A crashed writer's stale claim just
-    skips a number — gc_uncommitted sweeps stray claim files."""
+    rival's half-written data). The loser of the O_EXCL race rescans.
+    A crashed writer's stale claim just skips a number — gc_uncommitted
+    sweeps stray claim files."""
     while True:
         version = _next_version(table_dir)
         claim = os.path.join(table_dir, f"v={version}.claim")
@@ -207,6 +210,50 @@ def _reserve_version(table_dir: str) -> int:
         return version
 
 
+@contextmanager
+def _staging(table_dir: str):
+    """The staging bracket every version write runs in: reserve the
+    next version of ``table_dir`` and yield ``(version, vdir)``. A
+    failure inside removes ``vdir``; the claim file always goes — once
+    written, the version directory itself blocks reuse of the number,
+    and a failed write's skipped number is harmless."""
+    os.makedirs(table_dir, exist_ok=True)
+    version = _reserve_version(table_dir)
+    vdir = _version_dir(table_dir, version)
+    try:
+        yield version, vdir
+    except BaseException:
+        shutil.rmtree(vdir, ignore_errors=True)
+        raise
+    finally:
+        try:
+            os.unlink(vdir + ".claim")
+        except FileNotFoundError:
+            pass
+
+
+_SCHEMA = "_SCHEMA.json"
+
+
+def _write_schema(vdir: str, schema_json: str) -> None:
+    """Record a version's exact Spark schema beside its data, so readers
+    reapply the column types instead of re-inferring partition column
+    types from ``col=value`` directory names (inference would silently
+    turn a string partition value like '0042' into int 42)."""
+    os.makedirs(vdir, exist_ok=True)
+    with open(os.path.join(vdir, _SCHEMA), "w") as f:
+        f.write(schema_json)
+
+
+def _read_schema(vdir: str) -> str | None:
+    """The schema sidecar of a version directory, or None without one."""
+    try:
+        with open(os.path.join(vdir, _SCHEMA)) as f:
+            return f.read()
+    except FileNotFoundError:
+        return None
+
+
 def stage_version(
     df: DataFrame, table_dir: str, partition_by: tuple[str, ...] = ()
 ) -> int:
@@ -214,94 +261,47 @@ def stage_version(
     version number; a ``CatalogTransaction`` publishes it in its
     manifest or deletes it on rollback.
 
-    The DataFrame's schema is recorded alongside the data
-    (``_SCHEMA.json``) so later readers — compact_table especially — can
-    reapply the EXACT column types instead of re-inferring partition
-    column types from ``col=value`` directory names (inference would
-    silently turn a string partition value like '0042' into int 42).
-
     ``v`` is a RESERVED partition-column name: version directories are
     themselves named ``v=<N>``, so a partition column ``v`` writes
     ``.../v=<N>/v=<value>/...`` — partition detection
     (_detect_partition_cols) must skip ``v=`` dirs to walk the layout,
-    which would silently flatten such a table on the next append
-    (ADVICE r19). Refuse loudly instead."""
+    which would silently flatten such a table on the next append.
+    Refuse loudly instead."""
     if "v" in partition_by:
         raise ValueError(
             "partition column 'v' collides with the catalog's "
             "version-directory naming (v=<N>); rename the column"
         )
-    os.makedirs(table_dir, exist_ok=True)
-    version = _reserve_version(table_dir)
-    vdir = _version_dir(table_dir, version)
-    try:
+    with _staging(table_dir) as (version, vdir):
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(vdir)
-        with open(os.path.join(vdir, "_SCHEMA.json"), "w") as f:
-            f.write(df.schema.json())
-    finally:
-        # the version DIRECTORY now blocks number reuse (or the write
-        # failed and the skipped number is harmless) — drop the claim
-        try:
-            os.unlink(os.path.join(table_dir, f"v={version}.claim"))
-        except FileNotFoundError:
-            pass
+        _write_schema(vdir, df.schema.json())
     return version
 
 
 def stage_empty_version(table_dir: str, schema_json: str) -> int:
     """Stage a ZERO-ROW version as PURE METADATA: the version directory
-    holds only ``_SCHEMA.json`` and no part files — readers resolve it
+    holds only the schema sidecar and no part files — readers resolve it
     through the sidecar schema as an empty table (Spark's parquet
     source returns an empty relation for a fileless path when the
     schema is explicit, verified in tests/test_txn.py). Truncating a
     side table (an emptied deletion vector / upsert delta after a
-    fold) previously paid a full Spark write job to produce one
+    fold) would otherwise pay a full Spark write job to produce one
     zero-row part file — ~0.5 s of fixed job+committer cost per
-    compaction for no bytes (r19, guide §1.2)."""
-    os.makedirs(table_dir, exist_ok=True)
-    version = _reserve_version(table_dir)
-    vdir = _version_dir(table_dir, version)
-    try:
-        os.makedirs(vdir, exist_ok=True)
-        with open(os.path.join(vdir, "_SCHEMA.json"), "w") as f:
-            f.write(schema_json)
-    finally:
-        try:
-            os.unlink(os.path.join(table_dir, f"v={version}.claim"))
-        except FileNotFoundError:
-            pass
+    compaction for no bytes."""
+    with _staging(table_dir) as (version, vdir):
+        _write_schema(vdir, schema_json)
     return version
 
 
 def version_rows(table_dir: str, version: int) -> int | None:
-    """EXACT row count of a version directory from its parquet FOOTERS
-    — driver-side metadata reads (~0.1 ms/file), no Spark job. None
-    when pyarrow is unavailable or any footer is unreadable (callers
-    fall back to a Spark scan). Schema-evolution ops never change row
-    counts, so this equals ``read``'s count for any snapshot. The
-    isEmpty()-class Spark actions this replaces cost ~0.3 s of fixed
-    collect-path overhead per call on the compaction hot paths (r19)."""
-    try:
-        import pyarrow.parquet as pq
-    except Exception:  # noqa: BLE001 — optional fast path only
-        return None
-    vdir = _version_dir(table_dir, version)
-    if not os.path.isdir(vdir):
-        return None
-    n = 0
-    try:
-        for root, _, files in os.walk(vdir):
-            for f in files:
-                if f.endswith(".parquet"):
-                    n += pq.ParquetFile(
-                        os.path.join(root, f)
-                    ).metadata.num_rows
-    except Exception:  # noqa: BLE001 — fall back to a Spark scan
-        return None
-    return n
+    """EXACT row count of a version directory from its parquet footers
+    (see readers.footer_rows): no Spark job, None when the footers
+    cannot answer. Schema-evolution ops never change row counts, so
+    this equals ``read``'s count for any snapshot."""
+    return footer_rows(_version_dir(table_dir, version))
 
 
 def _small_pa_schema(schema):
@@ -331,16 +331,16 @@ def _small_pa_schema(schema):
 
 def stage_small_version(table_dir: str, rows, schema) -> int | None:
     """Stage a version from DRIVER-MATERIALIZED rows: one parquet file
-    written via pyarrow plus the ``_SCHEMA.json`` sidecar — NO Spark
-    job (a staged write job costs ~0.5 s of fixed committer overhead
-    however few rows it carries; r20, guide §1.2/§5 — the driver does
-    metadata work, executors data work). This is the catalog's analog
-    of a lakehouse transaction log entry (Delta writes _delta_log JSON
-    driver-side): intended for METADATA-SIZED tables only — the
-    exactly-once commit ledger above all — whose row count is bounded
-    by contract, never for data tables. Returns the staged version, or
-    None when pyarrow is unavailable or the schema maps outside the
-    supported scalar types (callers fall back to stage_version).
+    written via pyarrow plus the schema sidecar — NO Spark job (a
+    staged write job costs ~0.5 s of fixed committer overhead however
+    few rows it carries; the driver does metadata work, executors data
+    work). This is the catalog's analog of a lakehouse transaction log
+    entry (Delta writes _delta_log JSON driver-side): intended for
+    METADATA-SIZED tables only — the exactly-once commit ledger above
+    all — whose row count is bounded by contract, never for data
+    tables. Returns the staged version, or None when pyarrow is
+    unavailable or the schema maps outside the supported scalar types
+    (callers fall back to stage_version).
 
     ``rows`` is a sequence of tuples in ``schema`` field order;
     ``schema`` is the Spark StructType recorded in the sidecar, so
@@ -356,11 +356,8 @@ def stage_small_version(table_dir: str, rows, schema) -> int | None:
         import pyarrow.parquet as pq
     except Exception:  # noqa: BLE001
         return None
-    os.makedirs(table_dir, exist_ok=True)
-    version = _reserve_version(table_dir)
-    vdir = _version_dir(table_dir, version)
-    try:
-        os.makedirs(vdir, exist_ok=True)
+    with _staging(table_dir) as (version, vdir):
+        _write_schema(vdir, schema.json())
         cols = [
             pa.array([r[i] for r in rows], type=pa_schema.field(i).type)
             for i in range(len(pa_schema))
@@ -369,16 +366,6 @@ def stage_small_version(table_dir: str, rows, schema) -> int | None:
             pa.Table.from_arrays(cols, schema=pa_schema),
             os.path.join(vdir, f"part-00000-{uuid.uuid4().hex}.parquet"),
         )
-        with open(os.path.join(vdir, "_SCHEMA.json"), "w") as f:
-            f.write(schema.json())
-    except BaseException:
-        shutil.rmtree(vdir, ignore_errors=True)
-        raise
-    finally:
-        try:
-            os.unlink(os.path.join(table_dir, f"v={version}.claim"))
-        except FileNotFoundError:
-            pass
     return version
 
 
@@ -387,13 +374,13 @@ def version_values(
 ) -> list[dict] | None:
     """ALL ROWS of a version directory as driver-side dicts via
     pyarrow — no Spark job (the collect-path fixed cost this replaces
-    is ~0.3 s per call on the stream-commit hot paths; r20). The
-    read-side twin of stage_small_version, same contract: METADATA-
-    SIZED tables only. None — callers fall back to a Spark scan —
-    when pyarrow is unavailable, a footer is unreadable, the layout
-    is partitioned (values live in dir names, not the files), or the
-    footer row count exceeds ``max_rows`` (the growth guard: a table
-    past metadata size must not be collected to the driver)."""
+    is ~0.3 s per call on the stream-commit hot paths). The read-side
+    twin of stage_small_version, same contract: METADATA-SIZED tables
+    only. None — callers fall back to a Spark scan — when pyarrow is
+    unavailable, a footer is unreadable, the layout is partitioned
+    (values live in dir names, not the files), or the footer row count
+    exceeds ``max_rows`` (the growth guard: a table past metadata size
+    must not be collected to the driver)."""
     try:
         import pyarrow.parquet as pq
     except Exception:  # noqa: BLE001 — optional fast path only
@@ -402,23 +389,18 @@ def version_values(
     if not os.path.isdir(vdir):
         return None
     files: list[str] = []
+    for root, _, names in os.walk(vdir):
+        if root != vdir and "=" in os.path.basename(root):
+            return None  # partitioned layout
+        files.extend(
+            os.path.join(root, f) for f in sorted(names) if f.endswith(".parquet")
+        )
+    if max_rows is not None:
+        total = footer_rows(vdir)
+        if total is None or total > max_rows:
+            return None
     try:
-        for root, _, names in os.walk(vdir):
-            if root != vdir and "=" in os.path.basename(root):
-                return None  # partitioned layout
-            files.extend(
-                os.path.join(root, f)
-                for f in sorted(names)
-                if f.endswith(".parquet")
-            )
-        if max_rows is not None:
-            total = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-            if total > max_rows:
-                return None
-        out: list[dict] = []
-        for f in files:
-            out.extend(pq.read_table(f).to_pylist())
-        return out
+        return [row for f in files for row in pq.read_table(f).to_pylist()]
     except Exception:  # noqa: BLE001 — fall back to a Spark scan
         return None
 
@@ -451,14 +433,14 @@ def stage_version_append(
     df: DataFrame, table_dir: str, base_version: int
 ) -> int:
     """Stage a new version = base version's files + ``df``'s rows,
-    WITHOUT rewriting the base (r17 — the Iceberg add-files posture on
-    a filesystem): the base version's parquet files are HARD-LINKED
-    into the new version directory (O(existing files) metadata ops,
-    zero data copied; falls back to copy across filesystems), then the
-    new rows land beside them as ordinary appended part files. At
-    100 TB an append commits O(new data) + O(file count), never a
-    table rewrite — this is what makes a streaming micro-batch sink
-    into the catalog affordable.
+    WITHOUT rewriting the base (the Iceberg add-files posture on a
+    filesystem): the base version's parquet files are HARD-LINKED into
+    the new version directory (O(existing files) metadata ops, zero
+    data copied; falls back to copy across filesystems), then the new
+    rows land beside them as ordinary appended part files. At 100 TB
+    an append commits O(new data) + O(file count), never a table
+    rewrite — this is what makes a streaming micro-batch sink into the
+    catalog affordable.
 
     The appended frame must match the base's recorded schema EXACTLY:
     a mixed-schema version dir would be read under one schema and
@@ -467,14 +449,11 @@ def stage_version_append(
     with drifted sources conform first (sources/conform.py) or
     overwrite."""
     base_dir = _version_dir(table_dir, base_version)
-    schema_path = os.path.join(base_dir, "_SCHEMA.json")
-    base_schema_json: str | None = None
-    if os.path.exists(schema_path):
+    schema_json = _read_schema(base_dir)
+    if schema_json is not None:
         from pyspark.sql.types import StructType
 
-        with open(schema_path) as f:
-            base_schema_json = f.read()
-        base_schema = StructType.fromJson(json.loads(base_schema_json))
+        base_schema = StructType.fromJson(json.loads(schema_json))
 
         def _shape(st):  # name+type identity; nullability handled below
             return {(f.name.lower(), f.dataType) for f in st.fields}
@@ -490,11 +469,9 @@ def stage_version_append(
         df_null = {f.name.lower(): f.nullable for f in df.schema.fields}
         for fld in base_schema.fields:
             fld.nullable = fld.nullable or df_null[fld.name.lower()]
-        base_schema_json = base_schema.json()
-    version = _reserve_version(table_dir)
-    vdir = _version_dir(table_dir, version)
+        schema_json = base_schema.json()
     part_cols = _detect_partition_cols(base_dir)
-    try:
+    with _staging(table_dir) as (version, vdir):
         # new rows first (Spark creates the dir; append never deletes
         # existing files), laid out like the base so partition
         # discovery sees ONE consistent structure; then link the
@@ -504,30 +481,20 @@ def stage_version_append(
             w = w.partitionBy(*part_cols)
         w.parquet(vdir)
         _link_parquet_tree(base_dir, vdir)
-        with open(os.path.join(vdir, "_SCHEMA.json"), "w") as f:
-            f.write(base_schema_json or df.schema.json())
-    except BaseException:
-        shutil.rmtree(vdir, ignore_errors=True)
-        raise
-    finally:
-        try:
-            os.unlink(os.path.join(table_dir, f"v={version}.claim"))
-        except FileNotFoundError:
-            pass
+        _write_schema(vdir, schema_json or df.schema.json())
     return version
 
 
 def _read_version_df(spark: SparkSession, vdir: str) -> DataFrame:
     """Read a version directory, reapplying the staged schema when the
     sidecar exists (exact partition-column types; no inference)."""
-    schema_path = os.path.join(vdir, "_SCHEMA.json")
-    if os.path.exists(schema_path):
-        from pyspark.sql.types import StructType
+    schema_json = _read_schema(vdir)
+    if schema_json is None:
+        return read_parquet(spark, vdir)
+    from pyspark.sql.types import StructType
 
-        with open(schema_path) as f:
-            schema = StructType.fromJson(json.loads(f.read()))
-        return spark.read.schema(schema).parquet(vdir)
-    return read_parquet(spark, vdir)
+    schema = StructType.fromJson(json.loads(schema_json))
+    return spark.read.schema(schema).parquet(vdir)
 
 
 def _detect_partition_cols(vdir: str) -> tuple[str, ...]:
@@ -606,13 +573,6 @@ _LOCK_WAIT_SECONDS = 2.0
 _COMMIT_RETRIES = 16
 
 
-# distinguishes "no CAS check requested" from "expected the catalog to
-# still be EMPTY" — with a plain None default, two transactions racing
-# to make the FIRST commit on a branch would both skip the CAS and the
-# loser's tables would be silently dropped (code-review r17)
-_CAS_UNSET = object()
-
-
 class ConcurrentCommitError(RuntimeError):
     """Raised when a Catalog commit loses an optimistic-concurrency
     race: the committed HEAD moved after this transaction opened, so
@@ -636,7 +596,7 @@ class MergeConflictError(ValueError):
 
 class ConstraintViolationError(ValueError):
     """Raised when a write would commit rows that do not satisfy a
-    table's CHECK constraint (r18 — Delta CHECK-constraint semantics:
+    table's CHECK constraint (Delta CHECK-constraint semantics:
     every row must evaluate the expression to TRUE; FALSE and NULL are
     violations). The transaction rolls back and nothing publishes —
     constraints make bad data unrepresentable in the committed
@@ -666,6 +626,20 @@ def _fsync_dir(path: str) -> None:
         os.close(fd)
 
 
+def _write_durably(path: str, text: str) -> None:
+    """The one durable writer: ``text`` lands at ``path`` atomically
+    (tmp file, fsync, ``os.replace``) and durably — rename atomicity is
+    not rename durability, so the parent directory is synced too, or a
+    crash can roll the entry back."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    _fsync_dir(os.path.dirname(path))
+
+
 class Catalog:
     """TRUE multi-table atomic commit: one HEAD pointer over immutable
     manifests (the Iceberg/Delta catalog-commit core, minimally).
@@ -677,7 +651,7 @@ class Catalog:
                                               {"tables": {name: version},
                                                "parent": M'}
         <root>/_HEAD                          main ref (pointer holding M)
-        <root>/_REFS/<branch>                 additional branch refs (r15)
+        <root>/_REFS/<branch>                 additional branch refs
 
     A transaction stages every table's new version, writes ONE new
     manifest holding the full updated table->version mapping, then
@@ -723,42 +697,88 @@ class Catalog:
 
     def manifest(self, branch: str = "main") -> dict[str, int]:
         """Committed table -> version mapping ({} before first commit)."""
-        head = self.head(branch)
-        if head is None:
-            return {}
-        path = os.path.join(self.root, _MANIFEST_DIR, f"m={head}.json")
-        with open(path) as f:
-            return {k: int(v) for k, v in json.load(f)["tables"].items()}
+        return self._manifest_tables(self.head(branch))
 
-    def _manifest_parent(self, m: int) -> int | None:
-        """Parent manifest id, or None for roots / pre-branching
-        manifests (written before parents were recorded)."""
-        path = os.path.join(self.root, _MANIFEST_DIR, f"m={m}.json")
+    def _manifest_path(self, m: int) -> str:
+        return os.path.join(self.root, _MANIFEST_DIR, f"m={m}.json")
+
+    def _manifest_ids(self) -> list[int]:
+        """Ids of every ``m=<M>.json`` file in the manifest directory."""
+        names = os.listdir(os.path.join(self.root, _MANIFEST_DIR))
+        ids = [f[len("m="):-len(".json")] for f in names
+               if f.startswith("m=") and f.endswith(".json")]
+        return [int(i) for i in ids if i.isdigit()]
+
+    def _doc(self, m: int | None) -> dict | None:
+        """The one reader of the manifest format: manifest ``m`` parsed,
+        ``{"tables": {name: version}, "parent": M', "schemas": {name:
+        ops}, "constraints": {name: {constraint: expr}}}`` (the last
+        two only when non-empty). ``m=None`` (no commits yet) reads as
+        the empty doc; a manifest whose file is gone (an
+        expire_snapshots truncation point) reads as None."""
+        if m is None:
+            return {"tables": {}}
         try:
-            with open(path) as f:
-                parent = json.load(f).get("parent")
+            with open(self._manifest_path(m)) as f:
+                return json.load(f)
         except FileNotFoundError:
             return None
+
+    def _manifest_tables(self, m: int | None) -> dict[str, int]:
+        """Table -> version mapping of manifest ``m`` ({} for None).
+        Raises FileNotFoundError for an expired manifest."""
+        doc = self._doc(m)
+        if doc is None:
+            raise FileNotFoundError(f"manifest m={m} has expired")
+        return {k: int(v) for k, v in doc["tables"].items()}
+
+    def _manifest_schemas(self, m: int | None) -> dict[str, list[dict]]:
+        """Table -> cumulative schema-evolution op list of manifest ``m``."""
+        return (self._doc(m) or {}).get("schemas", {})
+
+    def _manifest_constraints(self, m: int | None) -> dict[str, dict[str, str]]:
+        """Table -> {constraint name -> SQL expr} of manifest ``m``."""
+        return (self._doc(m) or {}).get("constraints", {})
+
+    def _manifest_parent(self, m: int) -> int | None:
+        """Parent manifest id, or None for roots, expired manifests and
+        manifests written before parents were recorded."""
+        parent = (self._doc(m) or {}).get("parent")
         return int(parent) if parent is not None else None
 
     def table_dir(self, name: str) -> str:
         return os.path.join(self.root, name)
+
+    def _version(self, name: str, m: int | None, label: str) -> int:
+        """``name``'s version in manifest ``m``; FileNotFoundError naming
+        ``label`` when that snapshot does not hold the table."""
+        versions = self._manifest_tables(m)
+        if name not in versions:
+            raise FileNotFoundError(f"table {name!r} not in {label}")
+        return versions[name]
 
     def _read_table(
         self, spark: SparkSession, name: str, manifest: int | None, label: str
     ) -> DataFrame:
         """Resolve ``name`` in manifest ``manifest`` and scan it,
         replaying any schema-evolution ops that snapshot records for
-        the table (r17) — so a version dir written before an
-        add/rename column still reads under the snapshot's schema."""
-        versions = self._manifest_tables(manifest)
-        if name not in versions:
-            raise FileNotFoundError(f"table {name!r} not in {label}")
-        df = _read_version_df(
-            spark, _version_dir(self.table_dir(name), versions[name])
-        )
+        the table — so a version dir written before an add/rename
+        column still reads under the snapshot's schema."""
+        version = self._version(name, manifest, label)
+        df = _read_version_df(spark, _version_dir(self.table_dir(name), version))
         ops = self._manifest_schemas(manifest).get(name)
         return _apply_schema_ops(df, ops) if ops else df
+
+    def _values(
+        self, name: str, m: int | None, label: str, max_rows: int | None
+    ) -> list[dict] | None:
+        """Driver-side rows of ``name`` in manifest ``m`` (see
+        version_values), or None while schema-evolution ops are pending —
+        only the Spark reader replays them."""
+        version = self._version(name, m, label)
+        if self._manifest_schemas(m).get(name):
+            return None
+        return version_values(self.table_dir(name), version, max_rows)
 
     def read(
         self, spark: SparkSession, name: str, branch: str = "main"
@@ -784,16 +804,13 @@ class Catalog:
     def table_rows(self, name: str, branch: str = "main") -> int | None:
         """EXACT committed row count of ``name`` on ``branch`` from
         parquet footers — driver-side metadata, no Spark job (see
-        version_rows; schema-evolution ops never change row counts).
-        None when footers cannot answer (fall back to read().count()).
-        Raises FileNotFoundError when the table is not committed,
-        mirroring read()."""
-        versions = self._manifest_tables(self.head(branch))
-        if name not in versions:
-            raise FileNotFoundError(
-                f"table {name!r} not in committed manifest of {branch!r}"
-            )
-        return version_rows(self.table_dir(name), versions[name])
+        version_rows). None when footers cannot answer (fall back to
+        read().count()). Raises FileNotFoundError when the table is not
+        committed, mirroring read()."""
+        version = self._version(
+            name, self.head(branch), f"committed manifest of {branch!r}"
+        )
+        return version_rows(self.table_dir(name), version)
 
     def table_values(
         self, name: str, branch: str = "main", max_rows: int | None = None
@@ -801,21 +818,16 @@ class Catalog:
         """ALL committed rows of a METADATA-SIZED table on ``branch``
         as driver-side dicts — no Spark job (see version_values; the
         exactly-once ledger consumers use this for their replay
-        tests, r20). None when the fast path cannot answer — pyarrow
+        tests). None when the fast path cannot answer — pyarrow
         missing, partitioned layout, pending schema-evolution ops
         (replayed only by the Spark reader), or more than ``max_rows``
         rows (the growth guard) — callers fall back to read().
         Raises FileNotFoundError when the table is not committed,
         mirroring read()."""
-        head = self.head(branch)
-        versions = self._manifest_tables(head)
-        if name not in versions:
-            raise FileNotFoundError(
-                f"table {name!r} not in committed manifest of {branch!r}"
-            )
-        if self._manifest_schemas(head).get(name):
-            return None
-        return version_values(self.table_dir(name), versions[name], max_rows)
+        return self._values(
+            name, self.head(branch), f"committed manifest of {branch!r}",
+            max_rows,
+        )
 
     def log(self, branch: str = "main") -> list[dict]:
         """The branch's COMMIT LOG, oldest first — the audit/lineage
@@ -827,47 +839,39 @@ class Catalog:
         table names whose version differs from the parent (additions
         included), "removed": tables present in the parent but not the
         child, "n_tables": size of the snapshot, "schema_changed":
-        tables whose evolution op list grew in this commit (r17)}."""
+        tables whose evolution op list grew in this commit,
+        "constraints_changed": tables whose CHECK-constraint set
+        changed}. The walk treats the oldest surviving manifest as a
+        root: an expired parent ends it."""
         entries: list[dict] = []
-        # one open+parse per manifest on the walk (each is consulted
-        # as child AND parent; the naive per-field reads cost ~4 opens
-        # per entry — code-review r17)
-        docs: dict[int, dict] = {}
+        # each manifest is consulted as child AND parent: parse it once
+        docs: dict[int | None, dict | None] = {}
 
-        def _doc(m: int | None) -> dict | None:
-            """Manifest doc, or None when the FILE is gone — an
-            expire_snapshots truncation point (r18): the walk treats
-            the oldest surviving manifest as a root."""
-            if m is None:
-                return {"tables": {}}
+        def doc_of(m: int | None) -> dict | None:
             if m not in docs:
-                path = os.path.join(self.root, _MANIFEST_DIR, f"m={m}.json")
-                try:
-                    with open(path) as f:
-                        docs[m] = json.load(f)
-                except FileNotFoundError:
-                    return None
+                docs[m] = self._doc(m)
             return docs[m]
 
         cur = self.head(branch)
         while cur is not None:
-            doc = _doc(cur)
+            doc = doc_of(cur)
             if doc is None:  # pragma: no cover - head itself expired
                 break
             parent = doc.get("parent")
             parent = int(parent) if parent is not None else None
-            pdoc = _doc(parent)
+            pdoc = doc_of(parent)
             if pdoc is None:
-                # parent expired: this manifest is the surviving root —
-                # diff against empty and end the walk
                 parent, pdoc = None, {"tables": {}}
-                doc = {**doc, "parent": None}
             tables = {k: int(v) for k, v in doc["tables"].items()}
             ptables = {k: int(v) for k, v in pdoc["tables"].items()}
-            schemas = doc.get("schemas", {})
-            pschemas = pdoc.get("schemas", {})
-            cons = doc.get("constraints", {})
-            pcons = pdoc.get("constraints", {})
+
+            def changed(key: str, empty) -> list[str]:
+                new, old = doc.get(key, {}), pdoc.get(key, {})
+                return sorted(
+                    t for t in set(new) | set(old)
+                    if old.get(t, empty) != new.get(t, empty)
+                )
+
             entries.append(
                 {
                     "manifest": cur,
@@ -877,18 +881,8 @@ class Catalog:
                     ),
                     "removed": sorted(set(ptables) - set(tables)),
                     "n_tables": len(tables),
-                    "schema_changed": sorted(
-                        t
-                        for t in set(schemas) | set(pschemas)
-                        if pschemas.get(t, []) != schemas.get(t, [])
-                    ),
-                    # tables whose CHECK-constraint set changed in this
-                    # commit (r18 — audit surface for data contracts)
-                    "constraints_changed": sorted(
-                        t
-                        for t in set(cons) | set(pcons)
-                        if pcons.get(t, {}) != cons.get(t, {})
-                    ),
+                    "schema_changed": changed("schemas", []),
+                    "constraints_changed": changed("constraints", {}),
                 }
             )
             cur = parent
@@ -918,15 +912,14 @@ class Catalog:
         ref = self._ref_path(name)
         if name == "main" or os.path.exists(ref):
             raise ValueError(f"branch {name!r} already exists")
-        os.makedirs(os.path.dirname(ref), exist_ok=True)
-        self._set_ref(name, src, expected=None)
+        self._set_ref(name, {name: None}, manifest=src)
         return src
 
     def delete_branch(self, name: str) -> None:
         """Drop a ref (never ``main``). Data stays until gc —
         deleting a branch only unpins its manifests.
 
-        Runs under the commit lock (ADVICE r15): an unlocked unlink
+        Runs under the commit lock: an unlocked unlink
         races _set_ref/_commit on the same ref — the writer's
         ``os.replace`` can resurrect the branch just after the unlink,
         or the delete can drop a commit that just won its CAS. One
@@ -962,35 +955,8 @@ class Catalog:
                     f"ancestor of {branch!r} (m={b_head}); rebase the "
                     "branch's transactions onto the current head"
                 )
-        self._set_ref(into, b_head, expected=i_head)
+        self._set_ref(into, {into: i_head}, manifest=b_head)
         return b_head
-
-    def _manifest_tables(self, m: int | None) -> dict[str, int]:
-        """Table -> version mapping of manifest ``m`` ({} for None)."""
-        if m is None:
-            return {}
-        path = os.path.join(self.root, _MANIFEST_DIR, f"m={m}.json")
-        with open(path) as f:
-            return {k: int(v) for k, v in json.load(f)["tables"].items()}
-
-    def _manifest_schemas(self, m: int | None) -> dict[str, list[dict]]:
-        """Table -> cumulative schema-evolution op list of manifest
-        ``m`` ({} for None and for pre-r17 manifests, which lack the
-        key — fully backward compatible)."""
-        if m is None:
-            return {}
-        path = os.path.join(self.root, _MANIFEST_DIR, f"m={m}.json")
-        with open(path) as f:
-            return json.load(f).get("schemas", {})
-
-    def _manifest_constraints(self, m: int | None) -> dict[str, dict[str, str]]:
-        """Table -> {constraint name -> SQL expr} of manifest ``m``
-        ({} for None and pre-r18 manifests)."""
-        if m is None:
-            return {}
-        path = os.path.join(self.root, _MANIFEST_DIR, f"m={m}.json")
-        with open(path) as f:
-            return json.load(f).get("constraints", {})
 
     def add_constraint(
         self,
@@ -1000,7 +966,7 @@ class Catalog:
         expr: str,
         branch: str = "main",
     ) -> int:
-        """Attach a CHECK constraint to ``name`` (r18 — Delta
+        """Attach a CHECK constraint to ``name`` (Delta
         ALTER TABLE ADD CONSTRAINT semantics): committed EXISTING data
         is validated first (one filtered scan; a table this constraint
         would already break must be repaired before the rule can be
@@ -1020,7 +986,7 @@ class Catalog:
         # validate the base AND any merge-on-read delta side table:
         # delta rows are part of the table's logical state, and a
         # constraint declared over a violating delta would wedge the
-        # next compaction (code-review r18)
+        # next compaction
         tables = self._manifest_tables(head)
         for scan_name in (name, name + "__delta"):
             if scan_name not in tables:
@@ -1067,7 +1033,7 @@ class Catalog:
         self, name: str, ops: list[dict], branch: str = "main"
     ) -> int:
         """Record schema-evolution ops for ``name`` in a METADATA-ONLY
-        commit (r17): no data file moves, but every later read of the
+        commit: no data file moves, but every later read of the
         table — current, as-of, or through a transaction snapshot —
         replays the cumulative op list over whatever version dir it
         resolves, so snapshots written before the evolution surface
@@ -1079,7 +1045,7 @@ class Catalog:
         optional -> NULL), ``{"op": "drop", "col": c}``, and
         ``{"op": "widen", "col": c, "type": ddl}`` (lossless type
         promotion only — int->bigint, float->double, decimal precision
-        growth; r18). At 100 TB this is the only sane ALTER TABLE:
+        growth). At 100 TB this is the only sane ALTER TABLE:
         one small JSON commit instead of a table rewrite. Reads AS OF a
         manifest BEFORE this commit replay only the ops recorded there
         — time travel sees the schema of its era.
@@ -1088,7 +1054,7 @@ class Catalog:
         table): use ``operators.mor_upsert.evolve_upserted_schema``,
         which records the ops for the side tables in the same commit —
         evolving only the base leaves a pre-evolution delta whose
-        unionByName with the evolved base fails (ADVICE r17)."""
+        unionByName with the evolved base fails."""
         _validate_schema_ops(ops)
         if not ops:
             raise ValueError("evolve_schema: empty op list")
@@ -1149,7 +1115,7 @@ class Catalog:
         version and CHECK-constraint set are paired FOR THE FIRST TIME
         by this merge (branch data under an onto-declared constraint,
         or vice versa) is re-validated before the swap, raising
-        ConstraintViolationError on violation (ADVICE r18). Without a
+        ConstraintViolationError on violation. Without a
         session the merged data is only re-validated on the next write
         to each table."""
         b_head = self.head(branch)
@@ -1180,8 +1146,7 @@ class Catalog:
         # across forks is undecidable), same policy as data versions.
         # Clearing counts as a change: a branch that rewrote a table
         # reset its ops, and re-attaching the base's ops on rebase
-        # would replay them onto the rewrite's current-schema files
-        # (code-review r17).
+        # would replay them onto the rewrite's current-schema files.
         base_s = self._manifest_schemas(base)
         b_s = self._manifest_schemas(b_head)
         o_s = self._manifest_schemas(o_head)
@@ -1228,7 +1193,7 @@ class Catalog:
         # The merge can pair a table's DATA with a constraint set the
         # data was never validated under — branch data meeting an
         # onto-side constraint, or onto data meeting a branch-declared
-        # one (ADVICE r18: without this a branch whose data violates a
+        # one (without this a branch whose data violates a
         # constraint added on the onto side merged cleanly, committing
         # a manifest whose data breaks its own declared rules). With a
         # ``spark`` session the novel pairings re-validate here, one
@@ -1248,7 +1213,7 @@ class Catalog:
                         continue
                     # "validated" is the constraint set THIS SCAN's data
                     # was last written under — decided per scan_name,
-                    # not per base table (ADVICE r19): a branch that
+                    # not per base table: a branch that
                     # rewrote base k while onto appended to k__delta
                     # merges delta rows that only ever saw the ONTO
                     # side's rules, even though k itself is b_changed.
@@ -1290,35 +1255,12 @@ class Catalog:
                                 k,
                                 cname,
                             )
-        with self._locked():
-            if self.head(branch) != b_head or self.head(onto) != o_head:
-                raise ConcurrentCommitError(
-                    f"ref {branch!r} or {onto!r} moved during rebase; "
-                    "re-read and retry"
-                )
-            m = self._next_manifest()
-            mdoc: dict = {"tables": merged, "parent": o_head}
-            if merged_s:
-                mdoc["schemas"] = merged_s
-            if merged_c:
-                mdoc["constraints"] = merged_c
-            mpath = os.path.join(self.root, _MANIFEST_DIR, f"m={m}.json")
-            tmp = mpath + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(mdoc, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, mpath)
-            _fsync_dir(os.path.dirname(mpath))
-            ref = self._ref_path(branch)
-            rtmp = ref + ".tmp"
-            with open(rtmp, "w") as f:
-                f.write(str(m))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(rtmp, ref)
-            _fsync_dir(os.path.dirname(ref))
-            return m
+        mdoc: dict = {"tables": merged, "parent": o_head}
+        if merged_s:
+            mdoc["schemas"] = merged_s
+        if merged_c:
+            mdoc["constraints"] = merged_c
+        return self._set_ref(branch, {branch: b_head, onto: o_head}, doc=mdoc)
 
     def rollback_to(self, manifest: int, branch: str = "main") -> int:
         """ROLL BACK ``branch`` to an ANCESTOR manifest (Iceberg's
@@ -1357,7 +1299,7 @@ class Catalog:
                 "fork history"
             )
         if cur != manifest:
-            self._set_ref(branch, manifest, expected=cur)
+            self._set_ref(branch, {branch: cur}, manifest=manifest)
         return manifest
 
     def expire_snapshots(
@@ -1382,7 +1324,6 @@ class Catalog:
         "reclaimed": gc report}."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1 (the head must survive)")
-        mdir = os.path.join(self.root, _MANIFEST_DIR)
         with self._locked():
             heads = [
                 h for h in self.branches().values() if h is not None
@@ -1395,7 +1336,7 @@ class Catalog:
                     depth += 1
                     cur = self._manifest_parent(cur)
             # DIVERGED refs additionally pin the path down to their
-            # merge base with every other ref (code-review r18):
+            # merge base with every other ref:
             # deleting a fork-point manifest — or any link on the walk
             # to it — leaves _merge_base unable to find the common
             # ancestor, and every later rebase/merge_ff of that branch
@@ -1415,42 +1356,45 @@ class Catalog:
                             if cur == base:
                                 break
                             cur = self._manifest_parent(cur)
-            expired: list[int] = []
-            for f in os.listdir(mdir):
-                if not (f.startswith("m=") and f.endswith(".json")):
-                    continue
-                mid = f[len("m=") : -len(".json")]
-                if mid.isdigit() and int(mid) not in keep:
-                    os.unlink(os.path.join(mdir, f))
-                    expired.append(int(mid))
+            expired = sorted(set(self._manifest_ids()) - keep)
+            for mid in expired:
+                os.unlink(self._manifest_path(mid))
         # reachable manifests now == the kept set, so the standard
         # reachability gc (own lock acquisition — after ours releases)
         # reclaims every version only expired manifests referenced
         reclaimed = self.gc_uncommitted(grace_seconds=grace_seconds)
-        return {"expired_manifests": sorted(expired), "reclaimed": reclaimed}
+        return {"expired_manifests": expired, "reclaimed": reclaimed}
 
     def _set_ref(
-        self, branch: str, m: int, expected: int | None
-    ) -> None:
-        """Atomically point ``branch`` at manifest ``m`` under the
-        commit lock, failing if the ref moved from ``expected`` (the
-        same CAS discipline as _commit — ref swaps, commits, and
-        branch deletes share one lock, so no interleaving can lose an
-        update)."""
+        self,
+        branch: str,
+        expected: dict[str, int | None],
+        manifest: int | None = None,
+        doc: dict | None = None,
+    ) -> int:
+        """The one publish point. Under the commit lock, fail with the
+        retryable ConcurrentCommitError unless every ref in ``expected``
+        still points at the manifest the caller read; write ``doc`` as
+        the next manifest when given; then point ``branch`` at it (or at
+        the existing ``manifest``). Commits, ref moves and branch deletes
+        share the lock, so no interleaving can lose an update, and a
+        crash before the ref's ``os.replace`` leaves every ref where it
+        was."""
         with self._locked():
-            if self.head(branch) != expected:
-                raise ConcurrentCommitError(
-                    f"ref {branch!r} moved {expected} -> "
-                    f"{self.head(branch)}; re-check and retry"
-                )
+            for ref, want in expected.items():
+                got = self.head(ref)
+                if got != want:
+                    raise ConcurrentCommitError(
+                        f"ref {ref!r} moved {want} -> {got} since it was "
+                        "read; re-read, restage, retry"
+                    )
+            if doc is not None:
+                manifest = self._next_manifest()
+                _write_durably(self._manifest_path(manifest), json.dumps(doc))
             ref = self._ref_path(branch)
-            tmp = ref + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(str(m))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, ref)
-            _fsync_dir(os.path.dirname(ref))
+            os.makedirs(os.path.dirname(ref), exist_ok=True)
+            _write_durably(ref, str(manifest))
+            return manifest
 
     # -- write side --------------------------------------------------
     @contextmanager
@@ -1506,7 +1450,10 @@ class Catalog:
         healthy writer has a microsecond gap between O_CREAT and the
         pid write — reclaiming on an empty read would race it; a crash
         inside that gap ages past the threshold and is then reclaimed).
-        A holder that is alive and fresh is left alone."""
+        A holder that is alive and fresh is left alone. Reclaim-then-
+        recreate has a benign race: if two waiters reclaim the same
+        corpse, one wins O_EXCL and the other keeps waiting — never a
+        double-acquire."""
         pid: int | None = None
         ts: float | None = None
         try:
@@ -1537,111 +1484,64 @@ class Catalog:
         return True
 
     def _next_manifest(self) -> int:
-        mdir = os.path.join(self.root, _MANIFEST_DIR)
-        existing = [
-            int(f[len("m=") : -len(".json")])
-            for f in os.listdir(mdir)
-            if f.startswith("m=") and f.endswith(".json")
-            and f[len("m=") : -len(".json")].isdigit()
-        ]
-        return max([self.head() or 0, *existing], default=0) + 1
+        return max([self.head() or 0, *self._manifest_ids()]) + 1
 
     def _commit(
         self,
         staged: dict[str, int],
-        expected_head: int | None = _CAS_UNSET,  # type: ignore[assignment]
+        expected_head: int | None,
         branch: str = "main",
         schema_ops: dict[str, list[dict]] | None = None,
         keep_schema_ops: frozenset[str] | set[str] = frozenset(),
         constraints: dict[str, dict[str, str]] | None = None,
     ) -> int:
-        """Write the merged manifest (immutable file), then swap _HEAD —
-        the ONLY publish point; everything before it is abortable.
-
-        Concurrent writers (ADVICE r13): the critical section runs
-        under an O_CREAT|O_EXCL lock file, and when ``expected_head``
-        is given (CatalogTransaction passes the head it opened at) the
-        commit FAILS with ConcurrentCommitError if HEAD moved since —
-        the optimistic compare-and-swap that turns a silent lost update
-        into a retryable conflict. On object storage the lock+check
-        collapses into one conditional-put of the head pointer.
-
-        Stale-lock reclamation (ADVICE r14): the lock file records
-        ``pid ts``; a holder whose pid is dead, or whose lock is older
-        than _LOCK_STALE_SECONDS, is presumed crashed between acquire
-        and the finally-unlink — the lock is reclaimed and the acquire
-        retried once, so one crash never wedges every later commit
-        behind a manual ``rm``. Reclaim-then-recreate has a benign
-        race: if two waiters reclaim the same corpse, one wins O_EXCL
-        and the other raises ConcurrentCommitError — still retryable,
-        never a double-acquire."""
-        with self._locked():
-            parent = self.head(branch)
-            if expected_head is not _CAS_UNSET and parent != expected_head:
-                raise ConcurrentCommitError(
-                    f"ref {branch!r} moved {expected_head} -> {parent} since "
-                    "this transaction opened; re-read, restage, retry"
-                )
-            m = self._next_manifest()
-            merged = {**self.manifest(branch), **staged}
-            # schema-evolution metadata carries forward on EVERY
-            # commit (like tables); an evolve_schema commit appends
-            # its ops to the table's cumulative replay list
-            schemas = {
-                k: list(v) for k, v in self._manifest_schemas(parent).items()
-            }
-            # a REWRITTEN table resets its op list: the staged version
-            # was produced against the conformed current schema, so
-            # replaying old ops onto its files would corrupt them —
-            # e.g. a drop-then-re-add's drop op would project away the
-            # REAL values a post-re-add rewrite computed and backfill
-            # the stale default (code-review r17). Readers of older
-            # manifests still see the ops recorded THERE. APPENDED
-            # versions are exempt (keep_schema_ops): their files carry
-            # the base's pre-evolution schema, so the ops must keep
-            # replaying over them.
-            for tname in staged:
-                if tname not in keep_schema_ops:
-                    schemas.pop(tname, None)
-            for tname, ops in (schema_ops or {}).items():
-                schemas[tname] = schemas.get(tname, []) + list(ops)
-            # CHECK constraints carry forward on every commit (unlike
-            # schema ops they survive rewrites — the rule outlives any
-            # one version); add/drop_constraint pass the full new map
-            cons = (
-                constraints
-                if constraints is not None
-                else self._manifest_constraints(parent)
+        """Publish ``staged`` over manifest ``expected_head`` as the next
+        commit on ``branch``: one new manifest, one ref swap. Raises
+        ConcurrentCommitError if the ref moved since ``expected_head``
+        was read — the optimistic compare-and-swap that turns a silent
+        lost update into a retryable conflict. ``None`` expects a branch
+        with no commits yet, so two first commits racing on one branch
+        cannot both land. On object storage the lock+check collapses
+        into one conditional-put of the ref."""
+        parent = self._doc(expected_head)
+        if parent is None:  # expire_snapshots never deletes a head
+            raise ConcurrentCommitError(
+                f"ref {branch!r} moved past expired m={expected_head}; "
+                "re-read, restage, retry"
             )
-            doc: dict = {"tables": merged, "parent": parent}
-            if schemas:
-                doc["schemas"] = schemas
-            if cons:
-                doc["constraints"] = cons
-            mpath = os.path.join(self.root, _MANIFEST_DIR, f"m={m}.json")
-            tmp = mpath + ".tmp"
-            with open(tmp, "w") as f:
-                # parent link = the manifest this one was committed on
-                # top of — the ancestry chain merge_ff walks
-                json.dump(doc, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, mpath)
-            _fsync_dir(os.path.dirname(mpath))
-            # the commit point: one atomic metadata op covers every table
-            ref = self._ref_path(branch)
-            os.makedirs(os.path.dirname(ref), exist_ok=True)
-            head_tmp = ref + ".tmp"
-            with open(head_tmp, "w") as f:
-                f.write(str(m))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(head_tmp, ref)
-            # rename atomicity is not rename durability: sync the
-            # parent dir or a crash can roll the ref back to the old
-            # manifest
-            _fsync_dir(os.path.dirname(ref))
-            return m
+        # schema-evolution metadata carries forward on EVERY commit
+        # (like tables); an evolve_schema commit appends its ops to the
+        # table's cumulative replay list
+        schemas = {k: list(v) for k, v in parent.get("schemas", {}).items()}
+        # a REWRITTEN table resets its op list: the staged version was
+        # produced against the conformed current schema, so replaying
+        # old ops onto its files would corrupt them — e.g. a
+        # drop-then-re-add's drop op would project away the REAL values
+        # a post-re-add rewrite computed and backfill the stale default.
+        # Readers of older manifests still see the ops recorded THERE.
+        # APPENDED versions are exempt (keep_schema_ops): their files
+        # carry the base's pre-evolution schema, so the ops must keep
+        # replaying over them.
+        for tname in staged:
+            if tname not in keep_schema_ops:
+                schemas.pop(tname, None)
+        for tname, ops in (schema_ops or {}).items():
+            schemas[tname] = schemas.get(tname, []) + list(ops)
+        # CHECK constraints carry forward on every commit (unlike schema
+        # ops they survive rewrites — the rule outlives any one
+        # version); add/drop_constraint pass the full new map
+        cons = parent.get("constraints", {}) if constraints is None else constraints
+        # parent link = the manifest this one was committed on top of —
+        # the ancestry chain merge_ff and rebase walk
+        doc: dict = {
+            "tables": {**self._manifest_tables(expected_head), **staged},
+            "parent": expected_head,
+        }
+        if schemas:
+            doc["schemas"] = schemas
+        if cons:
+            doc["constraints"] = cons
+        return self._set_ref(branch, {branch: expected_head}, doc=doc)
 
     def transaction(self, branch: str = "main") -> "CatalogTransaction":
         return CatalogTransaction(self, branch)
@@ -1674,53 +1574,6 @@ class Catalog:
                 time.sleep(0.02 * (attempt + 1))
         raise last  # type: ignore[misc]
 
-    def snapshot_diff(
-        self,
-        spark: SparkSession,
-        name: str,
-        m_old: int,
-        m_new: int,
-        key_cols: tuple[str, ...],
-        compare_cols: tuple[str, ...] = (),
-    ) -> DataFrame:
-        """Row-level DIFF of one table between two manifests (r17 —
-        the lakehouse CDC surface, Delta CDF / Iceberg changelog-scan
-        shape): keys only in the new snapshot are ``added``, keys only
-        in the old are ``removed``, keys in both whose ``compare_cols``
-        tuple differs are ``changed``; unchanged rows never emit.
-        Output: key columns + the new-side compare columns (NULL for
-        removed rows) + ``change``.
-
-        Scale shape: ONE full-outer hash join on the key columns —
-        both sides shuffle once, comparison runs inside codegen on
-        packed structs, and nothing data-sized touches the driver. At
-        100 TB you'd additionally prune unchanged FILES first (same
-        version id on both sides after a compaction-free history means
-        identical files); version dirs here are whole-table snapshots,
-        so the join IS the general case."""
-        from pyspark.sql import functions as F
-
-        keys = list(key_cols)
-        cmp_ = list(compare_cols)
-        old = self.read_asof(spark, name, m_old).select(
-            *keys, F.struct(*[F.col(c) for c in cmp_] or [F.lit(1)]).alias("_o")
-        )
-        new = self.read_asof(spark, name, m_new).select(
-            *keys, F.struct(*[F.col(c) for c in cmp_] or [F.lit(1)]).alias("_n")
-        )
-        j = old.join(new, on=keys, how="full_outer")
-        change = (
-            F.when(F.col("_o").isNull(), F.lit("added"))
-            .when(F.col("_n").isNull(), F.lit("removed"))
-            .when(F.col("_o") != F.col("_n"), F.lit("changed"))
-        )
-        out = j.withColumn("change", change).filter(F.col("change").isNotNull())
-        return out.select(
-            *keys,
-            *[F.col("_n")[c].alias(c) for c in cmp_],
-            "change",
-        )
-
     def compact_table(
         self,
         spark: SparkSession,
@@ -1742,15 +1595,13 @@ class Catalog:
         Refuses while positional deletes are pending — the rewrite
         would strand their (file,pos) anchors."""
         def body(t: CatalogTransaction) -> None:
-            versions = self._manifest_tables(t._expected_head)
-            if name not in versions:
-                raise FileNotFoundError(
-                    f"table {name!r} not in committed manifest"
-                )
+            version = self._version(
+                name, t._expected_head, f"committed manifest of {branch!r}"
+            )
             guard_no_pending_positional_deletes(
                 self, spark, name, t._expected_head
             )
-            vdir = _version_dir(self.table_dir(name), versions[name])
+            vdir = _version_dir(self.table_dir(name), version)
             parts = (
                 _detect_partition_cols(vdir)
                 if partition_by is None
@@ -1799,85 +1650,63 @@ class Catalog:
         are unaffected (they match by key, not position).
 
         Returns the commit's manifest id, or None when no partition is
-        over the threshold (nothing staged, nothing published). CAS +
-        lock semantics are the standard commit bracket's."""
-        head = self.head(branch)
-        versions = self._manifest_tables(head)
-        if name not in versions:
-            raise FileNotFoundError(f"table {name!r} not in branch {branch!r}")
-        guard_no_pending_positional_deletes(self, spark, name, head)
+        over the threshold (nothing staged, nothing published). Runs
+        through commit_retrying: a commit landing meanwhile makes this
+        one rerun on the new snapshot instead of raising."""
         table_dir = self.table_dir(name)
-        vdir = _version_dir(table_dir, versions[name])
-        part_cols = _detect_partition_cols(vdir)
-        if not part_cols:
-            raise ValueError(
-                f"table {name!r} is unpartitioned; use compact_table"
+
+        def body(t: CatalogTransaction) -> None:
+            head = t._expected_head
+            vdir = _version_dir(
+                table_dir, self._version(name, head, f"branch {branch!r}")
             )
-        # leaf partition dirs = dirs containing parquet files
-        leaves: list[str] = []  # relative paths
-        for root, _, files in os.walk(vdir):
-            if any(f.endswith(".parquet") for f in files):
-                leaves.append(os.path.relpath(root, vdir))
-        offenders = []
-        for rel in leaves:
-            full = os.path.join(vdir, rel)
-            parts = [f for f in os.listdir(full) if f.endswith(".parquet")]
-            if len(parts) > max_files_per_partition:
-                size = sum(
-                    os.path.getsize(os.path.join(full, f)) for f in parts
+            guard_no_pending_positional_deletes(self, spark, name, head)
+            if not _detect_partition_cols(vdir):
+                raise ValueError(
+                    f"table {name!r} is unpartitioned; use compact_table"
                 )
-                offenders.append((rel, math.ceil(size / target_file_bytes)))
-        if not offenders:
-            return None
-        offender_set = {rel for rel, _ in offenders}
-        version = _reserve_version(table_dir)
-        new_vdir = _version_dir(table_dir, version)
-        try:
-            # healthy partitions: hard-link, zero data moved (shared
-            # helper with stage_version_append, incl. its
-            # never-clobber guard)
-            os.makedirs(new_vdir, exist_ok=True)
-            for rel in leaves:
-                if rel in offender_set:
-                    continue
-                dst_root = (
-                    new_vdir if rel == "." else os.path.join(new_vdir, rel)
+            # leaf partition dirs = dirs containing parquet files
+            leaves: dict[str, list[str]] = {}  # relative path -> parts
+            for root, _, files in os.walk(vdir):
+                parts = [f for f in files if f.endswith(".parquet")]
+                if parts:
+                    leaves[os.path.relpath(root, vdir)] = parts
+            offenders = {
+                rel: math.ceil(
+                    sum(
+                        os.path.getsize(os.path.join(vdir, rel, f))
+                        for f in parts
+                    )
+                    / target_file_bytes
                 )
-                _link_parquet_tree(os.path.join(vdir, rel), dst_root)
-            # offenders: raw read of JUST that partition's files,
-            # coalesced to ~target-size, written back under the same
-            # col=value path (the partition values live in the path,
-            # exactly as partitionBy laid them out)
-            for rel, n_files in offenders:
-                part_df = read_parquet(spark, os.path.join(vdir, rel))
-                dst_root = (
-                    new_vdir if rel == "." else os.path.join(new_vdir, rel)
-                )
-                part_df.coalesce(max(1, n_files)).write.mode(
-                    "append"
-                ).parquet(dst_root)
-            schema_path = os.path.join(vdir, "_SCHEMA.json")
-            if os.path.exists(schema_path):
-                shutil.copy2(
-                    schema_path, os.path.join(new_vdir, "_SCHEMA.json")
-                )
-            m = self._commit(
-                {name: version},
-                expected_head=head,
-                branch=branch,
-                # rewritten files carry the same pre-evolution schema
-                # as the old version: ops must keep replaying
-                keep_schema_ops={name},
-            )
-        except BaseException:
-            shutil.rmtree(new_vdir, ignore_errors=True)
-            raise
-        finally:
-            try:
-                os.unlink(os.path.join(table_dir, f"v={version}.claim"))
-            except FileNotFoundError:
-                pass
-        return m
+                for rel, parts in leaves.items()
+                if len(parts) > max_files_per_partition
+            }
+            if not offenders:
+                return
+            with _staging(table_dir) as (version, new_vdir):
+                for rel in leaves:
+                    src = os.path.join(vdir, rel)
+                    dst = os.path.normpath(os.path.join(new_vdir, rel))
+                    if rel not in offenders:
+                        # healthy partition: hard-link, zero data moved
+                        _link_parquet_tree(src, dst)
+                    else:
+                        # offender: raw read of JUST that partition's
+                        # files, coalesced to ~target-size, written back
+                        # under the same col=value path (the partition
+                        # values live in the path)
+                        read_parquet(spark, src).coalesce(
+                            max(1, offenders[rel])
+                        ).write.mode("append").parquet(dst)
+                schema_json = _read_schema(vdir)
+                if schema_json is not None:
+                    _write_schema(new_vdir, schema_json)
+            # the rewritten files carry the same pre-evolution schema as
+            # the old version: ops must keep replaying, as for an append
+            t._track(name, version, appended=True)
+
+        return self.commit_retrying(body, branch)
 
     def _reachable_manifests(self) -> set[int]:
         """Manifest ids reachable from ANY ref by parent-walk — the
@@ -1896,13 +1725,13 @@ class Catalog:
         staging but before the ref swap, and versions pinned only by
         since-deleted branches.
 
-        Reachability-EXACT (ADVICE r15): the live set is the exact
+        Reachability-EXACT: the live set is the exact
         (table, version) pairs in every manifest reachable from any
         ref by parent-walk — not a max-per-table high-water mark,
         which leaked debris that landed BETWEEN two refs' pinned
         versions forever (main pins v3, a branch pins v5, a crashed
         writer orphaned v4: v4 < max(3,5) was never reclaimed).
-        Scans ALL table directories under root (ADVICE r13): a table
+        Scans ALL table directories under root: a table
         that was being INTRODUCED by a crashed transaction has staged
         versions but no manifest entry at all, so every version is
         unreferenced and the empty dir is removed too. Unreachable
@@ -1932,15 +1761,9 @@ class Catalog:
 
         with self._locked():
             reachable = self._reachable_manifests()
-            mdir = os.path.join(self.root, _MANIFEST_DIR)
             live: dict[str, set[int]] = {}
             for m in reachable:
-                try:
-                    with open(os.path.join(mdir, f"m={m}.json")) as f:
-                        tables = json.load(f)["tables"]
-                except FileNotFoundError:
-                    continue
-                for name, v in tables.items():
+                for name, v in (self._doc(m) or {"tables": {}})["tables"].items():
                     live.setdefault(name, set()).add(int(v))
             removed: dict[str, list[int]] = {}
             for name in os.listdir(self.root):
@@ -1950,48 +1773,36 @@ class Catalog:
                 ) or not os.path.isdir(tdir):
                     continue
                 keep = live.get(name, set())
-                for d in os.listdir(tdir):
-                    if d.startswith("v=") and d.endswith(".claim"):
+                for d, v, claim in _version_entries(tdir):
+                    path = os.path.join(tdir, d)
+                    if claim:
                         # stale reservation from a crashed stager. A
                         # claim is ALWAYS given a minimum age before
-                        # reclaim, even at grace_seconds=0 (ADVICE
-                        # r16): unlinking a live in-flight claim
-                        # re-enables the version-number collision
-                        # _reserve_version exists to prevent. A real
-                        # stager holds its claim only for the staging
-                        # write, so the floor covers any live writer;
-                        # a crashed one is swept on the next gc pass.
-                        cpath = os.path.join(tdir, d)
+                        # reclaim, even at grace_seconds=0: unlinking a
+                        # live in-flight claim re-enables the
+                        # version-number collision _reserve_version
+                        # exists to prevent. A real stager holds its
+                        # claim only for the staging write, so the floor
+                        # covers any live writer; a crashed one is swept
+                        # on the next gc pass.
                         if not _fresh(
-                            cpath,
-                            max(grace_seconds, _CLAIM_MIN_AGE_SECONDS),
+                            path, max(grace_seconds, _CLAIM_MIN_AGE_SECONDS)
                         ):
                             try:
-                                os.unlink(cpath)
+                                os.unlink(path)
                             except FileNotFoundError:
                                 pass
-                        continue
-                    if d.startswith("v=") and d.split("=", 1)[1].isdigit():
-                        v = int(d.split("=", 1)[1])
-                        vdir = _version_dir(tdir, v)
-                        if v not in keep and not _fresh(vdir):
-                            shutil.rmtree(vdir, ignore_errors=True)
-                            removed.setdefault(name, []).append(v)
+                    elif v not in keep and not _fresh(path):
+                        shutil.rmtree(path, ignore_errors=True)
+                        removed.setdefault(name, []).append(v)
                 # a never-committed table dir emptied of versions is
                 # itself debris; remove it if nothing else lives there
                 if name not in live and not os.listdir(tdir):
                     os.rmdir(tdir)
-            for fname in os.listdir(mdir):
-                if fname.startswith("m=") and fname.endswith(".json"):
-                    mid = fname[len("m=") : -len(".json")]
-                    mpath = os.path.join(mdir, fname)
-                    if (
-                        mid.isdigit()
-                        and int(mid) not in reachable
-                        and not _fresh(mpath)
-                    ):
-                        os.unlink(mpath)
-                        removed.setdefault("_MANIFEST", []).append(int(mid))
+            for mid in self._manifest_ids():
+                if mid not in reachable and not _fresh(self._manifest_path(mid)):
+                    os.unlink(self._manifest_path(mid))
+                    removed.setdefault("_MANIFEST", []).append(mid)
             return {k: sorted(v) for k, v in removed.items()}
 
 
@@ -2012,7 +1823,7 @@ class CatalogTransaction:
     """
 
     def __init__(self, catalog: Catalog, branch: str = "main") -> None:
-        # a non-main branch must already exist (ADVICE r15): without
+        # a non-main branch must already exist: without
         # this, a typo'd branch name silently spawned an orphan ref
         # with an empty base at commit time instead of failing fast
         if branch != "main" and catalog.head(branch) is None:
@@ -2026,27 +1837,26 @@ class CatalogTransaction:
         # tables whose staged chain BEGAN with an overwrite in this
         # bracket: an append chained onto that rewrite inherits files
         # that already embody the current schema, so the commit must
-        # still reset the table's schema-op list — without this,
-        # overwrite-then-append re-enabled the replay-over-rewrite
-        # corruption the r17 fix closed (ADVICE r17)
+        # still reset the table's schema-op list, or the old ops would
+        # replay over the rewrite's current-schema files
         self._rewrite_base: set[str] = set()
         # manifest id THIS transaction published (None until a commit
         # happens; stays None for an empty transaction). Callers that
         # report "the manifest my write landed in" must read this, not
         # re-read head() after exit — a racing commit can move head
-        # past ours between the swap and the re-read (ADVICE r16).
+        # past ours between the swap and the re-read.
         self.committed_manifest: int | None = None
         # optimistic-concurrency snapshot: commit fails (and rolls the
         # staged versions back) if THIS BRANCH's ref moves before we
         # publish — without this, {**manifest(), **staged} re-read at
-        # commit time silently drops a racing writer's tables (ADVICE
-        # r13). Writers on DIFFERENT branches never conflict: each CAS
+        # commit time silently drops a racing writer's tables. Writers
+        # on DIFFERENT branches never conflict: each CAS
         # guards its own ref.
         self._expected_head = catalog.head(branch)
 
     def _enforce_constraints(self, df: DataFrame, name: str) -> None:
-        """CHECK-constraint gate on the rows THIS write introduces
-        (r18): one filtered count per declared constraint, so an
+        """CHECK-constraint gate on the rows THIS write introduces:
+        one filtered count per declared constraint, so an
         appended micro-batch pays O(batch), never O(table). FALSE and
         NULL are violations (every row must evaluate TRUE — Delta
         semantics). Raising here aborts the bracket before anything
@@ -2061,7 +1871,7 @@ class CatalogTransaction:
         from pyspark.sql import functions as F
 
         # ONE pass over the write's plan regardless of how many
-        # constraints are declared (code-review r18: per-constraint
+        # constraints are declared (per-constraint
         # passes recomputed a compaction's full merged plan N times);
         # the per-constraint attribution pass runs only on failure
         violated = [
@@ -2094,17 +1904,38 @@ class CatalogTransaction:
             "?",
         )
 
+    def _track(self, name: str, version: int, appended: bool = False) -> int:
+        """Record ``version`` as this bracket's stage of ``name``. A
+        rewrite supersedes any earlier append of the table in this
+        bracket — its files embody the current schema — and marks the
+        table's chain as rewrite-based. An appended version keeps the
+        base's (possibly pre-evolution) files, so the commit must NOT
+        reset the table's op list — unless the chain began with a
+        rewrite here (``_rewrite_base``; __exit__ excludes those). An
+        append chained onto an earlier stage replaces it, so the
+        superseded dir goes."""
+        prev = self._staged.get(name)
+        if not appended:
+            self._append_staged.discard(name)
+            self._rewrite_base.add(name)
+        else:
+            self._append_staged.add(name)
+            if prev is not None and prev != version:
+                shutil.rmtree(
+                    _version_dir(self._catalog.table_dir(name), prev),
+                    ignore_errors=True,
+                )
+        self._staged[name] = version
+        return version
+
     def overwrite(
         self, df: DataFrame, name: str, partition_by: tuple[str, ...] = ()
     ) -> int:
         self._enforce_constraints(df, name)
-        version = stage_version(df, self._catalog.table_dir(name), partition_by)
-        self._staged[name] = version
-        # a rewrite supersedes any earlier append of the same table in
-        # this bracket — its files embody the current schema
-        self._append_staged.discard(name)
-        self._rewrite_base.add(name)
-        return version
+        return self._track(
+            name,
+            stage_version(df, self._catalog.table_dir(name), partition_by),
+        )
 
     def truncate(self, df: DataFrame, name: str) -> int:
         """Stage an EMPTY version of ``name`` carrying ``df``'s schema —
@@ -2113,13 +1944,10 @@ class CatalogTransaction:
         primitives use this to reset folded side tables (dv/delta/pdv)
         inside their atomic commit. Zero rows satisfy any CHECK
         constraint vacuously, so no enforcement pass is needed."""
-        version = stage_empty_version(
-            self._catalog.table_dir(name), df.schema.json()
+        return self._track(
+            name,
+            stage_empty_version(self._catalog.table_dir(name), df.schema.json()),
         )
-        self._staged[name] = version
-        self._append_staged.discard(name)
-        self._rewrite_base.add(name)
-        return version
 
     def has_committed(self, name: str) -> bool:
         """Whether ``name`` is in THIS transaction's snapshot — the
@@ -2127,18 +1955,19 @@ class CatalogTransaction:
         table on its first write."""
         return name in self._catalog._manifest_tables(self._expected_head)
 
+    def _snapshot(self) -> str:
+        return f"snapshot m={self._expected_head} of branch {self._branch!r}"
+
     def committed_rows(self, name: str) -> int | None:
         """Row count of ``name`` at THIS transaction's snapshot from
         parquet footers (no Spark job; see version_rows), or None when
         the footers cannot answer — callers fall back to a scan.
         Raises FileNotFoundError when the table is not in the
         snapshot, mirroring read_committed."""
-        snap = self._catalog._manifest_tables(self._expected_head)
-        if name not in snap:
-            raise FileNotFoundError(
-                f"table {name!r} not in snapshot m={self._expected_head}"
-            )
-        return version_rows(self._catalog.table_dir(name), snap[name])
+        version = self._catalog._version(
+            name, self._expected_head, self._snapshot()
+        )
+        return version_rows(self._catalog.table_dir(name), version)
 
     def committed_values(
         self, name: str, max_rows: int | None = None
@@ -2150,22 +1979,15 @@ class CatalogTransaction:
         and pending schema-evolution ops). Raises FileNotFoundError
         when the table is not in the snapshot, mirroring
         read_committed."""
-        snap = self._catalog._manifest_tables(self._expected_head)
-        if name not in snap:
-            raise FileNotFoundError(
-                f"table {name!r} not in snapshot m={self._expected_head}"
-            )
-        if self._catalog._manifest_schemas(self._expected_head).get(name):
-            return None
-        return version_values(
-            self._catalog.table_dir(name), snap[name], max_rows
+        return self._catalog._values(
+            name, self._expected_head, self._snapshot(), max_rows
         )
 
     def overwrite_small(self, spark, rows, schema_ddl: str, name: str) -> int:
         """Overwrite ``name`` with DRIVER-MATERIALIZED rows: a direct
         pyarrow parquet stage when the schema maps (stage_small_version
         — no Spark job), the ordinary Spark overwrite otherwise. The
-        write half of the driver-side ledger commit path (r20): the
+        write half of the driver-side ledger commit path: the
         exactly-once sinks rewrite a by-contract metadata-sized table
         once per micro-batch, and the staged write job was pure fixed
         cost. Tables with declared CHECK constraints take the Spark
@@ -2180,10 +2002,7 @@ class CatalogTransaction:
                 self._catalog.table_dir(name), rows, schema
             )
             if version is not None:
-                self._staged[name] = version
-                self._append_staged.discard(name)
-                self._rewrite_base.add(name)
-                return version
+                return self._track(name, version)
         return self.overwrite(spark.createDataFrame(rows, schema_ddl), name)
 
     def append(self, df: DataFrame, name: str) -> int:
@@ -2207,21 +2026,7 @@ class CatalogTransaction:
         version = stage_version_append(
             df, self._catalog.table_dir(name), base_v
         )
-        # replacing our own earlier stage: drop the superseded dir
-        if name in self._staged and self._staged[name] != version:
-            shutil.rmtree(
-                _version_dir(self._catalog.table_dir(name), self._staged[name]),
-                ignore_errors=True,
-            )
-        self._staged[name] = version
-        # appended files keep the base's (possibly pre-evolution)
-        # schema — the commit must NOT reset this table's op list.
-        # Exception: a chain that began with an overwrite IN THIS
-        # bracket (self._rewrite_base) — those base files already
-        # embody the current schema, so the ops still reset at commit
-        # (the exclusion happens in __exit__ via _rewrite_base).
-        self._append_staged.add(name)
-        return version
+        return self._track(name, version, appended=True)
 
     def read_staged(self, spark: SparkSession, name: str) -> DataFrame:
         """Scan a version staged IN THIS transaction (materialized but
@@ -2246,8 +2051,7 @@ class CatalogTransaction:
         same contract as Iceberg's table-scan-at-snapshot inside a
         pending commit."""
         return self._catalog._read_table(
-            spark, name, self._expected_head,
-            f"snapshot m={self._expected_head} of branch {self._branch!r}",
+            spark, name, self._expected_head, self._snapshot()
         )
 
     def __enter__(self) -> "CatalogTransaction":
@@ -2256,8 +2060,8 @@ class CatalogTransaction:
     def __exit__(self, exc_type, exc, tb) -> bool:
         try:
             # an empty transaction publishes NOTHING — no empty
-            # manifest, no head bump (a read-only bracket that early-
-            # returns must not mint commits; ADVICE r16 follow-on)
+            # manifest, no head bump (a read-only bracket that
+            # early-returns must not mint commits)
             if exc_type is None and self._staged:
                 self.committed_manifest = self._catalog._commit(
                     self._staged,
@@ -2266,19 +2070,21 @@ class CatalogTransaction:
                     # a staged chain whose base is a rewrite from this
                     # same bracket embodies the current schema even if
                     # appends followed — its op list must reset too
-                    # (ADVICE r17)
-                    keep_schema_ops=self._append_staged
-                    - self._rewrite_base,
+                    keep_schema_ops=self._append_staged - self._rewrite_base,
                 )
                 self._staged = {}
         finally:
-            # rollback path: an exception in the block OR a lost
-            # optimistic-concurrency race in _commit — either way the
-            # staged (never-published) versions are deleted
-            for name, version in self._staged.items():
-                shutil.rmtree(
-                    _version_dir(self._catalog.table_dir(name), version),
-                    ignore_errors=True,
-                )
+            # rollback path: an exception in the block OR a failed
+            # commit — the staged versions are deleted. A commit that
+            # failed AFTER its ref swap (syncing the ref's directory)
+            # has published them, so versions the branch head names stay.
+            if self._staged:
+                live = self._catalog.manifest(self._branch)
+                for name, version in self._staged.items():
+                    if live.get(name) != version:
+                        shutil.rmtree(
+                            _version_dir(self._catalog.table_dir(name), version),
+                            ignore_errors=True,
+                        )
             self._staged = {}
         return False  # propagate the exception after rollback

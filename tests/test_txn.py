@@ -975,55 +975,6 @@ def test_schema_evolution_rejects_bad_ops(spark, tmp_path):
             cat.evolve_schema("t", bad)
 
 
-def test_snapshot_diff_classifies_rows(spark, tmp_path):
-    """added / removed / changed between two manifests; unchanged rows
-    never emit; removed rows carry NULL compare values."""
-    from glue_jobs_for_data_pipeline_spark.sources.txn import Catalog
-
-    cat = Catalog(str(tmp_path / "wh"))
-    v1 = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k long, v string"
-    )
-    with cat.transaction() as t:
-        t.overwrite(v1, "t")
-    m1 = cat.head()
-    v2 = spark.createDataFrame(
-        [(1, "a"), (3, "C"), (4, "d")], "k long, v string"
-    )
-    with cat.transaction() as t:
-        t.overwrite(v2, "t")
-    got = {
-        r["k"]: (r["v"], r["change"])
-        for r in cat.snapshot_diff(
-            spark, "t", m1, cat.head(), ("k",), ("v",)
-        ).collect()
-    }
-    assert got == {
-        2: (None, "removed"),
-        3: ("C", "changed"),
-        4: ("d", "added"),
-    }  # k=1 unchanged -> absent
-
-
-def test_snapshot_diff_keys_only(spark, tmp_path):
-    """Without compare columns the diff is pure membership: no
-    'changed' class can fire."""
-    from glue_jobs_for_data_pipeline_spark.sources.txn import Catalog
-
-    cat = Catalog(str(tmp_path / "wh"))
-    with cat.transaction() as t:
-        t.overwrite(spark.range(5).toDF("k"), "t")
-    m1 = cat.head()
-    with cat.transaction() as t:
-        t.overwrite(spark.range(3, 8).toDF("k"), "t")
-    got = {
-        r["k"]: r["change"]
-        for r in cat.snapshot_diff(spark, "t", m1, cat.head(), ("k",)).collect()
-    }
-    assert got == {0: "removed", 1: "removed", 2: "removed",
-                   5: "added", 6: "added", 7: "added"}
-
-
 def test_schema_evolution_drop_column(spark, tmp_path):
     """DROP COLUMN is metadata-only: old files keep the bytes, every
     read projects the column away; add->drop->re-add round-trips, and
@@ -1918,3 +1869,189 @@ def test_compact_table_retries_when_an_append_races_its_read(
     assert fired
     assert m is not None and m == cat.head()
     assert _vals(spark, cat) == list(range(15))
+
+
+def test_failed_staged_write_leaves_no_version_dir(spark, tmp_path):
+    """A staged write that fails mid-job must take its version dir and
+    claim with it: the rolled-back table dir holds only the committed
+    version."""
+    from pyspark.sql import functions as F
+
+    cat = txn.Catalog(str(tmp_path / "wh"))
+    _commit(cat, spark.range(3).selectExpr("id AS v"), "dim")
+    bad = spark.range(3).select(
+        F.when(F.col("id") == 1, F.raise_error(F.lit("bad row")))
+        .otherwise(F.col("id"))
+        .alias("v")
+    )
+    with pytest.raises(Exception, match="bad row"):
+        with cat.transaction() as t:
+            t.overwrite(bad, "dim")
+    assert sorted(os.listdir(cat.table_dir("dim"))) == ["v=1"]
+    assert _vals(spark, cat, "dim") == [0, 1, 2]
+
+
+def test_compact_partitions_retries_when_an_append_races_its_read(
+    spark, tmp_path, monkeypatch
+):
+    """A commit landing while compact_partitions rewrites its offenders
+    must make the compaction rerun on the new snapshot: the racing rows
+    survive and the pending schema ops keep replaying."""
+    cat = _pp_cat(spark, tmp_path)
+    cat.evolve_schema("t", [
+        {"op": "add", "col": "src", "type": "string", "default": "old"},
+        {"op": "widen", "col": "k", "type": "decimal(20,0)"},
+    ])
+    real_read_parquet = txn.read_parquet
+    fired = []
+
+    def racy_read_parquet(spark_, *paths):
+        if not fired:
+            fired.append(1)
+            # p=1 stays under the file threshold: linked, not rewritten
+            with cat.transaction() as t:
+                t.append(
+                    spark.createDataFrame([(900, 1)], "k long, p int"), "t"
+                )
+        return real_read_parquet(spark_, *paths)
+
+    monkeypatch.setattr(txn, "read_parquet", racy_read_parquet)
+    m = cat.compact_partitions(spark, "t", max_files_per_partition=4)
+    monkeypatch.undo()
+    assert fired
+    assert m is not None and m == cat.head()
+    df = cat.read(spark, "t")
+    assert sorted(int(r["k"]) for r in df.collect()) == sorted(
+        [*range(30), *range(100, 105), 900]
+    )
+    assert "t" in cat._manifest_schemas(m)
+    assert dict(df.dtypes)["k"] == "decimal(20,0)"
+    assert df.filter("src = 'old'").count() == df.count()
+    _, files = _files_per_partition(cat, "t")
+    assert len(files["p=0"]) <= 4
+
+
+def _tags(spark, cat, branch="main"):
+    return tuple(
+        cat.read(spark, name, branch).selectExpr("max(tag)").first()[0]
+        for name in ("dim", "fact")
+    )
+
+
+def _stage_pair(cat, spark, tag, branch="main"):
+    with cat.transaction(branch) as t:
+        t.overwrite(_df(spark, tag), "dim")
+        t.overwrite(_df(spark, tag), "fact")
+
+
+def _crash_scenario(path, cat, spark):
+    """(old tags, new tags, the operation to crash, the ref it moves)
+    for one commit path, with the catalog set up so ``op`` moves
+    ``ref`` from the old to the new state."""
+    _stage_pair(cat, spark, 1)
+    if path == "transaction":
+        return (1, 1), (2, 2), lambda: _stage_pair(cat, spark, 2), "main"
+    if path == "rebase":
+        cat.create_branch("exp")
+        with cat.transaction("exp") as t:
+            t.overwrite(_df(spark, 2), "dim")
+        with cat.transaction() as t:
+            t.overwrite(_df(spark, 3), "fact")
+        return (2, 1), (2, 3), lambda: cat.rebase("exp"), "exp"
+    if path == "merge_ff":
+        cat.create_branch("exp")
+        _stage_pair(cat, spark, 2, "exp")
+        return (1, 1), (2, 2), lambda: cat.merge_ff("exp"), "main"
+    first = cat.head()
+    _stage_pair(cat, spark, 2)
+    return (2, 2), (1, 1), lambda: cat.rollback_to(first), "main"
+
+
+def _in_manifest_dir(path):
+    return os.path.basename(os.path.dirname(path)) == txn._MANIFEST_DIR
+
+
+def _is_manifest_dir(path):
+    return os.path.basename(path) == txn._MANIFEST_DIR
+
+
+# step -> (the function that fails, which of its calls fails: called
+# with the call number and the call's arguments). The claim and the
+# data write fail for the second table, after the first one staged.
+_CRASH_STEPS = {
+    "claim": ("reserve", lambda n, *a: n == 2),
+    "data_write": ("parquet", lambda n, *a: n == 2),
+    "manifest_replace": ("replace", lambda n, src, dst: _in_manifest_dir(dst)),
+    "ref_replace": ("replace", lambda n, src, dst: not _in_manifest_dir(dst)),
+    "manifest_dir_sync": ("fsync_dir", lambda n, p: _is_manifest_dir(p)),
+    "ref_dir_sync": ("fsync_dir", lambda n, p: not _is_manifest_dir(p)),
+}
+_CRASH_CASES = [
+    ("transaction", step) for step in _CRASH_STEPS
+] + [
+    ("rebase", step) for step in (
+        "manifest_replace", "ref_replace", "manifest_dir_sync", "ref_dir_sync"
+    )
+] + [
+    (path, step)
+    for path in ("merge_ff", "rollback_to")
+    for step in ("ref_replace", "ref_dir_sync")
+]
+
+
+@pytest.mark.parametrize("path,step", _CRASH_CASES)
+def test_crash_at_each_durable_step_leaves_old_or_new_state(
+    spark, tmp_path, monkeypatch, path, step
+):
+    """Fail each durable step of each commit path with an OSError:
+    readers then see exactly the old or the new state, and
+    gc_uncommitted plus a retry converges on the new one."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    cat = txn.Catalog(str(tmp_path / "wh"))
+    old, new, op, ref = _crash_scenario(path, cat, spark)
+    kind, fires = _CRASH_STEPS[step]
+    target = {
+        "reserve": (txn, "_reserve_version"),
+        "parquet": (DataFrameWriter, "parquet"),
+        "replace": (txn.os, "replace"),
+        "fsync_dir": (txn, "_fsync_dir"),
+    }[kind]
+    real = getattr(*target)
+    calls = []
+
+    def crashing(*args, **kwargs):
+        calls.append(1)
+        plain = args[1:] if kind == "parquet" else args
+        if fires(len(calls), *plain):
+            raise OSError(f"simulated crash at {step}")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(*target, crashing)
+    with pytest.raises(OSError, match="simulated crash"):
+        op()
+    monkeypatch.undo()
+
+    assert _tags(spark, cat, ref) in (old, new)
+    for name in ("dim", "fact"):
+        assert not [
+            d for d in os.listdir(cat.table_dir(name)) if d.endswith(".claim")
+        ]
+    cat.gc_uncommitted()
+    if _tags(spark, cat, ref) != new:
+        op()
+    assert _tags(spark, cat, ref) == new
+    # once gc has run, every version dir left is one a reachable
+    # manifest names
+    cat.gc_uncommitted()
+    live = {
+        (name, v)
+        for m in cat._reachable_manifests()
+        for name, v in cat._manifest_tables(m).items()
+    }
+    on_disk = {
+        (name, int(d[len("v="):]))
+        for name in ("dim", "fact")
+        for d in os.listdir(cat.table_dir(name))
+    }
+    assert on_disk == live
