@@ -9,7 +9,11 @@ Five dedup families, each picked for a different scale/recall point:
                          O(sum of posting-list^2) — for moderate corpora
                          or as the verify stage after LSH).
 - minhash_lsh_pairs      MinHash signatures + banded LSH bucketing: the
-                         standard sublinear near-dup candidate generator.
+                         standard sublinear near-dup candidate generator;
+                         minhash_md5_pairs is its oracle-checkable md5
+                         twin, both over one banded kernel
+                         (_banded_pairs) with the signature family as
+                         the parameter.
 - simhash_pairs          64-bit SimHash + 16-bit band bucketing for
                          hamming-distance near-dups.
 - embedding_dup_pairs    cosine near-duplicates over an embedding column.
@@ -343,7 +347,7 @@ def jaccard_prefix_pairs(
     # only, never the corpus
     posts_cand = posts.join(F.broadcast(docs_involved), "doc")
     # per-CANDIDATE-doc sorted shingle arrays, then one array_intersect
-    # per pair (r20, guide §2.3/§2.4): the old posting×posting join on
+    # per pair: the old posting×posting join on
     # shingle re-exploded every shared shingle through a shuffle and a
     # groupBy — verify was ~50% of the query's bill (measured 4.1 s ->
     # 2.1-3.4 s at sf0.1, output-identical). The full-corpus arrays
@@ -362,7 +366,7 @@ def jaccard_prefix_pairs(
     # count per doc exactly — collect_list keeps multiplicity just as
     # count(*) did), so the old separate size aggregation and its two
     # broadcast joins are gone; |A u B| = |A| + |B| - |A n B| computes
-    # in the same select as the intersection (r20, guide §2.4).
+    # in the same select as the intersection.
     return (
         cand.join(
             arrs.select(F.col("doc").alias("doc_a"), F.col("_sh").alias("_sha")),
@@ -390,7 +394,7 @@ def jaccard_prefix_pairs(
     )
 
 
-# Measured r16 (SCALE.md "Prefix-Jaccard crossover hunt"): the full
+# Measured (SCALE.md "Prefix-Jaccard crossover hunt"): the full
 # codegen'd inverted-index join wins wall clock up to ~72M candidate
 # rows per node and the extrapolated crossover sits in the several-
 # hundred-million range, where the quadratic candidate term finally
@@ -436,10 +440,9 @@ def jaccard_pairs_auto(
     crossover: int = PREFIX_CROSSOVER_CANDIDATES,
 ) -> DataFrame:
     """PRODUCTION SWITCH between the two output-identical Jaccard pair
-    operators (r17, closing the r16 'comment, not code' gap): measure
-    candidate mass with candidate_pair_mass, run the full inverted-
-    index join below the measured crossover (codegen wins at fixture
-    scales) and the PPJoin prefix-filtered path above it (the only
+    operators: measure candidate mass with candidate_pair_mass, run the
+    full inverted-index join below the measured crossover (codegen wins
+    at fixture scales) and the PPJoin prefix-filtered path above it (the only
     feasible plan at web-crawl df distributions). Both emit the same
     (doc_a, doc_b, inter, jaccard) rows — losslessness is pinned by
     tests/test_dedup.py — so the choice is pure physics, never
@@ -450,7 +453,7 @@ def jaccard_pairs_auto(
     distinct word-shingles cannot exceed ceil(len_i/2) (every token
     costs >= 2 characters incl. its separator), so ONE vectorized
     column sum — sum(ceil(length(text)/2)), summed PER DOC so the
-    bound never undercounts (ADVICE r17), far cheaper than building
+    bound never undercounts, far cheaper than building
     the postings — decides all small corpora: if even the bound cannot
     reach the crossover, run the full join with zero further
     statistics cost. Only corpora within reach of the crossover pay
@@ -461,8 +464,8 @@ def jaccard_pairs_auto(
         from pyspark.sql import functions as _F
 
         # per-doc shingle bound is ceil(L_i/2); summing THAT (not
-        # ceil(sum(L)/2), which undercounts by up to n_docs/2 postings
-        # — ADVICE r17) keeps the bound a true upper bound
+        # ceil(sum(L)/2), which undercounts by up to n_docs/2 postings)
+        # keeps the bound a true upper bound
         shingle_bound = (
             df.agg(
                 _F.sum(_F.floor((_F.length(text_col) + _F.lit(1)) / 2))
@@ -499,6 +502,74 @@ def _affine(i: int) -> tuple[int, int]:
     return (a or 1, b)
 
 
+def _banded_pairs(
+    sigs: DataFrame,
+    num_hashes: int,
+    bands: int,
+    bucket_cap: int | None = None,
+    verify: bool = False,
+) -> DataFrame:
+    """Banded LSH over a ``(doc, sig array<long>)`` MinHash frame, the
+    one kernel behind both MinHash tiers: docs sharing the r-tuple of
+    any band (r = num_hashes / bands) pair up through a co-located
+    equi-join on (band, key), kept as ``doc_a < doc_b`` and distinct.
+    The band key is the r-element array slice itself, so two keys are
+    equal exactly when the tuples are (no hash collision can add a
+    pair). P(candidate) = 1-(1-j^r)^b, the classic S-curve.
+
+    ``bucket_cap`` drops (band, key) buckets holding more than that many
+    docs before the self-join (see minhash_lsh_pairs). ``verify`` adds
+    ``est_jaccard``, the fraction of equal minhashes of the pair, and
+    caches ``sigs``, which the band explode and both verify joins read.
+    """
+    r = num_hashes // bands
+    if bands * r != num_hashes:
+        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
+    if verify:
+        sigs = cached(sigs)
+    keys = F.array(*[F.slice("sig", j * r + 1, r) for j in range(bands)])
+    buckets = sigs.select("doc", F.posexplode(keys).alias("band", "key"))
+    if bucket_cap is not None:
+        hot = (
+            buckets.groupBy("band", "key")
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .filter(F.col("_n") > bucket_cap)
+            .select("band", "key")
+        )
+        # Broadcast anti-join on each self-join branch. NOT cached: the
+        # bucket list derives from the signature stage by a projection
+        # + explode, so each branch re-derives it for less than a
+        # second materialization would cost (measured at sf0.1: caching
+        # the capped list added ~1s of pinned-32-partition overhead; the
+        # hot-set groupBy itself is map-side combined and shuffles only
+        # per-bucket partial counts).
+        buckets = buckets.join(F.broadcast(hot), ["band", "key"], "left_anti")
+    a = buckets.select(F.col("doc").alias("doc_a"), "band", "key")
+    b = buckets.select(F.col("doc").alias("doc_b"), "band", "key")
+    pairs = (
+        a.join(b, ["band", "key"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
+        .distinct()
+    )
+    if not verify:
+        return pairs
+    sig_a = sigs.select(F.col("doc").alias("doc_a"), F.col("sig").alias("sig_a"))
+    sig_b = sigs.select(F.col("doc").alias("doc_b"), F.col("sig").alias("sig_b"))
+    same = F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)
+    return (
+        pairs.join(sig_a, "doc_a")
+        .join(sig_b, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            (F.size(same).cast("double") / F.lit(float(num_hashes))).alias(
+                "est_jaccard"
+            ),
+        )
+    )
+
+
 def minhash_md5_pairs(
     df: DataFrame,
     id_col: str,
@@ -511,61 +582,39 @@ def minhash_md5_pairs(
     cross-engine-stateable primitives (md5 base hash + affine
     permutations + banded equi-join) — the hash-verifiable twin of
     minhash_lsh_pairs, whose crc32/numpy kernel no SQL engine can
-    replay. Same banded-LSH scale shape: one (doc, hash) shuffle with
-    num_hashes map-side-combined MIN aggregates (no row multiplication
-    per permutation), band signatures formed row-locally, candidates
-    from a co-located (band, sig) self-join.
+    replay. Same banded-LSH kernel (_banded_pairs): one (doc, hash)
+    shuffle with num_hashes map-side-combined MIN aggregates (no row
+    multiplication per permutation), band keys formed row-locally,
+    candidates from a co-located (band, key) self-join.
 
     Base hash = first 15 md5 hex digits as int (60 bits), reduced
     mod MINHASH_P BEFORE the affine step so a*x+b stays < 2^62 (no
     int64 overflow in either engine); every op is exact integer
     arithmetic, so the DuckDB oracle reproduces signatures bit-for-bit.
     Defaults (16 hashes, 8 bands, r=2) put the S-curve knee near
-    j ~ (1/8)^(1/2) ~ 0.35. No hot-bucket cap here (the capped UDF
-    tier is the production path for adversarial boilerplate); at scale
-    add the same broadcast-anti-join cap as minhash_lsh_pairs.
+    j ~ (1/8)^(1/2) ~ 0.35. No hot-bucket cap and no verify here (the
+    capped, verified crc32 tier is the production path for adversarial
+    boilerplate).
     """
-    r = num_hashes // bands
-    if bands * r != num_hashes:
-        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
     posts = doc_shingles(spread(df), id_col, text_col, k)
     hx = (
         F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10)
         .cast("bigint")
         % F.lit(MINHASH_P)
     )
-    hashed = posts.select("doc", hx.alias("hx"))
-    ab = [_affine(i) for i in range(num_hashes)]
-    sigs = hashed.groupBy("doc").agg(
-        *[
-            F.min((F.lit(a) * F.col("hx") + F.lit(b)) % F.lit(MINHASH_P)).alias(
-                f"mh{i}"
-            )
-            for i, (a, b) in enumerate(ab)
-        ]
+    sigs = (
+        posts.select("doc", hx.alias("hx"))
+        .groupBy("doc")
+        .agg(
+            F.array(
+                *[
+                    F.min((F.lit(a) * F.col("hx") + F.lit(b)) % F.lit(MINHASH_P))
+                    for a, b in map(_affine, range(num_hashes))
+                ]
+            ).alias("sig")
+        )
     )
-    band_cols = [
-        F.concat_ws(
-            ",",
-            *[
-                F.col(f"mh{j}").cast("string")
-                for j in range(bi * r, (bi + 1) * r)
-            ],
-        ).alias(f"band{bi}")
-        for bi in range(bands)
-    ]
-    stack = "stack({n}, {args}) AS (band, sig)".format(
-        n=bands, args=", ".join(f"{bi}, band{bi}" for bi in range(bands))
-    )
-    melted = sigs.select("doc", *band_cols).select("doc", F.expr(stack))
-    a = melted.select(F.col("doc").alias("doc_a"), "band", "sig")
-    b = melted.select(F.col("doc").alias("doc_b"), "band", "sig")
-    return (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    return _banded_pairs(sigs, num_hashes, bands)
 
 
 def minhash_signatures(
@@ -633,9 +682,9 @@ def minhash_lsh_pairs(
     """Candidate near-dup pairs: docs sharing >=1 LSH band bucket, with the
     estimated Jaccard (fraction of matching minhashes).
 
-    rows_per_band = num_hashes/bands; P(candidate) = 1-(1-j^r)^b — the
-    classic S-curve. Bucket join is an equi-join on (band_idx, band_hash):
-    co-located, no cross product outside buckets.
+    rows_per_band = num_hashes/bands (``bands`` must divide
+    ``num_hashes``); P(candidate) = 1-(1-j^r)^b — the classic S-curve.
+    The banded self-join and the verify are _banded_pairs'.
 
     ``bucket_cap`` is the hot-bucket mitigation for corpus scale: a
     boilerplate band shared by d docs makes one bucket contribute d^2
@@ -652,61 +701,12 @@ def minhash_lsh_pairs(
     everyone-matches-everyone boilerplate cluster. Always set it in
     production (e.g. 1000); None = uncapped.
     """
-    r = num_hashes // bands
-    # cached: the Arrow-UDF signature stage feeds the band explode AND the
-    # two verify joins
-    sigs = cached(minhash_signatures(df, id_col, text_col, num_hashes, k))
-    band_cols = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band"),
-                F.xxhash64(*[F.col("sig")[j * r + i] for i in range(r)]).alias("bh"),
-            )
-            for j in range(bands)
-        ]
-    )
-    buckets = sigs.select(
-        "doc", F.explode(band_cols).alias("b")
-    ).select("doc", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
-    if bucket_cap is not None:
-        hot = (
-            buckets.groupBy("band", "bh")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > bucket_cap)
-            .select("band", "bh")
-        )
-        # Broadcast anti-join on each self-join branch. NOT cached: the
-        # bucket list derives from the already-cached signature stage by
-        # a projection + explode, so each branch re-derives it for less
-        # than a second materialization would cost (measured at sf0.1:
-        # caching the capped list added ~1s of pinned-32-partition
-        # overhead; the hot-set groupBy itself is map-side combined and
-        # shuffles only per-bucket partial counts).
-        buckets = buckets.join(F.broadcast(hot), ["band", "bh"], "left_anti")
-    left = buckets.select(F.col("doc").alias("doc_a"), "band", "bh")
-    right = buckets.select(F.col("doc").alias("doc_b"), "band", "bh")
-    cand = (
-        left.join(right, ["band", "bh"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    sig_a = sigs.select(F.col("doc").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sig_b = sigs.select(F.col("doc").alias("doc_b"), F.col("sig").alias("sig_b"))
-    return (
-        cand.join(sig_a, "doc_a")
-        .join(sig_b, "doc_b")
-        .withColumn(
-            "est_jaccard",
-            F.size(
-                F.filter(
-                    F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                    lambda m: m,
-                )
-            ).cast("double")
-            / F.lit(float(num_hashes)),
-        )
-        .select("doc_a", "doc_b", "est_jaccard")
+    return _banded_pairs(
+        minhash_signatures(df, id_col, text_col, num_hashes, k),
+        num_hashes,
+        bands,
+        bucket_cap,
+        verify=True,
     )
 
 
@@ -864,7 +864,7 @@ def embedding_dup_pairs(
     embedding_dup_pairs_lsh below (hyperplane buckets first, exact cosine
     only within buckets).
 
-    Physical form (r15): broadcast-one-side Arrow kernel instead of the
+    Physical form: broadcast-one-side Arrow kernel instead of the
     self-join + per-pair interpreted higher-order fold (measured 55 s at
     2k vectors — Spark evaluates lambdas without codegen). The corpus
     collects once into the kernel closure (verification-tier sizes by
@@ -944,7 +944,7 @@ def within_group_cosine_pairs(
     sweeps verify end-to-end. Equivalence vs the join+filter form is
     also property-tested (tests/test_dedup.py).
 
-    Measured reason to exist (r15 sf1 audit): at n^1.5 pair volume the
+    Measured reason to exist (sf1 audit): at n^1.5 pair volume the
     interpreted per-pair fold dominated SemDeDup (~minutes at 20k
     vectors); production SemDeDup runs this stage as a batched matmul —
     this is that shape with a determinism-preserving fold order. Scale

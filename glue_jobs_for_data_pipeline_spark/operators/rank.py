@@ -37,11 +37,15 @@ reduce side each; map shuffle files are reused across jobs, reduce
 aggregation is not), and eviction merely recomputes identical values.
 The cache belongs to the query scope (``lifecycle.cached``).
 
-Cost model: 2 driver jobs before the caller's action — the
-boundary-sample collect (a TakeOrdered of the p*samples_per_partition
-lowest-hash key tuples; no pre-count pass)
-and the per-pid count collect (~p longs, whose SUM is the exact
-total) — all cache reads after the first materialization.
+One kernel (`_range_rank`) ranks along k orderings at once;
+`distributed_row_number` and `distributed_ntile` are its one-ordering
+case and `distributed_ntile_multi` its k-ordering case.
+
+Cost model: 2 driver collects before the caller's action — the
+boundary-sample collect (a TakeOrdered of the p*32 lowest-hash key
+tuples; no pre-count pass) and the per-pid count collect (~k*p longs,
+whose SUM is the exact total) — all cache reads after the first
+materialization.
 
 Correctness preconditions (documented, not silent):
 - `order_by` must be a TOTAL order (append a unique tiebreaker such as
@@ -70,9 +74,9 @@ from pyspark.sql import functions as F
 
 from ..lifecycle import cached
 
-# Denominator for the deterministic hash sample: pid boundaries come
-# from rows where xxhash64(key) mod _SAMPLE_DENOM < rate*_SAMPLE_DENOM.
-_SAMPLE_DENOM = 1 << 20
+# Boundary-sample rows per partition: the sample collect takes
+# num_partitions * _SAMPLES_PER_PARTITION rows.
+_SAMPLES_PER_PARTITION = 32
 
 OrderSpec = tuple[str, bool]  # (column name, ascending)
 
@@ -182,13 +186,112 @@ def _pid_expr(order_by: list[OrderSpec], bounds: list[tuple]) -> Column:
     return F.expr(f"CAST({terms} AS INT)")
 
 
+def _range_rank(
+    df: DataFrame,
+    orderings: list[list[OrderSpec]],
+    out_col: str,
+    num_partitions: int | None,
+) -> tuple[DataFrame, int]:
+    """Exact global ROW_NUMBER of ``df``'s rows along each of k
+    orderings, in one sample collect, one count collect and one window.
+
+    Each ordering must be total. With k > 1 the orderings must differ
+    only in their first column: every row is exploded k ways into
+    (``__rk_dim``, ``__rk_key``, pid) by ``stack``, so one window
+    partitioned by (pid, dim) ranks all k orderings at once. With k = 1
+    the frame is not exploded and ``__rk_dim`` is the literal 0.
+
+    Returns ``(ranked, total)``: ranked carries ``df``'s columns,
+    ``__rk_dim`` and the LongType 1-based rank ``out_col``; total is the
+    row count, the sum of the per-pid counts (no count job). On an empty
+    input ranked is ``df`` with a NULL ``out_col``.
+    """
+    if num_partitions is None:
+        num_partitions = int(
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+        )
+    k = len(orderings)
+    # A performance hint only: the sample and count collects and the
+    # caller's action would otherwise each re-run an upstream reduce
+    # (map shuffle files are reused across jobs, reduce aggregation is
+    # not). Pids and offsets are literals, so a recompute after
+    # eviction reproduces identical values.
+    df = cached(df)
+
+    bounds: list[list[tuple]] = [[] for _ in orderings]
+    if num_partitions > 1:
+        # One deterministic hash sample for every ordering, with no
+        # pre-count: the lowest-(xxhash64, key) rows, a TakeOrdered that
+        # is uniform over rows because the hash is, and a pure function
+        # of the row values. After this collect the boundaries are plan
+        # literals.
+        names = list(dict.fromkeys(n for o in orderings for n, _ in o))
+        rows = (
+            df.select(*names)
+            .orderBy(F.xxhash64(*names), *names)
+            .limit(num_partitions * _SAMPLES_PER_PARTITION)
+            .collect()
+        )
+        for i, o in enumerate(orderings):
+            sample = _py_sort([tuple(r[n] for n, _ in o) for r in rows], o)
+            bounds[i] = _pick_boundaries(sample, num_partitions)
+    pids = [_pid_expr(o, b) for o, b in zip(orderings, bounds)]
+
+    if k == 1:
+        frame = df.select(
+            "*", F.lit(0).alias("__rk_dim"), pids[0].alias("__rk_pid")
+        )
+        local_order = orderings[0]
+    else:
+        args = [
+            x
+            for i, o in enumerate(orderings)
+            for x in (F.lit(i), F.col(o[0][0]), pids[i])
+        ]
+        frame = df.select(
+            "*",
+            F.stack(F.lit(k), *args).alias("__rk_dim", "__rk_key", "__rk_pid"),
+        )
+        local_order = [("__rk_key", orderings[0][0][1])] + orderings[0][1:]
+
+    # One map-side-combined count per (dim, pid): at most k*p scalar
+    # rows. Each dim's counts sum to the exact total.
+    counts = sorted(
+        (r["__rk_dim"], r["__rk_pid"], r["__rk_cnt"])
+        for r in frame.groupBy("__rk_dim", "__rk_pid")
+        .agg(F.count(F.lit(1)).alias("__rk_cnt"))
+        .collect()
+    )
+    pairs: list[Column] = []
+    acc = [0] * k
+    for dim, pid, cnt in counts:
+        pairs.extend((F.lit(dim * num_partitions + pid), F.lit(acc[dim])))
+        acc[dim] += cnt
+    if len(set(acc)) > 1:
+        raise RuntimeError(f"rank kernel per-ordering count drift: {acc}")
+    total = acc[0]
+    if total == 0:
+        return df.withColumn(out_col, F.lit(None).cast("long")), 0
+
+    # Offsets as a literal map: no join, no shuffle, plan-constant.
+    off = F.element_at(
+        F.create_map(*pairs),
+        F.col("__rk_dim") * F.lit(num_partitions) + F.col("__rk_pid"),
+    )
+    local = F.row_number().over(
+        Window.partitionBy("__rk_pid", "__rk_dim").orderBy(
+            *_sort_cols(local_order)
+        )
+    )
+    ranked = frame.withColumn(out_col, (off + local.cast("long")).cast("long"))
+    return ranked.drop("__rk_pid"), total
+
+
 def distributed_row_number(
     df: DataFrame,
     order_by: list[OrderSpec],
     out_col: str = "i",
     num_partitions: int | None = None,
-    samples_per_partition: int = 32,
-    known_total: int | None = None,
 ) -> tuple[DataFrame, int]:
     """Exact global ROW_NUMBER over `order_by`, fully parallel and
     deterministic across re-executions.
@@ -197,86 +300,12 @@ def distributed_row_number(
     form a total order — append a unique tiebreaker. NULLs sort first
     ascending and last descending. Returns `(df_with_rank, total_rows)`;
     the rank column `out_col` is LongType, 1-based, identical to
-    `ROW_NUMBER() OVER (ORDER BY ...)`.
-
-    The total row count comes free as the pid-count sum and is returned
-    so callers (NTILE, percentile cutoffs) never run a count job.
-    ``known_total``, when given, is verified against that sum (it no
-    longer saves a job — the kernel stopped running a standalone count
-    in r13).
+    `ROW_NUMBER() OVER (ORDER BY ...)`. The total comes free as the
+    pid-count sum, so callers (NTILE, percentile cutoffs) never run a
+    count job.
     """
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    key_names = [name for name, _ in order_by]
-
-    # Cache the input for the kernel's TWO driver jobs (sample,
-    # pid-counts) plus the caller's action: the upstream is typically a
-    # groupBy whose REDUCE side would otherwise re-execute per job (map
-    # shuffle files are reused across jobs, reduce aggregation is not).
-    # The cache is a pure PERFORMANCE hint — correctness does not
-    # depend on it, because pids/offsets are literals and any
-    # eviction-triggered recompute reproduces identical values.
-    df = cached(df)
-
-    bounds: list[tuple] = []
-    if num_partitions > 1:
-        # Deterministic hash sample WITHOUT a pre-count (r13: the old
-        # rate-based filter needed total rows to set its threshold —
-        # a whole extra pass): take the num_partitions *
-        # samples_per_partition lowest-(xxhash64, key) rows — a
-        # TakeOrdered (per-partition top-K, driver merge), uniform over
-        # rows because the hash is, and a pure function of the row
-        # values. Collected ONCE; after this point the boundaries are
-        # plan literals.
-        sample_rows = (
-            df.select(*key_names)
-            .orderBy(
-                F.xxhash64(*[F.col(k) for k in key_names]),
-                *[F.col(k) for k in key_names],
-            )
-            .limit(num_partitions * samples_per_partition)
-            .collect()
-        )
-        sample = _py_sort([tuple(r) for r in sample_rows], order_by)
-        bounds = _pick_boundaries(sample, num_partitions)
-
-    tagged = df.withColumn("__rk_pid", _pid_expr(order_by, bounds))
-
-    # Per-pid counts: map-side-combined agg, ~p scalar rows collected.
-    # The EXACT total falls out as the sum — no separate count job.
-    counts = sorted(
-        (r["__rk_pid"], r["__rk_cnt"])
-        for r in tagged.groupBy("__rk_pid")
-        .agg(F.count(F.lit(1)).alias("__rk_cnt"))
-        .collect()
-    )
-    offsets: list[tuple[int, int]] = []
-    acc = 0
-    for pid, cnt in counts:
-        offsets.append((pid, acc))
-        acc += cnt
-    total = acc
-    if known_total is not None:
-        assert total == known_total, (
-            f"rank kernel count drift: {total} != {known_total}"
-        )
-    if total == 0:
-        return df.withColumn(out_col, F.lit(None).cast("long")), 0
-
-    # Offsets as a literal map — no join, no shuffle, plan-constant.
-    pairs: list[Column] = []
-    for pid, off in offsets:
-        pairs.extend((F.lit(pid), F.lit(off)))
-    off_expr = F.element_at(F.create_map(*pairs), F.col("__rk_pid"))
-
-    local = F.row_number().over(
-        Window.partitionBy("__rk_pid").orderBy(*_sort_cols(order_by))
-    )
-    out = tagged.withColumn(
-        out_col, (off_expr + local.cast("long")).cast("long")
-    ).drop("__rk_pid")
-    return out, total
+    ranked, total = _range_rank(df, [order_by], out_col, num_partitions)
+    return ranked.drop("__rk_dim"), total
 
 
 def _ntile_params(total_rows: int, buckets: int) -> tuple[int, int, int]:
@@ -318,7 +347,6 @@ def distributed_ntile_multi(
     buckets: int,
     out_cols: list[str],
     num_partitions: int | None = None,
-    samples_per_partition: int = 32,
 ) -> DataFrame:
     """NTILE(buckets) along SEVERAL orderings in ONE window pass.
 
@@ -332,10 +360,10 @@ def distributed_ntile_multi(
         total — no count job), then a single window over the rows
         EXPLODED k ways —
         (dim_id, sort_key) pairs via ``stack`` — partitioned by
-        (dim_id, pid); a groupBy(tiebreaker) regroup pivots the
-        buckets back onto one row per key.
+        (pid, dim_id) (`_range_rank`); a groupBy(tiebreaker) regroup
+        pivots the buckets back onto one row per key.
 
-    Byte-cost caveat (ADVICE r13): the explode carries ALL of ``df``'s
+    Byte-cost caveat: the explode carries ALL of ``df``'s
     columns, so the (dim_id, pid) exchange AND the regroup each move
     k COPIES OF THE FULL ROW WIDTH — k*n thin rows only when the
     caller's grain is thin (RFM: 7 small columns, a clear win over 3
@@ -353,7 +381,7 @@ def distributed_ntile_multi(
       ordering (dim asc, tiebreaker asc) is total.
 
     Determinism: identical argument to distributed_row_number — the
-    one row sample is a deterministic hash sample on the tiebreaker
+    one row sample is a deterministic hash sample on the key columns
     (uniform over rows because the tiebreaker is unique), boundaries
     and offsets fold into the plan as literals, and the regroup's
     max() aggregates are order-free.
@@ -364,103 +392,28 @@ def distributed_ntile_multi(
 
     Returns `df`'s columns plus one LongType NTILE column per dim
     (named by ``out_cols``); the scratch dim columns are NOT dropped.
+    Mismatched ``dim_cols`` / ``out_cols`` raise ValueError.
     """
-    assert len(dim_cols) == len(out_cols) and dim_cols, "dims/outs mismatch"
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    k = len(dim_cols)
-
-    df = cached(df)
-
-    # ONE deterministic row sample serves every dim: the TakeOrdered of
-    # the lowest-(xxhash64(tiebreaker), tiebreaker) rows is uniform over
-    # rows (the tiebreaker is unique) and needs no pre-count (see
-    # distributed_row_number); each dim's boundary list is read off the
-    # same collected tuples.
-    bounds_per_dim: list[list[tuple]] = [[] for _ in range(k)]
-    if num_partitions > 1:
-        sample_rows = (
-            df.select(tiebreaker, *dim_cols)
-            .orderBy(F.xxhash64(F.col(tiebreaker)), F.col(tiebreaker))
-            .limit(num_partitions * samples_per_partition)
-            .collect()
+    if not dim_cols or len(dim_cols) != len(out_cols):
+        raise ValueError(
+            f"dim_cols {dim_cols} and out_cols {out_cols} must be "
+            "non-empty and of equal length"
         )
-        for i in range(k):
-            pairs = sorted((r[1 + i], r[0]) for r in sample_rows)
-            bounds_per_dim[i] = _pick_boundaries(pairs, num_partitions)
-
-    # Per-dim pid while the dims are still separate columns (each
-    # boundary expression names its own dim column), then stack
-    # (dim_id, sort_key, pid) triples — pid text is built once per dim.
-    order_specs = [
-        [(c, True), (tiebreaker, True)] for c in dim_cols
-    ]
-    pid_cols = [f"__mk_pid{i}" for i in range(k)]
-    tagged = df
-    for i in range(k):
-        tagged = tagged.withColumn(
-            pid_cols[i], _pid_expr(order_specs[i], bounds_per_dim[i])
-        )
-
-    stack_args: list[Column] = []
-    for i in range(k):
-        stack_args += [F.lit(i), F.col(dim_cols[i]), F.col(pid_cols[i])]
-    carry = [c for c in df.columns]
-    exploded = tagged.select(
-        *carry,
-        F.stack(F.lit(k), *stack_args).alias("__mk_dim", "__mk_key", "__mk_pid"),
-    )
-
-    # ONE pid-count job covers all k dims (map-side-combined to ≤ k*p
-    # scalar rows); the exact total falls out as any dim's sum — no
-    # separate count job. Offsets become a literal map keyed dim*P+pid.
-    counts = sorted(
-        (r["__mk_dim"], r["__mk_pid"], r["__mk_cnt"])
-        for r in exploded.groupBy("__mk_dim", "__mk_pid")
-        .agg(F.count(F.lit(1)).alias("__mk_cnt"))
-        .collect()
-    )
-    pairs: list[Column] = []
-    per_dim_acc = {}
-    for dim, pid, cnt in counts:
-        acc = per_dim_acc.get(dim, 0)
-        pairs.extend((F.lit(dim * num_partitions + pid), F.lit(acc)))
-        per_dim_acc[dim] = acc + cnt
-    totals = set(per_dim_acc.values())
-    assert len(totals) <= 1, f"multi-ntile per-dim count drift: {per_dim_acc}"
-    total = totals.pop() if totals else 0
+    orderings = [[(c, True), (tiebreaker, True)] for c in dim_cols]
+    ranked, total = _range_rank(df, orderings, "__rk_i", num_partitions)
     if total == 0:
-        out = df
-        for oc in out_cols:
-            out = out.withColumn(oc, F.lit(None).cast("long"))
-        return out
-    off_expr = F.element_at(
-        F.create_map(*pairs),
-        F.col("__mk_dim") * F.lit(num_partitions) + F.col("__mk_pid"),
-    )
-
-    local = F.row_number().over(
-        Window.partitionBy("__mk_dim", "__mk_pid").orderBy(
-            F.col("__mk_key").asc(), F.col(tiebreaker).asc()
-        )
-    )
-    bucketed = exploded.withColumn(
-        "__mk_bucket",
-        ntile_from_rank((off_expr + local.cast("long")).cast("long"), total, buckets),
-    )
+        return df.withColumns({c: F.lit(None).cast("long") for c in out_cols})
+    bucket = ntile_from_rank(F.col("__rk_i"), total, buckets)
 
     # Regroup: one grain-keyed exchange; every carried column is
     # constant within its group, so max() is both deterministic and
     # type-preserving.
-    aggs = [
-        F.max(c).alias(c) for c in carry if c != tiebreaker
-    ] + [
-        F.max(F.when(F.col("__mk_dim") == i, F.col("__mk_bucket"))).alias(out_cols[i])
-        for i in range(k)
+    aggs = [F.max(c).alias(c) for c in df.columns if c != tiebreaker] + [
+        F.max(F.when(F.col("__rk_dim") == i, bucket)).alias(oc)
+        for i, oc in enumerate(out_cols)
     ]
-    out = bucketed.groupBy(tiebreaker).agg(*aggs)
-    return out.select(*carry, *out_cols)
+    out = ranked.groupBy(tiebreaker).agg(*aggs)
+    return out.select(*df.columns, *out_cols)
 
 
 def distributed_ntile(
@@ -469,21 +422,17 @@ def distributed_ntile(
     buckets: int,
     out_col: str = "bucket",
     num_partitions: int | None = None,
-    known_total: int | None = None,
 ) -> DataFrame:
     """NTILE(buckets) OVER (ORDER BY order_by) without the
     single-partition WindowExec: distributed_row_number supplies the
     exact global rank AND the total count (no extra job), then the
     bucket is a literal-folded integer expression."""
     ranked, total = distributed_row_number(
-        df,
-        order_by,
-        out_col="__rk_i",
-        num_partitions=num_partitions,
-        known_total=known_total,
+        df, order_by, out_col="__rk_i", num_partitions=num_partitions
     )
-    if total == 0:
-        return ranked.withColumn(out_col, F.lit(None).cast("long")).drop("__rk_i")
-    return ranked.withColumn(
-        out_col, ntile_from_rank(F.col("__rk_i"), total, buckets)
-    ).drop("__rk_i")
+    bucket = (
+        ntile_from_rank(F.col("__rk_i"), total, buckets)
+        if total
+        else F.lit(None).cast("long")
+    )
+    return ranked.withColumn(out_col, bucket).drop("__rk_i")

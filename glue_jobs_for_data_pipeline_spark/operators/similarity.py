@@ -11,10 +11,17 @@ Every search is candidate generation followed by one exact re-rank
 - lsh_topk: deterministic random-hyperplane signatures bucket the
   corpus; candidates = signature collisions (multi-table). Sublinear
   probe cost; recall tunable by (n_tables, n_bits).
-- IVF (ivf_topk, ivf_kmeans_topk, ivf_kmeans_topk_grid): the vectors in
-  the query's n_probe nearest cells (_cell_probe_topk).
+- IVF (ivf_topk, ivf_kmeans_topk_grid): the vectors in the query's
+  n_probe nearest cells (_cell_probe_topk).
 - PQ (pq_adc_topk, ivf_pq_topk): the k*refine best by asymmetric
   distance over product-quantized codes (_adc_shortlist).
+
+One kernel per algorithm, the metric or numeric domain a parameter:
+_assign_by_literal is the centroid-literal assigner (cosine over
+doubles, exact squared L2 over longs), _lloyd the numpy Lloyd loop on
+a driver-side sample (max cosine for kmeans_fit_sample, min squared L2
+for pq_fit's subspaces), and kmeans_fit_int_grid the distributed
+trainer.
 
 Determinism: hyperplane weights come from xxhash64(table, plane, dim)
 mapped to +-[0,1), so every run and every engine derives the same
@@ -23,10 +30,14 @@ buckets (no RNG state).
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine, dot
+from ..lifecycle import cached, query_scope
 
 
 def _exact_rerank(cand: DataFrame, k: int) -> DataFrame:
@@ -123,7 +134,7 @@ def _with_signatures(
     Signature bit j = sign of the projection onto deterministic plane
     (table, j) via a zip_with fold — all JVM-side, no shuffle.
 
-    Plan-size note (the r08 'x_sim_lsh_topk is 10x its IVF sibling'
+    Plan-size note (the 'x_sim_lsh_topk is 10x its IVF sibling'
     finding): the plane family is shipped as ONE nested array literal
     (tables x bits x dim) and the signatures are computed by
     higher-order functions over it — the earlier form built
@@ -200,46 +211,14 @@ def _collect_centroids(centroids, vec_col: str) -> list[tuple[int, list[float]]]
     ]
 
 
-def assign_ivf_cells(
-    vectors: DataFrame,
-    centroids,
-    id_col: str,
-    vec_col: str,
-    n_probe: int = 1,
-) -> DataFrame:
-    """Assign each vector to its n_probe nearest centroids by cosine.
-
-    MAP-ONLY since r10: the centroid set is k rows by construction, so
-    it collects to the driver (one tiny job — every caller builds it
-    from a driver-side list or a limit-k anyway) and ships as ONE SQL
-    struct-array literal (the _with_signatures plan-size trick: a
-    nested F.lit-per-element form would cost k*dim Py4J calls). Each
-    vector scores all k centroids in a single transform(), sorts the
-    (negated-cosine, cell) structs lexicographically — sim DESC, cell
-    ASC tie order, identical to the previous window's — and explodes
-    the first n_probe. The earlier form crossJoined (k-fold row
-    inflation) and ranked through a per-vector window (a full keyed
-    shuffle of every vector); this touches each vector once and
-    shuffles nothing. Output: (id, vec, cell, cell_rank).
-
-    Boundary: the literal is k x dim doubles of SQL text (~20 bytes
-    each) — fine through k ~ 4096 at dim 64 (~5 MB plan). An IVF
-    coarse quantizer past that (e.g. 2^16 cells for 10^10 vectors)
-    should switch to a broadcast-join + min_by aggregation instead of
-    this literal; the probe stays map-side either way because the
-    centroid table broadcasts.
-
-    ``centroids`` may also be a pre-collected ``[(cell, [floats])]``
-    list — callers that assign twice against the same centroid set
-    (_ivf_probe_topk, ivf_pq_topk) collect once and reuse, so the
-    centroid-building job runs once per query, not per assignment.
-    """
-    import math
-
-    cents = _collect_centroids(centroids, vec_col)
-    if any(
-        not math.isfinite(float(x)) for _, vec in cents for x in vec
-    ):
+def _centroid_literal(cents: list[tuple[int, list]], kind: type):
+    """The centroid set as ONE SQL array-of-struct ``(cell, v)`` literal,
+    each component rendered as ``kind`` (int -> BIGINT ``L``, float ->
+    DOUBLE ``D``; repr() round-trips a float exactly). A nested
+    F.lit-per-element form would cost k*dim Py4J calls; a SQL literal
+    parses JVM-side in one shot (the _with_signatures plan-size trick)."""
+    suffix = {int: "L", float: "D"}[kind]
+    if any(not math.isfinite(x) for _, vec in cents for x in vec):
         # repr(nan/inf) + 'D' is unparseable SQL; fail with the cause
         # (a degenerate centroid, e.g. NaN from a zero-norm embedding
         # propagating through k-means means) instead of a
@@ -251,55 +230,91 @@ def assign_ivf_cells(
         )
     items = ",".join(
         "named_struct('cell',{},'v',array({}))".format(
-            cell, ",".join(repr(x) + "D" for x in vec)
+            cell, ",".join(repr(kind(x)) + suffix for x in vec)
         )
         for cell, vec in cents
     )
-    lit = F.expr(f"array({items})")
+    return F.expr(f"array({items})")
+
+
+def _int_centroid_literal(cents: list[tuple[int, list[int]]]):
+    """Integer centroid set as ONE SQL array literal (long elements)."""
+    return _centroid_literal(cents, int)
+
+
+def _sq_l2_long(v, c):
+    """Exact squared L2 of two long arrays as a BIGINT."""
+    return F.aggregate(
+        F.zip_with(v, c, lambda a, b: (a - b) * (a - b)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
+def _assign_by_literal(
+    vectors: DataFrame,
+    cents: list[tuple[int, list]],
+    vec_col: str,
+    n_probe: int,
+    kind: type,
+    score,
+) -> DataFrame:
+    """The one centroid-literal assigner: each vector scores all k
+    centroids of the ``kind`` literal (_centroid_literal) with
+    ``score(vec, centroid)`` (lower = nearer) in a single transform(),
+    sorts the (score, cell) structs lexicographically — ties break to
+    the lowest cell id — and explodes the first n_probe. Map-only: no
+    join, no window, vectors never shuffle. Keeps every input column
+    and adds (cell, cell_rank).
+
+    Boundary: the literal is k x dim values of SQL text (~20 bytes
+    each) — fine through k ~ 4096 at dim 64 (~5 MB plan). An IVF
+    coarse quantizer past that (e.g. 2^16 cells for 10^10 vectors)
+    should switch to a broadcast-join + min_by aggregation instead of
+    this literal; the probe stays map-side either way because the
+    centroid table broadcasts."""
     vec = F.col(vec_col)
     scored = F.transform(
-        lit,
-        lambda s: F.struct(
-            (-cosine(vec, s["v"])).alias("negsim"), s["cell"].alias("cell")
-        ),
+        _centroid_literal(cents, kind),
+        lambda s: F.struct(score(vec, s["v"]).alias("d"), s["cell"].alias("cell")),
     )
+    keep = vectors.columns
     return (
-        vectors.select(id_col, vec_col)
-        .withColumn("_top", F.slice(F.array_sort(scored), 1, n_probe))
+        vectors.withColumn("_top", F.slice(F.array_sort(scored), 1, n_probe))
+        .select(*keep, F.posexplode("_top").alias("_pos", "_s"))
         .select(
-            id_col,
-            vec_col,
-            F.posexplode("_top").alias("_pos", "_s"),
-        )
-        .select(
-            id_col,
-            vec_col,
+            *keep,
             F.col("_s")["cell"].alias("cell"),
             (F.col("_pos") + 1).cast("int").alias("cell_rank"),
         )
     )
 
 
-def _ivf_probe_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
+def assign_ivf_cells(
+    vectors: DataFrame,
+    centroids,
     id_col: str,
     vec_col: str,
-    k: int,
-    n_probe: int,
+    n_probe: int = 1,
 ) -> DataFrame:
-    """IVF search over float centroids: corpus vectors live in their 1
-    nearest cell by cosine, queries probe their n_probe nearest cells
-    (_cell_probe_topk)."""
-    cents = _collect_centroids(centroids, vec_col)  # one job, two uses
-    corpus_cells = assign_ivf_cells(corpus, cents, id_col, vec_col, 1).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"), "cell"
+    """Assign each vector to its n_probe nearest centroids by cosine
+    (_assign_by_literal over doubles, negated cosine as the score).
+    Output: (id, vec, cell, cell_rank).
+
+    ``centroids`` is a tiny (cell, <vec_col>) DataFrame, collected here
+    (one job), or a pre-collected ``[(cell, [floats])]`` list — callers
+    that assign twice against the same centroid set (ivf_topk,
+    ivf_pq_topk) collect once and reuse, so the centroid-building job
+    runs once per query, not per assignment.
+    """
+    return _assign_by_literal(
+        vectors.select(id_col, vec_col),
+        _collect_centroids(centroids, vec_col),
+        vec_col,
+        n_probe,
+        float,
+        lambda v, c: -cosine(v, c),
     )
-    query_cells = assign_ivf_cells(queries, cents, id_col, vec_col, n_probe).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"), "cell"
-    )
-    return _cell_probe_topk(query_cells, corpus_cells, k)
 
 
 def _cell_probe_topk(
@@ -329,28 +344,33 @@ def ivf_topk(
     n_probe: int = 4,
 ) -> DataFrame:
     """ANN top-k via IVF (inverted-file) cells: the scale path the LSH
-    variant trades against.
+    variant trades against. Corpus vectors live in their 1 nearest cell
+    by cosine, queries probe their n_probe nearest cells
+    (_cell_probe_topk).
 
     Centroids: the first n_cells corpus vectors by id — deterministic and
-    free (kmeans_fit / ivf_kmeans_topk is the refined tier; the
+    free (ivf_kmeans_topk_grid is the Lloyd-refined tier; the
     partition/probe plumbing is shared). Probe cost ~= n_probe/n_cells
     of the corpus.
     """
-    # no broadcast hint: assign_ivf_cells collects these k rows and
-    # inlines them as a literal; the 25-row Window here is k-bounded
-    centroids = (
+    # no broadcast hint: the centroids collect once (one job, two uses)
+    # and inline as a literal; the k-row Window here is k-bounded
+    cents = _collect_centroids(
         corpus.orderBy(id_col)
         .limit(n_cells)
         .select(
-            F.row_number()
-            .over(Window.orderBy(id_col))
-            .alias("cell"),
+            F.row_number().over(Window.orderBy(id_col)).alias("cell"),
             F.col(vec_col),
-        )
+        ),
+        vec_col,
     )
-    return _ivf_probe_topk(
-        corpus, queries, centroids, id_col, vec_col, k, n_probe
+    corpus_cells = assign_ivf_cells(corpus, cents, id_col, vec_col, 1).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"), "cell"
     )
+    query_cells = assign_ivf_cells(queries, cents, id_col, vec_col, n_probe).select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"), "cell"
+    )
+    return _cell_probe_topk(query_cells, corpus_cells, k)
 
 
 def _hp_weight_val(table: int, plane: int, dim: int) -> float:
@@ -363,85 +383,47 @@ def _hp_weight_val(table: int, plane: int, dim: int) -> float:
     return (z % 2_000_003) / 1_000_001.5 - 1.0
 
 
-def kmeans_fit(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-    n_iters: int = 5,
-) -> DataFrame:
-    """Distributed Lloyd k-means over the embedding column — the IVF
-    coarse quantizer the naive first-n-vectors init approximates.
-
-    Iteration = one map-only assign pass (nearest centroid by cosine
-    against the centroid literal — no join, no window, vectors never
-    shuffle; see assign_ivf_cells) + one elementwise-mean update
-    (posexplode -> map-side-combined avg per (cell, dim) -> k x dim
-    tiny rows; a dim-wide SUM(vec[i]) form was measured SLOWER — the
-    centroid literal changes every round, so wide aggregate codegen
-    recompiles per iteration, a ~2s/round constant, while the explode's
-    data cost is combined map-side anyway). Centroids collect to the
-    driver between iterations — k x dim doubles, the same contract as
-    any production k-means (MLlib does exactly this); corpus vectors
-    never leave the executors. The projected corpus is persisted across
-    the n_iters passes (the standard iterative-ML cache: at 100 TB the
-    training scan is the dominant per-round cost, and Lloyd re-reads it
-    every round) and unpersisted before return. Init is deterministic:
-    the n_cells lowest xxhash64(id) vectors, a seedless uniform sample.
-
-    Returns a (cell, <vec_col>) centroid DataFrame for
-    assign_ivf_cells / ivf_topk.
-    """
-    spark = corpus.sparkSession
-    proj = corpus.select(F.col(id_col), F.col(vec_col)).persist()
-    try:
-        init = (
-            proj.orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
-            .limit(n_cells)
-            .select(F.col(vec_col))
-            .collect()
-        )
-        centroids = [
-            (i + 1, [float(x) for x in r[vec_col]]) for i, r in enumerate(init)
-        ]
-        # dim comes from the init rows already collected — no extra
-        # plan-construction-time Spark job (see _with_signatures' warning)
-        dim = len(centroids[0][1])
-
-        for _ in range(n_iters):
-            cdf = spark.createDataFrame(
-                centroids, f"cell int, {vec_col} array<double>"
-            )
-            assigned = assign_ivf_cells(proj, cdf, id_col, vec_col, 1)
-            means = (
-                assigned.select(
-                    "cell", F.posexplode(vec_col).alias("idx", "val")
-                )
-                .groupBy("cell", "idx")
-                .agg(F.avg(F.col("val").cast("double")).alias("m"))
-                .groupBy("cell")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("idx", "m"))),
-                        lambda s: s["m"],
-                    ).alias("vec")
-                )
-                .collect()
-            )
-            updated = {r["cell"]: [float(x) for x in r["vec"]] for r in means}
-            # empty cells keep their previous centroid
-            centroids = [
-                (cell, updated.get(cell, vec)) for cell, vec in centroids
-            ]
-            assert all(len(v) == dim for _, v in centroids)
-    finally:
-        proj.unpersist()
-
-    # no broadcast hint: consumers (assign_ivf_cells) collect the k
-    # rows and inline them as a literal, never join against this frame
-    return spark.createDataFrame(
-        centroids, f"cell int, {vec_col} array<double>"
+def _hash_sample(corpus: DataFrame, id_col: str, vec_col: str, n: int):
+    """The n lowest-xxhash64(id) vectors as a float64 matrix: one
+    TakeOrdered collect, a deterministic seedless uniform sample; at
+    100 TB no vector shuffles and the driver receives n * dim doubles."""
+    rows = (
+        corpus.orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
+        .limit(n)
+        .select(vec_col)
+        .collect()
     )
+    return np.asarray([r[0] for r in rows], dtype=np.float64)
+
+
+def _max_cosine(x, cb):
+    """Nearest-centroid rule by max cosine, ties to the LOWEST cell id:
+    argmax returns the first maximal index, matching the (negated
+    cosine, cell) struct sort of assign_ivf_cells."""
+    xn = np.linalg.norm(x, axis=1)
+    xn[xn == 0.0] = 1.0
+    cn = np.linalg.norm(cb, axis=1)
+    cn[cn == 0.0] = 1.0
+    return ((x @ cb.T) / xn[:, None] / cn[None, :]).argmax(axis=1)
+
+
+def _min_sq_l2(x, cb):
+    """Nearest-centroid rule by min squared L2, ties to the lowest id."""
+    return ((x[:, None, :] - cb[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+
+
+def _lloyd(x, cb, n_iters: int, nearest):
+    """The one numpy Lloyd loop, on a driver-side sample: assign every
+    row of ``x`` by ``nearest(x, cb)``, then move each centroid to the
+    mean of its members; an empty cell keeps its previous centroid.
+    Refines ``cb`` in place and returns it."""
+    for _ in range(n_iters):
+        assign = nearest(x, cb)
+        for c in range(cb.shape[0]):
+            mask = assign == c
+            if mask.any():
+                cb[c] = x[mask].mean(axis=0)
+    return cb
 
 
 def kmeans_fit_sample(
@@ -456,66 +438,28 @@ def kmeans_fit_sample(
     FAISS production recipe (train IVF on ~39*n_cells..256*n_cells
     sampled points, never the full corpus; faiss clustering.cpp warns
     and subsamples above that). One Spark job collects the sample
-    (lowest-xxhash64 rows, same deterministic seedless sample pq_fit
-    uses); Lloyd then runs in numpy on k x dim doubles, microseconds
-    against the ~2-3 s/round constant of the distributed trainer
-    (per-round codegen of a fresh centroid literal + 2 shuffles +
-    collect). Semantics mirror kmeans_fit exactly: init = the n_cells
-    lowest-hash vectors, assignment by max cosine (ties to the lowest
-    cell id), elementwise-mean update, empty cells keep their previous
-    centroid.
+    (_hash_sample, the same sample pq_fit uses); Lloyd then runs in
+    numpy on k x dim doubles (_lloyd by max cosine), microseconds
+    against the ~2-3 s/round constant of a distributed round (per-round
+    codegen of a fresh centroid literal + 2 shuffles + collect).
+    Init = the n_cells lowest-hash vectors.
 
     Use this for IVF-PQ and any pipeline where the quantizer feeds an
-    approximate probe anyway; keep kmeans_fit when full-corpus
-    distributed Lloyd is itself the product (x_sim_ivf_kmeans_topk).
-    At 100 TB the sample collect is a TakeOrdered over the scan — no
-    shuffle of vectors, driver traffic = sample_n * dim doubles.
+    approximate probe anyway; kmeans_fit_int_grid is the distributed,
+    SQL-statable trainer (x_sim_ivf_kmeans_topk).
 
     Returns a pre-collected [(cell, [floats])] list — exactly the form
-    assign_ivf_cells and _ivf_probe_topk take without running another
-    centroid-collect job.
+    assign_ivf_cells takes without running another centroid-collect
+    job.
     """
-    import numpy as np
-
-    rows = (
-        corpus.orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
-        .limit(max(sample_n, n_cells))
-        .select(vec_col)
-        .collect()
-    )
-    x = np.asarray([r[0] for r in rows], dtype=np.float64)
+    x = _hash_sample(corpus, id_col, vec_col, max(sample_n, n_cells))
     if x.shape[0] < n_cells:
         raise ValueError(
             f"kmeans_fit_sample needs >= n_cells={n_cells} training "
             f"vectors, got {x.shape[0]}"
         )
-    cb = x[:n_cells].copy()  # init: the n_cells lowest-hash vectors
-    xn = np.linalg.norm(x, axis=1)
-    xn[xn == 0.0] = 1.0
-    for _ in range(n_iters):
-        cn = np.linalg.norm(cb, axis=1)
-        cn[cn == 0.0] = 1.0
-        cos = (x @ cb.T) / xn[:, None] / cn[None, :]
-        # max cosine, ties to the LOWEST cell id: argmax returns the
-        # first maximal index, matching the (negsim, cell) struct sort
-        assign = cos.argmax(axis=1)
-        for c in range(n_cells):
-            mask = assign == c
-            if mask.any():
-                cb[c] = x[mask].mean(axis=0)
-    return [(i + 1, [float(v) for v in row]) for i, row in enumerate(cb)]
-
-
-def _int_centroid_literal(cents: list[tuple[int, list[int]]]):
-    """Integer centroid set as ONE SQL array literal (the
-    assign_ivf_cells plan-size trick, long elements)."""
-    items = ",".join(
-        "named_struct('cell',{},'v',array({}))".format(
-            cell, ",".join(f"{int(x)}L" for x in vec)
-        )
-        for cell, vec in cents
-    )
-    return F.expr(f"array({items})")
+    cb = _lloyd(x, x[:n_cells].copy(), n_iters, _max_cosine)
+    return [(i + 1, row) for i, row in enumerate(cb.tolist())]
 
 
 # Above this cell count the interpreted higher-order-function assign
@@ -543,12 +487,11 @@ def _assign_ivf_cells_int_np(
     the struct-sort path. Equivalence is property-tested against the
     HOF path (tests/test_similarity.py) AND sweep-verified against the
     DuckDB oracle at the k=32 training SFs. Measured reason to exist:
-    interpreted HOF evaluation put the r15 sf1 SemDeDup training at
+    interpreted HOF evaluation put the sf1 SemDeDup training at
     minutes for k=141 x 20k vectors; the int-matmul kernel is the shape
     every production ANN trainer (faiss) uses. Overflow headroom: the
     expanded form needs |component| <= ~2^28 (vs the diff form's 2^31)
     — grid scale 2^10 x |value| <= 2^18, far past real embeddings."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -607,42 +550,21 @@ def assign_ivf_cells_int(
     is a BIGINT, so comparisons — and therefore cell boundaries — are
     bit-identical on any engine, which is what lets the whole k-means
     chain restate in SQL (see kmeans_fit_int_grid). Ties break to the
-    lowest cell id via the (d2, cell) struct sort, same convention as
-    the cosine assigner. Keeps every input column; adds (cell,
-    cell_rank). Overflow headroom: |component| <= scale * |value|;
-    at scale 2^10 and |value| <= 2^20 the per-dim square is < 2^62/dim
-    — far past any real embedding range.
+    lowest cell id, same convention as the cosine assigner. Keeps every
+    input column; adds (cell, cell_rank). Overflow headroom:
+    |component| <= scale * |value|; at scale 2^10 and |value| <= 2^20
+    the per-dim square is < 2^62/dim — far past any real embedding
+    range.
 
-    Two physical tiers, one semantics (r15): k >=
-    _INT_ASSIGN_NUMPY_MIN_CELLS routes to the Arrow int-matmul kernel
-    (_assign_ivf_cells_int_np — interpreted HOF cost grows with k and
-    is the measured sf1 bottleneck); small k keeps the codegen-free but
-    Python-free centroid-literal transform."""
+    Two physical tiers, one semantics: k >= _INT_ASSIGN_NUMPY_MIN_CELLS
+    routes to the Arrow int-matmul kernel (_assign_ivf_cells_int_np —
+    interpreted HOF cost grows with k and is the measured sf1
+    bottleneck); small k keeps the codegen-free but Python-free
+    centroid-literal transform (_assign_by_literal over longs, exact
+    squared L2 as the score)."""
     if len(cents) >= _INT_ASSIGN_NUMPY_MIN_CELLS:
         return _assign_ivf_cells_int_np(vectors, cents, qvec_col, n_probe)
-    vec = F.col(qvec_col)
-
-    def d2(s):
-        return F.aggregate(
-            F.zip_with(vec, s["v"], lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
-    scored = F.transform(
-        _int_centroid_literal(cents),
-        lambda s: F.struct(d2(s).alias("d2"), s["cell"].alias("cell")),
-    )
-    keep = [c for c in vectors.columns]
-    return (
-        vectors.withColumn("_top", F.slice(F.array_sort(scored), 1, n_probe))
-        .select(*keep, F.posexplode("_top").alias("_pos", "_s"))
-        .select(
-            *keep,
-            F.col("_s")["cell"].alias("cell"),
-            (F.col("_pos") + 1).cast("int").alias("cell_rank"),
-        )
-    )
+    return _assign_by_literal(vectors, cents, qvec_col, n_probe, int, _sq_l2_long)
 
 
 def _grid_quantize(vec_col: str, scale: int):
@@ -668,8 +590,9 @@ def kmeans_fit_int_grid(
     """Distributed Lloyd k-means whose EVERY intermediate is exact
     integer arithmetic — the determinization that graduates the
     IVF-kmeans ANN chain from rows-only to a value-hash oracle check
-    (the same move that graduated PQ in r13: snap the float iteration
-    onto a grid where both engines provably agree).
+    (the same move that graduated PQ: snap the float iteration onto a
+    grid where both engines provably agree). The package's one
+    distributed k-means trainer.
 
     Recipe: quantize vectors onto an integer grid (floor(v * 2^10) —
     exact, see _grid_quantize); init = the first n_cells vectors by id
@@ -682,24 +605,27 @@ def kmeans_fit_int_grid(
     n_iters unrolls as chained SQL CTEs (catalog_ext._ivf_kmeans_grid
     _sql builds them).
 
-    vs kmeans_fit (float tier): grid snapping perturbs each centroid
-    by < 1/scale per step — immaterial for a COARSE quantizer feeding
-    an n_probe search whose final ranking re-scores with exact cosine
-    anyway (recall parity asserted in tests/test_similarity.py). The
-    float tier remains for callers wanting textbook Lloyd semantics;
-    this tier exists because a verifiable ANN index build is worth a
-    sub-ulp centroid nudge.
+    vs textbook float Lloyd: grid snapping perturbs each centroid by
+    < 1/scale per step — immaterial for a COARSE quantizer feeding an
+    n_probe search whose final ranking re-scores with exact cosine
+    anyway (recall floor asserted in tests/test_similarity.py); a
+    verifiable ANN index build is worth a sub-ulp centroid nudge.
 
-    Scale shape: identical to kmeans_fit — map-only assign against a
-    centroid literal (vectors never shuffle), per-(cell,dim) exact
-    integer partial aggregation, k x dim LONGS to the driver per
-    round. Returns a pre-collected [(cell, [ints])] list.
+    Scale shape: map-only assign against a centroid literal (vectors
+    never shuffle), per-(cell,dim) exact integer partial aggregation,
+    k x dim LONGS to the driver per round. The projected corpus is
+    cached for the n_iters passes (Lloyd re-reads it every round) and
+    released when training ends. Returns a pre-collected
+    [(cell, [ints])] list.
     """
-    spark = corpus.sparkSession  # noqa: F841 — parity with kmeans_fit
-    proj = corpus.select(
-        F.col(id_col), _grid_quantize(vec_col, scale).alias("__qv")
-    ).persist()
-    try:
+    # The nested scope releases the projected corpus's cache when the
+    # training loop ends, inside or outside a caller's scope.
+    with query_scope():
+        proj = cached(
+            corpus.select(
+                F.col(id_col), _grid_quantize(vec_col, scale).alias("__qv")
+            )
+        )
         init = proj.orderBy(id_col).limit(n_cells).collect()
         if len(init) < n_cells:
             raise ValueError(
@@ -734,8 +660,6 @@ def kmeans_fit_int_grid(
                 else (cell, vec)
                 for cell, vec in cents
             ]
-    finally:
-        proj.unpersist()
     return cents
 
 
@@ -787,27 +711,6 @@ def ivf_kmeans_topk_grid(
     return _cell_probe_topk(query_cells, corpus_cells, k)
 
 
-def ivf_kmeans_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    n_iters: int = 3,
-) -> DataFrame:
-    """IVF ANN top-k with k-means-refined cells: tighter cells than the
-    first-n init -> better recall at the same n_probe. Shares
-    _ivf_probe_topk with ivf_topk; at 10^9+ vectors, fit the centroids
-    on a sample (kmeans_fit over corpus.sample(...)) — the assign/probe
-    stages are unchanged."""
-    centroids = kmeans_fit(corpus, id_col, vec_col, n_cells, n_iters)
-    return _ivf_probe_topk(
-        corpus, queries, centroids, id_col, vec_col, k, n_probe
-    )
-
-
 # =========================================================================
 # Product quantization (PQ): compressed-domain ANN
 # =========================================================================
@@ -827,22 +730,15 @@ def pq_fit(
     Quantization for Nearest Neighbor Search", TPAMI 2011).
 
     Codebooks are trained on a deterministic hash-sample collected to
-    the driver (lowest xxhash64(id) rows, capped at ``sample_n``) and
-    refined with numpy Lloyd iterations — the standard production
-    recipe: PQ training wants ~10^4-10^5 vectors regardless of corpus
-    size, so the 100 TB corpus never shuffles; only the sample moves.
-    Returns plain Python lists (m x n_codes x dim/m) — tiny, shipped to
-    executors as expression literals, no broadcast variable needed.
+    the driver (_hash_sample, capped at ``sample_n``) and refined with
+    the numpy Lloyd loop by min squared L2 (_lloyd) — the standard
+    production recipe: PQ training wants ~10^4-10^5 vectors regardless
+    of corpus size, so the 100 TB corpus never shuffles; only the
+    sample moves. Returns plain Python lists (m x n_codes x dim/m) —
+    tiny, shipped to executors as expression literals, no broadcast
+    variable needed.
     """
-    import numpy as np
-
-    rows = (
-        corpus.orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
-        .limit(sample_n)
-        .select(vec_col)
-        .collect()
-    )
-    x = np.asarray([r[0] for r in rows], dtype=np.float64)
+    x = _hash_sample(corpus, id_col, vec_col, sample_n)
     if x.shape[0] < n_codes:
         raise ValueError(
             f"pq_fit needs >= n_codes={n_codes} training vectors, "
@@ -861,19 +757,8 @@ def pq_fit(
         # values than n_codes — then duplicate centroids are inherent.
         _, first_idx = np.unique(xs, axis=0, return_index=True)
         uniq = xs[np.sort(first_idx)]
-        if uniq.shape[0] >= n_codes:
-            cb = uniq[:n_codes].copy()
-        else:
-            pad = xs[: n_codes - uniq.shape[0]]
-            cb = np.concatenate([uniq, pad], axis=0).copy()
-        for _ in range(n_iters):
-            d2 = ((xs[:, None, :] - cb[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(n_codes):
-                mask = assign == c
-                if mask.any():
-                    cb[c] = xs[mask].mean(axis=0)
-        books.append([[float(v) for v in row] for row in cb])
+        cb = np.concatenate([uniq, xs[: max(0, n_codes - len(uniq))]])
+        books.append(_lloyd(xs, cb[:n_codes], n_iters, _min_sq_l2).tolist())
     return books
 
 
@@ -920,14 +805,12 @@ def pq_init_first_n(
 
 
 def _book_sql(book: list[list[float]]) -> str:
-    """The codebook as SQL array-literal TEXT (assign_ivf_cells' plan-
-    size trick). Building these trees with Column ops costs hundreds of
+    """The codebook as SQL array-literal TEXT (_centroid_literal's
+    plan-size trick). Building these trees with Column ops costs hundreds of
     Py4J round trips per codebook — with m=8 books each used twice
     (encode + LUT) that profiled as ~3 s of pure plan-construction
     constant per query; one expr string per subspace is ~16 Py4J calls
     total and milliseconds of JVM parse."""
-    import math
-
     if any(not math.isfinite(float(v)) for row in book for v in row):
         # repr(nan/inf) + 'D' is unparseable SQL; fail with the cause
         # (degenerate training data) instead of a ParseException later
@@ -1090,9 +973,7 @@ def ivf_pq_topk(
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 4,
-    n_iters: int = 3,
     refine: int = 4,
-    train_sample_n: int | None = 4096,
     train_iters: int = 10,
     centroids: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
@@ -1107,26 +988,18 @@ def ivf_pq_topk(
     and only the k*refine ADC survivors per query have their raw
     vectors touched for the exact-cosine re-rank.
 
-    The coarse quantizer trains on a driver-side hash-sample by default
-    (kmeans_fit_sample — the FAISS recipe, one Spark job instead of
-    n_iters rounds of distributed Lloyd, which profiled as ~8 s of
-    pure constant at ANY scale factor); pass train_sample_n=None to
-    train on the full corpus with the distributed trainer. The two
-    paths take separate iteration knobs — ``train_iters`` for the
-    (cheap numpy) sampled path, ``n_iters`` for the distributed one —
-    so an explicit n_iters is always honored by the path it governs.
+    The coarse quantizer trains on a driver-side hash-sample
+    (kmeans_fit_sample, ``train_iters`` numpy Lloyd rounds — the FAISS
+    recipe, one Spark job instead of rounds of distributed Lloyd, which
+    profiled as ~8 s of pure constant at ANY scale factor) unless
+    ``centroids`` supplies a pre-collected ``[(cell, [floats])]`` list
+    (e.g. the deterministic first-n init the SQL oracle twin can
+    restate), which skips training entirely.
     """
-    # caller-supplied coarse quantizer (e.g. the deterministic first-n
-    # init the SQL oracle twin can restate) skips training entirely
-    if centroids is None and train_sample_n is not None:
+    if centroids is None:
         centroids = kmeans_fit_sample(
-            corpus, id_col, vec_col, n_cells,
-            n_iters=train_iters, sample_n=train_sample_n,
-        )  # already a collected list — no extra job
-    elif centroids is None:
-        centroids = _collect_centroids(
-            kmeans_fit(corpus, id_col, vec_col, n_cells, n_iters), vec_col
-        )  # one job, reused by both assignments
+            corpus, id_col, vec_col, n_cells, n_iters=train_iters
+        )
     corpus_cells = assign_ivf_cells(corpus, centroids, id_col, vec_col, 1)
     enc = pq_encode(corpus_cells, codebooks, vec_col).select(
         F.col(id_col).alias("neighbor_id"),
@@ -1173,7 +1046,6 @@ def scatter_matrix_int(
     Overflow headroom: |q| <= 2^11 grids give per-row products <=
     2^22; int64 holds ~2^41 such rows per cell.
     """
-    import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -1237,8 +1109,6 @@ def pca_fit(
     component's largest-|coordinate| entry is made positive, so the
     basis is deterministic across BLAS builds up to eigenvalue ties.
     """
-    import numpy as np
-
     head = corpus.select(vec_col).first()
     if head is None:
         raise ValueError("pca_fit: empty corpus")
@@ -1372,9 +1242,7 @@ def mmr_rerank(
     )
 
     def greedy(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-
-        # deterministic candidate order regardless of arrival order
+            # deterministic candidate order regardless of arrival order
         pdf = pdf.sort_values("cid").reset_index(drop=True)
         ids = pdf["cid"].to_numpy()
         rel = pdf["rel"].to_numpy(dtype=np.int64)

@@ -1364,10 +1364,9 @@ def x_sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer/correctly-rounded ops — so the fixed 3-iteration chain
     unrolls into SQL CTEs (_ivf_kmeans_grid_sql) and DuckDB rebuilds
     bit-identical centroids, cells, probes, and the final exact-cosine
-    ranking. The float tier (similarity.ivf_kmeans_topk, textbook
-    Lloyd — inherently non-statable partial-agg float means) remains
-    the production default; recall parity of BOTH tiers vs brute force
-    is asserted in tests/test_similarity.py."""
+    ranking. kmeans_fit_int_grid is the package's one distributed
+    k-means trainer; its recall floor vs brute force is asserted in
+    tests/test_similarity.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     # training staged once per process (r15); see _staged_grid_centroids
@@ -4872,9 +4871,10 @@ def x_sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus vectors by id (the x_sim_ivf_topk recipe), PQ codebooks =
     pq_init_first_n — so cell assignment, encode, ADC and re-rank all
     restate in SQL (_X_IVFPQ_TOPK_SQL) and hash-match bit-exact. The
-    k-means/Lloyd-trained tiers (kmeans_fit_sample, pq_fit — float
-    iteration, non-statable) remain the production path, covered by
-    the recall assertions in tests/test_similarity.py."""
+    Lloyd-trained path (ivf_pq_topk without ``centroids`` trains with
+    kmeans_fit_sample; codebooks from pq_fit — float iteration,
+    non-statable) is covered by the recall assertions in
+    tests/test_similarity.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     books = similarity.pq_init_first_n(emb, m=8, n_codes=16)
     cent_rows = emb.orderBy("vec_id").limit(8).select("embedding").collect()

@@ -292,6 +292,36 @@ def test_band_arguments_refused_with_value_error(docs):
         dedup.minhash_md5_pairs(docs, "doc_id", "text", num_hashes=16, bands=5)
 
 
+def test_minhash_lsh_refuses_bands_that_do_not_divide_hashes(docs):
+    """Trailing hashes are never silently dropped from the banding."""
+    with pytest.raises(ValueError, match="must divide num_hashes"):
+        dedup.minhash_lsh_pairs(docs, "doc_id", "text", num_hashes=64, bands=5)
+
+
+@pytest.mark.parametrize(
+    "tier,jobs",
+    [
+        (lambda d: dedup.minhash_md5_pairs(d, "doc_id", "text"), 3),
+        (lambda d: dedup.minhash_lsh_pairs(d, "doc_id", "text"), 5),
+        (lambda d: dedup.minhash_lsh_pairs(d, "doc_id", "text", bucket_cap=3), 9),
+    ],
+    ids=["md5", "lsh", "lsh_capped"],
+)
+def test_minhash_collect_job_count(docs, count_jobs, tier, jobs):
+    """Building either MinHash tier runs no job; collecting it runs a
+    fixed number (one per shuffle or broadcast stage). The shifted ids
+    give a plan no other test has cached. A first collect builds the
+    LSH tier's signature cache: adaptive execution submits one build job
+    per cached-relation stage it plans before the first build lands, a
+    number that depends on timing."""
+    shifted = docs.withColumn("doc_id", F.col("doc_id") + 1000)
+    with lifecycle.query_scope():
+        tier(shifted).collect()
+        out = []
+        assert count_jobs(lambda: out.append(tier(shifted))) == 0
+        assert count_jobs(lambda: out[0].collect()) == jobs
+
+
 def test_blocked_fuzzy_pairs_known_distances(spark):
     """Hand fixture with known edit distances: same-block pairs within
     max_dist surface exactly once with correct distance and per-name

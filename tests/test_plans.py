@@ -4,6 +4,8 @@ cartesian-free everywhere."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from glue_jobs_for_data_pipeline_spark.plans import catalog_ext as cx
@@ -301,14 +303,14 @@ def test_rfm_has_no_single_partition_window(spark, sf_dir):
     )
 
     plan = _plan(x_olap_rfm_scores(spark, sf_dir))
-    # the ONE window rides the multi-dim kernel's (dim, pid) partition —
+    # the ONE window rides the rank kernel's (pid, dim) partition —
     # never a global ORDER BY (which would funnel through an Exchange
     # SinglePartition)
     for ln in plan.splitlines():
         if "windowspecdefinition(" in ln:
-            assert "__mk_pid" in ln, ln
+            assert "__rk_pid" in ln and "__rk_dim" in ln, ln
     assert "SinglePartition" not in plan
-    assert "hashpartitioning(__mk_dim" in plan
+    assert re.search(r"hashpartitioning\(__rk_pid#\d+, __rk_dim", plan)
 
 
 def test_pq_rows_missing_fixture_is_none(tmp_path):

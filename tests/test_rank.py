@@ -9,10 +9,12 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from glue_jobs_for_data_pipeline_spark import lifecycle
 from glue_jobs_for_data_pipeline_spark.operators.rank import (
     _pick_boundaries,
     _py_sort,
     distributed_ntile,
+    distributed_ntile_multi,
     distributed_row_number,
     ntile_from_rank,
 )
@@ -80,6 +82,33 @@ def test_empty_input(spark):
     assert total == 0 and got.count() == 0 and "i" in got.columns
     nt = distributed_ntile(df, [("v", True)], 10, out_col="b")
     assert nt.count() == 0 and "b" in nt.columns
+
+
+def test_kernels_collect_sample_and_counts_before_the_action(spark, count_jobs):
+    """Building a ranked frame runs the boundary-sample collect and the
+    per-pid count collect, and no other job: the caller's action is the
+    only job left."""
+    df = _demo(spark)
+    with lifecycle.query_scope():
+        assert count_jobs(
+            lambda: distributed_row_number(
+                df, [("v", True), ("k", True)], num_partitions=8
+            )
+        ) == 3
+    with lifecycle.query_scope():
+        assert count_jobs(
+            lambda: distributed_ntile_multi(
+                df.withColumn("w", F.col("k") % 5), ["v", "w"], "k", 3,
+                ["nv", "nw"], num_partitions=8,
+            )
+        ) == 3
+
+
+def test_ntile_multi_refuses_mismatched_outputs(spark):
+    """Argument checks are ValueErrors, so they survive ``python -O``."""
+    df = _demo(spark).select("k", F.col("v").alias("a"), F.col("v").alias("b"))
+    with pytest.raises(ValueError, match="out_cols"):
+        distributed_ntile_multi(df, ["a", "b"], "k", 3, ["na"])
 
 
 def test_no_global_sort_in_plan(spark):

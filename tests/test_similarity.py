@@ -55,10 +55,26 @@ def test_lsh_deterministic(spark, sf_dir):
     assert r1 == r2
 
 
-def test_kmeans_recovers_blobs(spark):
+def _grid_cells(emb, n_iters):
+    cents = similarity.kmeans_fit_int_grid(emb, n_cells=3, n_iters=n_iters)
+    qv = similarity._grid_quantize("embedding", 1024).alias("__qv")
+    return similarity.assign_ivf_cells_int(
+        emb.select("vec_id", qv), cents, "__qv", 1
+    )
+
+
+def _sample_cells(emb, n_iters):
+    cents = similarity.kmeans_fit_sample(emb, n_cells=3, n_iters=n_iters)
+    return similarity.assign_ivf_cells(emb, cents, "vec_id", "embedding", 1)
+
+
+@pytest.mark.parametrize(
+    "cells", [_grid_cells, _sample_cells], ids=["int_grid", "sample"]
+)
+def test_kmeans_recovers_blobs(spark, cells):
     """Three well-separated blobs: after Lloyd iterations every blob
-    maps to exactly one cell and the cells are distinct."""
-    import math
+    maps to exactly one cell and the cells are distinct, for the
+    distributed int-grid trainer and the driver-side sample trainer."""
 
     def blob(center, n, spread_idx):
         rows = []
@@ -74,11 +90,7 @@ def test_kmeans_recovers_blobs(spark):
         + blob([0.0, 0.0, 10.0, 0.0], 20, 2)
     )
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    centroids = similarity.kmeans_fit(emb, n_cells=3, n_iters=4)
-    assigned = similarity.assign_ivf_cells(
-        emb, centroids, "vec_id", "embedding", 1
-    ).collect()
-    cell_of = {r["vec_id"]: r["cell"] for r in assigned}
+    cell_of = {r["vec_id"]: r["cell"] for r in cells(emb, 4).collect()}
     blobs = [
         {cell_of[i] for i in range(0, 20)},
         {cell_of[100 + i] for i in range(20)},
@@ -86,19 +98,6 @@ def test_kmeans_recovers_blobs(spark):
     ]
     assert all(len(b) == 1 for b in blobs), blobs
     assert len(blobs[0] | blobs[1] | blobs[2]) == 3
-
-
-def test_ivf_kmeans_recall_beats_floor(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 5)
-    exact = similarity.brute_force_topk(emb, queries, k=10)
-    approx = similarity.ivf_kmeans_topk(
-        emb, queries, k=10, n_cells=8, n_probe=4, n_iters=3
-    )
-    e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
-    a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.4, f"IVF+kmeans recall {recall} below floor"
 
 
 def test_pq_encode_shape_and_determinism(spark, sf_dir):
@@ -132,7 +131,7 @@ def test_ivf_pq_recall_floor(spark, sf_dir):
     books = similarity.pq_fit(emb, m=8, n_codes=16, n_iters=6, sample_n=512)
     exact = similarity.brute_force_topk(emb, queries, k=10)
     approx = similarity.ivf_pq_topk(
-        emb, queries, books, k=10, n_cells=8, n_probe=4, n_iters=3, refine=4
+        emb, queries, books, k=10, n_cells=8, n_probe=4, refine=4
     )
     e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
@@ -333,6 +332,19 @@ def test_kmeans_int_grid_recenters_exactly(spark):
     assert got[2] == [10245, -1024]
 
 
+def test_kmeans_int_grid_job_count_and_no_leaked_cache(spark, sf_dir, count_jobs):
+    """Training outside any query scope runs a fixed number of jobs and
+    leaves no persistent RDD behind: its input cache is released when
+    the training loop ends."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    persistent = spark.sparkContext._jsc.getPersistentRDDs().size
+    before = persistent()
+    assert count_jobs(
+        lambda: similarity.kmeans_fit_int_grid(emb, n_cells=8, n_iters=3)
+    ) == 7
+    assert persistent() == before
+
+
 def test_cluster_balance_quota_and_determinism(spark, sf_dir):
     """x_corpus_cluster_balance: per-cell quota respected, every
     populated cell represented, bit-identical under repartition."""
@@ -354,7 +366,8 @@ def test_cluster_balance_quota_and_determinism(spark, sf_dir):
 
 def test_int_assign_numpy_tier_matches_hof_tier(spark):
     """The Arrow int-matmul assign (k >= _INT_ASSIGN_NUMPY_MIN_CELLS)
-    must be row-identical to the centroid-literal HOF form on random
+    must be row-identical to assign_ivf_cells_int's centroid-literal
+    HOF tier (called directly, since k is above the gate) on random
     integer grids — including ties, which both break to the lowest
     cell id. Exercised for n_probe 1 and 3."""
     import random
@@ -379,36 +392,12 @@ def test_int_assign_numpy_tier_matches_hof_tier(spark):
                 ).select("vec_id", "cell", "cell_rank").collect(),
             )
         )
-        # force the HOF path by calling below the gate: slice of the
-        # public function body — rebuild via the literal transform
-        from pyspark.sql import functions as F
-
-        vec = F.col("__qv")
-
-        def d2(s):
-            return F.aggregate(
-                F.zip_with(vec, s["v"], lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            )
-
-        scored = F.transform(
-            similarity._int_centroid_literal(cents),
-            lambda s: F.struct(d2(s).alias("d2"), s["cell"].alias("cell")),
-        )
         want = sorted(
             map(
                 tuple,
-                df.withColumn(
-                    "_top", F.slice(F.array_sort(scored), 1, n_probe)
-                )
-                .select("vec_id", F.posexplode("_top").alias("_pos", "_s"))
-                .select(
-                    "vec_id",
-                    F.col("_s")["cell"].alias("cell"),
-                    (F.col("_pos") + 1).cast("int").alias("cell_rank"),
-                )
-                .collect(),
+                similarity._assign_by_literal(
+                    df, cents, "__qv", n_probe, int, similarity._sq_l2_long
+                ).select("vec_id", "cell", "cell_rank").collect(),
             )
         )
         assert got == want, f"n_probe={n_probe}"
