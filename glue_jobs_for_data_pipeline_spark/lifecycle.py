@@ -34,6 +34,7 @@ from contextlib import contextmanager
 from typing import Callable
 
 from py4j.protocol import Py4JError
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 
@@ -65,9 +66,13 @@ def _on_close(release: Callable[[], object]) -> bool:
 
 
 def cached(df: DataFrame) -> DataFrame:
-    """``df.cache()``, released when the query scope closes."""
+    """``df.cache()``, released when the query scope closes. A plan
+    that is already cached reuses that entry, which stays its
+    creator's to release."""
+    fresh = df.storageLevel == StorageLevel.NONE
     df = df.cache()
-    _on_close(df.unpersist)
+    if fresh:
+        _on_close(df.unpersist)
     return df
 
 

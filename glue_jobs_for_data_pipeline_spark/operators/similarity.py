@@ -237,11 +237,6 @@ def _centroid_literal(cents: list[tuple[int, list]], kind: type):
     return F.expr(f"array({items})")
 
 
-def _int_centroid_literal(cents: list[tuple[int, list[int]]]):
-    """Integer centroid set as ONE SQL array literal (long elements)."""
-    return _centroid_literal(cents, int)
-
-
 def _sq_l2_long(v, c):
     """Exact squared L2 of two long arrays as a BIGINT."""
     return F.aggregate(
@@ -265,7 +260,7 @@ def _assign_by_literal(
     sorts the (score, cell) structs lexicographically — ties break to
     the lowest cell id — and explodes the first n_probe. Map-only: no
     join, no window, vectors never shuffle. Keeps every input column
-    and adds (cell, cell_rank).
+    and adds (cell, cell_rank, cell_score).
 
     Boundary: the literal is k x dim values of SQL text (~20 bytes
     each) — fine through k ~ 4096 at dim 64 (~5 MB plan). An IVF
@@ -286,6 +281,7 @@ def _assign_by_literal(
             *keep,
             F.col("_s")["cell"].alias("cell"),
             (F.col("_pos") + 1).cast("int").alias("cell_rank"),
+            F.col("_s")["d"].alias("cell_score"),
         )
     )
 
@@ -314,7 +310,7 @@ def assign_ivf_cells(
         n_probe,
         float,
         lambda v, c: -cosine(v, c),
-    )
+    ).drop("cell_score")
 
 
 def _cell_probe_topk(
@@ -564,7 +560,9 @@ def assign_ivf_cells_int(
     squared L2 as the score)."""
     if len(cents) >= _INT_ASSIGN_NUMPY_MIN_CELLS:
         return _assign_ivf_cells_int_np(vectors, cents, qvec_col, n_probe)
-    return _assign_by_literal(vectors, cents, qvec_col, n_probe, int, _sq_l2_long)
+    return _assign_by_literal(
+        vectors, cents, qvec_col, n_probe, int, _sq_l2_long
+    ).drop("cell_score")
 
 
 def _grid_quantize(vec_col: str, scale: int):

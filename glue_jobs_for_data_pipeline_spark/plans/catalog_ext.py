@@ -1437,23 +1437,9 @@ def x_emb_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.select(
         "vec_id", similarity._grid_quantize("embedding", 1024).alias("qv")
     )
-    vec = F.col("qv")
-
-    def d2(s):
-        return F.aggregate(
-            F.zip_with(vec, s["v"], lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
-    scored = F.transform(
-        similarity._int_centroid_literal(cents),
-        lambda s: F.struct(d2(s).alias("d2"), s["cell"].alias("cell")),
-    )
-    best = F.array_sort(scored)[0]  # (d2, cell) asc = lowest-cell ties
-    assigned = q.select(
-        "vec_id", best["cell"].alias("cell"), best["d2"].alias("d2")
-    )
+    assigned = similarity._assign_by_literal(
+        q, cents, "qv", 1, int, similarity._sq_l2_long
+    ).select("vec_id", "cell", F.col("cell_score").alias("d2"))
     # separation: k^2 exact-integer distances over the staged model —
     # pure driver arithmetic on k collected rows, folded in as a literal
     # map (the rank-kernel offsets pattern; no join, no shuffle)

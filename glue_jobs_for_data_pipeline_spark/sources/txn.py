@@ -21,6 +21,7 @@ crashed writer left behind.
 
 from __future__ import annotations
 
+import fcntl
 import json
 import math
 import os
@@ -557,9 +558,6 @@ _MANIFEST_DIR = "_MANIFEST"
 _HEAD = "_HEAD"
 _REFS_DIR = "_REFS"
 _COMMIT_LOCK = "_COMMIT.lock"
-# A lock older than this is presumed abandoned even if its pid was
-# recycled by another process (liveness check alone can false-positive).
-_LOCK_STALE_SECONDS = 300.0
 # gc never reclaims a v=*.claim reservation younger than this, even at
 # grace_seconds=0 — a claim is held only for the duration of one
 # staging write, so anything past the floor is a crashed stager
@@ -579,7 +577,8 @@ class ConcurrentCommitError(RuntimeError):
     merging our staged tables over the CURRENT manifest could silently
     drop the racing writer's tables (lost update). The loser re-reads,
     restages on top of the new head, and retries — the same contract as
-    an Iceberg/Delta conditional-put conflict."""
+    an Iceberg/Delta conditional-put conflict. Also raised when the
+    commit lock stays held past _LOCK_WAIT_SECONDS."""
 
 
 class MergeConflictError(ValueError):
@@ -1272,17 +1271,26 @@ class Catalog:
         unrelated manifest would be a fork wearing a rollback's name,
         and a typo'd id must fail loudly, not rewrite history.
 
-        The abandoned descendant manifests stay on disk (a second
-        rollback_to at the newer id REDOES forward — the descendant
+        The rollback leaves the abandoned descendants unreachable
+        from every ref, so they stay on disk only until the next
+        gc_uncommitted / expire_snapshots. Until then a second
+        rollback_to at the newer id REDOES forward (the descendant
         direction is accepted too, Iceberg's set_current_snapshot
-        within one lineage) until a NEW commit lands — its parent is
-        the rollback target, so the abandoned suffix becomes
-        unreachable and gc_uncommitted/expire_snapshots reclaims it.
-        A racing commit moves the ref and turns this into a retryable
+        within one lineage); after it the newer manifest is gone and
+        the redo raises ValueError. A NEW commit on the rolled-back
+        head parents onto the target, which also ends the redo. A
+        racing commit moves the ref and turns this into a retryable
         ConcurrentCommitError (the _set_ref CAS)."""
         cur = self.head(branch)
         if cur is None:
             raise ValueError(f"branch {branch!r} has no commits")
+        if self._doc(manifest) is None:
+            raise ValueError(
+                f"m={manifest} is not an ancestor of {branch!r}'s head "
+                f"(m={cur}) nor a descendant with a manifest on disk: "
+                "gc_uncommitted or expire_snapshots collected it, or it "
+                "never existed"
+            )
 
         def _on_chain(frm: int, to: int) -> bool:
             walk: int | None = frm
@@ -1399,89 +1407,39 @@ class Catalog:
     # -- write side --------------------------------------------------
     @contextmanager
     def _locked(self):
-        """Hold the catalog-wide commit lock (O_CREAT|O_EXCL file with
-        ``pid ts`` contents and stale-holder reclamation — see
-        _reclaim_stale_lock). EVERY metadata mutation — manifest
-        commit, ref swap, branch delete — runs inside this one lock,
-        so no pair of them can interleave.
+        """Hold the catalog-wide commit lock: an exclusive ``flock`` on
+        the empty ``_COMMIT.lock`` file, which is never deleted. EVERY
+        metadata mutation — manifest commit, ref swap, branch delete,
+        expiry, gc — runs inside this one lock, so no pair of them can
+        interleave. The kernel releases the lock when the holder's fd
+        closes or its process dies, so a crashed holder blocks no one
+        and a leftover file is not a holder.
 
         Acquisition WAITS (25 ms polls, up to _LOCK_WAIT_SECONDS)
         instead of failing on first contention: metadata critical
         sections are milliseconds (a gc sweep at most seconds), so a
         short bounded wait turns almost every lock collision into a
         success instead of burning a caller's CAS-retry — the Iceberg
-        lock-wait posture. A holder alive past the budget still raises
-        ConcurrentCommitError (retryable), and stale corpses are
-        reclaimed on every poll."""
+        lock-wait posture. A holder past the budget raises the
+        retryable ConcurrentCommitError."""
         lock = os.path.join(self.root, _COMMIT_LOCK)
-        fd = None
-        deadline = time.time() + _LOCK_WAIT_SECONDS
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                if self._reclaim_stale_lock(lock):
-                    continue
-                if time.time() >= deadline:
-                    raise ConcurrentCommitError(
-                        f"another live commit holds {lock}; retry after "
-                        "it finishes (crashed holders are reclaimed "
-                        "automatically)"
-                    ) from None
-                time.sleep(0.025)
+        fd = os.open(lock, os.O_CREAT | os.O_RDWR, 0o644)
         try:
-            os.write(fd, f"{os.getpid()} {time.time()}".encode())
-            os.close(fd)
+            deadline = time.time() + _LOCK_WAIT_SECONDS
+            while True:
+                try:
+                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                    break
+                except BlockingIOError:
+                    if time.time() >= deadline:
+                        raise ConcurrentCommitError(
+                            f"another commit holds {lock}; retry after "
+                            "it finishes"
+                        ) from None
+                    time.sleep(0.025)
             yield
         finally:
-            try:
-                os.unlink(lock)
-            except FileNotFoundError:
-                pass
-
-    @staticmethod
-    def _reclaim_stale_lock(lock: str) -> bool:
-        """Remove ``lock`` if its holder is provably gone: the recorded
-        pid is dead, or the lock is older than _LOCK_STALE_SECONDS.
-        Returns True if the caller should retry the O_EXCL acquire.
-
-        An unreadable/empty lock is judged by file MTIME alone (a
-        healthy writer has a microsecond gap between O_CREAT and the
-        pid write — reclaiming on an empty read would race it; a crash
-        inside that gap ages past the threshold and is then reclaimed).
-        A holder that is alive and fresh is left alone. Reclaim-then-
-        recreate has a benign race: if two waiters reclaim the same
-        corpse, one wins O_EXCL and the other keeps waiting — never a
-        double-acquire."""
-        pid: int | None = None
-        ts: float | None = None
-        try:
-            with open(lock) as f:
-                parts = f.read().split()
-            pid, ts = int(parts[0]), float(parts[1])
-        except FileNotFoundError:
-            return True  # vanished — holder finished; just retry
-        except (OSError, ValueError, IndexError):
-            try:
-                ts = os.stat(lock).st_mtime  # mid-write or corrupt
-            except FileNotFoundError:
-                return True
-        if pid is not None:
-            try:
-                os.kill(pid, 0)  # signal 0 = existence probe only
-            except ProcessLookupError:
-                # dead holder -> abandoned regardless of age
-                ts = None
-            except PermissionError:
-                pass  # exists, owned by someone else -> judge by age
-        if ts is not None and time.time() - ts < _LOCK_STALE_SECONDS:
-            return False  # live (or indeterminate) fresh holder
-        try:
-            os.unlink(lock)
-        except FileNotFoundError:
-            pass
-        return True
+            os.close(fd)
 
     def _next_manifest(self) -> int:
         return max([self.head() or 0, *self._manifest_ids()]) + 1

@@ -8,6 +8,7 @@ import subprocess
 import sys
 
 import pytest
+from pyspark import StorageLevel
 
 from glue_jobs_for_data_pipeline_spark import lifecycle, runner
 
@@ -76,6 +77,21 @@ def test_runs_leave_no_blocks_or_scratch_behind(spark, sf_dir, monkeypatch, tmp_
     lifecycle.reset_stages()
     assert set(jsc.getPersistentRDDs().keySet()) <= before
     assert os.listdir(root) == []
+
+
+def test_scope_keeps_a_cache_it_did_not_create(spark):
+    """``cached`` on a plan cached outside the scope reuses that cache
+    entry; closing the scope must leave it to its creator."""
+    outer = spark.range(11).selectExpr("id * 7 AS kept_by_outer").cache()
+    try:
+        outer.count()
+        with lifecycle.query_scope():
+            lifecycle.cached(
+                spark.range(11).selectExpr("id * 7 AS kept_by_outer")
+            ).count()
+        assert outer.storageLevel != StorageLevel.NONE
+    finally:
+        outer.unpersist()
 
 
 def _tool(tmp_path, *argv: str) -> str:

@@ -4,7 +4,11 @@ commits publish atomically."""
 
 from __future__ import annotations
 
+import fcntl
 import os
+import subprocess
+import sys
+import threading
 import time
 import types
 
@@ -263,68 +267,125 @@ def test_catalog_concurrent_writer_loses_with_cas_error(spark, tmp_path):
     assert vdirs == ["v=1", "v=2"]
 
 
+def _hold_lock(cat):
+    """Take the commit lock on a second fd, as another writer would;
+    closing the returned fd releases it."""
+    fd = os.open(os.path.join(cat.root, txn._COMMIT_LOCK), os.O_CREAT | os.O_RDWR)
+    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    return fd
+
+
 def test_catalog_commit_lock_blocks_second_writer(spark, tmp_path):
-    """A LIVE, FRESH _COMMIT.lock (this pid, current timestamp) makes a
-    racing commit fail fast instead of interleaving with the critical
-    section — reclamation must not fire on a healthy holder."""
-    import time as _time
-
+    """A live holder makes a racing commit fail with the retryable
+    error instead of interleaving with its critical section; once the
+    holder closes its fd the commit proceeds, and the lock file stays
+    empty."""
     cat = txn.Catalog(str(tmp_path / "wh"))
-    lock = os.path.join(cat.root, txn._COMMIT_LOCK)
-    with open(lock, "w") as f:
-        f.write(f"{os.getpid()} {_time.time()}")
+    fd = _hold_lock(cat)
     with pytest.raises(txn.ConcurrentCommitError, match="holds"):
         with cat.transaction() as t:
             t.overwrite(_df(spark, 1), "dim")
-    os.unlink(lock)
-    with cat.transaction() as t:  # lock released -> commit proceeds
+    os.close(fd)
+    with cat.transaction() as t:
+        t.overwrite(_df(spark, 1), "dim")
+    assert cat.read(spark, "dim").count() == 5
+    assert os.path.getsize(os.path.join(cat.root, txn._COMMIT_LOCK)) == 0
+
+
+@pytest.mark.parametrize(
+    "leftover", ["dead_pid", "empty_fresh", "empty_aged", "crashed_holder"]
+)
+def test_catalog_leftover_lock_file_is_not_a_holder(spark, tmp_path, leftover):
+    """Only an fd holding the flock is a holder: a lock file of any
+    content and any age, or one whose holder process exited without
+    unlocking, does not block the next commit."""
+    cat = txn.Catalog(str(tmp_path / "wh"))
+    lock = os.path.join(cat.root, txn._COMMIT_LOCK)
+    if leftover == "crashed_holder":
+        subprocess.run(
+            [
+                sys.executable,
+                "-c",
+                "import fcntl, os, sys; "
+                "fd = os.open(sys.argv[1], os.O_CREAT | os.O_RDWR); "
+                "fcntl.flock(fd, fcntl.LOCK_EX); os._exit(0)",
+                lock,
+            ],
+            check=True,
+            timeout=60,
+        )
+    else:
+        with open(lock, "w") as f:
+            if leftover == "dead_pid":
+                f.write(f"99999999 {time.time()}")  # pid_max default 4M
+        if leftover == "empty_aged":
+            os.utime(lock, (1.0, 1.0))
+    with cat.transaction() as t:
         t.overwrite(_df(spark, 1), "dim")
     assert cat.read(spark, "dim").count() == 5
 
 
-def test_catalog_reclaims_lock_of_dead_pid(spark, tmp_path):
-    """A lock whose recorded pid no longer exists is a crashed holder:
-    the next commit reclaims it and proceeds (ADVICE r14 — no manual
-    rm required). Fake pid chosen outside the valid range."""
-    import time as _time
+def test_catalog_live_lock_holder_blocks_whatever_its_file_age(spark, tmp_path):
+    """A holder is never judged by the lock file's age: a live holder
+    whose file looks decades old still blocks."""
+    cat = txn.Catalog(str(tmp_path / "wh"))
+    fd = _hold_lock(cat)
+    os.utime(os.path.join(cat.root, txn._COMMIT_LOCK), (1.0, 1.0))
+    try:
+        with pytest.raises(txn.ConcurrentCommitError, match="holds"):
+            with cat.transaction() as t:
+                t.overwrite(_df(spark, 1), "dim")
+    finally:
+        os.close(fd)
 
+
+def test_catalog_lock_never_admits_two_holders(tmp_path, monkeypatch):
+    """Two waiters meet a dead holder's lock file. A waiter that
+    removes the lock path first waits (bounded) until the other one is
+    inside: a lock that admits a waiter by deleting the path would then
+    delete the other's live lock and let both in. At most one thread
+    may ever be inside."""
     cat = txn.Catalog(str(tmp_path / "wh"))
     lock = os.path.join(cat.root, txn._COMMIT_LOCK)
     with open(lock, "w") as f:
-        f.write(f"99999999 {_time.time()}")  # dead (pid_max default 4M)
-    with cat.transaction() as t:
-        t.overwrite(_df(spark, 1), "dim")
-    assert cat.read(spark, "dim").count() == 5
-    assert not os.path.exists(lock)
+        f.write(f"99999999 {time.time()}")
+    entered = threading.Event()
+    gate = threading.Lock()
+    first_unlink = []
+    real_unlink = txn.os.unlink
 
+    def unlink(path, *args, **kwargs):
+        if path == lock:
+            with gate:
+                first = not first_unlink
+                first_unlink.append(path)
+            if first:
+                entered.wait(timeout=2.0)
+        return real_unlink(path, *args, **kwargs)
 
-def test_catalog_reclaims_stale_lock_of_live_pid(spark, tmp_path):
-    """A lock older than _LOCK_STALE_SECONDS is reclaimed even if its
-    pid is alive (pid recycling / hung holder)."""
-    cat = txn.Catalog(str(tmp_path / "wh"))
-    lock = os.path.join(cat.root, txn._COMMIT_LOCK)
-    with open(lock, "w") as f:
-        f.write(f"{os.getpid()} 1.0")  # epoch-old timestamp
-    with cat.transaction() as t:
-        t.overwrite(_df(spark, 1), "dim")
-    assert cat.read(spark, "dim").count() == 5
+    monkeypatch.setattr(txn.os, "unlink", unlink)
+    inside, peak, errors = [0], [0], []
 
+    def waiter():
+        try:
+            with cat._locked():
+                with gate:
+                    inside[0] += 1
+                    peak[0] = max(peak[0], inside[0])
+                entered.set()
+                time.sleep(0.3)
+                with gate:
+                    inside[0] -= 1
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
 
-def test_catalog_reclaims_corrupt_empty_lock_by_age(spark, tmp_path):
-    """An empty lock file (crash between O_CREAT and the pid write) is
-    judged by mtime: fresh -> contention error (never race a healthy
-    writer's create-to-write gap); aged past the threshold -> reclaimed."""
-    cat = txn.Catalog(str(tmp_path / "wh"))
-    lock = os.path.join(cat.root, txn._COMMIT_LOCK)
-    with open(lock, "w"):
-        pass
-    with pytest.raises(txn.ConcurrentCommitError, match="holds"):
-        with cat.transaction() as t:
-            t.overwrite(_df(spark, 1), "dim")
-    os.utime(lock, (1.0, 1.0))  # age it past _LOCK_STALE_SECONDS
-    with cat.transaction() as t:
-        t.overwrite(_df(spark, 1), "dim")
-    assert cat.read(spark, "dim").count() == 5
+    threads = [threading.Thread(target=waiter) for _ in range(2)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=30)
+    assert not errors
+    assert peak[0] == 1
 
 
 def test_gc_uncommitted_reclaims_never_committed_table(spark, tmp_path):
@@ -374,7 +435,7 @@ def test_catalog_threaded_writers_serialize_without_lost_updates(spark, tmp_path
     conflict: every table must survive in the final manifest (no lost
     updates), heads strictly increase, and losers only ever see
     ConcurrentCommitError — never a silent overwrite. Exercises the
-    O_EXCL lock + CAS under real parallelism."""
+    commit lock + CAS under real parallelism."""
     import threading
 
     cat = txn.Catalog(str(tmp_path / "wh"))
@@ -579,18 +640,14 @@ def test_transaction_on_unknown_branch_fails_fast(spark, tmp_path):
 def test_delete_branch_respects_commit_lock(spark, tmp_path):
     """ADVICE r15: delete_branch takes the same lock as ref swaps, so
     it cannot interleave with a commit's CAS on the same ref."""
-    import time as _time
-
     cat = txn.Catalog(str(tmp_path / "wh"))
     with cat.transaction() as t:
         t.overwrite(_df(spark, 1), "dim")
     cat.create_branch("exp")
-    lock = os.path.join(str(tmp_path / "wh"), txn._COMMIT_LOCK)
-    with open(lock, "w") as f:
-        f.write(f"{os.getpid()} {_time.time()}")  # live, fresh holder
-    with pytest.raises(txn.ConcurrentCommitError):
+    fd = _hold_lock(cat)
+    with pytest.raises(txn.ConcurrentCommitError, match="holds"):
         cat.delete_branch("exp")
-    os.unlink(lock)
+    os.close(fd)
     cat.delete_branch("exp")
     assert "exp" not in cat.branches()
 
@@ -1227,8 +1284,7 @@ def test_schema_widening_bigint_to_double_rejected(spark, tmp_path):
 
 def test_rollback_moves_ref_and_redo_forward(spark, tmp_path):
     """rollback_to re-points the ref at an ancestor (O(1), CAS'd);
-    the abandoned suffix is still readable until a new commit lands,
-    and a second rollback can redo forward."""
+    until the next gc a second rollback can redo forward."""
     from glue_jobs_for_data_pipeline_spark.sources.txn import Catalog
 
     cat = Catalog(str(tmp_path / "wh"))
@@ -1244,6 +1300,26 @@ def test_rollback_moves_ref_and_redo_forward(spark, tmp_path):
     # redo forward (m2 manifest still on disk)
     assert cat.rollback_to(m2) == m2  # m2's parent chain includes m1...
     assert cat.read(spark, "t").count() == 9
+
+
+def test_rollback_redo_holds_until_the_next_gc(spark, tmp_path):
+    """The abandoned suffix is unreachable from every ref, so the redo
+    works until gc runs; after it the redo names the collection."""
+    cat = txn.Catalog(str(tmp_path / "wh"))
+    with cat.transaction() as t:
+        t.overwrite(spark.range(3).selectExpr("id AS k"), "t")
+    m1 = cat.head()
+    with cat.transaction() as t:
+        t.overwrite(spark.range(9).selectExpr("id AS k"), "t")
+    m2 = cat.head()
+    cat.rollback_to(m1)
+    assert cat.rollback_to(m2) == m2  # redo before gc
+    cat.rollback_to(m1)
+    assert cat.gc_uncommitted() == {"t": [2], "_MANIFEST": [m2]}
+    with pytest.raises(ValueError, match="collected"):
+        cat.rollback_to(m2)
+    assert cat.head() == m1
+    assert cat.read(spark, "t").count() == 3
 
 
 def test_rollback_rejects_non_ancestor(spark, tmp_path):
@@ -1302,6 +1378,11 @@ def test_expire_snapshots_truncates_history(spark, tmp_path):
     # the log walk ends gracefully at the truncation point
     log = cat.log()
     assert [e["manifest"] for e in log] == heads[2:]
+    # a kept manifest still names its expired parent, but no ref may
+    # point at a manifest that is gone
+    with pytest.raises(ValueError, match="collected"):
+        cat.rollback_to(heads[1])
+    assert cat.head() == heads[3]
     # idempotent
     again = cat.expire_snapshots(keep_last=2, grace_seconds=0.0)
     assert again["expired_manifests"] == []
@@ -1947,7 +2028,9 @@ def _stage_pair(cat, spark, tag, branch="main"):
 def _crash_scenario(path, cat, spark):
     """(old tags, new tags, the operation to crash, the ref it moves)
     for one commit path, with the catalog set up so ``op`` moves
-    ``ref`` from the old to the new state."""
+    ``ref`` from the old to the new state. gc and expiry move no ref:
+    their old and new tags are the head's, and ``op`` has files to
+    remove."""
     _stage_pair(cat, spark, 1)
     if path == "transaction":
         return (1, 1), (2, 2), lambda: _stage_pair(cat, spark, 2), "main"
@@ -1964,7 +2047,20 @@ def _crash_scenario(path, cat, spark):
         return (1, 1), (2, 2), lambda: cat.merge_ff("exp"), "main"
     first = cat.head()
     _stage_pair(cat, spark, 2)
-    return (2, 2), (1, 1), lambda: cat.rollback_to(first), "main"
+    if path == "rollback_to":
+        return (2, 2), (1, 1), lambda: cat.rollback_to(first), "main"
+    if path == "gc_uncommitted":
+        # the abandoned suffix: two version dirs and one manifest
+        cat.rollback_to(first)
+        return (1, 1), (1, 1), cat.gc_uncommitted, "main"
+    # expire_snapshots: two manifests expire, then their versions
+    _stage_pair(cat, spark, 3)
+    return (
+        (3, 3),
+        (3, 3),
+        lambda: cat.expire_snapshots(keep_last=1, grace_seconds=0),
+        "main",
+    )
 
 
 def _in_manifest_dir(path):
@@ -1978,6 +2074,8 @@ def _is_manifest_dir(path):
 # step -> (the function that fails, which of its calls fails: called
 # with the call number and the call's arguments). The claim and the
 # data write fail for the second table, after the first one staged.
+# A removal is a version dir's rmtree or a file's unlink; failing the
+# n-th one crashes after the first n-1 landed.
 _CRASH_STEPS = {
     "claim": ("reserve", lambda n, *a: n == 2),
     "data_write": ("parquet", lambda n, *a: n == 2),
@@ -1985,9 +2083,13 @@ _CRASH_STEPS = {
     "ref_replace": ("replace", lambda n, src, dst: not _in_manifest_dir(dst)),
     "manifest_dir_sync": ("fsync_dir", lambda n, p: _is_manifest_dir(p)),
     "ref_dir_sync": ("fsync_dir", lambda n, p: not _is_manifest_dir(p)),
+    "after_1st_removal": ("remove", lambda n, *a: n == 2),
+    "after_2nd_removal": ("remove", lambda n, *a: n == 3),
 }
 _CRASH_CASES = [
-    ("transaction", step) for step in _CRASH_STEPS
+    ("transaction", step)
+    for step, (kind, _) in _CRASH_STEPS.items()
+    if kind != "remove"
 ] + [
     ("rebase", step) for step in (
         "manifest_replace", "ref_replace", "manifest_dir_sync", "ref_dir_sync"
@@ -1996,6 +2098,10 @@ _CRASH_CASES = [
     (path, step)
     for path in ("merge_ff", "rollback_to")
     for step in ("ref_replace", "ref_dir_sync")
+] + [
+    ("gc_uncommitted", "after_1st_removal"),
+    ("gc_uncommitted", "after_2nd_removal"),
+    ("expire_snapshots", "after_1st_removal"),
 ]
 
 
@@ -2003,31 +2109,38 @@ _CRASH_CASES = [
 def test_crash_at_each_durable_step_leaves_old_or_new_state(
     spark, tmp_path, monkeypatch, path, step
 ):
-    """Fail each durable step of each commit path with an OSError:
-    readers then see exactly the old or the new state, and
-    gc_uncommitted plus a retry converges on the new one."""
+    """Fail each durable step of each commit path, and each removal of
+    gc and expiry, with an OSError: readers then see exactly the old or
+    the new state, and gc_uncommitted plus a retry converges on the new
+    one."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     cat = txn.Catalog(str(tmp_path / "wh"))
     old, new, op, ref = _crash_scenario(path, cat, spark)
     kind, fires = _CRASH_STEPS[step]
-    target = {
-        "reserve": (txn, "_reserve_version"),
-        "parquet": (DataFrameWriter, "parquet"),
-        "replace": (txn.os, "replace"),
-        "fsync_dir": (txn, "_fsync_dir"),
+    targets = {
+        "reserve": [(txn, "_reserve_version")],
+        "parquet": [(DataFrameWriter, "parquet")],
+        "replace": [(txn.os, "replace")],
+        "fsync_dir": [(txn, "_fsync_dir")],
+        "remove": [(txn.shutil, "rmtree"), (txn.os, "unlink")],
     }[kind]
-    real = getattr(*target)
     calls = []
 
-    def crashing(*args, **kwargs):
-        calls.append(1)
-        plain = args[1:] if kind == "parquet" else args
-        if fires(len(calls), *plain):
-            raise OSError(f"simulated crash at {step}")
-        return real(*args, **kwargs)
+    def crashing(real):
+        def call(*args, **kwargs):
+            if "dir_fd" in kwargs:  # rmtree's own unlinks inside a dir
+                return real(*args, **kwargs)
+            calls.append(1)
+            plain = args[1:] if kind == "parquet" else args
+            if fires(len(calls), *plain):
+                raise OSError(f"simulated crash at {step}")
+            return real(*args, **kwargs)
 
-    monkeypatch.setattr(*target, crashing)
+        return call
+
+    for target in targets:
+        monkeypatch.setattr(*target, crashing(getattr(*target)))
     with pytest.raises(OSError, match="simulated crash"):
         op()
     monkeypatch.undo()
@@ -2038,16 +2151,19 @@ def test_crash_at_each_durable_step_leaves_old_or_new_state(
             d for d in os.listdir(cat.table_dir(name)) if d.endswith(".claim")
         ]
     cat.gc_uncommitted()
-    if _tags(spark, cat, ref) != new:
+    # gc and expiry change no tags, so the tags cannot show whether
+    # they finished: rerun them
+    if _tags(spark, cat, ref) != new or kind == "remove":
         op()
     assert _tags(spark, cat, ref) == new
-    # once gc has run, every version dir left is one a reachable
-    # manifest names
+    # once gc has run, every manifest left is reachable and every
+    # version dir left is one of them names (an expired parent is a
+    # reachable id without a file)
     cat.gc_uncommitted()
+    manifests = set(cat._manifest_ids())
+    assert manifests <= cat._reachable_manifests()
     live = {
-        (name, v)
-        for m in cat._reachable_manifests()
-        for name, v in cat._manifest_tables(m).items()
+        (name, v) for m in manifests for name, v in cat._manifest_tables(m).items()
     }
     on_disk = {
         (name, int(d[len("v="):]))
