@@ -22,25 +22,35 @@ transaction bracket (M5) becomes write-last atomicity, and Spark's lazy
 evaluation removes the physical staging table (S4/S7) entirely.
 
 Plan shape. A dim-sized batch is bound by fixed per-job cost, not by
-rows, so the plan is built for the fewest query stages. A delta write
-onto a committed dim runs five jobs: the broadcast of the current rows
-(change detection), the broadcast of the changed keys (the expire
-step's IN-subquery, planned as an existence join, so it needs no
-distinct), one single-partition exchange that deduplicates and ranks
-the new versions, the one-row max-key aggregate (joined as a
-cartesian product over that shuffled row, not broadcast), and the
-write. An initial load runs two: the ranking exchange and the write.
-``mode="reference"`` has no change detection, so one job fewer.
+rows, so the plan is built for the fewest query stages. The gate is
+``spark.graft.sk.kernelMinBytes`` (default 256 MiB, by optimizer plan
+statistics of the input that would pass through one task): the dim and
+the source for an upsert onto a committed dim, the staged rows for an
+initial load. A funnel upsert measures once.
 
-Scale posture: the changed-key set is broadcast into the expire step
-(dims are small next to facts; for a billion-row dim pass
-broadcast_keys=False and the optimizer picks the join). Surrogate-key
-assignment offers ``key_mode="hash"`` (xxhash64 — fully parallel,
-deterministic, non-contiguous) for huge dims, and
-``key_mode="rownum"`` (max+row_number — contiguous like the
-reference's IDENTITY). A rownum batch above
-``spark.graft.sk.kernelMinBytes`` takes a distributed distinct and the
-exact-rank kernel instead of the single-partition funnel.
+Below the gate, a rownum upsert onto a committed dim is one funnel: the
+dim rows (tagged current or closed) and the source rows are unioned
+into one single-partition exchange, and two window operators finish
+the upsert inside it (see _funnel_upsert). The single partition
+satisfies every distribution the windows ask for, so they add sorts but
+no exchange. A delta write runs two jobs, the exchange and the write,
+and each dim version is one file. An initial load runs two jobs too:
+the single-partition exchange that deduplicates and ranks the staged
+rows, and the write.
+
+Above the gate, and for ``key_mode="hash"``, the upsert is distributed.
+Change detection is a left-anti join against the current rows. The
+expire step's IN-subquery is planned as an existence join, so it needs
+no distinct; its changed-key set is broadcast, and for a billion-row
+dim ``broadcast_keys=False`` lets the optimizer pick the join. The flag
+acts only on this path. New versions are hashed, or deduplicated and
+ranked: by one single-partition window when the staged rows alone are
+below the gate, by the exact-rank kernel (operators/rank.py) otherwise.
+
+Surrogate-key assignment offers ``key_mode="hash"`` (xxhash64, fully
+parallel, deterministic, non-contiguous) for huge dims, and
+``key_mode="rownum"`` (max + row_number, contiguous like the
+reference's IDENTITY).
 """
 
 from __future__ import annotations
@@ -92,6 +102,19 @@ def expire_current_rows(
     )
 
 
+def _below_gate(df: DataFrame) -> bool:
+    """Whether ``df`` is small enough for one task: its optimizer plan
+    statistics are at most ``spark.graft.sk.kernelMinBytes`` (default
+    256 MiB). Plan-stats overestimation (cached or joined inputs, or
+    rows built from Python objects, which carry no size statistics)
+    errs toward the distributed plan, the scale-safe direction."""
+    min_bytes = int(
+        df.sparkSession.conf.get("spark.graft.sk.kernelMinBytes", str(256 << 20))
+    )
+    plan_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return plan_bytes <= min_bytes
+
+
 def _rownum_keys(
     rows: DataFrame,
     dim: DataFrame | None,
@@ -100,19 +123,13 @@ def _rownum_keys(
     dedup: bool,
 ) -> DataFrame:
     """The rownum keys of assign_surrogate_keys, dropping exact duplicate
-    rows first when ``dedup`` is set. On the window path the dedup runs
-    inside the one ranking partition: the single-partition exchange
-    already satisfies the aggregate's distribution, so the distinct
-    costs no exchange of its own."""
-    min_bytes = int(
-        rows.sparkSession.conf.get(
-            "spark.graft.sk.kernelMinBytes", str(256 << 20)
-        )
-    )
-    plan_bytes = int(
-        rows._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    if plan_bytes <= min_bytes:
+    rows first when ``dedup`` is set. A batch below the gate is ranked
+    by one single-partition window, and its dedup runs inside that
+    partition: the single-partition exchange already satisfies the
+    aggregate's distribution, so the distinct costs no exchange of its
+    own. A batch above it takes a distributed distinct and the
+    exact-rank kernel."""
+    if _below_gate(rows):
         if dedup:
             rows = rows.repartition(1).distinct()
         ranked = rows.withColumn(
@@ -139,6 +156,86 @@ def _rownum_keys(
     return (
         ranked.withColumn(surrogate_key, (base + F.col("__sk_rn")).cast("long"))
         .drop("_max_key", "__sk_rn")
+    )
+
+
+# the funnel's row tag: a source row, a current dim row, a closed one
+_TAG, _SRC, _CUR, _CLOSED = "__scd2_tag", 0, 1, 2
+
+
+def _funnel_input(
+    dim: DataFrame, source: DataFrame, columns: Sequence[str], out_cols: list[str]
+) -> DataFrame:
+    """Every dim row and every source row in one frame, tagged; the
+    source rows carry NULL keys and dates."""
+    current = F.coalesce(F.col(SCD2_END) == _sentinel(), F.lit(False))
+    tagged_dim = dim.select(
+        *out_cols, F.when(current, _CUR).otherwise(_CLOSED).alias(_TAG)
+    )
+    tagged_src = source.select(*columns, F.lit(_SRC).alias(_TAG))
+    return tagged_dim.unionByName(tagged_src, allowMissingColumns=True)
+
+
+def _funnel_upsert(
+    rows: DataFrame,
+    business_key: str,
+    columns: Sequence[str],
+    surrogate_key: str,
+    run_date: dt.date | str | None,
+    delta: bool,
+) -> DataFrame:
+    """The whole upsert over one single-partition exchange of
+    ``_funnel_input``'s rows. The exchange satisfies the distribution of
+    both window operators, so they add sorts but no exchange.
+
+    The window over the full column tuple (source rows sort first)
+    detects change and deduplicates. A source tuple is always changed
+    in reference mode; in delta mode it is unchanged only when a current
+    row carries it and none of its columns is NULL, the left-anti join's
+    NULL-unsafe rule. A changed tuple's first source row is its one new
+    version. The window in business-key order then carries three
+    frames: the peer frame flags a current row for expiry when a changed
+    source row shares its key, the running count of new versions is the
+    ROW_NUMBER() OVER (ORDER BY key) of the distributed plan, and the
+    unbounded frame gives the existing max key."""
+    tag = F.col(_TAG)
+    is_src = tag == _SRC
+    by_tuple = Window.partitionBy(*columns).orderBy(_TAG)
+    by_key = Window.orderBy(business_key)
+    whole = (Window.unboundedPreceding, Window.unboundedFollowing)
+    changed = is_src
+    if delta:
+        matched = F.max(tag == _CUR).over(by_tuple.rowsBetween(*whole))
+        for c in columns:
+            matched = matched & F.col(c).isNotNull()
+        changed = is_src & ~matched
+    rows = rows.repartition(1).select(
+        "*",
+        changed.alias("__changed"),
+        (F.row_number().over(by_tuple) == 1).alias("__first"),
+    )
+    new = F.col("__changed") & F.col("__first")
+    rows = rows.select(
+        "*",
+        F.max("__changed")
+        .over(by_key.rangeBetween(Window.currentRow, Window.currentRow))
+        .alias("__hit"),
+        F.sum(new.cast("long"))
+        .over(by_key.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .alias("__rn"),
+        F.max(surrogate_key).over(by_key.rowsBetween(*whole)).alias("__max"),
+    )
+    expire = (tag == _CUR) & F.col(business_key).isNotNull() & F.col("__hit")
+    load_date = run_date_col(run_date)
+    key = (F.coalesce(F.col("__max"), F.lit(0)) + F.col("__rn")).cast("long")
+    return rows.filter(~is_src | new).select(
+        F.when(new, key).otherwise(F.col(surrogate_key)).alias(surrogate_key),
+        *columns,
+        F.when(new, load_date).otherwise(F.col(SCD2_START)).alias(SCD2_START),
+        F.when(new, _sentinel())
+        .when(expire, F.date_sub(load_date, 1))
+        .otherwise(F.col(SCD2_END))
+        .alias(SCD2_END),
     )
 
 
@@ -211,20 +308,31 @@ def scd2_upsert(
     — the scale extension (SURVEY §7.4).
     Any other mode or key_mode raises ValueError.
 
-    The staged rows are never deduplicated on their own: the expire
-    step's IN-subquery ignores duplicates, and the new versions are
-    deduplicated where they are ranked (see _rownum_keys), which is what
-    brings a delta write to five jobs and an initial load to two.
+    Plan (see the module docstring): below
+    ``spark.graft.sk.kernelMinBytes``, a rownum upsert onto a committed
+    dim is one single-partition funnel, two jobs with the write; an
+    initial load also runs two. Above the gate, and in hash mode, the
+    plan is distributed; ``broadcast_keys`` hints its expire step's key
+    side and has no effect on the funnel. Either way the staged rows are
+    never deduplicated on their own: the new versions are deduplicated
+    where they are ranked.
     """
     _check("mode", mode, ("reference", "delta"))
     _check("key_mode", key_mode, ("rownum", "hash"))
     out_cols = [surrogate_key, *columns, SCD2_START, SCD2_END]
+    staged = source.select(*columns)
+    if key_mode == "rownum" and dim is not None:
+        rows = _funnel_input(dim, staged, columns, out_cols)
+        if _below_gate(rows):
+            return _funnel_upsert(
+                rows, business_key, columns, surrogate_key, run_date,
+                mode == "delta",
+            )
     # the staging DDL's ``LoadDate DATE DEFAULT current_date``
     # (dynamic_upsert.py:22-26) becomes StartDate column-positionally
     # (dynamic_upsert.py:137-139); run_date is injectable for
     # determinism (F10)
     load_date = run_date_col(run_date)
-    staged = source.select(*columns)
     if mode == "delta" and dim is not None:
         current = dim.filter(F.col(SCD2_END) == _sentinel()).select(*columns)
         staged = staged.join(current, on=list(columns), how="left_anti")

@@ -1,14 +1,19 @@
-"""SCD-2 upsert plan shape: the five-job delta plan must return what the
+"""SCD-2 upsert plan shape: the single-partition funnel (below the size
+gate) and the distributed plan (above it) must return what the
 straightforward formulation returns (distinct staging, a distinct key
 set left-joined with a marker column, a broadcast max key), on the edge
-cases where the two could drift apart, in both modes and on every
-surrogate-key path; the job counts of a delta write and an initial load
-are pinned; and mistyped modes fail loudly.
+cases where they could drift apart, in both modes and on every
+surrogate-key path; the funnel's plan, the job counts of a delta write
+on both sides of the gate and of an initial load, and the funnel's one
+output file are pinned; and mistyped modes fail loudly.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import glob
+import os
+import re
 
 import pytest
 from pyspark.sql import Window
@@ -59,7 +64,8 @@ BATCHES = {
 
 
 def _before(dim, source, mode, key_mode, broadcast_keys=True):
-    """The upsert as formulated before the five-job plan."""
+    """The upsert as a distinct staging, a left-joined key set and a
+    broadcast max key."""
     run = F.lit(str(RUN)).cast("date")
     sentinel = F.lit(str(SENTINEL)).cast("date")
     staged = source.select(*COLS).distinct().withColumn("LoadDate", run)
@@ -142,8 +148,10 @@ def frames(spark, tmp_path_factory):
     return out
 
 
-# surrogate-key paths: the rownum window (small batches), the rownum
-# rank kernel (batches above spark.graft.sk.kernelMinBytes), and hash
+# surrogate-key paths: below spark.graft.sk.kernelMinBytes, rownum keys
+# from single-partition windows (the funnel onto a committed dim, one
+# ranking window on an initial load); above it, the distributed plan
+# with the rownum rank kernel; and hash
 KEY_PATHS = {
     "window": ("rownum", str(1 << 40)),
     "kernel": ("rownum", "0"),
@@ -198,7 +206,7 @@ def test_initial_load_matches_straightforward_plan(
 
 
 @pytest.mark.parametrize("mode", ["reference", "delta"])
-@pytest.mark.parametrize("path", ["window"])
+@pytest.mark.parametrize("path", ["window", "kernel"])
 def test_upsert_without_broadcast_keys_matches(
     frames, count_jobs, mode, path, key_mode
 ):
@@ -208,6 +216,28 @@ def test_upsert_without_broadcast_keys_matches(
         run_date=RUN, mode=mode, broadcast_keys=False,
     )
     _assert_same(got, _before(dim, src, mode, key_mode, False), True)
+
+
+def _operators(df, name: str) -> int:
+    """How many ``name`` operators the physical plan holds."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return len(re.findall(rf"^[\s:+-]*{name}\b", plan, re.M))
+
+
+@pytest.mark.parametrize("mode", ["reference", "delta"])
+@pytest.mark.parametrize("path", ["window"])
+def test_funnel_plan_is_one_exchange_and_two_windows(
+    frames, count_jobs, mode, path, key_mode
+):
+    """Below the gate an upsert onto a committed dim exchanges once, into
+    a single partition, and both window operators run inside it."""
+    got = _upsert(
+        count_jobs, path, frames["dim"], frames["mixed"], "CustomerID", COLS,
+        "CustomerKey", run_date=RUN, mode=mode,
+    )
+    assert _operators(got, "Exchange") == 1
+    assert _operators(got, "Exchange SinglePartition") == 1
+    assert _operators(got, "Window") == 2
 
 
 def test_null_attribute_reversions_every_delta_run(frames):
@@ -239,14 +269,10 @@ def _m1b_batches(spark, sf_dir):
     return init, batch
 
 
-def test_scd2_write_job_counts(spark, sf_dir, tmp_path, count_jobs):
-    """An initial load writes in two jobs (one single-partition exchange
-    for distinct and ranking, the write); a delta write onto a committed
-    dim in five (the current rows' broadcast, the changed keys'
-    broadcast, the ranking exchange, the max-key exchange, the write)."""
+def _scd2_writes(spark, sf_dir, cat):
+    """The m1b initial load and delta write, each as one transaction."""
     init, batch = _m1b_batches(spark, sf_dir)
     cols = list(fx.CUSTOMER_COLS)
-    cat = Catalog(str(tmp_path / "wh"))
 
     def load():
         with cat.transaction() as t:
@@ -269,12 +295,47 @@ def test_scd2_write_job_counts(spark, sf_dir, tmp_path, count_jobs):
                 "dim_customers",
             )
 
-    assert count_jobs(load) <= 2
-    assert count_jobs(delta) <= 5
+    return load, delta
+
+
+def _check_m1b_dim(spark, sf_dir, cat):
+    init, batch = _m1b_batches(spark, sf_dir)
+    cols = list(fx.CUSTOMER_COLS)
     out = cat.read(spark, "dim_customers")
     changed = batch.join(init, on=cols, how="left_anti").count()
     assert out.count() == init.count() + changed
     assert out.select("CustomerKey").distinct().count() == out.count()
+
+
+def test_scd2_write_job_counts(spark, sf_dir, tmp_path, count_jobs):
+    """Below the gate an initial load writes in two jobs (one
+    single-partition exchange for distinct and ranking, the write), and
+    so does a delta write onto a committed dim (the funnel's one
+    exchange, the write), which stages one data file."""
+    cat = Catalog(str(tmp_path / "wh"))
+    load, delta = _scd2_writes(spark, sf_dir, cat)
+    assert count_jobs(load) <= 2
+    assert count_jobs(delta) == 2
+    version = os.path.join(
+        cat.table_dir("dim_customers"), f"v={cat.manifest()['dim_customers']}"
+    )
+    assert len(glob.glob(os.path.join(version, "**", "*.parquet"), recursive=True)) == 1
+    _check_m1b_dim(spark, sf_dir, cat)
+
+
+@pytest.mark.parametrize("path", ["kernel"])
+def test_scd2_delta_write_above_gate_job_count(
+    spark, sf_dir, tmp_path, count_jobs, path, key_mode
+):
+    """Above the gate a delta write keeps the distributed plan. Its rank
+    kernel runs a sample collect and a count collect while the plan is
+    built, so the write takes eleven jobs, as it did before the
+    funnel."""
+    cat = Catalog(str(tmp_path / "wh"))
+    load, delta = _scd2_writes(spark, sf_dir, cat)
+    load()
+    assert count_jobs(delta) <= 11
+    _check_m1b_dim(spark, sf_dir, cat)
 
 
 # -- misuse fails loudly ---------------------------------------------------

@@ -2,12 +2,14 @@
 upserts — exactly one current row per ever-seen key, validity intervals
 ordered, surrogate keys unique, and version counts equal to the number
 of batches mentioning the key (the naive re-versioning semantics,
-dynamic_upsert.py:128-139)."""
+dynamic_upsert.py:128-139) — on the distributed plan and on the
+single-partition funnel."""
 
 from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -24,14 +26,39 @@ batch_strategy = st.lists(
 )
 
 
-@settings(
+PROPERTY = settings(
     max_examples=8,
     deadline=None,
     derandomize=True,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(batches=st.lists(batch_strategy, min_size=1, max_size=3))
+BATCHES = st.lists(batch_strategy, min_size=1, max_size=3)
+
+
+@PROPERTY
+@given(batches=BATCHES)
 def test_scd2_invariants_hold_for_any_upsert_sequence(spark, batches):
+    """A frame built from Python rows has no size statistics, so every
+    upsert here takes the distributed plan."""
+    _check_invariants(spark, batches)
+
+
+@pytest.fixture
+def funnel_gate(spark):
+    """A size gate no frame exceeds, so upserts onto a dim take the
+    funnel."""
+    spark.conf.set("spark.graft.sk.kernelMinBytes", str(2**63 - 1))
+    yield
+    spark.conf.unset("spark.graft.sk.kernelMinBytes")
+
+
+@PROPERTY
+@given(batches=BATCHES)
+def test_scd2_invariants_hold_on_the_funnel(spark, funnel_gate, batches):
+    _check_invariants(spark, batches)
+
+
+def _check_invariants(spark, batches) -> None:
     dim = None
     for i, rows in enumerate(batches):
         src = spark.createDataFrame(rows, "CustomerID int, Name string")
